@@ -1,8 +1,9 @@
-"""Seeded tables for the analytics workload.
+"""Seeded tables for the benchmark's workloads.
 
 Writes documents, events, embeddings, lineitem and orders as parquet, with
 the schemas, value domains and per-scale-factor sizes of the engine's test
-tables. The same seed and scale factor give the same files.
+tables. The same seed and scale factor give the same files; a table's
+contents do not depend on which other tables are written.
 """
 import os
 
@@ -92,10 +93,13 @@ def orders(rng, sf):
     })
 
 
-def generate(out_dir, seed, sf):
+def generate(out_dir, seed, sf, tables=None):
+    """Writes `tables` (all five by default) to `out_dir`/<table>.parquet."""
     os.makedirs(out_dir, exist_ok=True)
     for i, (name, make) in enumerate([("documents", documents), ("events", events),
                                       ("embeddings", embeddings), ("lineitem", lineitem),
                                       ("orders", orders)]):
+        if tables is not None and name not in tables:
+            continue
         rng = np.random.default_rng([seed, i])
         pq.write_table(make(rng, sf), os.path.join(out_dir, f"{name}.parquet"))

@@ -27,11 +27,7 @@ object Layers {
       b += s"store.$mnt.index_hit_ratio" -> "ratio"
       b += s"store.$mnt.starved_skips" -> "1/1000req"
       if (mnt == "durable") b += "store.durable.exact_rescues" -> "1/1000req"
-      Seq("insert", "upsert_batch", "delete").foreach(op => b += s"store.$mnt.$op.ms_p50" -> "ms")
     }
-    b += "store.durable.compact.ms_p50" -> "ms"
-    b += "store.durable.compact.count" -> "count"
-    b += "store.search_during_compact.ms_p50" -> "ms"
     AnalyticsQueries.foreach { q =>
       val short = q.takeWhile(_ != '_')
       b += s"analytics.$short.wall_s" -> "s"
@@ -41,7 +37,6 @@ object Layers {
     }
     b += "analytics.shuffle_bytes" -> "bytes"
     b += "analytics.spill_bytes" -> "bytes"
-    b += "harness.writer_late_ms_p95" -> "ms"
     Seq("cpu_ms_per_op", "p50_ms", "ops_per_s").foreach(n => b += s"harness.trace_overhead_pct.$n" -> "%")
     b.result()
   }

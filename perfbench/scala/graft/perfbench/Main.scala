@@ -11,12 +11,12 @@ import org.apache.spark.sql.SparkSession
   * counts, failures and the run-environment stamp.
   *
   * {{{
-  * Main --workload search-mix|ingest-search|analytics --seed N
-  *      --seconds S --trace 0|1 --work DIR [--data DIR]
+  * Main --workload search-mix|analytics --seed N --seconds S
+  *      --trace 0|1 --work DIR --data DIR
   * Main --self-test
   * }}} */
 object Main {
-  val Workloads = Seq("search-mix", "ingest-search", "analytics")
+  val Workloads = Seq("search-mix", "analytics")
   private val mapper = new ObjectMapper()
 
   def main(args: Array[String]): Unit = {
@@ -53,8 +53,8 @@ object Main {
     val res =
       try {
         if (workload == "analytics")
-          new AnalyticsRun(spark, opt("data"), s"$work/out", seed, tracer).run(seconds)
-        else ServingRun.run(spark, work, seed, seconds, workload == "ingest-search", tracer)
+          new AnalyticsRun(spark, opt("data"), s"$work/out", tracer).run(seconds, jvmStart)
+        else ServingRun.run(spark, work, s"${opt("data")}/embeddings.parquet", seed, seconds, tracer, jvmStart)
       } finally {
         confs = spark.conf.getAll.filter(_._1.startsWith("spark.graft."))
       }

@@ -1,7 +1,7 @@
 package graft.perfbench
 
 /** Self-tests of the benchmark's own arithmetic: percentiles and their
-  * sample support, due-time latency of the open loop, the truth ranking's
+  * sample support, the whole-cycle window size, the truth ranking's
   * tie-break, recall, and the exact-answer check. Run with
   * `python3 perfbench/run.py --self-test`; exits non-zero on a failure. */
 object SelfTest {
@@ -18,17 +18,19 @@ object SelfTest {
     expect("200 samples leave 10 beyond p95", xs.count(_ > Stats.percentile(xs, 0.95)) == 10)
     val fifty = xs.take(50)
     expect("50 samples leave 12 beyond p75", fifty.count(_ > Stats.percentile(fifty, 0.75)) == 12)
+    val window = xs.take(25)
+    expect("a 25-sample window's tail is p60", Stats.tailShare(25) == 0.6)
+    expect("p60 of 25 samples leaves 10 beyond", window.count(_ > Stats.percentile(window, Stats.tailShare(25))) == 10)
+    expect("200 samples allow p95", Stats.tailShare(200) == 0.95)
+    expect("ten samples allow no tail", Stats.tailShare(10).isNaN)
     expect("p100 is the maximum", Stats.percentile(xs, 1.0) == 200.0)
     expect("median of an even sample averages the middle pair", Stats.median(Seq(4.0, 1.0, 3.0, 2.0)) == 2.5)
     expect("median of an odd sample is its middle", Stats.median(Seq(5.0, 1.0, 3.0)) == 3.0)
     expect("percentile of nothing is NaN", Stats.percentile(Nil, 0.5).isNaN)
 
-    // open loop: an operation due at 100 ms, sent at 130 ms, done at 150 ms
-    // took 50 ms from its due time, and the generator ran 30 ms late
-    val ms = 1000000L
-    expect("due-time latency counts the send delay", Stats.dueLatencyMs(100 * ms, 150 * ms) == 50.0)
-    expect("lateness is send minus due", Stats.lateMs(100 * ms, 130 * ms) == 30.0)
-    expect("an early send is not late", Stats.lateMs(100 * ms, 90 * ms) == 0.0)
+    expect("a 10 s window runs two whole cycles", Schedule.windowCycles(10) == 2)
+    expect("a partial cycle's worth of seconds rounds up", Schedule.windowCycles(11) == 3)
+    expect("a window runs at least one cycle", Schedule.windowCycles(1) == 1)
 
     // equal scores rank by string id ascending: "10" < "9"
     val q = Array(1f, 0f)

@@ -5,7 +5,7 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
 import java.util.SplittableRandom
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
@@ -28,10 +28,12 @@ final case class Outcome(req: SearchReq, sentNs: Long, doneNs: Long, bytes: Int,
   def ms: Double = (doneNs - sentNs) / 1e6
 }
 
-/** The read schedule: every (mount, class) pair in turn, live and durable
-  * interleaved, so a window of the run holds the same class mix whatever
-  * the seed; the seed draws each request's query rows and noise. Request
-  * i's content depends only on (seed, i), whichever client sends it. */
+/** The read schedule: a cycle of every (mount, class) pair, live and
+  * durable interleaved, repeated. A measured window is a fixed number of
+  * whole cycles, so it holds the same requests whatever the throughput,
+  * and the same class mix whatever the seed; the seed draws each
+  * request's query rows and noise. Request i's content depends only on
+  * (seed, i), whichever client sends it. */
 object Schedule {
   val LiveClasses = Seq("exact", "range", "threshold", "lsh", "ivf", "pq", "bq", "imi",
     "hnsw", "ivf_filter", "starved_filter", "batch_exact", "batch_ivf")
@@ -40,6 +42,12 @@ object Schedule {
   val Pairs: Seq[(String, String)] =
     LiveClasses.map(("live", _)).zipAll(DurableClasses.map(("durable", _)), null, null)
       .flatMap { case (a, b) => Seq(a, b) }.filter(_ != null)
+  /** About how long one cycle takes on 4 cores with [[Serving.Clients]]
+    * clients: a window of `seconds` runs one cycle per this many seconds. */
+  val CycleSeconds = 5
+
+  def windowCycles(seconds: Int): Int = math.max(1, (seconds + CycleSeconds - 1) / CycleSeconds)
+
   val BatchSize = 16
   val RangeHits = 15
   val ThresholdHits = 12
@@ -52,11 +60,11 @@ object Schedule {
   def make(c: Corpus, seed: Long, idx: Long, mount: String, cls: String): SearchReq = {
     val rng = new SplittableRandom(seed * 0x9E3779B97F4A7C15L + idx)
     val n = if (cls.startsWith("batch_")) BatchSize else 1
-    val rows = Seq.fill(n)(rng.nextInt(Corpus.N))
+    val rows = Seq.fill(n)(rng.nextInt(c.ids.length))
     val qs = rows.map(Corpus.queryNear(c, rng, _))
     val filter = cls match {
-      case "starved_filter" => Some(Corpus.RareLabel)
-      case "ivf_filter" => Some(c.labels(rows.head)).filter(_ != Corpus.RareLabel).orElse(Some("0"))
+      case "starved_filter" => Some(Corpus.StarvedLabel)
+      case "ivf_filter" => Some(c.labels(rows.head))
       case _ => None
     }
     // range/threshold cut midway between two neighbours of the truth, so
@@ -126,17 +134,9 @@ final class Client(base: String) {
     } catch { case e: Exception => (-1, String.valueOf(e)) }
 }
 
-/** What the checks of an ingest-search read may assume about concurrent
-  * writes: ids whose delete was acknowledged, with the ack time. */
-final class WriteLedger {
-  val deletedAt: Map[String, ConcurrentHashMap[String, java.lang.Long]] =
-    Map("live" -> new ConcurrentHashMap(), "durable" -> new ConcurrentHashMap())
-}
-
 /** Verdicts on one search response (a batch is checked per query). */
-final class Checker(c: Corpus, ledger: Option[WriteLedger]) {
+final class Checker(c: Corpus) {
   private val tol = 1e-4
-  private val static = ledger.isEmpty
 
   private def hitsOf(n: JsonNode): Seq[(String, Double, Array[Float], String)] =
     (0 until n.size).map { i =>
@@ -148,50 +148,35 @@ final class Checker(c: Corpus, ledger: Option[WriteLedger]) {
     }
 
   /** (error, recall per query). */
-  def check(r: SearchReq, body: JsonNode, sentNs: Long): (Option[String], Seq[Double]) = {
+  def check(r: SearchReq, body: JsonNode): (Option[String], Seq[Double]) = {
     val answers = if (r.batch) (0 until body.size).map(body.get) else Seq(body)
     if (answers.size != r.queries.size)
       return (Some(s"${answers.size} answers for ${r.queries.size} queries"), Nil)
-    val res = r.queries.zip(answers).map { case (q, a) => one(r, q, hitsOf(a), sentNs) }
+    val res = r.queries.zip(answers).map { case (q, a) => one(r, q, hitsOf(a)) }
     (res.collectFirst { case (Some(e), _) => e }, res.flatMap(_._2))
   }
 
-  private def one(r: SearchReq, q: Array[Float], hits: Seq[(String, Double, Array[Float], String)],
-                  sentNs: Long): (Option[String], Option[Double]) = {
+  private def one(r: SearchReq, q: Array[Float],
+                  hits: Seq[(String, Double, Array[Float], String)]): (Option[String], Option[Double]) = {
     val got = hits.map(h => (h._1, h._2))
-    // a corpus row must come back with its own vector; a row the writer
-    // added is scored from the values it came back with
+    // a corpus row must come back with its own vector
     val bad = hits.collectFirst {
-      case (id, _, v, _) if c.byId.get(id).exists(i => !java.util.Arrays.equals(c.vecs(i), v)) =>
-        s"row $id returned other values"
-      case (id, _, _, _) if static && !c.byId.contains(id) => s"unknown id $id"
-      case (id, _, _, _) if ledger.exists(_.deletedAt(r.mount).get(id) match {
-        case null => false
-        case t => t.longValue < sentNs
-      }) => s"id $id served after its delete was acknowledged"
+      case (id, _, _, _) if !c.byId.contains(id) => s"unknown id $id"
+      case (id, _, v, _) if !java.util.Arrays.equals(c.vecs(c.byId(id)), v) => s"row $id returned other values"
       case (id, _, _, l) if r.filter.exists(_ != l) => s"id $id does not match the filter"
     }
     if (bad.isDefined) return (bad, None)
-    val values: Map[String, Array[Float]] = hits.map(h => h._1 -> h._3).toMap
-    def trueScore(id: String): Option[Double] =
-      c.byId.get(id).map(i => c.vecs(i)).orElse(values.get(id)).map(Stats.cosine(_, q))
-    // the setup-time truth: as-of reads at the post-load stamp, and every
-    // read of search-mix; ingest-search reads see the corpus plus writes
+    def trueScore(id: String): Option[Double] = c.byId.get(id).map(i => Stats.cosine(c.vecs(i), q))
     val rows = r.filter.map(c.rowsWithLabel).getOrElse(c.rows)
-    val atSetup = static || r.cls.endsWith("_asof")
     r.cls match {
       case "range" | "threshold" =>
         val keep: Double => Boolean =
           if (r.cls == "range") s => 1.0 - s <= r.threshold else s => s >= r.threshold
         val truth = rows.map { case (id, v) => (id, Stats.cosine(v, q)) }.filter(t => keep(t._2))
           .sorted(Stats.byScoreThenId)
-        if (atSetup) (Stats.checkRanked(got, truth, trueScore), None)
-        else (got.collectFirst { case (id, s) if !keep(s + tol) && !keep(s - tol) => s"id $id outside the cut" }
-          .orElse(covers(got, truth, trueScore, truthIsAll = true)), None)
+        (Stats.checkRanked(got, truth, trueScore), None)
       case _ if !r.approx =>
-        val truth = Stats.topK(rows, q, Corpus.K)
-        if (atSetup) (Stats.checkRanked(got, truth, trueScore), None)
-        else (covers(got, truth, trueScore, truthIsAll = false), None)
+        (Stats.checkRanked(got, Stats.topK(rows, q, Corpus.K), trueScore), None)
       case _ =>
         val truth = Stats.topK(rows, q, Corpus.K)
         val owed = math.min(Corpus.K, rows.size)
@@ -205,30 +190,13 @@ final class Checker(c: Corpus, ledger: Option[WriteLedger]) {
         (err, Some(Stats.recall(got.map(_._1), truth.map(_._1))))
     }
   }
-
-  /** The check of a read that raced writes: scores true and ordered, and
-    * every corpus row (never deleted) that outranks the answer's last
-    * hit is in it. */
-  private def covers(got: Seq[(String, Double)], corpusTruth: Seq[(String, Double)],
-                     trueScore: String => Option[Double], truthIsAll: Boolean): Option[String] = {
-    val ids = got.map(_._1).toSet
-    val floor = if (got.isEmpty || truthIsAll) Double.NegativeInfinity else got.last._2
-    got.collectFirst {
-      case (id, s) if !trueScore(id).exists(t => math.abs(t - s) <= tol) => s"id $id misscored"
-    }.orElse(got.sliding(2).collectFirst {
-      case Seq(a, b) if b._2 > a._2 + tol => "hits out of order"
-    }).orElse(corpusTruth.collectFirst {
-      case (id, s) if s > floor + tol && !ids(id) => s"corpus row $id missing"
-    }).orElse(if (!truthIsAll && got.size != Corpus.K) Some(s"${got.size} hits") else None)
-  }
 }
 
-/** The serving workloads: an in-process [[RestServer]] with both mounts
-  * loaded, closed-loop readers, and (ingest-search) one open-loop writer. */
-final class Serving(spark: SparkSession, work: String, seed: Long, tracer: Option[Tracer]) {
-  import Serving._
-
-  val corpus: Corpus = Corpus.generate()
+/** The serving workload: an in-process [[RestServer]] with both mounts
+  * loaded from the corpus table at `corpusPath`, and closed-loop readers. */
+final class Serving(spark: SparkSession, work: String, corpusPath: String, seed: Long,
+                    tracer: Option[Tracer]) {
+  val corpus: Corpus = Corpus.load(spark, corpusPath)
   private val ns = Corpus.Namespace
   val ivfDir: String = s"$work/ivf"
   spark.conf.set(graft.operators.Ann.IvfDirConf, ivfDir)
@@ -239,16 +207,6 @@ final class Serving(spark: SparkSession, work: String, seed: Long, tracer: Optio
     val cold = new ConcurrentHashMap[String, Outcome]()
   }
 
-  /** The corpus as a parquet file, the form a bulk load reads. */
-  private val corpusPath: String = {
-    import spark.implicits._
-    val p = s"$work/corpus.parquet"
-    corpus.ids.indices
-      .map(i => (corpus.ids(i), corpus.vecs(i).toSeq, Map("label" -> corpus.labels(i))))
-      .toDF("id", "values", "metadata").coalesce(1).write.parquet(p)
-    p
-  }
-
   /** Stores, corpus load, server start and one request of every
     * schedule class (cold index builds). */
   def setup(): Mounted = {
@@ -257,7 +215,7 @@ final class Serving(spark: SparkSession, work: String, seed: Long, tracer: Optio
       case Some(t) => (new TracedVectorStore(spark, t), new TracedDurableStore(spark, path, t))
       case None => (new VectorStore(spark), new DurableVectorStore(spark, path))
     }
-    val frame = spark.read.parquet(corpusPath)
+    val frame = Corpus.frame(spark, corpusPath)
     live.loadFrame(frame, ns)
     durable.loadFrame(frame, ns)
     val server = new RestServer(live, durable = Some(durable))
@@ -271,7 +229,7 @@ final class Serving(spark: SparkSession, work: String, seed: Long, tracer: Optio
     * many as the measured phase keeps busy). Request indices count down
     * from `from`, outside the measured schedule. Throws on a failure. */
   def oneOfEach(m: Mounted, from: Long): Seq[Outcome] = {
-    val check = new Checker(corpus, None)
+    val check = new Checker(corpus)
     val pending = new java.util.concurrent.ConcurrentLinkedQueue(Schedule.Pairs.zipWithIndex.asJava)
     val out = new ConcurrentLinkedQueue[Outcome]()
     val threads = (0 to Serving.Clients).map { _ =>
@@ -298,22 +256,26 @@ final class Serving(spark: SparkSession, work: String, seed: Long, tracer: Optio
     val t1 = System.nanoTime()
     val (err, recalls) =
       if (code != 200) (Some(s"status $code: ${resp.take(300)} for ${body.take(300)}"), Nil)
-      else try check.check(r, m.client.mapper.readTree(resp), t0)
+      else try check.check(r, m.client.mapper.readTree(resp))
       catch { case e: Exception => (Some(s"unreadable response: $e"), Nil) }
     Outcome(r, t0, t1, resp.length, err.map(e => s"${r.mount}/${r.cls}: $e"), recalls)
   }
 
   /** Closed loop: `clients` threads take the next request of the read
-    * schedule until `seconds` have passed. */
+    * schedule until the window's whole cycles are handed out. Returns the
+    * outcomes and the window's length in seconds. */
   def readers(m: Mounted, seconds: Int, clients: Int, check: Checker): (Seq[Outcome], Double) = {
+    val total = Schedule.windowCycles(seconds).toLong * Schedule.Pairs.size
     val next = new AtomicLong
     val out = new ConcurrentLinkedQueue[Outcome]()
     val t0 = System.nanoTime()
-    val deadline = t0 + seconds * 1000000000L
     val threads = (0 until clients).map { _ =>
       val th = new Thread(() => {
-        while (System.nanoTime() < deadline)
-          out.add(search(m, Schedule.request(corpus, seed, next.getAndIncrement()), check))
+        var i = next.getAndIncrement()
+        while (i < total) {
+          out.add(search(m, Schedule.request(corpus, seed, i), check))
+          i = next.getAndIncrement()
+        }
         CpuMeter.harnessThreadDone()
       })
       th.start(); th
@@ -323,117 +285,8 @@ final class Serving(spark: SparkSession, work: String, seed: Long, tracer: Optio
     val end = if (all.isEmpty) System.nanoTime() else all.map(_.doneNs).max
     (all, (end - t0) / 1e9)
   }
-
-  /** The open-loop writer of ingest-search: one write every
-    * [[Serving.WritePeriodNs]], alternating mounts, sent at its due time
-    * whether or not earlier writes have returned (at most
-    * [[Serving.WritersInFlight]] in flight), and timed from that due
-    * time. Every acknowledged insert is followed by an exact self-query
-    * on its mount that must rank it first. A compaction of the durable
-    * mount is due every [[Serving.CompactEveryNs]]; folds run one at a
-    * time (the store's single-compactor contract). `salt` keeps two
-    * windows of one run from writing the same vectors. */
-  def writer(m: Mounted, ledger: WriteLedger, stopNs: Long, salt: Int): WriterLog = {
-    val log = new WriterLog
-    val rng = new SplittableRandom(seed * 31L + 17L + salt)
-    val acked = Map("live" -> new java.util.concurrent.LinkedBlockingDeque[String](),
-      "durable" -> new java.util.concurrent.LinkedBlockingDeque[String]())
-    // the writer's threads are the harness's: their CPU is not the program's
-    val harness: java.util.concurrent.ThreadFactory = r => new Thread(() => {
-      try r.run() finally CpuMeter.harnessThreadDone()
-    })
-    val sends = java.util.concurrent.Executors.newFixedThreadPool(WritersInFlight, harness)
-    val folds = java.util.concurrent.Executors.newSingleThreadExecutor(harness)
-    val mapper = m.client.mapper
-    def vecJson(v: Array[Float]): String = v.map(_.toString).mkString("[", ",", "]")
-    def sleepUntil(t: Long): Unit =
-      while (System.nanoTime() < t) Thread.sleep(math.max(1L, (t - System.nanoTime()) / 1000000L))
-
-    def write(due: Long, mount: String, op: String, label: Int, fresh: Seq[Array[Float]],
-              victim: Option[String]): Unit = {
-      val q = if (mount == "durable") "&durable=true" else ""
-      log.lateMs.add(Stats.lateMs(due, System.nanoTime()))
-      val (code, body) = op match {
-        case "insert" => m.client.send("POST", s"/vectors?namespace=$ns$q",
-          s"""{"values":${vecJson(fresh.head)},"metadata":{"label":"$label"}}""")
-        case "upsert_batch" => m.client.send("PUT", s"/vectors/batch?namespace=$ns$q",
-          fresh.map(v => s"""{"values":${vecJson(v)},"metadata":{"label":"$label"}}""")
-            .mkString("""{"vectors":[""", ",", "]}"))
-        case _ => m.client.send("DELETE", s"/vectors?namespace=$ns$q", s"""{"ids":["${victim.get}"]}""")
-      }
-      log.lat(mount).add(Stats.dueLatencyMs(due, System.nanoTime()))
-      log.attempted.incrementAndGet()
-      if (code != 200 && code != 201) log.errors.add(s"$mount $op: status $code ${body.take(200)}")
-      else if (op == "delete") {
-        ledger.deletedAt(mount).put(victim.get, java.lang.Long.valueOf(System.nanoTime()))
-        if (!body.contains(victim.get)) log.errors.add(s"$mount delete of ${victim.get} not reported")
-      } else {
-        val node = mapper.readTree(body)
-        val ids = if (op == "insert") Seq(node.get("id").asText)
-          else (0 until node.get("ids").size).map(node.get("ids").get(_).asText)
-        val dur = if (mount == "durable") ",\"durable\":true" else ""
-        val (sc, sb) = m.client.send("POST", s"/search?namespace=$ns",
-          s"""{"query":${vecJson(fresh.head)},"top_k":${Corpus.K}$dur}""")
-        log.attempted.incrementAndGet()
-        val top = if (sc == 200) Option(mapper.readTree(sb).get(0)).map(_.get("id").asText) else None
-        if (!top.contains(ids.head))
-          log.errors.add(s"$mount self-query after $op: top ${top.getOrElse(s"status $sc")}, expected ${ids.head}")
-        ids.foreach(acked(mount).add)
-      }
-    }
-
-    val t0 = System.nanoTime()
-    var nextCompact = t0 + CompactEveryNs
-    var j = 0L
-    while (t0 + j * WritePeriodNs < stopNs) {
-      val due = t0 + j * WritePeriodNs
-      sleepUntil(due)
-      val mount = if (j % 2 == 0) "live" else "durable"
-      val u = rng.nextDouble()
-      val label = rng.nextInt(Corpus.Labels)
-      val victim = if (u >= 0.8) Option(acked(mount).pollFirst()) else None
-      val op = if (u < 0.6 || (u >= 0.8 && victim.isEmpty)) "insert" else if (u < 0.8) "upsert_batch" else "delete"
-      val fresh = op match {
-        case "insert" => Seq(corpus.draw(rng, label))
-        case "upsert_batch" => Seq.fill(Schedule.BatchSize)(corpus.draw(rng, label))
-        case _ => Nil
-      }
-      sends.execute(() => write(due, mount, op, label, fresh, victim))
-      if (due >= nextCompact) {
-        val c = nextCompact
-        folds.execute { () =>
-          val c0 = System.nanoTime()
-          val (cc, cb) = m.client.send("POST", "/compact?durable=true", null)
-          log.compacts.add((c0, System.nanoTime()))
-          log.attempted.incrementAndGet()
-          if (cc != 200) log.errors.add(s"compact due ${(c - t0) / 1000000}ms: status $cc ${cb.take(200)}")
-        }
-        nextCompact += CompactEveryNs
-      }
-      j += 1
-    }
-    for (e <- Seq(sends, folds)) {
-      e.shutdown()
-      e.awaitTermination(120, java.util.concurrent.TimeUnit.SECONDS)
-    }
-    log
-  }
-}
-
-final class WriterLog {
-  val lat: Map[String, ConcurrentLinkedQueue[Double]] =
-    Map("live" -> new ConcurrentLinkedQueue[Double](), "durable" -> new ConcurrentLinkedQueue[Double]())
-  val lateMs = new ConcurrentLinkedQueue[Double]()
-  val errors = new ConcurrentLinkedQueue[String]()
-  val attempted = new AtomicInteger
-  val compacts = new ConcurrentLinkedQueue[(Long, Long)]()
 }
 
 object Serving {
-  /** One write every this many ns, alternating mounts: one write per
-    * second per mount. */
-  val WritePeriodNs: Long = 500L * 1000000L
-  val WritersInFlight = 4
-  val CompactEveryNs: Long = 8L * 1000000000L
   val Clients = 3
 }

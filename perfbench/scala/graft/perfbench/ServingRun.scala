@@ -5,56 +5,43 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.SparkSession
 
-/** search-mix and ingest-search: set up, warm up, then measure one
-  * window untraced; a traced run measures a second, traced window and
-  * derives the per-layer metrics from it. */
+/** search-mix: set up, warm up, then measure one window untraced; a
+  * traced run measures a second, traced window and derives the per-layer
+  * metrics from it. */
 object ServingRun {
 
   /** End-to-end figures of one measured window. */
-  final case class Window(outcomes: Seq[Outcome], seconds: Double, cpuNs: Long,
-                          writes: Option[WriterLog]) {
+  final case class Window(outcomes: Seq[Outcome], seconds: Double, cpuNs: Long) {
     val ms: Seq[Double] = outcomes.map(_.ms)
     def p50: Double = Stats.median(ms)
-    def p75: Double = Stats.percentile(ms, 0.75)
+    /** The highest percentile with ten samples beyond it. */
+    def tailShare: Double = Stats.tailShare(ms.size)
+    def tail: Double = Stats.percentile(ms, tailShare)
     def p90: Double = Stats.percentile(ms, 0.90)
     def p95: Double = Stats.percentile(ms, 0.95)
     def rps: Double = outcomes.size / seconds
     def cpuMsPerOp: Double = cpuNs / 1e6 / outcomes.size
-    def failures: Seq[String] = outcomes.flatMap(_.error) ++ writes.toSeq.flatMap(_.errors.asScala)
-    def attempted: Long = outcomes.size + writes.map(_.attempted.get.toLong).getOrElse(0L)
+    def failures: Seq[String] = outcomes.flatMap(_.error)
+    def attempted: Long = outcomes.size
   }
 
-  def run(spark: SparkSession, work: String, seed: Long, seconds: Int, ingest: Boolean,
-          tracer: Option[Tracer]): RunResult = {
-    val s = new Serving(spark, work, seed, tracer)
-    val t0 = System.nanoTime()
+  /** `jvmStartMs` is the process start (epoch ms): set-up runs from it to
+    * the end of the cold round, Spark session and corpus load included. */
+  def run(spark: SparkSession, work: String, corpusPath: String, seed: Long, seconds: Int,
+          tracer: Option[Tracer], jvmStartMs: Long): RunResult = {
+    val s = new Serving(spark, work, corpusPath, seed, tracer)
     val m = s.setup()
-    val setupS = (System.nanoTime() - t0) / 1e9
+    val setupS = (System.currentTimeMillis() - jvmStartMs) / 1e3
     // a second untimed round of every class lets the JIT settle before
     // the measured window, so the window measures serving, not warm-up
     s.oneOfEach(m, -1000L)
 
-    var windowCount = 0
     def window(): Window = {
       System.gc()
-      windowCount += 1
-      val salt = windowCount
-      val ledger = if (ingest) Some(new WriteLedger) else None
-      val check = new Checker(s.corpus, ledger)
-      val stop = System.nanoTime() + seconds * 1000000000L
-      val writer = ledger.map { l =>
-        var log: WriterLog = null
-        val th = new Thread(() => {
-          log = s.writer(m, l, stop, salt)
-          CpuMeter.harnessThreadDone()
-        })
-        th.start()
-        (th, () => log)
-      }
+      val check = new Checker(s.corpus)
       val cpu0 = CpuMeter.read()
       val (outs, secs) = s.readers(m, seconds, Serving.Clients, check)
-      writer.foreach(_._1.join())
-      Window(outs, secs, CpuMeter.read() - cpu0, writer.map(_._2()))
+      Window(outs, secs, CpuMeter.read() - cpu0)
     }
 
     val plain = window()
@@ -73,8 +60,9 @@ object ServingRun {
     val perClass = plain.outcomes.groupBy(o => s"${o.req.mount}.${o.req.cls}").toSeq.sortBy(_._1)
       .map { case (k, os) => (s"client.$k.p50_ms", Stats.median(os.map(_.ms)), "ms") }
     val cold = m.cold.asScala.toSeq.sortBy(_._1).map { case (k, o) => (s"cold.$k.ms", o.ms, "ms") }
-    val named = e2e ++ Seq(("p50_ms", plain.p50, "ms"), ("p75_ms", plain.p75, "ms"),
-      ("ops_per_s", plain.rps, "1/s")) ++ namedFigures(plain, ingest) ++ perClass ++ cold
+    val named = e2e ++ Seq(("p50_ms", plain.p50, "ms"), ("tail_ms", plain.tail, "ms"),
+      ("tail_share", plain.tailShare, "ratio"), ("ops_per_s", plain.rps, "1/s")) ++
+      namedFigures(plain) ++ perClass ++ cold
     val windows = Seq(plain) ++ traced.map(_._1)
     RunResult(e2e, Layers.complete(traced.map(_._2).getOrElse(Nil)), named,
       windows.map(_.attempted).sum, windows.map(_.failures.size.toLong).sum,
@@ -82,22 +70,11 @@ object ServingRun {
   }
 
   /** The workload's named figures, printed in the summary line. */
-  private def namedFigures(w: Window, ingest: Boolean): Seq[(String, Double, String)] = {
-    val recalls = w.outcomes.flatMap(_.recalls)
-    val base = Seq(("search_rps", w.rps, "req/s"), ("search_p50_ms", w.p50, "ms"),
+  private def namedFigures(w: Window): Seq[(String, Double, String)] =
+    Seq(("search_rps", w.rps, "req/s"), ("search_p50_ms", w.p50, "ms"),
       ("search_p90_ms", w.p90, "ms"), ("search_p95_ms", w.p95, "ms"), ("search_samples", w.ms.size.toDouble, "count"),
-      ("error_rate", w.failures.size.toDouble / math.max(1L, w.attempted), "ratio"))
-    val recall = if (ingest) Nil else Seq(("recall_at_10", Stats.mean(recalls), "ratio"))
-    val writes = w.writes.toSeq.flatMap { l =>
-      Seq("live", "durable").flatMap { mnt =>
-        val xs = l.lat(mnt).asScala.toSeq
-        Seq((s"write_${mnt}_p50_ms", Stats.median(xs), "ms"),
-          (s"write_${mnt}_p95_ms", Stats.percentile(xs, 0.95), "ms"),
-          (s"write_${mnt}_samples", xs.size.toDouble, "count"))
-      }
-    }
-    base ++ recall ++ writes
-  }
+      ("error_rate", w.failures.size.toDouble / math.max(1L, w.attempted), "ratio"),
+      ("recall_at_10", Stats.mean(w.outcomes.flatMap(_.recalls)), "ratio"))
 
   private def stats(m: Serving#Mounted): JsonNode = {
     val (code, body) = m.client.send("GET", "/stats?durable=true", null)
@@ -159,18 +136,7 @@ object ServingRun {
       out += s"store.$mnt.starved_skips" ->
         delta(if (mnt == "live") "store" else "durable", "starved_probe_skips") * per1k
       if (mnt == "durable") out += "store.durable.exact_rescues" -> delta("durable", "exact_rescues") * per1k
-      Seq("insert", "upsert_batch", "delete").foreach { op =>
-        out += s"store.$mnt.$op.ms_p50" -> Stats.median(calls.filter(c => c.mount == mnt && c.cls == op).map(_.ms))
-      }
     }
-    val compacts = calls.filter(_.cls == "compact")
-    out += "store.durable.compact.ms_p50" -> Stats.median(compacts.map(_.ms))
-    out += "store.durable.compact.count" -> compacts.size.toDouble
-    out += "store.search_during_compact.ms_p50" -> Stats.median(calls.filter { c =>
-      searchCls(c.cls) && compacts.exists(k => c.startMs < k.endMs && k.startMs < c.endMs)
-    }.map(_.ms))
-    out += "harness.writer_late_ms_p95" ->
-      w.writes.map(l => Stats.percentile(l.lateMs.asScala.toSeq, 0.95)).getOrElse(0.0)
     out ++= overhead(plain.cpuMsPerOp, w.cpuMsPerOp, "cpu_ms_per_op") ++
       overhead(plain.p50, w.p50, "p50_ms") ++ overhead(plain.rps, w.rps, "ops_per_s")
     out.result()

@@ -12,6 +12,11 @@ object Stats {
       s(math.min(s.size - 1, math.max(0, math.ceil(p * s.size).toInt - 1)))
     }
 
+  /** The highest share p whose nearest-rank percentile leaves at least
+    * `beyond` of `n` samples above it; NaN when there are too few samples. */
+  def tailShare(n: Int, beyond: Int = 10): Double =
+    if (n <= beyond) Double.NaN else (n - beyond).toDouble / n
+
   /** Median, averaging the two middle samples of an even-sized sample. */
   def median(xs: Seq[Double]): Double =
     if (xs.isEmpty) Double.NaN
@@ -22,14 +27,6 @@ object Stats {
     }
 
   def mean(xs: Seq[Double]): Double = if (xs.isEmpty) Double.NaN else xs.sum / xs.size
-
-  /** Latency of an open-loop operation: from when it was due, not from
-    * when the generator got round to sending it, so a stall that delays
-    * later sends is charged to them. */
-  def dueLatencyMs(dueNs: Long, doneNs: Long): Double = (doneNs - dueNs) / 1e6
-
-  /** How late the generator sent an operation (0 when on time). */
-  def lateMs(dueNs: Long, sentNs: Long): Double = math.max(0L, sentNs - dueNs) / 1e6
 
   /** Cosine similarity with float64 accumulation over float32 inputs,
     * the engine's kernel arithmetic (dot / (|a| |b|)); 0 for a zero vector. */

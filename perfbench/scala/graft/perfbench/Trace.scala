@@ -14,7 +14,7 @@ import graft.store.{DurableVectorStore, VectorStore}
 /** One outermost store call, as the traced run sees it from outside the
   * store: which mount and request class, its wall interval, the job
   * group its Spark work ran under, and a key that links it to the client
-  * request that caused it (the hash of the first query or write vector). */
+  * request that caused it (the hash of the first query vector). */
 final case class StoreCall(mount: String, cls: String, group: String,
                            startMs: Long, endMs: Long, nanos: Long, key: Int) {
   def ms: Double = nanos / 1e6
@@ -134,12 +134,12 @@ object Tracer {
   /** The live-mount request class a findSimilar call serves. */
   def liveClass(approx: Boolean, index: String, filter: Map[String, String]): String =
     if (!approx) "exact"
-    else if (filter.get("label").contains(Corpus.RareLabel)) "starved_filter"
+    else if (filter.get("label").contains(Corpus.StarvedLabel)) "starved_filter"
     else if (filter.nonEmpty) s"${index}_filter"
     else index
 }
 
-/** The live mount with every store call the REST facade makes timed. */
+/** The live mount with every search call the REST facade makes timed. */
 final class TracedVectorStore(spark: SparkSession, t: Tracer) extends VectorStore(spark) {
   import Tracer._
   private val M = "live"
@@ -169,19 +169,9 @@ final class TracedVectorStore(spark: SparkSession, t: Tracer) extends VectorStor
                                    persistProbes: Boolean): Seq[Seq[SearchHit]] =
     t.timed(M, "batch_ivf", keyOfBatch(queries))(
       super.findSimilarBatchIvf(queries, k, namespace, filter, jsonFilter, persistProbes))
-
-  override def insertJson(values: Seq[Float], metadataJson: String, namespace: String): String =
-    t.timed(M, "insert", keyOf(values))(super.insertJson(values, metadataJson, namespace))
-
-  override def upsertManyJson(vs: Seq[(Seq[Float], String)], namespace: String): Seq[String] =
-    t.timed(M, "upsert_batch", vs.headOption.map(v => keyOf(v._1)).getOrElse(0))(
-      super.upsertManyJson(vs, namespace))
-
-  override def delete(ids: Seq[String], namespace: String): Seq[String] =
-    t.timed(M, "delete", ids.headOption.map(_.hashCode).getOrElse(0))(super.delete(ids, namespace))
 }
 
-/** The durable mount with every store call the REST facade makes timed. */
+/** The durable mount with every search call the REST facade makes timed. */
 final class TracedDurableStore(spark: SparkSession, path: String, t: Tracer)
     extends DurableVectorStore(spark, path) {
   import Tracer._
@@ -212,16 +202,4 @@ final class TracedDurableStore(spark: SparkSession, path: String, t: Tracer)
                                       jsonFilter: Map[String, String]): Seq[Seq[SearchHit]] =
     t.timed(M, "batch_ivf", keyOfBatch(queries))(
       super.findSimilarBatchApprox(queries, k, metric, namespace, persistProbes, filter, jsonFilter))
-
-  override def insertJson(values: Seq[Float], metadataJson: String, namespace: String): String =
-    t.timed(M, "insert", keyOf(values))(super.insertJson(values, metadataJson, namespace))
-
-  override def upsertManyJson(vs: Seq[(Seq[Float], String)], namespace: String): Seq[String] =
-    t.timed(M, "upsert_batch", vs.headOption.map(v => keyOf(v._1)).getOrElse(0))(
-      super.upsertManyJson(vs, namespace))
-
-  override def delete(ids: Seq[String], namespace: String): Seq[String] =
-    t.timed(M, "delete", ids.headOption.map(_.hashCode).getOrElse(0))(super.delete(ids, namespace))
-
-  override def compact(): Long = t.timed(M, "compact", 0)(super.compact())
 }
