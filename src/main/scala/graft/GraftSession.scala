@@ -22,10 +22,17 @@ object GraftSession {
     graft.sources.Tables.requiredConfs.foreach { case (k, v) => b.config(k, v) }
     // measurement-harness passthrough (r21): semicolon-separated k=v
     // pairs for A/B runs of conf-gated knobs (e.g. the drain pins)
-    // without recompiling — never set by the graded entry points
+    // without recompiling — never set by the graded entry points. Every
+    // pair applied is logged, so a run's output shows the overrides a
+    // leftover exported variable put into a graded or bench session.
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';').foreach { kv =>
       val i = kv.indexOf('=')
-      if (i > 0) b.config(kv.take(i).trim, kv.drop(i + 1).trim)
+      if (i > 0) {
+        val (k, v) = (kv.take(i).trim, kv.drop(i + 1).trim)
+        org.slf4j.LoggerFactory.getLogger(getClass)
+          .warn(s"SPARK_GRAFT_EXTRA_CONF applies $k=$v")
+        b.config(k, v)
+      }
     })
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")

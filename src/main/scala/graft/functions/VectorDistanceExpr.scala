@@ -48,41 +48,8 @@ case class VectorDistance(left: Expression, right: Expression, metric: String)
 
   override def prettyName: String = s"vec_$metric"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var i = 0
-    metric match {
-      case "l2sq" =>
-        var acc = 0.0
-        while (i < n) {
-          val d = x.getFloat(i).toDouble - y.getFloat(i).toDouble
-          acc += d * d; i += 1
-        }
-        acc
-      case "dot" =>
-        var acc = 0.0
-        while (i < n) {
-          acc += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1
-        }
-        acc
-      case "cos" =>
-        var d = 0.0; var na = 0.0; var nb = 0.0
-        while (i < n) {
-          val xv = x.getFloat(i).toDouble; val yv = y.getFloat(i).toDouble
-          d += xv * yv; na += xv * xv; nb += yv * yv; i += 1
-        }
-        // zero vector → similarity 0, never NaN (NaN sorts above every
-        // real score in Spark DESC and would hijack top-k). The same
-        // guard covers non-finite inputs: an Infinity component makes
-        // d/den NaN (Inf/Inf) — map that to 0 too, so one corrupt row
-        // can never become every query's permanent #1 hit.
-        val den = math.sqrt(na) * math.sqrt(nb)
-        val r = if (den == 0.0) 0.0 else d / den
-        if (r.isNaN) 0.0 else r
-    }
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorDistance.eval(metric, a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -138,6 +105,45 @@ case class VectorDistance(left: Expression, right: Expression, metric: String)
 object VectorDistance {
 
   val Metrics: Set[String] = Set("l2sq", "dot", "cos")
+
+  /** The interpreted kernel: one loop over the common prefix of the two
+    * arrays, float32 elements widened to double in ascending index order,
+    * the same arithmetic as the generated code. Catalyst's interpreted
+    * path and the live store's driver snapshot both call this, so a
+    * driver-side score is bit-equal to the one a Spark plan computes. */
+  def eval(metric: String, x: ArrayData, y: ArrayData): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var i = 0
+    metric match {
+      case "l2sq" =>
+        var acc = 0.0
+        while (i < n) {
+          val d = x.getFloat(i).toDouble - y.getFloat(i).toDouble
+          acc += d * d; i += 1
+        }
+        acc
+      case "dot" =>
+        var acc = 0.0
+        while (i < n) {
+          acc += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1
+        }
+        acc
+      case "cos" =>
+        var d = 0.0; var na = 0.0; var nb = 0.0
+        while (i < n) {
+          val xv = x.getFloat(i).toDouble; val yv = y.getFloat(i).toDouble
+          d += xv * yv; na += xv * xv; nb += yv * yv; i += 1
+        }
+        // zero vector → similarity 0, never NaN (NaN sorts above every
+        // real score in Spark DESC and would hijack top-k). The same
+        // guard covers non-finite inputs: an Infinity component makes
+        // d/den NaN (Inf/Inf) — map that to 0 too, so one corrupt row
+        // can never become every query's permanent #1 hit.
+        val den = math.sqrt(na) * math.sqrt(nb)
+        val r = if (den == 0.0) 0.0 else d / den
+        if (r.isNaN) 0.0 else r
+    }
+  }
 
   private def make(metric: String)(a: Column, b: Column): Column =
     CatalystBridge.column(VectorDistance(

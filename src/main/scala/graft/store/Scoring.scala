@@ -1,8 +1,11 @@
 package graft.store
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
+import graft.functions.VectorDistance
 import graft.functions.VectorFunctions._
 
 /** Scoring/ranking contract shared by BOTH store facades. One definition,
@@ -65,6 +68,39 @@ private[store] object Scoring {
   def ranked(df: DataFrame, metric: String): DataFrame =
     if (metric == "cosine") df.orderBy(col("score").desc, col("id"))
     else df.orderBy(col("score"), col("id"))
+
+  /** The driver twin of [[score]]: the same kernel function the Catalyst
+    * expression evaluates, so a score computed on the driver is bit-equal
+    * to the one a plan computes. Throws on an unknown metric exactly as
+    * [[score]] does. */
+  def driverScore(metric: String): (ArrayData, ArrayData) => Double = metric match {
+    case "l2"     => (a, b) => VectorDistance.eval("l2sq", a, b)
+    case "cosine" => (a, b) => VectorDistance.eval("cos", a, b)
+    case "ip"     => (a, b) => 1.0 - VectorDistance.eval("dot", a, b)
+    case other    => throw new IllegalArgumentException(
+      s"unknown metric '$other' (expected l2 | cosine | ip)")
+  }
+
+  /** The driver twin of [[ranked]]'s order: score under Spark's double
+    * ordering (NaN largest, -0.0 == 0.0), descending for cosine, then id
+    * in UTF-8 byte order, which is how Spark compares strings (Java's
+    * `String.compareTo` orders UTF-16 units and disagrees above the BMP). */
+  def compareRanked(metric: String, s1: Double, id1: UTF8String,
+                    s2: Double, id2: UTF8String): Int = {
+    val c =
+      if (metric == "cosine") SQLOrderingUtil.compareDoubles(s2, s1)
+      else SQLOrderingUtil.compareDoubles(s1, s2)
+    if (c != 0) c else id1.compareTo(id2)
+  }
+
+  /** Hits collected unordered, sorted on the driver in [[ranked]] order. */
+  def sortHits(hits: Seq[graft.model.SearchHit], metric: String): Seq[graft.model.SearchHit] = {
+    val keyed = hits.map(h => (h, UTF8String.fromString(h.id))).toArray
+    java.util.Arrays.sort(keyed, (a: (graft.model.SearchHit, UTF8String),
+                                  b: (graft.model.SearchHit, UTF8String)) =>
+      compareRanked(metric, a._1.score, a._2, b._1.score, b._2))
+    keyed.toSeq.map(_._1)
+  }
 
   /** Batched exact search shared by both facades: Q query vectors
     * answered by ONE scan of `base`. The queries broadcast as a literal

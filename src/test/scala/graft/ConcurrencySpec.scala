@@ -242,4 +242,58 @@ class ConcurrencySpec extends AnyFunSuite {
           s"exact=$exactTop approx=$approxTop")
     } finally spark.conf.unset(d.AnnStalenessCheckMsConf)
   }
+
+  test("racing writers and readers never read a snapshot older than their last acknowledged write") {
+    val s = new VectorStore(spark)
+    val dim = 8
+    s.upsertMany(randVectors(50, dim, seed = 5).map(v => (v, Map.empty[String, String])), "ryw")
+    val writers = 3
+    val perWriter = 6
+    val readers = 2
+    val readerRounds = 12
+    val pool = Executors.newFixedThreadPool(writers + readers)
+    val start = new CountDownLatch(1)
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val done = new java.util.concurrent.atomic.AtomicInteger(0)
+    val writerTasks = (0 until writers).map { t =>
+      pool.submit(new Runnable {
+        def run(): Unit = {
+          start.await()
+          try randVectors(perWriter, dim, seed = 100 + t).zipWithIndex.foreach { case (v, i) =>
+            val id = s"w${t}_$i"
+            s.upsert(id, v, namespace = "ryw")
+            // the acknowledged write is visible to this writer's next read
+            val hit = s.findSimilar(v, k = 1, metric = "l2", namespace = "ryw").head
+            if (hit.id != id || hit.score != 0.0)
+              throw new AssertionError(s"$id not read back: got ${hit.id} at ${hit.score}")
+          } catch { case e: Throwable => errs.add(e) }
+          finally done.incrementAndGet()
+        }
+      })
+    }
+    val readerTasks = (0 until readers).map { r =>
+      pool.submit(new Runnable {
+        def run(): Unit = {
+          start.await()
+          try {
+            var i = 0
+            while (i < readerRounds || done.get() < writers) {
+              val seen = s.currentEpoch
+              val snap = s.snapshot("ryw")
+                .getOrElse(throw new AssertionError("ryw is under the snapshot bound"))
+              if (snap.epoch < seen)
+                throw new AssertionError(s"snapshot at epoch ${snap.epoch} served after epoch $seen was observed")
+              s.findSimilar(randVectors(1, dim, seed = 1000L * r + i).head, k = 3, namespace = "ryw")
+              i += 1
+            }
+          } catch { case e: Throwable => errs.add(e) }
+        }
+      })
+    }
+    start.countDown()
+    (writerTasks ++ readerTasks).foreach(_.get(5, TimeUnit.MINUTES))
+    pool.shutdown()
+    assert(errs.isEmpty, errs.toArray.mkString("; "))
+    assert(s.namespaceCount("ryw") == 50 + writers * perWriter)
+  }
 }

@@ -862,6 +862,48 @@ class RestServerSpec extends AnyFunSuite {
     }
   }
 
+  test("concurrent /search over a store bulk-loaded from a driver-local frame never fails") {
+    // A frame built on the driver (`Seq(...).toDF`) optimizes to a local
+    // relation, and its derived metadataJson column used to be evaluated
+    // on the driver by every planning of every query against the store.
+    // Concurrent searches then shared one JSON generator and some failed
+    // with 400 "malformed JSON: Can not start an object". Runs on both
+    // serving tiers: the driver snapshot and the Spark plans.
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val frame = (0 until 300).map { i =>
+      (s"r$i", Seq.fill(8)(rnd.nextFloat() * 2 - 1), Map("label" -> (i % 5).toString))
+    }.toDF("id", "values", "metadata")
+    for (sparkPath <- Seq(false, true)) {
+      val store = new VectorStore(spark)
+      if (sparkPath) store.snapshotMaxRows = -1
+      store.loadFrame(frame, "bulk")
+      val server = new RestServer(store)
+      server.start()
+      try {
+        val base = s"http://127.0.0.1:${server.boundPort}"
+        val threads = 3
+        val perThread = 50
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+        val bad = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+        val tasks = (0 until threads).map { t =>
+          pool.submit(new Runnable {
+            def run(): Unit = (0 until perThread).foreach { i =>
+              val q = Seq.fill(8)(rnd.synchronized(rnd.nextFloat()))
+              val body = s"""{"query": [${q.mkString(",")}], "top_k": 3,
+                            | "filter": {"label": "${(t + i) % 5}"}}""".stripMargin
+              val (c, b) = send("POST", s"$base/search?namespace=bulk", body)
+              if (c != 200 || mapper.readTree(b).size() != 3) bad.add(s"$c $b")
+            }
+          })
+        }
+        tasks.foreach(_.get(5, java.util.concurrent.TimeUnit.MINUTES))
+        pool.shutdown()
+        assert(bad.isEmpty, s"sparkPath=$sparkPath: ${bad.size} failed, first: ${bad.peek()}")
+      } finally server.stop()
+    }
+  }
+
   test("/query/explain names the branch a search would take, without running it (r20)") {
     withServer { (base, srv) =>
       send("PUT", s"$base/vectors/batch?namespace=exp",

@@ -232,6 +232,29 @@ class VectorStoreSpec extends AnyFunSuite {
     }
   }
 
+  test("explainSearch notes whether the search serves from the driver snapshot or from Spark") {
+    val s = newStore
+    s.upsertMany(crud, "ns")
+    def notes(e: graft.model.SearchExplain): String = e.notes.mkString(" | ")
+    val q = Seq(1f, 2f, 3f)
+    // before any read at this epoch: the next search decides
+    val cold = s.explainSearch(q, k = 2, namespace = "ns")
+    assert(notes(cold).contains("no epoch-current driver snapshot"), notes(cold))
+    s.findSimilar(q, k = 2, namespace = "ns")
+    val warm = s.explainSearch(q, k = 2, namespace = "ns")
+    assert(notes(warm).contains(
+      s"scores on the driver snapshot (epoch ${s.currentEpoch}, 3 rows)"), notes(warm))
+    // the Spark plan stays disclosed for namespaces above the bound
+    assert(warm.plan.contains("TakeOrderedAndProject") && warm.branch == "exact")
+    val probe = s.explainSearch(q, k = 2, namespace = "ns", approx = true, index = "ivf")
+    assert(notes(probe).contains("reranks the index's candidate ids on the driver snapshot"),
+      notes(probe))
+    s.snapshotMaxRows = 2
+    s.findSimilar(q, k = 2, namespace = "ns")
+    val big = s.explainSearch(q, k = 2, namespace = "ns")
+    assert(notes(big).contains("serves from Spark: the namespace holds more than 2 rows"), notes(big))
+  }
+
   test("vector equality: identical payload, different ids → unequal (test :192-200)") {
     import graft.model.VectorRecord
     val v1 = VectorRecord("id1", "ns", Array(1f, 2f), Map("k" -> "v"))
