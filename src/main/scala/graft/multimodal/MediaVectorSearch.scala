@@ -548,6 +548,16 @@ object MediaVectorSearch {
 
   private val funnelStores = new ConcurrentHashMap[String, VectorStore]()
 
+  /** Rows the budgeted prune leaves, from the per-leg survivor counts:
+    * the prune is an exact top-m cut over ids distinct within a leg, so
+    * each leg loses min(count, FunnelPrune) rows and a leg thinner than
+    * its budget keeps none. Keyed by leg name ("im", "au", "vi"): an
+    * empty leg is absent from the grouped count and counts 0. */
+  private[graft] def prunedCount(legCounts: Map[String, Long]): Long =
+    Seq("im", "au", "vi")
+      .map(leg => math.max(0L, legCounts.getOrElse(leg, 0L) - FunnelPrune))
+      .sum
+
   /** Fixture aux of the most recent q167 run — oracle hook (the
     * [[lastAux]] honesty contract). */
   @volatile private var lastFunnelAux: Option[String] = None
@@ -634,20 +644,15 @@ object MediaVectorSearch {
     // stage counts in ONE action (r21 — guide §1.2: six count jobs over
     // the three pinned legs became one grouped union count): n1 sums the
     // per-leg counts (id-only union — the features never ride the
-    // count), and n2 is ALGEBRAIC — the prune is an exact budget
-    // (orderBy().limit(FunnelPrune) over ids distinct within a leg
-    // drops exactly FunnelPrune rows per modality), so
-    // n2 = n1 − 3·FunnelPrune; the require pins the premise (every leg
-    // at least budget-thick) so a thin leg can never silently ship a
-    // derived count its own anti-join wouldn't produce.
+    // count), and n2 is ALGEBRAIC from the same counts ([[prunedCount]]),
+    // which also holds for a leg thinner than its prune budget.
     val legCounts = imS1.select(lit("im").as("leg"), col("id"))
       .union(auS1.select(lit("au").as("leg"), col("id")))
       .union(viS1.select(lit("vi").as("leg"), col("id")))
-      .groupBy(col("leg")).count().collect().map(_.getLong(1))
-    require(legCounts.length == 3 && legCounts.forall(_ >= FunnelPrune),
-      "q167: a funnel leg is thinner than its prune budget")
-    val n1 = legCounts.sum
-    val n2 = n1 - 3L * FunnelPrune
+      .groupBy(col("leg")).count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val n1 = legCounts.values.sum
+    val n2 = prunedCount(legCounts)
 
     val store = funnelStores.computeIfAbsent(dir, _ => {
       val s = new VectorStore(spark)

@@ -360,13 +360,9 @@ class RestServer(store: VectorStore, port: Int = 0,
             // the durable approx paths: the IVF layout and its derived
             // PQ/BQ codes, IMI grid, HNSW graphs (r10-r12) and — since
             // r15 — LSH band signatures, closing the live/durable index
-            // matrix; the index vocabulary is now symmetric across
-            // mounts (a typo still 422s below via the store dispatch)
-            if (approx && index != "ivf" && index != "pq" &&
-                index != "bq" && index != "imi" && index != "hnsw" &&
-                index != "lsh")
-              throw new IllegalArgumentException(
-                "durable approx search serves from the IVF layout, its PQ/BQ codes, its IMI grid, its HNSW graphs or its LSH signatures; pass index:'ivf', 'pq', 'bq', 'imi', 'hnsw' or 'lsh'")
+            // matrix; the index vocabulary is symmetric across mounts,
+            // so the index check above covers both
+            //
             // metadata filters serve on the durable EXACT path (r15) and
             // — since r16 — on ALL SIX indexed paths: candidate-time on
             // ivf/imi/lsh (records meet the predicate before any k-cut),
@@ -471,15 +467,10 @@ class RestServer(store: VectorStore, port: Int = 0,
                   index = if (wantApprox) batchIndex else "ivf")
               case None =>
             if (wantApprox) {
-              // ivf serves cosine|l2 (raw-space cell geometry); the
-              // code/graph mounts are cosine (their training geometry)
-              if (batchIndex == "ivf") {
-                if (metric != "cosine" && metric != "l2")
-                  throw new IllegalArgumentException(
-                    s"durable approx batch ivf supports cosine|l2, got metric '$metric'")
-              } else if (metric != "cosine")
-                throw new IllegalArgumentException(
-                  s"durable approx batch '$batchIndex' is cosine only, got metric '$metric'")
+              // the store's one metric table: the pq/bq/imi/hnsw/lsh
+              // batch forms take no metric, so the check runs here
+              DurableVectorStore.requireIndexMetric(batchIndex, metric,
+                batch = true)
               batchIndex match {
                 case "ivf"  => d.findSimilarBatchApprox(qs, k, metric, ns,
                   filter = stringMapOf(body, "filter"),

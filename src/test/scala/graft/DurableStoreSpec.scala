@@ -1170,6 +1170,30 @@ class DurableStoreSpec extends AnyFunSuite {
       assert(d.starvedProbeSkips.get() == skips1,
         "a stale batch fact must not serve after a commit")
       assert(r4.forall(h => h.exists(_.id == "rnew") && h.size == 6))
+      // single and batch searches share one fact: the single-query form
+      // skips on the fact the batch just re-proved (6 matching rows)...
+      val rescues1 = d.exactRescues.get()
+      val skips2 = d.starvedProbeSkips.get()
+      val s1 = d.findSimilar(qs.head, k = 10, namespace = "sb",
+        approx = true, index = "ivf", filter = Map("grp" -> "rare"))
+      assert(d.starvedProbeSkips.get() == skips2 + 1 &&
+        d.exactRescues.get() == rescues1,
+        "a single query did not use the fact a batch proved")
+      assert(s1.map(h => (h.id, h.score)) == r4.head.map(h => (h.id, h.score)))
+      // ...and after a commit, a fact a single-query rescue proves
+      // (7 matching rows) makes the next batch skip its probe
+      d.loadFrame(Seq(("rnew2", Seq(0.51f, 0.3f, 0.2f, 1f),
+        Map("grp" -> "rare"))).toDF("id", "values", "metadata"), "sb")
+      val s2 = d.findSimilar(qs.head, k = 10, namespace = "sb",
+        approx = true, index = "ivf", filter = Map("grp" -> "rare"))
+      assert(s2.size == 7 && d.exactRescues.get() == rescues1 + 1 &&
+        d.starvedProbeSkips.get() == skips2 + 1)
+      val r5 = d.findSimilarBatchApprox(qs, k = 10, namespace = "sb",
+        filter = Map("grp" -> "rare"))
+      assert(d.starvedProbeSkips.get() == skips2 + 3 &&
+        d.exactRescues.get() == rescues1 + 1,
+        "a batch did not use the fact a single query proved")
+      assert(r5.head.map(h => (h.id, h.score)) == s2.map(h => (h.id, h.score)))
     } finally spark.conf.unset("spark.graft.durable.starvedCheckMs")
   }
 
@@ -1496,6 +1520,35 @@ class DurableStoreSpec extends AnyFunSuite {
     assert(viaPq.map(x => (x.id, x.score)) ==
       viaExact.map(x => (x.id, x.score)),
       "codes younger than the snapshot must fall back to the exact as-of scan")
+    // an emptied namespace: every row deleted after the stamp, before any
+    // layout was built. No layout can be built over an empty live set,
+    // so on every index the as-of reads (single and batch) answer from
+    // the exact as-of scan and the live read answers empty — neither
+    // counted as a rescue
+    val d3 = new DurableVectorStore(spark, tmp())
+    d3.loadFrame(rows.take(20).toDF("id", "values"), "emp")
+    val h3 = d3.currentSeq()
+    assert(d3.delete(rows.take(20).map(_._1), "emp").size == 20)
+    val qs3 = Seq(q, rows.head._2)
+    val exact3 = d3.findSimilarAsOf(q, h3, k = 5, namespace = "emp")
+    val exactBatch3 = d3.findSimilarBatchAsOf(qs3, h3, k = 5,
+      namespace = "emp")
+    assert(exact3.size == 5 && exactBatch3.forall(_.size == 5))
+    for (idx <- Seq("ivf", "pq", "bq", "imi", "hnsw", "lsh")) {
+      val single = d3.findSimilarAsOf(q, h3, k = 5, namespace = "emp",
+        approx = true, index = idx)
+      assert(single.map(x => (x.id, x.score)) ==
+        exact3.map(x => (x.id, x.score)),
+        s"$idx: the emptied namespace's as-of read diverged from the exact as-of scan")
+      val batch = d3.findSimilarBatchAsOf(qs3, h3, k = 5, namespace = "emp",
+        approx = true, index = idx)
+      assert(batch.map(_.map(x => (x.id, x.score))) ==
+        exactBatch3.map(_.map(x => (x.id, x.score))),
+        s"$idx: the emptied namespace's batch as-of read diverged from the exact as-of batch")
+      assert(d3.findSimilar(q, k = 5, namespace = "emp", approx = true,
+        index = idx).isEmpty, s"$idx: the emptied namespace's live read is not empty")
+    }
+    assert(d3.exactRescues.get() == 0)
   }
 
   test("filtered batch as-of: candidate-time filter at the snapshot, starved rescue serves the as-of matching set") {

@@ -105,4 +105,13 @@ class MediaVectorSearchSpec extends AnyFunSuite {
     assert(rows("retrieval_top_hit") != 9L,
       "curated retrieval still surfaces the removed duplicate")
   }
+
+  test("q167 prune count: a thin leg loses all its rows, an empty leg counts 0") {
+    // budget 5: a 3-row leg is pruned away entirely, not to -2
+    assert(MediaVectorSearch.prunedCount(
+      Map("im" -> 100L, "au" -> 3L, "vi" -> 50L)) == 95L + 0L + 45L)
+    // an empty leg has no row in the grouped count
+    assert(MediaVectorSearch.prunedCount(Map("im" -> 100L, "vi" -> 5L)) == 95L)
+    assert(MediaVectorSearch.prunedCount(Map.empty) == 0L)
+  }
 }
