@@ -1126,7 +1126,12 @@ object Bench {
     // clippable zone per the truncation policy): steady + cold per query
     // in the committed artifact, so pin-build costs are visible where
     // the steady numbers are read (r21 — VERDICT r20 #5)
-    val line1 = s"""{"queries":${fmtQueries(minQueries.sortBy(_._2), round = true)},"queries_cold":${fmtQueries(coldQueries.sortBy(_._2), round = true)},"errors":$errJson$extra$onlyJson,"metric":"total","value":$headlineValue,"value_stat":"$valueStat","unit":"sec","sf":"$sfDir","corpus_sig":"$corpusSig","setup_cost_total_sec":$setupTotal,"wall_sec":$wallNow,"budget_margin_sec":$wallMargin,"audit":"$auditPath"}"""
+    // warm_sweep + extra_conf: whether the global warm sweep ran, and
+    // the SPARK_GRAFT_EXTRA_CONF overrides the session applied — so a
+    // contaminated run reads as such in the committed artifact
+    val extraConfJson = GraftSession.extraConf
+      .map { case (k, v) => s"${JsonText.str(k)}:${JsonText.str(v)}" }.mkString("{", ",", "}")
+    val line1 = s"""{"queries":${fmtQueries(minQueries.sortBy(_._2), round = true)},"queries_cold":${fmtQueries(coldQueries.sortBy(_._2), round = true)},"errors":$errJson$extra$onlyJson,"metric":"total","value":$headlineValue,"value_stat":"$valueStat","unit":"sec","sf":"$sfDir","corpus_sig":"$corpusSig","warm_sweep":$runSweep,"extra_conf":$extraConfJson,"setup_cost_total_sec":$setupTotal,"wall_sec":$wallNow,"budget_margin_sec":$wallMargin,"audit":"$auditPath"}"""
     println(line1)
     // SECOND, SHORT line (r9, per advice): if the tail window clips the
     // per-query line above, it stops being parseable JSON at all — the

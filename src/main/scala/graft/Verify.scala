@@ -23,18 +23,10 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // JSON string escape — a tab or CR in builder-authored SQL would
+    // otherwise make the driver's json.load fail and silently zero the
+    // round's correctness.
+    def q(s: String): String = JsonText.str(s)
     // A subset run must be self-describing: a stale SPARK_GRAFT_VERIFY_ONLY
     // in a driver environment would silently shrink the verification
     // surface — the "__only" marker (and the stderr warning) make a

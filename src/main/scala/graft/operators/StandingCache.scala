@@ -55,9 +55,11 @@ object StandingCache {
     * without these hooks such a caller would keep serving stale
     * centroids/codebooks from every probe site. Hooks are registered by
     * each operator object's initializer (lazy — an operator never used
-    * has nothing cached). [[invalidate]] (per-dir) CANNOT reach
-    * path-keyed caches (the dir→aux mapping needs a session); per-dir
-    * callers use the operator's own invalidation surface or [[clear]]. */
+    * has nothing cached). [[invalidate]] (per-dir) fires them too: the
+    * caches are keyed by aux PATH, and mapping a dir to its aux paths
+    * needs a session, so a per-dir eviction drops every operator's memo
+    * — coarse but correct, since each memo is a pure function of an
+    * immutable dir and rebuilds on next use. */
   private val evictHooks =
     new java.util.concurrent.CopyOnWriteArrayList[() => Unit]()
 
@@ -134,8 +136,9 @@ object StandingCache {
   }
 
   /** Evict every standing frame for `dir` (all tags), unpersisting the
-    * pinned blocks — for callers that regenerate a corpus dir in place.
-    * The next `frame(dir, …)` rebuilds from the dir's CURRENT files. */
+    * pinned blocks, and fire the registered eviction hooks — for callers
+    * that regenerate a corpus dir in place. The next `frame(dir, …)`
+    * rebuilds from the dir's CURRENT files. */
   def invalidate(dir: String): Unit = {
     val it = frames.entrySet().iterator()
     while (it.hasNext) {
@@ -146,6 +149,7 @@ object StandingCache {
       }
     }
     artifacts.keySet().removeIf(_._1 == dir)
+    evictHooks.forEach(h => h())
   }
 
   /** Evict ALL standing frames (every dir) — for corpus-epoch

@@ -677,6 +677,8 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
         inFlightCommits.remove(dataSeq)
       }
       ensureInReadWindow(gen, "loadFrame")
+      // every empty-namespace fact proven before this commit is stale
+      annEmpty.values().removeIf(_ < dataSeq)
     } finally incoming.unpersist(blocking = false)
   }
 
@@ -975,51 +977,6 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
       approxSearch(index, batch = false, Seq(query), k, metric, namespace,
         Some(asOf), filter, jsonFilter).head
 
-  /** Graded-path variant of the as-of indexed read (q175) — persists
-    * the probe list for oracle replay, the [[findSimilarIvfGraded]]
-    * relationship. */
-  private[graft] def findSimilarAsOfGraded(query: Seq[Float], asOf: Long,
-                                           k: Int,
-                                           namespace: String): Seq[SearchHit] =
-    approxSearch("ivf", batch = false, Seq(query), k, "cosine", namespace,
-      Some(asOf), persist = true).head
-
-  /** Graded-path as-of variants for the four remaining mounts
-    * (q183–q186) — each persists its candidate policy for oracle
-    * replay, the [[findSimilarAsOfGraded]] relationship. */
-  private[graft] def findSimilarBqAsOfGraded(query: Seq[Float], asOf: Long,
-                                             k: Int,
-                                             namespace: String): Seq[SearchHit] =
-    approxSearch("bq", batch = false, Seq(query), k, "cosine", namespace,
-      Some(asOf), persist = true).head
-
-  private[graft] def findSimilarImiAsOfGraded(query: Seq[Float], asOf: Long,
-                                              k: Int,
-                                              namespace: String): Seq[SearchHit] =
-    approxSearch("imi", batch = false, Seq(query), k, "cosine", namespace,
-      Some(asOf), persist = true).head
-
-  private[graft] def findSimilarHnswAsOfGraded(query: Seq[Float], asOf: Long,
-                                               k: Int,
-                                               namespace: String): Seq[SearchHit] =
-    approxSearch("hnsw", batch = false, Seq(query), k, "cosine", namespace,
-      Some(asOf), persist = true).head
-
-  private[graft] def findSimilarLshAsOfGraded(query: Seq[Float], asOf: Long,
-                                              k: Int,
-                                              namespace: String): Seq[SearchHit] =
-    approxSearch("lsh", batch = false, Seq(query), k, "cosine", namespace,
-      Some(asOf), persist = true).head
-
-  /** Graded-path variant of the as-of PQ read (q181) — persists the LUT
-    * and probe list for oracle replay, the [[findSimilarAsOfGraded]]
-    * relationship. */
-  private[graft] def findSimilarPqAsOfGraded(query: Seq[Float], asOf: Long,
-                                             k: Int,
-                                             namespace: String): Seq[SearchHit] =
-    approxSearch("pq", batch = false, Seq(query), k, "cosine", namespace,
-      Some(asOf), persist = true).head
-
   /** Batched [[findSimilarAsOf]] — the q107 one-scan thesis at a
     * snapshot: all Q probe lists union into one partition-pruned layout
     * scan, per-query candidates = probed cells' ids ∪ the asOf-bounded
@@ -1124,6 +1081,22 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     def query: Seq[Float] = queries.head
     def dim: Int = queries.head.length
   }
+
+  /** The indexed read behind the oracle-graded queries
+    * ([[graft.operators.StoreOps]]): any index, one query or a batch, at
+    * the live horizon or `asOf`, filtered or not — exactly the read
+    * [[findSimilar]], [[findSimilarAsOf]] and the batch forms serve.
+    * `persist` writes the index's candidate policy (probe lists, LUTs,
+    * beam output, band buckets) next to its layout for oracle replay;
+    * serving calls leave it off (a per-request overwrite would race). */
+  private[graft] def gradedSearch(index: String, batch: Boolean,
+                                  queries: Seq[Seq[Float]], k: Int,
+                                  metric: String, namespace: String,
+                                  asOf: Option[Long],
+                                  filter: Map[String, String],
+                                  persist: Boolean = true): Seq[Seq[SearchHit]] =
+    approxSearch(index, batch, queries, k, metric, namespace, asOf, filter,
+      persist = persist)
 
   /** Validate an indexed search, pick the index's probe for the shape,
     * and serve it. The exact fallback keeps each shape's own plan:
@@ -1893,8 +1866,11 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     * [[liveAsOf]] that stamp ([[graft.operators.Ann]]'s one training
     * recipe + cell-partitioned inverted file, the q33/q53 machinery), so
     * a commit racing the build lands cleanly in the delta tail instead
-    * of being half-indexed. Emptiness is NOT cached — a namespace that
-    * gains rows later builds on its next approx search.
+    * of being half-indexed. An EMPTY answer is cached as a fact keyed to
+    * the observed-max commit stamp ([[annEmpty]]), so approx searches on
+    * an empty or unknown namespace pay the build's count once, not per
+    * request; any commit moves the stamp and the next search counts
+    * (builds) again.
     *
     * `stale` is an entry the caller decided to REPLACE (generation
     * advanced, staleness ratio crossed): if the cache no longer holds
@@ -1909,7 +1885,8 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     def cached: Option[AnnEntry] =
       Option(annCache.get(key)).filterNot(e => stale.exists(_.aux == e.aux))
     cached.orElse {
-      annBuildLocks.computeIfAbsent(key, _ => new Object).synchronized {
+      if (stale.isEmpty && emptyFactHolds(key)) None
+      else annBuildLocks.computeIfAbsent(key, _ => new Object).synchronized {
         cached.orElse {
           val builtGen = currentGen()
           // 1. ADOPT (r11 cross-process build dedup): a peer's finished
@@ -1943,6 +1920,10 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
                            deferOnLoss: Boolean): Option[AnnEntry] = {
     if (deferOnLoss && stale.exists(s => !claimAnnRebuild(namespace, dim, s)))
       return stale
+    // proof-time stamp for an empty answer, read BEFORE the horizon: the
+    // fact is recorded only when nothing was in flight or newer (stamp
+    // == builtSeq), so a commit racing the count always outdates it
+    val seen = observedMaxSeq(fresh = true)
     // snapshot at the durable horizon, not the raw allocation counter:
     // a commit mid-write with seq ≤ the snapshot would be in neither the
     // layout (files not yet visible to the scan) nor the delta tail
@@ -1955,7 +1936,11 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
       .select(col("id"), col("values"), col("metadata"),
         col("metadataJson")).toDF()
     val total = rows.count()
-    if (total == 0) { annCache.remove(key); None }
+    if (total == 0) {
+      annCache.remove(key)
+      if (seen == builtSeq) annEmpty.put(key, seen)
+      None
+    }
     else {
       annBuilds.incrementAndGet()
       // MIPS space: train/assign on norm-AUGMENTED vectors (see
@@ -2001,6 +1986,24 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
       Some(entry)
     }
   }
+
+  /** Layout keys whose namespace was EMPTY at a build, with the
+    * observed-max stamp at proof time — the starvation facts' discipline
+    * ([[starvationFactHolds]]): a hit revalidates the stamp (this
+    * process's counter fresh, the `commits/_MAX` sidecar TTL-amortized
+    * by [[StarvedCheckMsConf]]), so an in-process write is seen at once
+    * and a peer's commit within one TTL. Each landed insert drops the
+    * entries it outdates ([[loadFrame]]), which bounds the map under
+    * clients naming unknown namespaces. */
+  private val annEmpty =
+    new java.util.concurrent.ConcurrentHashMap[AnnKey, Long]()
+
+  private def emptyFactHolds(key: AnnKey): Boolean =
+    Option(annEmpty.get(key)).exists { s =>
+      val still = observedMaxSeq(fresh = false) == s
+      if (!still) annEmpty.remove(key, s)
+      still
+    }
 
   private def evictReplaced(key: AnnKey,
                             stale: Option[AnnEntry]): Unit =
@@ -2190,26 +2193,6 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
   private def layoutFrame(p: String): DataFrame =
     layoutFrameCache.computeIfAbsent(p, q => spark.read.parquet(q))
 
-  /** Graded-path variant: persists the probe list next to the layout so
-    * an external oracle can replay candidates (`assign/` ⋈ `probes/` ∪
-    * delta) + exact rerank — the q53 contract. Serving calls use
-    * [[findSimilar]] (a per-request probe overwrite would race). */
-  private[graft] def findSimilarIvfGraded(query: Seq[Float], k: Int,
-                                          namespace: String,
-                                          metric: String = "cosine"): Seq[SearchHit] =
-    approxSearch("ivf", batch = false, Seq(query), k, metric, namespace,
-      None, persist = true).head
-
-  /** Graded FILTERED variant (q164): the filtered-IVF read path with the
-    * probe table persisted for oracle replay — candidates = (`assign/` ⋈
-    * `probes/` ∪ delta) ∩ the metadata predicate, rerank exact. */
-  private[graft] def findSimilarIvfFilteredGraded(
-      query: Seq[Float], k: Int, namespace: String,
-      filter: Map[String, String],
-      metric: String = "cosine"): Seq[SearchHit] =
-    approxSearch("ivf", batch = false, Seq(query), k, metric, namespace,
-      None, filter, persist = true).head
-
   /** The shared metadata-equality predicate — flat-map equality plus
     * JSONPath equality, identical on the exact and filtered-IVF paths
     * (and to the live store's semantics). */
@@ -2398,15 +2381,6 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     }
   }
 
-  /** Graded-path variant of the PQ probe — persists `lut/` and `probes/`
-    * next to the codes for oracle replay (the q61 contract; `filter` is
-    * the q170 hybrid form). */
-  private[graft] def findSimilarPqGraded(query: Seq[Float], k: Int,
-                                         namespace: String,
-                                         filter: Map[String, String] = Map.empty): Seq[SearchHit] =
-    approxSearch("pq", batch = false, Seq(query), k, "cosine", namespace,
-      None, filter, persist = true).head
-
   /** The durable PQ read plan — [[probeIvf]]'s LSM discipline with the
     * ADC sweep in front:
     *  1. rank cells (driver-side, the shared IVF policy) and sweep the
@@ -2547,15 +2521,6 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     }
   }
 
-  /** Graded-path variant of the BQ probe — persists `probes/` next to
-    * the codes for oracle replay (the q92 contract; the grid and codes
-    * are already persisted by the build). */
-  private[graft] def findSimilarBqGraded(query: Seq[Float], k: Int,
-                                         namespace: String,
-                                         filter: Map[String, String] = Map.empty): Seq[SearchHit] =
-    approxSearch("bq", batch = false, Seq(query), k, "cosine", namespace,
-      None, filter, persist = true).head
-
   /** The durable BQ read plan — [[probePq]]'s shape with the hamming
     * sweep in front: pack the query against the layout's grid
     * (driver-side, dim-sized), sweep the PROBED cells' 8-byte-per-word
@@ -2663,16 +2628,6 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
       }
     }
   }
-
-  /** Graded-path variant of the LSH probe — persists the query's band
-    * buckets (`qsig/`) next to the signatures for oracle replay (the
-    * q92/q101 contract; the signature table is already persisted by
-    * the build). */
-  private[graft] def findSimilarLshGraded(query: Seq[Float], k: Int,
-                                          namespace: String,
-                                          filter: Map[String, String] = Map.empty): Seq[SearchHit] =
-    approxSearch("lsh", batch = false, Seq(query), k, "cosine", namespace,
-      None, filter, persist = true).head
 
   /** The durable LSH read plan: band-signature the query driver-side
     * (dim×planes, the [[graft.operators.Ann.bandBuckets]] kernel —
@@ -2812,15 +2767,6 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     }
   }
 
-  /** Graded-path variant of the IMI probe — persists `probes/` next to
-    * the grid for oracle replay (the q87 contract with the grid as the
-    * candidate policy). */
-  private[graft] def findSimilarImiGraded(query: Seq[Float], k: Int,
-                                          namespace: String,
-                                          filter: Map[String, String] = Map.empty): Seq[SearchHit] =
-    approxSearch("imi", batch = false, Seq(query), k, "cosine", namespace,
-      None, filter, persist = true).head
-
   /** The durable IMI read plan — [[probeIvf]]'s LSM discipline with the
     * product grid as the coarse geometry: 2k driver-side
     * sub-distances, pair sums merged to the top `ivfProbeFor(k²)` cells
@@ -2930,14 +2876,13 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     rerankOne(r, e, cand.where(r.pred).select(recordCols: _*))
   }
 
-  /** The q123 grading entry — durable `index="hnsw"` with the beam
-    * candidate set persisted for oracle replay (the
-    * [[findSimilarIvfGraded]] relationship). */
+  /** Durable `index="hnsw"` with the beam candidate set persisted for
+    * oracle replay — [[gradedSearch]] for one live query. */
   private[graft] def findSimilarHnswGraded(query: Seq[Float], k: Int,
                                            namespace: String,
                                            filter: Map[String, String] = Map.empty): Seq[SearchHit] =
-    approxSearch("hnsw", batch = false, Seq(query), k, "cosine", namespace,
-      None, filter, persist = true).head
+    gradedSearch("hnsw", batch = false, Seq(query), k, "cosine", namespace,
+      None, filter).head
 
   def totalCount(): Long = live().count()
 

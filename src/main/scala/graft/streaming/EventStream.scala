@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 import graft.functions.Det.r4
+import graft.operators.StoreOps
 import graft.sources.Tables
 
 /** Per-user session accumulator carried across micro-batches (top-level:
@@ -1589,8 +1590,10 @@ object EventStream {
 
   def q190(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val so = graft.operators.StoreOps
-    val (store, asOf, qs, tenant, ns, k) = so.dfAsOfFixture(spark, dir)
+    // q179's store, streamed
+    val fx = StoreOps.durableFixture(spark, dir, StoreOps.scripts("q179"))
+    val (store, asOf, qs, tenant, ns, k) =
+      (fx.store, fx.horizon, fx.queries, fx.filter, fx.ns, fx.k)
     val buf =
       new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, String, Double)]()
     val q = spark.readStream.schema(embSchema)
@@ -1665,58 +1668,14 @@ object EventStream {
   // policy (q134's replay at the wave-1 horizon — one replay text
   // grades the live and snapshot batched PQ reads).
 
-  private val q192ParityChecked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** PQ codes dir of the most recent q192 run — oracle hook. */
   @volatile private var lastStreamDurPqAsOfAux: Option[String] = None
 
   def q192(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val so = graft.operators.StoreOps
-    val (store, asOf, qs, ns, k) = so.dspqAsOfFixture(spark, dir)
-    val rescues0 = store.exactRescues.get()
-    val buf =
-      new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, String, Double)]()
-    drainQueryBatches(spark, dir, 0L, qs.length.toLong) { rows =>
-      // qid = vec_id = position in the fixture's vec_id-ordered query
-      // set (contiguous from 0); k × Q hit rows only
-      val res = store.findSimilarBatchAsOf(rows.map(_._2.toSeq), asOf,
-        k = k, namespace = ns, approx = true, index = "pq")
-      rows.map(_._1.toInt).zip(res).foreach { case (qid, hits) =>
-        hits.zipWithIndex.foreach { case (h, r) =>
-          buf.add((qid, r + 1, h.id, h.score))
-        }
-      }
-    }
-    val streamRows: Seq[(Int, Int, String, Double)] =
-      buf.toArray(Array.empty[(Int, Int, String, Double)]).toSeq
-        .sortBy(x => (x._1, x._2))
-    require(store.annBuilds.get() == 1 && store.pqBuilds.get() == 1,
-      "q192's combined mutation window crossed the staleness ratio — the " +
-        "oracle replays the first code table at the wave-1 horizon")
-    require(store.exactRescues.get() == rescues0 &&
-        streamRows.size == qs.length * k,
-      s"q192 did not serve every streamed query from the PQ probe branch " +
-        s"(${streamRows.size} rows, ${store.exactRescues.get() - rescues0} rescues)")
-    // stream ≡ batch, once per dir (the q190 convention): the one-shot
-    // batch twin at the same horizon must equal the drained stream
-    // positionally — score-exact; its persisted probes/LUTs are the
-    // oracle's policy (idempotent: same store, horizon, queries)
-    graft.ParityGate.once(q192ParityChecked, dir) {
-      val oneShot = store.findSimilarBatchAsOf(qs, asOf, k = k,
-        namespace = ns, approx = true, index = "pq", persistProbes = true)
-      val oneRows = oneShot.zipWithIndex.flatMap { case (hits, qi) =>
-        hits.zipWithIndex.map { case (h, r) => (qi, r + 1, h.id, h.score) }
-      }.sortBy(x => (x._1, x._2))
-      require(streamRows == oneRows,
-        "the drained stream's snapshot answers diverged from the one-shot " +
-          "batch as-of twin — arrival batching changed a snapshot read")
-    }
-    lastStreamDurPqAsOfAux = store.pqLayoutDir(ns, qs.head.length)
-    streamRows.toDF("qid", "rank", "id", "score")
-      .withColumn("score", graft.functions.Det.r4(col("score")))
-      .orderBy("qid", "rank")
+    val fx = StoreOps.durableFixture(spark, dir, StoreOps.scripts("q192"))
+    val out = streamDurAsOf(spark, dir, fx)
+    lastStreamDurPqAsOfAux = fx.store.pqLayoutDir(fx.ns, fx.qv.length)
+    out
   }
 
   // ---- q194: streaming as-of on the SIGN-BIT durable mount (r18) ------
@@ -1730,55 +1689,17 @@ object EventStream {
   // candidate policy is snapshot-safe as built; the oracle is q135's
   // replay at the wave-1 delete modulus.
 
-  private val q194ParityChecked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** (ann dir, bq dir) of the most recent q194 run — oracle hook. */
   @volatile private var lastStreamDurBqAsOfAux: Option[(String, String)] = None
 
   def q194(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val so = graft.operators.StoreOps
-    val (store, asOf, qs, ns, k) = so.dsbqAsOfFixture(spark, dir)
-    val rescues0 = store.exactRescues.get()
-    val buf =
-      new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, String, Double)]()
-    drainQueryBatches(spark, dir, 0L, qs.length.toLong) { rows =>
-      val res = store.findSimilarBatchAsOf(rows.map(_._2.toSeq), asOf,
-        k = k, namespace = ns, approx = true, index = "bq")
-      rows.map(_._1.toInt).zip(res).foreach { case (qid, hits) =>
-        hits.zipWithIndex.foreach { case (h, r) =>
-          buf.add((qid, r + 1, h.id, h.score))
-        }
-      }
-    }
-    val streamRows: Seq[(Int, Int, String, Double)] =
-      buf.toArray(Array.empty[(Int, Int, String, Double)]).toSeq
-        .sortBy(x => (x._1, x._2))
-    require(store.annBuilds.get() == 1 && store.bqBuilds.get() == 1,
-      "q194's combined mutation window crossed the staleness ratio — the " +
-        "oracle replays the first code table at the wave-1 horizon")
-    require(store.exactRescues.get() == rescues0 &&
-        streamRows.size == qs.length * k,
-      s"q194 did not serve every streamed query from the BQ probe branch " +
-        s"(${streamRows.size} rows, ${store.exactRescues.get() - rescues0} rescues)")
-    graft.ParityGate.once(q194ParityChecked, dir) {
-      val oneShot = store.findSimilarBatchAsOf(qs, asOf, k = k,
-        namespace = ns, approx = true, index = "bq", persistProbes = true)
-      val oneRows = oneShot.zipWithIndex.flatMap { case (hits, qi) =>
-        hits.zipWithIndex.map { case (h, r) => (qi, r + 1, h.id, h.score) }
-      }.sortBy(x => (x._1, x._2))
-      require(streamRows == oneRows,
-        "the drained stream's snapshot answers diverged from the one-shot " +
-          "batch as-of twin — arrival batching changed a snapshot read")
-    }
+    val fx = StoreOps.durableFixture(spark, dir, StoreOps.scripts("q194"))
+    val out = streamDurAsOf(spark, dir, fx)
     lastStreamDurBqAsOfAux = for {
-      a <- store.annLayoutDir(ns, qs.head.length).map(_._1)
-      b <- store.bqLayoutDir(ns, qs.head.length)
+      a <- fx.store.annLayoutDir(fx.ns, fx.qv.length).map(_._1)
+      b <- fx.store.bqLayoutDir(fx.ns, fx.qv.length)
     } yield (a, b)
-    streamRows.toDF("qid", "rank", "id", "score")
-      .withColumn("score", graft.functions.Det.r4(col("score")))
-      .orderBy("qid", "rank")
+    out
   }
 
   // ---- q195: streaming as-of on the PRODUCT-GRID durable mount (r18) --
@@ -1792,52 +1713,14 @@ object EventStream {
   // derived mounts without a graded streaming-as-of cell — each the
   // same fixture + oracle-modulus parameterization.
 
-  private val q195ParityChecked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** IMI grid dir of the most recent q195 run — oracle hook. */
   @volatile private var lastStreamDurImiAsOfAux: Option[String] = None
 
   def q195(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val so = graft.operators.StoreOps
-    val (store, asOf, qs, ns, k) = so.dsimiAsOfFixture(spark, dir)
-    val rescues0 = store.exactRescues.get()
-    val buf =
-      new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, String, Double)]()
-    drainQueryBatches(spark, dir, 0L, qs.length.toLong) { rows =>
-      val res = store.findSimilarBatchAsOf(rows.map(_._2.toSeq), asOf,
-        k = k, namespace = ns, approx = true, index = "imi")
-      rows.map(_._1.toInt).zip(res).foreach { case (qid, hits) =>
-        hits.zipWithIndex.foreach { case (h, r) =>
-          buf.add((qid, r + 1, h.id, h.score))
-        }
-      }
-    }
-    val streamRows: Seq[(Int, Int, String, Double)] =
-      buf.toArray(Array.empty[(Int, Int, String, Double)]).toSeq
-        .sortBy(x => (x._1, x._2))
-    require(store.annBuilds.get() == 1 && store.imiBuilds.get() == 1,
-      "q195's combined mutation window crossed the staleness ratio — the " +
-        "oracle replays the first grid at the wave-1 horizon")
-    require(store.exactRescues.get() == rescues0 &&
-        streamRows.size == qs.length * k,
-      s"q195 did not serve every streamed query from the IMI probe branch " +
-        s"(${streamRows.size} rows, ${store.exactRescues.get() - rescues0} rescues)")
-    graft.ParityGate.once(q195ParityChecked, dir) {
-      val oneShot = store.findSimilarBatchAsOf(qs, asOf, k = k,
-        namespace = ns, approx = true, index = "imi", persistProbes = true)
-      val oneRows = oneShot.zipWithIndex.flatMap { case (hits, qi) =>
-        hits.zipWithIndex.map { case (h, r) => (qi, r + 1, h.id, h.score) }
-      }.sortBy(x => (x._1, x._2))
-      require(streamRows == oneRows,
-        "the drained stream's snapshot answers diverged from the one-shot " +
-          "batch as-of twin — arrival batching changed a snapshot read")
-    }
-    lastStreamDurImiAsOfAux = store.imiLayoutDir(ns, qs.head.length)
-    streamRows.toDF("qid", "rank", "id", "score")
-      .withColumn("score", graft.functions.Det.r4(col("score")))
-      .orderBy("qid", "rank")
+    val fx = StoreOps.durableFixture(spark, dir, StoreOps.scripts("q195"))
+    val out = streamDurAsOf(spark, dir, fx)
+    lastStreamDurImiAsOfAux = fx.store.imiLayoutDir(fx.ns, fx.qv.length)
+    out
   }
 
   // ---- q196: streaming as-of on the GRAPH durable mount (r18) ---------
@@ -1851,52 +1734,14 @@ object EventStream {
   // qid-keyed beam output as the candidate policy) at the wave-1
   // modulus.
 
-  private val q196ParityChecked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** HNSW layout dir of the most recent q196 run — oracle hook. */
   @volatile private var lastStreamDurHnswAsOfAux: Option[String] = None
 
   def q196(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val so = graft.operators.StoreOps
-    val (store, asOf, qs, ns, k) = so.dshnswAsOfFixture(spark, dir)
-    val rescues0 = store.exactRescues.get()
-    val buf =
-      new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, String, Double)]()
-    drainQueryBatches(spark, dir, 0L, qs.length.toLong) { rows =>
-      val res = store.findSimilarBatchAsOf(rows.map(_._2.toSeq), asOf,
-        k = k, namespace = ns, approx = true, index = "hnsw")
-      rows.map(_._1.toInt).zip(res).foreach { case (qid, hits) =>
-        hits.zipWithIndex.foreach { case (h, r) =>
-          buf.add((qid, r + 1, h.id, h.score))
-        }
-      }
-    }
-    val streamRows: Seq[(Int, Int, String, Double)] =
-      buf.toArray(Array.empty[(Int, Int, String, Double)]).toSeq
-        .sortBy(x => (x._1, x._2))
-    require(store.annBuilds.get() == 1 && store.hnswBuilds.get() == 1,
-      "q196's combined mutation window crossed the staleness ratio — the " +
-        "oracle replays the first shard graphs at the wave-1 horizon")
-    require(store.exactRescues.get() == rescues0 &&
-        streamRows.size == qs.length * k,
-      s"q196 did not serve every streamed query from the beam branch " +
-        s"(${streamRows.size} rows, ${store.exactRescues.get() - rescues0} rescues)")
-    graft.ParityGate.once(q196ParityChecked, dir) {
-      val oneShot = store.findSimilarBatchAsOf(qs, asOf, k = k,
-        namespace = ns, approx = true, index = "hnsw", persistProbes = true)
-      val oneRows = oneShot.zipWithIndex.flatMap { case (hits, qi) =>
-        hits.zipWithIndex.map { case (h, r) => (qi, r + 1, h.id, h.score) }
-      }.sortBy(x => (x._1, x._2))
-      require(streamRows == oneRows,
-        "the drained stream's snapshot answers diverged from the one-shot " +
-          "batch as-of twin — arrival batching changed a snapshot read")
-    }
-    lastStreamDurHnswAsOfAux = store.hnswLayoutDir(ns, qs.head.length)
-    streamRows.toDF("qid", "rank", "id", "score")
-      .withColumn("score", graft.functions.Det.r4(col("score")))
-      .orderBy("qid", "rank")
+    val fx = StoreOps.durableFixture(spark, dir, StoreOps.scripts("q196"))
+    val out = streamDurAsOf(spark, dir, fx)
+    lastStreamDurHnswAsOfAux = fx.store.hnswLayoutDir(fx.ns, fx.qv.length)
+    out
   }
 
   // ---- q197: streaming as-of on the SIGNATURE durable mount (r19) -----
@@ -1913,48 +1758,9 @@ object EventStream {
   // relationally — StoreOps.q197Sql, the qid-keyed dlshSqlAt text
   // VERDICT r18 named as this cell's only blocker.
 
-  private val q197ParityChecked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   def q197(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val so = graft.operators.StoreOps
-    val (store, asOf, qs, ns, k) = so.dslshAsOfFixture(spark, dir)
-    val rescues0 = store.exactRescues.get()
-    val buf =
-      new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, String, Double)]()
-    drainQueryBatches(spark, dir, 0L, qs.length.toLong) { rows =>
-      val res = store.findSimilarBatchAsOf(rows.map(_._2.toSeq), asOf,
-        k = k, namespace = ns, approx = true, index = "lsh")
-      rows.map(_._1.toInt).zip(res).foreach { case (qid, hits) =>
-        hits.zipWithIndex.foreach { case (h, r) =>
-          buf.add((qid, r + 1, h.id, h.score))
-        }
-      }
-    }
-    val streamRows: Seq[(Int, Int, String, Double)] =
-      buf.toArray(Array.empty[(Int, Int, String, Double)]).toSeq
-        .sortBy(x => (x._1, x._2))
-    require(store.annBuilds.get() == 1 && store.lshBuilds.get() == 1,
-      "q197's combined mutation window crossed the staleness ratio — the " +
-        "oracle replays the first signature table at the wave-1 horizon")
-    require(store.exactRescues.get() == rescues0 &&
-        streamRows.size == qs.length * k,
-      s"q197 did not serve every streamed query from the signature branch " +
-        s"(${streamRows.size} rows, ${store.exactRescues.get() - rescues0} rescues)")
-    graft.ParityGate.once(q197ParityChecked, dir) {
-      val oneShot = store.findSimilarBatchAsOf(qs, asOf, k = k,
-        namespace = ns, approx = true, index = "lsh")
-      val oneRows = oneShot.zipWithIndex.flatMap { case (hits, qi) =>
-        hits.zipWithIndex.map { case (h, r) => (qi, r + 1, h.id, h.score) }
-      }.sortBy(x => (x._1, x._2))
-      require(streamRows == oneRows,
-        "the drained stream's snapshot answers diverged from the one-shot " +
-          "batch as-of twin — arrival batching changed a snapshot read")
-    }
-    streamRows.toDF("qid", "rank", "id", "score")
-      .withColumn("score", graft.functions.Det.r4(col("score")))
-      .orderBy("qid", "rank")
+    val fx = StoreOps.durableFixture(spark, dir, StoreOps.scripts("q197"))
+    streamDurAsOf(spark, dir, fx, persist = false)
   }
 
   // ---- q204: streaming FILTERED as-of on the COMPRESSED mount (r20) ---
@@ -1975,36 +1781,28 @@ object EventStream {
   // the nightly tenant eval AS A SERVICE: evaluation queries stream in,
   // every answer reproducible against the stamp recorded at job start.
 
-  private val q204ParityChecked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** PQ codes dir of the most recent q204 run — oracle hook. */
   @volatile private var lastStreamDurPqFAsOfAux: Option[String] = None
 
-  /** THE shared streaming filtered-as-of route (q204–q208 call this one
-    * definition — no per-mount twin loop to drift): drain the query
-    * stream, serve each micro-batch from `findSimilarBatchAsOf(index,
-    * filter)`, guard the probe branch (staleness window per mount, zero
-    * rescues, k hits per query), and pin the drained stream positionally
-    * equal to the one-shot filtered batch twin — whose persisted
-    * probes/LUTs are the oracle's candidate policy (idempotent: same
-    * store, horizon, queries, predicate). */
-  private def streamDurFilteredAsOf(spark: SparkSession, dir: String,
-      qname: String, index: String,
-      fixture: (graft.store.DurableVectorStore, Long, Seq[Seq[Float]],
-                Map[String, String], String, Int),
-      inWindow: => Boolean,
-      gate: java.util.Set[String]): DataFrame = {
+  /** THE streaming as-of route (q192–q197, q204–q208 — every durable
+    * mount, filtered and not): drain the query stream, serve each
+    * micro-batch from the fixture's batch as-of read, guard the probe
+    * branch (one build per structure, zero rescues, k hits per query),
+    * and pin the drained stream positionally equal to the one-shot batch
+    * twin — whose persisted candidate policy (`persist`) is the
+    * oracle's (idempotent: same store, horizon, queries, predicate). */
+  private def streamDurAsOf(spark: SparkSession, dir: String,
+                            fx: StoreOps.DurableFixture,
+                            persist: Boolean = true): DataFrame = {
     import spark.implicits._
-    val (store, asOf, qs, tenant, ns, k) = fixture
+    val (store, qs, k) = (fx.store, fx.queries, fx.k)
     val rescues0 = store.exactRescues.get()
     val buf =
       new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, String, Double)]()
     drainQueryBatches(spark, dir, 0L, qs.length.toLong) { rows =>
       // qid = vec_id = position in the fixture's vec_id-ordered query
       // set (contiguous from 0); k × Q hit rows only
-      val res = store.findSimilarBatchAsOf(rows.map(_._2.toSeq), asOf,
-        k = k, namespace = ns, approx = true, filter = tenant, index = index)
+      val res = fx.search(rows.map(_._2.toSeq), batch = true)
       rows.map(_._1.toInt).zip(res).foreach { case (qid, hits) =>
         hits.zipWithIndex.foreach { case (h, r) =>
           buf.add((qid, r + 1, h.id, h.score))
@@ -2014,39 +1812,36 @@ object EventStream {
     val streamRows: Seq[(Int, Int, String, Double)] =
       buf.toArray(Array.empty[(Int, Int, String, Double)]).toSeq
         .sortBy(x => (x._1, x._2))
-    require(inWindow,
-      s"$qname's combined mutation window crossed the staleness ratio — " +
+    require(fx.inWindow,
+      s"${fx.ns}'s combined mutation window crossed the staleness ratio — " +
         "the oracle replays the first derived structure at the wave-1 horizon")
     require(store.exactRescues.get() == rescues0 &&
         streamRows.size == qs.length * k,
-      s"$qname did not serve every streamed query from the filtered " +
-        s"$index probe branch (${streamRows.size} rows, " +
+      s"${fx.ns} did not serve every streamed query from the " +
+        s"${fx.script.index} probe branch (${streamRows.size} rows, " +
         s"${store.exactRescues.get() - rescues0} rescues)")
     // stream ≡ batch, once per dir (the q190 convention)
-    graft.ParityGate.once(gate, dir) {
-      val oneShot = store.findSimilarBatchAsOf(qs, asOf, k = k,
-        namespace = ns, approx = true, filter = tenant,
-        persistProbes = true, index = index)
+    graft.ParityGate.once(streamParityChecked, s"${fx.ns}|$dir") {
+      val oneShot = fx.search(qs, batch = true, persist)
       val oneRows = oneShot.zipWithIndex.flatMap { case (hits, qi) =>
         hits.zipWithIndex.map { case (h, r) => (qi, r + 1, h.id, h.score) }
       }.sortBy(x => (x._1, x._2))
       require(streamRows == oneRows,
-        "the drained stream's filtered snapshot answers diverged from the " +
-          "one-shot batch as-of twin — arrival batching changed a " +
-          "snapshot read")
+        "the drained stream's snapshot answers diverged from the one-shot " +
+          "batch as-of twin — arrival batching changed a snapshot read")
     }
     streamRows.toDF("qid", "rank", "id", "score")
       .withColumn("score", graft.functions.Det.r4(col("score")))
       .orderBy("qid", "rank")
   }
 
+  private val streamParityChecked =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
   def q204(spark: SparkSession, dir: String): DataFrame = {
-    val so = graft.operators.StoreOps
-    val fx = so.dfPqStreamAsOfFixture(spark, dir)
-    val out = streamDurFilteredAsOf(spark, dir, "q204", "pq", fx,
-      fx._1.annBuilds.get() == 1 && fx._1.pqBuilds.get() == 1,
-      q204ParityChecked)
-    lastStreamDurPqFAsOfAux = fx._1.pqLayoutDir(fx._5, fx._3.head.length)
+    val fx = StoreOps.durableFixture(spark, dir, StoreOps.scripts("q204"))
+    val out = streamDurAsOf(spark, dir, fx)
+    lastStreamDurPqFAsOfAux = fx.store.pqLayoutDir(fx.ns, fx.qv.length)
     out
   }
 
@@ -2056,56 +1851,39 @@ object EventStream {
   // fixture script, each mount's existing filtered batch as-of replay
   // grading its streamed form (the q204 one-text rationale) -------------
 
-  private val q205ParityChecked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   @volatile private var lastStreamDurBqFAsOfAux: Option[(String, String)] = None
 
   def q205(spark: SparkSession, dir: String): DataFrame = {
-    val so = graft.operators.StoreOps
-    val fx = so.dfStreamAsOfFixture(spark, dir, "bq")
-    val out = streamDurFilteredAsOf(spark, dir, "q205", "bq", fx,
-      so.dfStreamAsOfInWindow(fx._1, "bq"), q205ParityChecked)
+    val fx = StoreOps.durableFixture(spark, dir, StoreOps.scripts("q205"))
+    val out = streamDurAsOf(spark, dir, fx)
     lastStreamDurBqFAsOfAux = for {
-      ann <- fx._1.annLayoutDir(fx._5, fx._3.head.length)
-      bq <- fx._1.bqLayoutDir(fx._5, fx._3.head.length)
-    } yield (ann._1, bq)
+      a <- fx.store.annLayoutDir(fx.ns, fx.qv.length).map(_._1)
+      b <- fx.store.bqLayoutDir(fx.ns, fx.qv.length)
+    } yield (a, b)
     out
   }
 
-  private val q206ParityChecked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   @volatile private var lastStreamDurImiFAsOfAux: Option[String] = None
 
   def q206(spark: SparkSession, dir: String): DataFrame = {
-    val so = graft.operators.StoreOps
-    val fx = so.dfStreamAsOfFixture(spark, dir, "imi")
-    val out = streamDurFilteredAsOf(spark, dir, "q206", "imi", fx,
-      so.dfStreamAsOfInWindow(fx._1, "imi"), q206ParityChecked)
-    lastStreamDurImiFAsOfAux = fx._1.imiLayoutDir(fx._5, fx._3.head.length)
+    val fx = StoreOps.durableFixture(spark, dir, StoreOps.scripts("q206"))
+    val out = streamDurAsOf(spark, dir, fx)
+    lastStreamDurImiFAsOfAux = fx.store.imiLayoutDir(fx.ns, fx.qv.length)
     out
   }
 
-  private val q207ParityChecked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   @volatile private var lastStreamDurHnswFAsOfAux: Option[String] = None
 
   def q207(spark: SparkSession, dir: String): DataFrame = {
-    val so = graft.operators.StoreOps
-    val fx = so.dfStreamAsOfFixture(spark, dir, "hnsw")
-    val out = streamDurFilteredAsOf(spark, dir, "q207", "hnsw", fx,
-      so.dfStreamAsOfInWindow(fx._1, "hnsw"), q207ParityChecked)
-    lastStreamDurHnswFAsOfAux = fx._1.hnswLayoutDir(fx._5, fx._3.head.length)
+    val fx = StoreOps.durableFixture(spark, dir, StoreOps.scripts("q207"))
+    val out = streamDurAsOf(spark, dir, fx)
+    lastStreamDurHnswFAsOfAux = fx.store.hnswLayoutDir(fx.ns, fx.qv.length)
     out
   }
 
-  private val q208ParityChecked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   def q208(spark: SparkSession, dir: String): DataFrame = {
-    val so = graft.operators.StoreOps
-    val fx = so.dfStreamAsOfFixture(spark, dir, "lsh")
-    streamDurFilteredAsOf(spark, dir, "q208", "lsh", fx,
-      so.dfStreamAsOfInWindow(fx._1, "lsh"), q208ParityChecked)
+    val fx = StoreOps.durableFixture(spark, dir, StoreOps.scripts("q208"))
+    streamDurAsOf(spark, dir, fx)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =

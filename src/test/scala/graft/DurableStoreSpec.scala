@@ -171,6 +171,32 @@ class DurableStoreSpec extends AnyFunSuite {
     assert(d.totalCount() == 2)
   }
 
+  test("approx search on an empty namespace counts it once, then answers from the cached fact until a write") {
+    val d = new DurableVectorStore(spark, tmp())
+    d.loadFrame(frame(vecs), "full")
+    val q = vecs(5)._2
+    // the first approx call pays the build's count and finds no rows
+    val first = TestSpark.jobsOf {
+      assert(d.findSimilar(q, k = 3, namespace = "none", approx = true).isEmpty)
+    }
+    assert(first >= 1, "the first approx search did not count the namespace")
+    // single and batch, any index: the cached empty answer, no Spark job
+    val rest = TestSpark.jobsOf {
+      assert(d.findSimilarBatchApprox(Seq(q, q), k = 3, namespace = "none")
+        .forall(_.isEmpty))
+      assert(d.findSimilar(q, k = 3, namespace = "none", approx = true,
+        index = "pq").isEmpty)
+    }
+    assert(rest == 0, s"approx searches on an empty namespace ran $rest Spark jobs")
+    assert(d.annBuilds.get() == 0)
+    // read-your-writes: an insert outdates the fact, the next approx
+    // search builds the layout and answers the new rows
+    d.loadFrame(frame(vecs), "none")
+    val hits = d.findSimilar(q, k = 3, namespace = "none", approx = true)
+    assert(hits.headOption.map(_.id).contains("v5"), s"got ${hits.map(_.id)}")
+    assert(d.annBuilds.get() == 1)
+  }
+
   test("point and batch reads: positional, order-preserving, misses as None (S1/S2 parity)") {
     val d = new DurableVectorStore(spark, tmp())
     d.loadFrame(frame(vecs), "rd")

@@ -140,7 +140,11 @@ class HygieneSpec extends AnyFunSuite {
     run(dir); run(dir2)
     val withBoth = StandingCache.pinned
     assert(withBoth.map(_._1).distinct.size >= 2)
+    // the path-keyed operator memos drop with a per-dir eviction too
+    val fired = new java.util.concurrent.atomic.AtomicInteger(0)
+    StandingCache.registerEvictHook(() => { fired.incrementAndGet(); () })
     StandingCache.invalidate(dir)
+    assert(fired.get() == 1, "invalidate(dir) did not fire the eviction hooks")
     val afterInv = StandingCache.pinned
     assert(!afterInv.exists(_._1 == dir), "invalidate left the dir's keys")
     assert(afterInv.exists(_._1 == dir2), "invalidate evicted ANOTHER dir's keys")

@@ -274,26 +274,6 @@ class LiveSnapshotSpec extends AnyFunSuite {
     assert(s.snapshot("grow").isDefined)
   }
 
-  /** Spark jobs run by `body` on this thread (tagged by a job group, so
-    * other threads' jobs do not count). */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"jobs-${java.util.UUID.randomUUID()}"
-    val seen = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          seen.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      try body finally sc.clearJobGroup()
-      org.apache.spark.TestListenerBus.drain(sc)
-      seen.get()
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("a namespace above the bound runs only the Spark plans across unrelated writes") {
     val s = new VectorStore(spark)
     s.snapshotMaxRows = 5
@@ -308,18 +288,18 @@ class LiveSnapshotSpec extends AnyFunSuite {
     def search(): Unit = assert(s.findSimilar(q, k = 3, namespace = "big").size == 3)
     search() // decides the tier: above the bound
     assert(s.snapshot("big").isEmpty)
-    val plan = jobsOf(search())
+    val plan = TestSpark.jobsOf(search())
     assert(plan >= 1)
     // inserts, upserts and loads cannot shrink "big": no recount
     s.insert(vec, Map.empty, "other")
     s.upsert("u", vec, Map.empty, "other")
     import spark.implicits._
     s.loadFrame(Seq(("f", vec)).toDF("id", "values"), "other")
-    assert(jobsOf(search()) == plan, "an unrelated write must not recount the namespace")
+    assert(TestSpark.jobsOf(search()) == plan, "an unrelated write must not recount the namespace")
     // a delete can shrink a namespace: the next read counts it once more
     s.delete(Seq("u"), "other")
-    assert(jobsOf(search()) == plan + 1)
-    assert(jobsOf(search()) == plan)
+    assert(TestSpark.jobsOf(search()) == plan + 1)
+    assert(TestSpark.jobsOf(search()) == plan)
     s.delete(Seq("b0"), "big")
     search()
     assert(s.snapshot("big").map(_.rows).contains(5), "back under the bound")

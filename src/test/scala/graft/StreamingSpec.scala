@@ -248,10 +248,11 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.nonEmpty)
     // the fixture's store keeps post-horizon mutations live; the batch
     // twin at the recorded horizon must reproduce the stream exactly
-    val (store, asOf, qs, tenant, ns, k) =
-      graft.operators.StoreOps.dfAsOfFixture(spark, dir)
-    val batch = store.findSimilarBatchAsOf(qs, asOf, k = k, namespace = ns,
-      approx = true, filter = tenant)
+    val so = graft.operators.StoreOps
+    val fx = so.durableFixture(spark, dir, so.scripts("q179"))
+    val (qs, k) = (fx.queries, fx.k)
+    val batch = fx.store.findSimilarBatchAsOf(qs, fx.horizon, k = k,
+      namespace = fx.ns, approx = true, filter = fx.filter)
       .zipWithIndex.flatMap { case (hits, qi) =>
         hits.zipWithIndex.map { case (h, r) =>
           // Det.r4's floor-based rounding, driver-side
@@ -532,5 +533,55 @@ class StreamingSpec extends AnyFunSuite {
       assert(sunk.size == 3, s"duplicate keys re-emitted: $sunk")
       assert(sunk.toSet == Set((1L, "click"), (1L, "view"), (2L, "click")))
     } finally q.stop()
+  }
+
+  // ---- the graded durable fixture (StoreOps.durableFixture) ------------
+
+  private def idsAt(df: org.apache.spark.sql.DataFrame, ns: String): Set[String] =
+    df.where(org.apache.spark.sql.functions.col("namespace") === ns)
+      .select("id").collect().map(_.getString(0)).toSet
+
+  private def range(lo: Long, hi: Long): Set[String] =
+    (lo until hi).map(_.toString).toSet
+
+  test("durable fixture: a two-wave script holds load − wave 1 + delta at its horizon, wave 2 on top now") {
+    val so = graft.operators.StoreOps
+    val script = so.DurableScript("fx_asof", "fxasof", asOf = true)
+    val fx = so.durableFixture(spark, dir, script)
+    val wave1 = (0L until so.FacadeN).filter(_ % so.AsOfDelMod == 0)
+      .map(_.toString).toSet
+    val atHorizon =
+      range(0L, so.FacadeN) -- wave1 ++ range(so.FacadeN, so.FacadeN + so.DAnnDeltaN)
+    assert(idsAt(fx.store.liveAsOf(fx.horizon), fx.ns) == atHorizon)
+    val wave2 = range(so.FacadeN + so.DAnnDeltaN,
+      so.FacadeN + so.DAnnDeltaN + so.AsOfDelta2)
+    assert(idsAt(fx.store.live(), fx.ns) == atHorizon -- so.AsOfDel2 ++ wave2)
+    assert(fx.horizon < fx.store.currentSeq(), "wave 2 committed nothing")
+    // a second call returns the same store and horizon, script not re-run
+    val builds = fx.store.annBuilds.get()
+    val again = so.durableFixture(spark, dir, script)
+    assert((again.store eq fx.store) && again.horizon == fx.horizon)
+    assert(again.store.annBuilds.get() == builds && builds == 1)
+  }
+
+  test("durable fixture: a plain script holds load − wave 1 + delta, tenant-tagged, built once") {
+    val so = graft.operators.StoreOps
+    val script = so.DurableScript("fx_plain", "fxplain", "pq", batch = true,
+      tenant = true)
+    val fx = so.durableFixture(spark, dir, script)
+    val wave1 = (0L until so.FacadeN).filter(_ % so.FacadeDelMod == 0)
+      .map(_.toString).toSet
+    val expected =
+      range(0L, so.FacadeN) -- wave1 ++ range(so.FacadeN, so.FacadeN + so.DAnnDeltaN)
+    assert(idsAt(fx.store.live(), fx.ns) == expected)
+    assert(fx.horizon == fx.store.currentSeq())
+    // every row carries its tenant tag (vec_id % 3)
+    assert(fx.store.live().where(org.apache.spark.sql.functions.col("namespace") === fx.ns)
+      .select("id", "metadata").collect()
+      .forall(r => r.getMap[String, String](1).get("tenant")
+        .contains((r.getString(0).toLong % 3).toString)))
+    assert(fx.inWindow && fx.store.pqBuilds.get() == 1)
+    assert(so.durableFixture(spark, dir, script).store eq fx.store)
+    assert(fx.store.pqBuilds.get() == 1, "the repeat call re-ran the script")
   }
 }
