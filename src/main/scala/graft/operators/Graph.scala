@@ -94,6 +94,12 @@ object Graph {
     // parallelism. A production caller sizes it to adjacency bytes /
     // target-partition-size via spark.graft.graph.adjPartitions, the
     // same sizing it applies to spark.sql.shuffle.partitions.
+    // The pin is an EAGER localCheckpoint, paid once per call: the rounds
+    // run lazily, after this method returns, so a persist freed here
+    // would be gone before they read it and every round would recompute
+    // the adjacency join. The checkpointed blocks live as long as the
+    // returned plan's lineage reaches them, then the ContextCleaner
+    // reclaims them.
     val spark = edges.sparkSession
     val adjParts = spark.conf.getOption("spark.graft.graph.adjPartitions")
       .map(_.toInt)
@@ -102,7 +108,7 @@ object Graph {
       .join(broadcast(nodes.withColumnRenamed("node", "dst")),
         Seq("dst"), "left_semi")
       .coalesce(adjParts)
-      .persist()
+      .localCheckpoint(eager = true)
     var ranks = nodes.select(col("node"), lit(1000000L).as("pr"))
     var pinned: DataFrame = null
     for (r <- 1 to rounds) {
@@ -138,7 +144,6 @@ object Graph {
         ranks = mat
       }
     }
-    adj.unpersist(blocking = false)
     // a still-live round pin (rounds > MatEvery) stays pinned — the
     // returned plan reads it; external cache hygiene reclaims it (the
     // r12 convention: only SUPERSEDED round pins are freed here)

@@ -50,18 +50,22 @@ import graft.store.{DurableVectorStore, VectorStore}
   * Known divergence: query DIMENSION is not validated against the stored
   * vectors (the reference's hnswlib raises on mismatch because its index
   * has a fixed dim; this store has no per-namespace dim registry). The
-  * distance kernels score over the common prefix on both serving tiers —
-  * callers own the dim contract, as the facade API documents; checking it
-  * stays open (ROADMAP known defect 4).
+  * distance kernels score over the common prefix on both serving tiers of
+  * both mounts — callers own the dim contract, as the facade API
+  * documents; checking it stays open (ROADMAP known defect 3).
   *
-  * Serving tiers of the live mount: a namespace of at most
+  * Serving tiers: a live namespace of at most
   * [[graft.store.VectorStore.SnapshotMaxRows]] rows (10,000, the
   * reference's capacity per namespace, `index.py:37`) answers from a
   * driver snapshot collected once per store epoch, so exact, batch, range
   * and threshold searches cost no Spark job and the indexed ones only
   * their candidate generation; larger namespaces answer from Spark plans.
-  * Both tiers return the same hits; `POST /query/explain` says which one
-  * a search takes.
+  * A durable namespace of at most that many row versions (data rows plus
+  * tombstones) is held the same way, stamped with the files a read sees
+  * and re-collected when they change: its exact and `as_of` searches,
+  * single and batch, cost no Spark job and its indexed ones only their
+  * candidate generation. Both tiers return the same hits; `POST
+  * /query/explain` says which one a search takes on either mount.
   *
   * Durable mount: a [[DurableVectorStore]] passed as `durable` exposes
   * the 100 TB layout route-for-route. Reads — `POST /search` with

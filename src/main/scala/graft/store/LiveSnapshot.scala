@@ -9,6 +9,8 @@ import graft.model.{SearchHit, VectorRecord}
 /** One live namespace held on the driver: its ids, vectors, flat metadata
   * and metadataJson, taken by one collect at store epoch `epoch`.
   * Immutable; the store replaces it on the first read after a mutation.
+  * [[DurableSnapshot]] searches its views of a durable namespace through
+  * this class too (`epoch` is then the generation).
   *
   * Every search here answers what the Spark plan over the same rows
   * answers: scores come from the kernel the Catalyst expression calls
@@ -16,17 +18,28 @@ import graft.model.{SearchHit, VectorRecord}
   * (score, then id in UTF-8 byte order), the flat filter is the
   * `metadata[k] = v` predicate (a missing or null value never matches) and
   * the JSONPath filter runs Spark's own `get_json_object` evaluator. */
-private[graft] final class LiveSnapshot(val epoch: Long, recs: Array[VectorRecord]) {
+private[graft] final class LiveSnapshot private (
+    val epoch: Long,
+    idStr: Array[String],
+    ids: Array[UTF8String],
+    data: Array[UnsafeArrayData],
+    metadata: Array[Map[String, String]],
+    metadataJson: Array[String]) {
 
   // Columns, not the records: each vector is held once, as the unsafe
   // array the kernel scores (a hit copies it out).
-  val rows: Int = recs.length
-  private val idStr: Array[String] = recs.map(_.id)
-  private val ids: Array[UTF8String] = idStr.map(UTF8String.fromString)
-  private val data: Array[UnsafeArrayData] =
-    recs.map(r => UnsafeArrayData.fromPrimitiveArray(r.values))
-  private val metadata: Array[Map[String, String]] = recs.map(_.metadata)
-  private val metadataJson: Array[String] = recs.map(_.metadataJson)
+  def this(epoch: Long, recs: Array[VectorRecord]) =
+    this(epoch, recs.map(_.id), recs.map(r => UTF8String.fromString(r.id)),
+      recs.map(r => UnsafeArrayData.fromPrimitiveArray(r.values)),
+      recs.map(_.metadata), recs.map(_.metadataJson))
+
+  val rows: Int = idStr.length
+
+  /** The snapshot of just `keep`'s rows, in that order, sharing their
+    * columns' values (a view of this one: no vector is copied). */
+  def select(keep: Array[Int]): LiveSnapshot =
+    new LiveSnapshot(epoch, keep.map(idStr), keep.map(ids), keep.map(data),
+      keep.map(metadata), keep.map(metadataJson))
 
   /** id → rows holding it (more than one only if a caller bulk-loaded
     * duplicate ids; the Spark semi-join keeps them all too). */
@@ -87,4 +100,23 @@ private[graft] final class LiveSnapshot(val epoch: Long, recs: Array[VectorRecor
   def matching(query: Seq[Float], metric: String, filter: Map[String, String],
                keep: Double => Boolean): Seq[SearchHit] =
     rank(eligible(filter, Map.empty, None), query, metric, keep).toSeq.map(hit)
+}
+
+private[graft] object LiveSnapshot {
+
+  /** Serializes snapshot builds per namespace stripe, for either store:
+    * racing first reads of one namespace pay one collect, not one each.
+    * A fixed set, so namespace names chosen by clients allocate nothing. */
+  final class BuildLocks {
+    private val stripes = Array.fill(16)(new Object)
+
+    /** `current`, else `build` under the namespace's stripe (which
+      * checks `current` again first: a racing reader may have built it). */
+    def cached[T](namespace: String)(current: => Option[T])(build: => T): T =
+      current.getOrElse {
+        stripes(Math.floorMod(namespace.hashCode, stripes.length)).synchronized {
+          current.getOrElse(build)
+        }
+      }
+  }
 }

@@ -424,10 +424,7 @@ class VectorStore(val spark: SparkSession) {
     case (e, None) => e >= shrinkEpoch
   }
 
-  /** Serializes snapshot builds per namespace stripe: racing first reads
-    * of one namespace pay one collect, not one each. A fixed set, so
-    * namespace names chosen by clients allocate nothing. */
-  private val snapshotBuildLocks = Array.fill(16)(new Object)
+  private val snapshotBuildLocks = new LiveSnapshot.BuildLocks
 
   private def currentSnapshot(namespace: String): Option[Option[LiveSnapshot]] =
     Option(snapshots.get(namespace)).filter(isCurrent).map(_._2)
@@ -441,25 +438,21 @@ class VectorStore(val spark: SparkSession) {
     * that is not kept: unknown names cost one job each, as on Spark, and
     * hold no memory. */
   private[graft] def snapshot(namespace: String): Option[LiveSnapshot] =
-    currentSnapshot(namespace).getOrElse {
-      snapshotBuildLocks(Math.floorMod(namespace.hashCode, snapshotBuildLocks.length)).synchronized {
-        currentSnapshot(namespace).getOrElse {
-          val bound = snapshotBound
-          val (e, rows) = synchronized { (epoch, live) }
-          val recs = rows.filter(col("namespace") === namespace)
-            .limit(math.max(bound + 1, 0)).collect()
-          if (recs.isEmpty && bound >= 0) Some(new LiveSnapshot(e, recs))
-          else {
-            val snap =
-              if (recs.length > bound || recs.exists(r => r.id == null || r.values == null)) None
-              else Some(new LiveSnapshot(e, recs))
-            snapshots.put(namespace, (e, snap))
-            // drop every entry a later mutation made stale, so residency
-            // tracks the namespaces read at the current epoch
-            snapshots.values.removeIf(!isCurrent(_))
-            snap
-          }
-        }
+    snapshotBuildLocks.cached(namespace)(currentSnapshot(namespace)) {
+      val bound = snapshotBound
+      val (e, rows) = synchronized { (epoch, live) }
+      val recs = rows.filter(col("namespace") === namespace)
+        .limit(math.max(bound + 1, 0)).collect()
+      if (recs.isEmpty && bound >= 0) Some(new LiveSnapshot(e, recs))
+      else {
+        val snap =
+          if (recs.length > bound || recs.exists(r => r.id == null || r.values == null)) None
+          else Some(new LiveSnapshot(e, recs))
+        snapshots.put(namespace, (e, snap))
+        // drop every entry a later mutation made stale, so residency
+        // tracks the namespaces read at the current epoch
+        snapshots.values.removeIf(!isCurrent(_))
+        snap
       }
     }
 

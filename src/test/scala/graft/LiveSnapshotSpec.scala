@@ -21,17 +21,8 @@ class LiveSnapshotSpec extends AnyFunSuite {
   private val Dim = 8
   private val Indexes = Seq("lsh", "ivf", "pq", "bq", "imi", "hnsw")
 
-  private def assertSame(a: Seq[SearchHit], b: Seq[SearchHit], what: String): Unit = {
-    assert(a.map(_.id) == b.map(_.id), s"$what: ids differ")
-    a.zip(b).foreach { case (x, y) =>
-      assert(java.lang.Double.doubleToRawLongBits(x.score) ==
-        java.lang.Double.doubleToRawLongBits(y.score),
-        s"$what: score of ${x.id} ${x.score} vs ${y.score}")
-      assert(java.util.Arrays.equals(x.values, y.values), s"$what: values of ${x.id}")
-      assert(x.metadata == y.metadata, s"$what: metadata of ${x.id}")
-      assert(x.metadataJson == y.metadataJson, s"$what: metadataJson of ${x.id}")
-    }
-  }
+  private def assertSame(a: Seq[SearchHit], b: Seq[SearchHit], what: String): Unit =
+    TestSpark.assertSameHits(a, b, what)
 
   /** A named route returning positional answers (one for a single query). */
   private final case class Route(what: String, ns: String, run: () => Seq[Seq[SearchHit]])

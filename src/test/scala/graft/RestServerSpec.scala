@@ -983,6 +983,24 @@ class RestServerSpec extends AnyFunSuite {
         """{"query": [1.0, 0.0], "durable": true, "approx": true,
           | "index": "hnsw", "filter": {"t": "nope"}}""".stripMargin)
       assert(d.exactRescues.get() == rescues0)
+      // the serving tier: the driver snapshot the search above collected
+      // (generation 0, three rows), Spark above the bound, and no current
+      // snapshot before the first read under a new bound
+      def tierNote(): String = {
+        val (c, b) = send("POST", s"$base/query/explain?namespace=ens",
+          """{"query": [1.0, 0.0], "top_k": 2, "durable": true}""")
+        assert(c == 200, b)
+        val n = mapper.readTree(b).get("notes")
+        (0 until n.size).map(n.get(_).asText()).mkString(" | ")
+      }
+      assert(tierNote().contains("scores on the driver snapshot (generation 0, 3 row versions) with no Spark job"),
+        tierNote())
+      d.snapshotMaxRows = 2
+      try {
+        assert(tierNote().contains("no current snapshot"), tierNote())
+        d.findSimilar(Seq(1f, 0f), k = 2, namespace = "ens")
+        assert(tierNote().contains("Spark: above the bound"), tierNote())
+      } finally d.snapshotMaxRows = VectorStore.SnapshotMaxRows
     } finally server.stop()
   }
 }

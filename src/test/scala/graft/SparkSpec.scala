@@ -22,6 +22,21 @@ object TestSpark {
     s
   }
 
+  /** The tier-parity check: the same ids in the same order, bit-equal
+    * scores, values, metadata and metadataJson. */
+  def assertSameHits(a: Seq[graft.model.SearchHit], b: Seq[graft.model.SearchHit],
+                     what: String): Unit = {
+    assert(a.map(_.id) == b.map(_.id), s"$what: ids differ: ${a.map(_.id)} vs ${b.map(_.id)}")
+    a.zip(b).foreach { case (x, y) =>
+      assert(java.lang.Double.doubleToRawLongBits(x.score) ==
+        java.lang.Double.doubleToRawLongBits(y.score),
+        s"$what: score of ${x.id} ${x.score} vs ${y.score}")
+      assert(java.util.Arrays.equals(x.values, y.values), s"$what: values of ${x.id}")
+      assert(x.metadata == y.metadata, s"$what: metadata of ${x.id}")
+      assert(x.metadataJson == y.metadataJson, s"$what: metadataJson of ${x.id}")
+    }
+  }
+
   /** Spark jobs run by `body` on this thread (tagged by a job group, so
     * other threads' jobs do not count). */
   def jobsOf(body: => Unit): Int = {
