@@ -42,7 +42,7 @@ package graft
   *    dropped when the query finishes. Long-lived steady-state caches
   *    (the q48 store's signature index) survive their own timed runs, so
   *    the medians measure the serving read path; the store heals an
-  *    external unpersist by re-pinning (VectorStore.indexSigs), so even
+  *    external unpersist by re-pinning (VectorStore.layoutFor), so even
   *    the end-of-query sweep cannot silently degrade a later pass.
   *
   * Round-7 additions:

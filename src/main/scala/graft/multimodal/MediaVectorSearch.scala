@@ -29,7 +29,7 @@ import graft.store.VectorStore
   *     namespace; the store builds its persisted OPQ-rotated PQ layout
   *     on first search (epoch-cached — repeat invocations pay the ADC
   *     sweep + rerank, the serving steady state).
-  *  3. RETRIEVE — `findSimilarPqGraded` for the query image's vector:
+  *  3. RETRIEVE — a graded pq search (`gradedSearch`) for the query image's vector:
   *     rotate, derive the ADC LUT, one sweep of the compressed codes
   *     cut to CandN, exact cosine rerank in the original space (the
   *     q147 read path, with media features instead of synthetic
@@ -144,11 +144,11 @@ object MediaVectorSearch {
       spark.read.parquet(s"$aux/images")
         .where(col("img_id") === QueryImg)
         .select(col("payload")).collect()(0).getAs[Array[Byte]](0)).toSeq
-    val hits = store.findSimilarPqGraded(qv, k = K, namespace = Ns)
+    val hits = store.gradedSearch("pq", batch = false, Seq(qv), K, Ns).head
     require(store.pqRotation(Ns, Dim).isDefined,
       "q153 rides the OPQ-rotated PQ mount - dim 72 divides the " +
         "subspace count, so the rotation must have been built")
-    lastAux = store.pqLayoutDir(Ns, Dim).map(pq => (aux, pq))
+    lastAux = store.layoutDir("pq", Ns, Dim).map(pq => (aux, pq))
     hits.zipWithIndex
       .map { case (h, i) => (i + 1, h.id, h.score) }
       .toDF("rank", "id", "score")
@@ -373,7 +373,7 @@ object MediaVectorSearch {
   def q165(spark: SparkSession, dir: String): DataFrame = {
     val store = mediaStore(spark, dir, audStores, "audio", AudNs, audioFeature)
     val qv = queryVec(spark, dir, "audio", "aud_id", AudQueryId, audioFeature)
-    val hits = store.findSimilarPqGraded(qv, k = K, namespace = AudNs)
+    val hits = store.gradedSearch("pq", batch = false, Seq(qv), K, AudNs).head
     require(store.pqRotation(AudNs, AudDim).isDefined,
       "q165 rides the OPQ-rotated PQ mount - the padded dim 72 divides " +
         "the subspace count, so the rotation must have been built")
@@ -381,7 +381,7 @@ object MediaVectorSearch {
       (AudQueryId + 1).toString),
       s"q165 top-2 must be (source, its planted transient copy), got " +
         hits.take(2).map(_.id).mkString(","))
-    lastAudAux = store.pqLayoutDir(AudNs, AudDim)
+    lastAudAux = store.layoutDir("pq", AudNs, AudDim)
       .map(pq => (MediaDedup.fixture(spark, dir), pq))
     emit(spark, hits)
   }
@@ -396,12 +396,12 @@ object MediaVectorSearch {
   def q166(spark: SparkSession, dir: String): DataFrame = {
     val store = mediaStore(spark, dir, vidStores, "videos", VidNs, videoFeature)
     val qv = queryVec(spark, dir, "videos", "vid_id", VidQueryId, videoFeature)
-    val hits = store.findSimilarHnswGraded(qv, k = K, namespace = VidNs)
+    val hits = store.gradedSearch("hnsw", batch = false, Seq(qv), K, VidNs).head
     require(hits.take(2).map(_.id) == Seq(VidQueryId.toString,
       (VidQueryId + 3).toString),
       s"q166 top-2 must be (source, its tail-trimmed re-encode), got " +
         hits.take(2).map(_.id).mkString(","))
-    lastVidAux = store.hnswLayoutDir(VidNs, qv.length)
+    lastVidAux = store.layoutDir("hnsw", VidNs, qv.length)
       .map(h => (MediaDedup.fixture(spark, dir), h))
     emit(spark, hits)
   }

@@ -648,7 +648,7 @@ object Dedup {
     * index the per-ingest probe reads — re-deriving them per arriving
     * batch would re-scan the archive, which is exactly what the
     * incremental shape exists to avoid. Heals an external unpersist by
-    * re-pinning (the VectorStore.indexSigs discipline), so bench hygiene
+    * re-pinning (the VectorStore.layoutFor discipline), so bench hygiene
     * sweeps cannot silently turn later invocations into full re-shingles
     * billed as serving cost (the r11 q71 in-suite inversion). */
   private val q71Postings =

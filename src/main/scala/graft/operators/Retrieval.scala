@@ -62,7 +62,7 @@ object Retrieval {
     * prime suspect for the sustained pass-2 q66/q58 inflation). A
     * persisted per-dir frame is (a) built once, (b) reclaimable by the
     * bench's hygiene sweep, and (c) self-healing: an external unpersist
-    * re-pins on next use (the VectorStore.indexSigs discipline). */
+    * re-pins on next use (the VectorStore.layoutFor discipline). */
   private val tokenizedCorpus =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 

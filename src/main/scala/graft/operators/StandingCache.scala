@@ -19,7 +19,7 @@ import org.apache.spark.storage.StorageLevel
   * invocation. A persisted per-dir frame is (a) built once per JVM,
   * (b) reclaimable by external cache hygiene (the bench sweep, an ops
   * script), and (c) self-healing — an external unpersist re-pins on
-  * next use (the VectorStore.indexSigs discipline). CacheManager dedups
+  * next use (the VectorStore.layoutFor discipline). CacheManager dedups
   * by normalized plan, so re-persisting the same per-dir plan can never
   * stack duplicate pins.
   *

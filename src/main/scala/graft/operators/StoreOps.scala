@@ -164,7 +164,7 @@ object StoreOps {
   /** One loaded q48 store per sf dir per JVM (mirrors [[Ann.ivfTopK]]'s
     * layoutCache): the bulk load runs once, and because the store is
     * never mutated afterwards its epoch is stable, so the store-attached
-    * signature index (sigCache) survives across invocations too. Repeat
+    * signature layout (the lsh entry) survives across invocations too. Repeat
     * q48 runs (bench medians, serving) therefore measure the STEADY-STATE
     * index-backed read path — query bucketing, candidate semi-join, exact
     * rerank — not a per-call store+index rebuild, exactly like a
@@ -270,8 +270,8 @@ object StoreOps {
       s
     })
     val qv = vecOf(e, QueryId)
-    val hits = store.findSimilarIvfGraded(qv, k = K, namespace = IvfNs)
-    lastIvfAux = store.ivfLayoutDir(IvfNs, qv.length)
+    val hits = store.gradedSearch("ivf", batch = false, Seq(qv), K, IvfNs).head
+    lastIvfAux = store.layoutDir("ivf", IvfNs, qv.length)
     dfFrame(spark, hits)
   }
 
@@ -591,8 +591,8 @@ object StoreOps {
       s
     })
     val qv = vecOf(e, QueryId)
-    val hits = store.findSimilarPqGraded(qv, k = K, namespace = PqNs)
-    lastPqAux = store.pqLayoutDir(PqNs, qv.length)
+    val hits = store.gradedSearch("pq", batch = false, Seq(qv), K, PqNs).head
+    lastPqAux = store.layoutDir("pq", PqNs, qv.length)
     dfFrame(spark, hits)
   }
 
@@ -666,11 +666,11 @@ object StoreOps {
       s
     })
     val qv = vecOf(e, OpqQueryId)
-    val hits = store.findSimilarPqGraded(qv, k = K, namespace = OpqNs)
+    val hits = store.gradedSearch("pq", batch = false, Seq(qv), K, OpqNs).head
     require(store.pqRotation(OpqNs, qv.length).isDefined,
       "q147 grades the rotation — the layout must have been built OPQ " +
         "(dim divisible by the subspace count, rotation conf on)")
-    lastOpqAux = store.pqLayoutDir(OpqNs, qv.length).map((_, qv.length))
+    lastOpqAux = store.layoutDir("pq", OpqNs, qv.length).map((_, qv.length))
     dfFrame(spark, hits)
   }
 
@@ -733,7 +733,7 @@ object StoreOps {
 
 
   /** q148 (r14 — VERDICT r13 "What's missing" #2): the batch matrix's
-    * last hole. [[VectorStore.findSimilarBatchLsh]] behind the gate —
+    * last hole. [[VectorStore.gradedSearch]] on lsh behind the gate —
     * all Q queries' band buckets union into one broadcast probe frame,
     * the cached signature table is scanned ONCE, per-query bucket-mates
     * rerank exactly through the batch kernel. The oracle replays the
@@ -755,7 +755,7 @@ object StoreOps {
       s
     })
     val qs = batchOf(e)
-    val res = store.findSimilarBatchLsh(qs, k = K, namespace = BatchLshNs)
+    val res = store.gradedSearch("lsh", batch = true, qs, K, BatchLshNs)
     batchParity("q148", dir)(qs, _ => res,
       store.findSimilar(_, k = K, metric = "cosine", namespace = BatchLshNs,
         approx = true))
@@ -1737,8 +1737,7 @@ object StoreOps {
       s
     })
     val qs = batchOf(e)
-    val res = store.findSimilarBatchIvf(qs, k = K, namespace = BatchIvfNs,
-      persistProbes = true)
+    val res = store.gradedSearch("ivf", batch = true, qs, K, BatchIvfNs)
     // the batch must be indistinguishable from Q sequential ivf
     // searches — asserted once per process per dir (every fresh Verify
     // JVM runs it; bench timed runs then measure the BATCH, not the
@@ -1746,7 +1745,7 @@ object StoreOps {
     batchParity("q106", dir)(qs, _ => res,
       store.findSimilar(_, k = K, metric = "cosine", namespace = BatchIvfNs,
         approx = true, index = "ivf"))
-    lastBatchIvfAux = store.ivfLayoutDir(BatchIvfNs, qs.head.length)
+    lastBatchIvfAux = store.layoutDir("ivf", BatchIvfNs, qs.head.length)
     batchHitsFrame(spark, res)
   }
 
@@ -1808,8 +1807,8 @@ object StoreOps {
       s
     })
     val qv = vecOf(e, QueryId)
-    val hits = store.findSimilarImiGraded(qv, k = K, namespace = ImiNs)
-    lastStoreImiAux = store.imiLayoutDir(ImiNs, qv.length)
+    val hits = store.gradedSearch("imi", batch = false, Seq(qv), K, ImiNs).head
+    lastStoreImiAux = store.layoutDir("imi", ImiNs, qv.length)
     dfFrame(spark, hits)
   }
 
@@ -1846,8 +1845,8 @@ object StoreOps {
       s
     })
     val qv = vecOf(e, QueryId)
-    val hits = store.findSimilarHnswGraded(qv, k = K, namespace = HnswNs)
-    lastStoreHnswAux = store.hnswLayoutDir(HnswNs, qv.length)
+    val hits = store.gradedSearch("hnsw", batch = false, Seq(qv), K, HnswNs).head
+    lastStoreHnswAux = store.layoutDir("hnsw", HnswNs, qv.length)
     dfFrame(spark, hits)
   }
 
@@ -1882,7 +1881,7 @@ object StoreOps {
   @volatile private var lastBatchHnswAux: Option[String] = None
 
 
-  /** q122: [[VectorStore.findSimilarBatchHnsw]] behind the gate — the
+  /** q122: [[VectorStore.gradedSearch]] on hnsw behind the gate — the
     * q106 one-scan batch thesis on the GRAPH mount: Q=4 queries
     * beam-search each resident shard graph in one pass of the layout,
     * per-query candidates flow through the candidate-restricted
@@ -1903,12 +1902,11 @@ object StoreOps {
       s
     })
     val qs = batchOf(e)
-    val res = store.findSimilarBatchHnsw(qs, k = K, namespace = BatchHnswNs,
-      persistCands = true)
+    val res = store.gradedSearch("hnsw", batch = true, qs, K, BatchHnswNs)
     batchParity("q122", dir)(qs, _ => res,
       store.findSimilar(_, k = K, metric = "cosine", namespace = BatchHnswNs,
         approx = true, index = "hnsw"))
-    lastBatchHnswAux = store.hnswLayoutDir(BatchHnswNs, qs.head.length)
+    lastBatchHnswAux = store.layoutDir("hnsw", BatchHnswNs, qs.head.length)
     batchHitsFrame(spark, res)
   }
 
@@ -2073,7 +2071,7 @@ object StoreOps {
   @volatile private var lastBatchPqAux: Option[String] = None
 
 
-  /** q109: [[VectorStore.findSimilarBatchPq]] behind the gate (VERDICT
+  /** q109: [[VectorStore.gradedSearch]] on pq behind the gate (VERDICT
     * r11 "What's missing" #1 — batched approx was IVF-only; a batch
     * user on the PQ mount fell back to Q sequential corpus-scan
     * probes). All Q ADC LUTs broadcast as ONE qid-keyed frame, the
@@ -2097,15 +2095,14 @@ object StoreOps {
       s
     })
     val qs = batchOf(e)
-    val res = store.findSimilarBatchPq(qs, k = K, namespace = BatchPqNs,
-      persistLuts = true)
+    val res = store.gradedSearch("pq", batch = true, qs, K, BatchPqNs)
     // the batch must be indistinguishable from Q sequential pq
     // searches — asserted once per process per dir (the q106 billing
     // rationale: bench repeats measure the batch, not batch + Q probes)
     batchParity("q109", dir)(qs, _ => res,
       store.findSimilar(_, k = K, metric = "cosine", namespace = BatchPqNs,
         approx = true, index = "pq"))
-    lastBatchPqAux = store.pqLayoutDir(BatchPqNs, qs.head.length)
+    lastBatchPqAux = store.layoutDir("pq", BatchPqNs, qs.head.length)
     batchHitsFrame(spark, res)
   }
 
@@ -2464,7 +2461,7 @@ object StoreOps {
     * The oracle replays q92's full candidate policy with the tenant
     * predicate applied INSIDE the adc CTE — a post-filtering
     * implementation would rank non-matching rows into the CandN cut and
-    * break the hash. Batch parity with [[graft.store.DurableVectorStore.findSimilarBatchPq]]
+    * break the hash. Batch parity with [[graft.store.DurableVectorStore.gradedSearch]] on pq
     * asserted in-script once per dir. */
   def q170(spark: SparkSession, dir: String): DataFrame = {
     val fx = durableFixture(spark, dir, scripts("q170"))
@@ -2955,7 +2952,7 @@ object StoreOps {
   @volatile private var lastBatchImiAux: Option[String] = None
 
 
-  /** q133: [[VectorStore.findSimilarBatchImi]] behind the gate — the
+  /** q133: [[VectorStore.gradedSearch]] on imi behind the gate — the
     * q106 one-scan batch thesis on the product-grid mount: Q=4 pair-sum
     * probe lists union into ONE partition-pruned scan of the persisted
     * k×k grid, per-query candidates flow through the
@@ -2976,12 +2973,11 @@ object StoreOps {
       s
     })
     val qs = batchOf(e)
-    val res = store.findSimilarBatchImi(qs, k = K, namespace = BatchImiNs,
-      persistProbes = true)
+    val res = store.gradedSearch("imi", batch = true, qs, K, BatchImiNs)
     batchParity("q133", dir)(qs, _ => res,
       store.findSimilar(_, k = K, metric = "cosine", namespace = BatchImiNs,
         approx = true, index = "imi"))
-    lastBatchImiAux = store.imiLayoutDir(BatchImiNs, qs.head.length)
+    lastBatchImiAux = store.layoutDir("imi", BatchImiNs, qs.head.length)
     batchHitsFrame(spark, res)
   }
 
@@ -3020,7 +3016,7 @@ object StoreOps {
 
   /** Codes dir of the most recent q134 run — oracle hook. */
   @volatile private var lastDurableBatchPqAux: Option[String] = None
-  /** q134: [[graft.store.DurableVectorStore.findSimilarBatchPq]] behind
+  /** q134: [[graft.store.DurableVectorStore.gradedSearch]] on pq behind
     * the gate — q92's LSM code-mount read, batched: all Q ADC LUTs
     * broadcast qid-keyed, ONE pruned sweep of the stamped codes table,
     * per-query CandN bounded-heap cut, candidates ∪ the exact delta
@@ -3077,7 +3073,7 @@ object StoreOps {
 
   /** (ann dir, bq dir) of the most recent q135 run — oracle hook. */
   @volatile private var lastDurableBatchBqAux: Option[(String, String)] = None
-  /** q135: [[graft.store.DurableVectorStore.findSimilarBatchBq]] behind
+  /** q135: [[graft.store.DurableVectorStore.gradedSearch]] on bq behind
     * the gate — q101's sign-bit mount, batched: all Q query codes pack
     * driver-side, ONE pruned sweep of the stamped code words, per-query
     * CandN cut on integer (hamming, id), delta union, kill-by-live-join.
@@ -3153,7 +3149,7 @@ object StoreOps {
 
   /** Grid dir of the most recent q136 run — oracle hook. */
   @volatile private var lastDurableBatchImiAux: Option[String] = None
-  /** q136: [[graft.store.DurableVectorStore.findSimilarBatchImi]] behind
+  /** q136: [[graft.store.DurableVectorStore.gradedSearch]] on imi behind
     * the gate — q110's product-grid mount, batched: Q pair-sum probe
     * lists union into ONE pruned scan of the derived grid layout,
     * per-query candidates = probed cells' members ∪ delta,
@@ -3170,7 +3166,7 @@ object StoreOps {
 
   /** Graph dir of the most recent q137 run — oracle hook. */
   @volatile private var lastDurableBatchHnswAux: Option[String] = None
-  /** q137: [[graft.store.DurableVectorStore.findSimilarBatchHnsw]]
+  /** q137: [[graft.store.DurableVectorStore.gradedSearch]] on hnsw
     * behind the gate — q123's graph mount, batched: all Q queries
     * beam-search each resident shard graph in ONE pass of the layout,
     * candidates ∪ delta, kill-by-live-join. The persisted qid-keyed
@@ -3208,7 +3204,7 @@ object StoreOps {
   private val q140Stores =
     new java.util.concurrent.ConcurrentHashMap[String, VectorStore]()
 
-  /** q140: [[VectorStore.findSimilarBatchBq]] behind the gate — the one
+  /** q140: [[VectorStore.gradedSearch]] on bq behind the gate — the one
     * live batch facade that shipped in r12 without a graded entry. All Q
     * query codes pack driver-side against the namespace's midpoint grid
     * and broadcast as one (qid, qcode) frame; the cached sign-bit codes
@@ -3232,7 +3228,7 @@ object StoreOps {
       s
     })
     val qs = batchOf(e)
-    val res = store.findSimilarBatchBq(qs, k = K, namespace = BatchBqNs)
+    val res = store.gradedSearch("bq", batch = true, qs, K, BatchBqNs)
     batchParity("q140", dir)(qs, _ => res,
       store.findSimilar(_, k = K, metric = "cosine", namespace = BatchBqNs,
         approx = true, index = "bq"))

@@ -9,7 +9,7 @@ import scala.util.control.NonFatal
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
-import graft.store.{DurableVectorStore, VectorStore}
+import graft.store.{ApproxIndexes, DurableVectorStore, VectorStore}
 
 /** Route-for-route HTTP facade over [[VectorStore]] — the reference's REST
   * surface (`/root/reference/src/mlvectordb/api/rest_api.py:96-311`)
@@ -286,6 +286,15 @@ class RestServer(store: VectorStore, port: Int = 0,
     }
   })
 
+  /** The optional `as_of` commit stamp (see `/seq`); 422 unless integral. */
+  private def asOfOf(body: JsonNode): Option[Long] =
+    Option(body.get("as_of")).filterNot(_.isNull).map { n =>
+      if (!n.isIntegralNumber)
+        throw new IllegalArgumentException(
+          "as_of must be an integral commit stamp (see /seq)")
+      n.asLong()
+    }
+
   /** Optional string-map field (`filter` / `json_filter`) → Map. */
   private def stringMapOf(n: JsonNode, field: String): Map[String, String] = {
     val m = n.get(field)
@@ -316,10 +325,7 @@ class RestServer(store: VectorStore, port: Int = 0,
           .map(_.asText()).getOrElse("lsh") // explicit JSON null = unset
         // validate the index name even when approx is false: a typo'd
         // index on an exact search should 422, not silently run exact
-        if (index != "lsh" && index != "ivf" && index != "pq" &&
-            index != "bq" && index != "imi" && index != "hnsw")
-          throw new IllegalArgumentException(
-            s"unknown approx index '$index' (expected 'lsh', 'ivf', 'pq', 'bq', 'imi' or 'hnsw')")
+        ApproxIndexes.requireKnown(index)
         // optional `durable` routes the search to the mounted durable
         // store (read-only; see class doc) — the q51 partition-pruned
         // plan over HTTP
@@ -383,13 +389,7 @@ class RestServer(store: VectorStore, port: Int = 0,
             // asOf by construction, so only the kill/delta horizons
             // move); filters compose on every branch, the starved
             // rescue answering from the exact filtered as-of scan
-            val asOfNode = Option(body.get("as_of")).filterNot(_.isNull)
-            asOfNode.foreach { n =>
-              if (!n.isIntegralNumber)
-                throw new IllegalArgumentException(
-                  "as_of must be an integral commit stamp (see /seq)")
-            }
-            asOfNode.map(_.asLong()) match {
+            asOfOf(body) match {
               case Some(h) =>
                 d.findSimilarAsOf(floats(required(body, "query")), h, k,
                   metric, ns, approx = approx,
@@ -424,100 +424,27 @@ class RestServer(store: VectorStore, port: Int = 0,
           throw new IllegalArgumentException(
             "queries must be a non-empty array of vectors")
         val qs = qNode.elements().asScala.map(floats).toSeq
-        // one scan answers the whole batch (Scoring.batchSearch). Approx
-        // batches route through the INDEXED one-scan forms — all probe
-        // lists / LUTs / query codes / beam queries / band buckets union
-        // into ONE sweep of the layout (ivf r11; pq/bq/hnsw r12; imi +
-        // the durable pq/bq/imi/hnsw mounts r13; live lsh r14; durable
-        // lsh r15 — the full live × durable × single × batch index
-        // matrix is now CLOSED)
-        val wantApprox = Option(body.get("approx")).exists(_.asBoolean(false))
-        val batchIndex = Option(body.get("index")).filterNot(_.isNull)
+        // one scan answers the whole batch (Scoring.batchSearch); an
+        // approx batch unions every query's probes into ONE sweep of the
+        // index's layout, on either mount. Metadata filters serve on
+        // every route (candidate time, per-query starved rescue), and
+        // `as_of` reads the durable mount at a commit stamp — exact or
+        // any index, filters composing, the rescue answering from the
+        // exact filtered as-of scan.
+        val approx = Option(body.get("approx")).exists(_.asBoolean(false))
+        val index = Option(body.get("index")).filterNot(_.isNull)
           .map(_.asText()).getOrElse("ivf")
         // validate the index name even when approx is false — /search's
         // contract: a typo'd index on an exact search 422s, never a
         // silent exact run
-        if (batchIndex != "lsh" && batchIndex != "ivf" && batchIndex != "pq" &&
-            batchIndex != "bq" && batchIndex != "imi" && batchIndex != "hnsw")
-          throw new IllegalArgumentException(
-            s"unknown approx index '$batchIndex' (expected 'lsh', 'ivf', 'pq', 'bq', 'imi' or 'hnsw')")
-        val wantDurable = Option(body.get("durable")).exists(_.asBoolean(false))
+        ApproxIndexes.requireKnown(index)
+        val filter = stringMapOf(body, "filter")
+        val jsonFilter = stringMapOf(body, "json_filter")
         val results =
-          if (wantDurable) {
-            val d = durableStore
-            // metadata filters serve on the durable batch EXACT path and
-            // all six indexed batch mounts (r16 — the q164 candidate-time
-            // semantics batched, per-query starved rescue)
-            //
-            // optional `as_of` (r16; filters compose + the full index
-            // matrix r17): the /search contract batched — exact or ANY
-            // of the six indexes (findSimilarBatchAsOf routes to the
-            // same one-sweep batch probes with the horizons bounded at
-            // the stamp), metadata filters at candidate time with the
-            // per-query starved rescue answering from the exact
-            // filtered as-of scan
-            val asOfNode = Option(body.get("as_of")).filterNot(_.isNull)
-            asOfNode.foreach { n =>
-              if (!n.isIntegralNumber)
-                throw new IllegalArgumentException(
-                  "as_of must be an integral commit stamp (see /seq)")
-            }
-            asOfNode.map(_.asLong()) match {
-              case Some(h) =>
-                d.findSimilarBatchAsOf(qs, h, k, metric, ns,
-                  approx = wantApprox,
-                  filter = stringMapOf(body, "filter"),
-                  jsonFilter = stringMapOf(body, "json_filter"),
-                  index = if (wantApprox) batchIndex else "ivf")
-              case None =>
-            if (wantApprox) {
-              // the store's one metric table: the pq/bq/imi/hnsw/lsh
-              // batch forms take no metric, so the check runs here
-              DurableVectorStore.requireIndexMetric(batchIndex, metric,
-                batch = true)
-              batchIndex match {
-                case "ivf"  => d.findSimilarBatchApprox(qs, k, metric, ns,
-                  filter = stringMapOf(body, "filter"),
-                  jsonFilter = stringMapOf(body, "json_filter"))
-                case "pq"   => d.findSimilarBatchPq(qs, k, ns,
-                  filter = stringMapOf(body, "filter"),
-                  jsonFilter = stringMapOf(body, "json_filter"))
-                case "bq"   => d.findSimilarBatchBq(qs, k, ns,
-                  filter = stringMapOf(body, "filter"),
-                  jsonFilter = stringMapOf(body, "json_filter"))
-                case "imi"  => d.findSimilarBatchImi(qs, k, ns,
-                  filter = stringMapOf(body, "filter"),
-                  jsonFilter = stringMapOf(body, "json_filter"))
-                case "hnsw" => d.findSimilarBatchHnsw(qs, k, ns,
-                  filter = stringMapOf(body, "filter"),
-                  jsonFilter = stringMapOf(body, "json_filter"))
-                case "lsh"  => d.findSimilarBatchLsh(qs, k, ns,
-                  filter = stringMapOf(body, "filter"),
-                  jsonFilter = stringMapOf(body, "json_filter"))
-              }
-            } else d.findSimilarBatch(qs, k, metric, ns,
-              stringMapOf(body, "filter"), stringMapOf(body, "json_filter"))
-            }
-          } else if (wantApprox) {
-            if (metric != "cosine")
-              throw new IllegalArgumentException(
-                s"approx batch search is cosine only, got metric '$metric'")
-            batchIndex match {
-              case "lsh" => store.findSimilarBatchLsh(qs, k, ns,
-                stringMapOf(body, "filter"), stringMapOf(body, "json_filter"))
-              case "ivf" => store.findSimilarBatchIvf(qs, k, ns,
-                stringMapOf(body, "filter"), stringMapOf(body, "json_filter"))
-              case "pq" => store.findSimilarBatchPq(qs, k, ns,
-                stringMapOf(body, "filter"), stringMapOf(body, "json_filter"))
-              case "bq" => store.findSimilarBatchBq(qs, k, ns,
-                stringMapOf(body, "filter"), stringMapOf(body, "json_filter"))
-              case "imi" => store.findSimilarBatchImi(qs, k, ns,
-                stringMapOf(body, "filter"), stringMapOf(body, "json_filter"))
-              case "hnsw" => store.findSimilarBatchHnsw(qs, k, ns,
-                stringMapOf(body, "filter"), stringMapOf(body, "json_filter"))
-            }
-          } else store.findSimilarBatch(qs, k, metric, ns,
-            stringMapOf(body, "filter"), stringMapOf(body, "json_filter"))
+          if (Option(body.get("durable")).exists(_.asBoolean(false)))
+            durableStore.searchBatch(qs, k, metric, ns, approx, index, filter,
+              jsonFilter, asOfOf(body))
+          else store.searchBatch(qs, k, metric, ns, filter, jsonFilter, approx, index)
         val arr = mapper.createArrayNode() // positional: result i ↔ queries[i]
         results.foreach { hits =>
           val inner = mapper.createArrayNode()
@@ -614,7 +541,9 @@ class RestServer(store: VectorStore, port: Int = 0,
         val o = mapper.createObjectNode()
         val live = o.putObject("store")
         live.put("starved_probe_skips", store.starvedProbeSkips.get())
-        live.put("hnsw_graph_builds", store.hnswGraphBuilds.get())
+        live.put("hnsw_graph_builds", store.builds("hnsw").get())
+        val lb = live.putObject("builds")
+        ApproxIndexes.Names.foreach(n => lb.put(n, store.builds(n).get()))
         if (boolParam(ex, "durable", default = false)) {
           val d = durableStore
           val dn = o.putObject("durable")
@@ -661,7 +590,7 @@ class RestServer(store: VectorStore, port: Int = 0,
         d.put("hybrid",
           "vector + metadata composed: POST /search {query, filter[, json_filter]} on either mount, any index, single or batch, optionally as_of")
         val idx = o.putArray("indexes")
-        Seq("lsh", "ivf", "pq", "bq", "imi", "hnsw").foreach(idx.add)
+        ApproxIndexes.Names.foreach(idx.add)
         val m = o.putObject("metrics")
         m.put("cosine", "similarity, descending")
         m.put("l2", "squared euclidean distance, ascending")
@@ -717,20 +646,14 @@ class RestServer(store: VectorStore, port: Int = 0,
           throw new IllegalArgumentException(
             "hybrid queries require 'filter' or 'json_filter'")
         val wantDurable = Option(body.get("durable")).exists(_.asBoolean(false))
-        val asOfNode = Option(body.get("as_of")).filterNot(_.isNull)
-        asOfNode.foreach { n =>
-          if (!n.isIntegralNumber)
-            throw new IllegalArgumentException(
-              "as_of must be an integral commit stamp (see /seq)")
-          if (!wantDurable)
-            throw new IllegalArgumentException(
-              "as_of is a durable-store concept; pass \"durable\": true")
-        }
+        val asOf = asOfOf(body)
+        if (asOf.isDefined && !wantDurable)
+          throw new IllegalArgumentException(
+            "as_of is a durable-store concept; pass \"durable\": true")
         val e =
           if (wantDurable)
             durableStore.explainSearch(qv, k, metric, ns, approx,
-              if (approx) index else "ivf", filterM, jsonF,
-              asOfNode.map(_.asLong()))
+              if (approx) index else "ivf", filterM, jsonF, asOf)
           else store.explainSearch(qv, k, metric, ns, filterM, jsonF,
             approx, index)
         val o = mapper.createObjectNode()

@@ -632,6 +632,12 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     * transient duplicate, never a loss (see class doc). Re-adding a
     * previously deleted id resurrects it the same way. */
   def loadFrame(df: DataFrame, namespace: String): Unit = {
+    // The namespace is the partition directory: Spark writes an empty
+    // value to its default partition, which every read returns as a null
+    // namespace, so the rows would be acknowledged and never found.
+    // Refused before any commit stamp is claimed or any row written.
+    require(namespace != null && namespace.nonEmpty,
+      "a durable namespace must be a non-empty string")
     // Pin the incoming frame ONCE before its two uses (the shadow probe
     // and the data append): a non-deterministic input re-evaluated per
     // use could append rows whose overlapping ids were never
@@ -1147,7 +1153,7 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     // mutation horizons bounded at asOf); the rescue answers from the
     // exact FILTERED AS-OF scan, so min(k, matching-at-asOf) holds.
     if (!approx) {
-      requireBatch(queries, k)
+      ApproxIndexes.requireBatch(queries, k)
       exactTopK(queries, k, metric, namespace, Some(asOf), filter, jsonFilter,
         batch = true)
     } else approxSearch(index, batch = true, queries, k, metric, namespace,
@@ -1197,6 +1203,28 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
                              jsonFilter: Map[String, String] = Map.empty): Seq[Seq[SearchHit]] =
     approxSearch("ivf", batch = true, queries, k, metric, namespace, None,
       filter, jsonFilter, persistProbes)
+
+  /** Every batch route in one call — exact or any of the six indexes, at
+    * the live horizon or `asOf` — as the REST batch route serves it. The
+    * exact, as-of and ivf forms go through their own public methods, so
+    * a subclass that overrides them sees the calls. */
+  private[graft] def searchBatch(queries: Seq[Seq[Float]], k: Int = 10,
+                                 metric: String = "cosine",
+                                 namespace: String = "default",
+                                 approx: Boolean = false, index: String = "ivf",
+                                 filter: Map[String, String] = Map.empty,
+                                 jsonFilter: Map[String, String] = Map.empty,
+                                 asOf: Option[Long] = None): Seq[Seq[SearchHit]] =
+    asOf match {
+      case Some(h) => findSimilarBatchAsOf(queries, h, k, metric, namespace, approx,
+        filter, jsonFilter, index = index)
+      case None if !approx =>
+        findSimilarBatch(queries, k, metric, namespace, filter, jsonFilter)
+      case None if index == "ivf" => findSimilarBatchApprox(queries, k, metric,
+        namespace, filter = filter, jsonFilter = jsonFilter)
+      case None => approxSearch(index, batch = true, queries, k, metric, namespace,
+        None, filter, jsonFilter)
+    }
 
   // ---- the indexed serving driver -------------------------------------
   //
@@ -1248,8 +1276,8 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
                            filter: Map[String, String] = Map.empty,
                            jsonFilter: Map[String, String] = Map.empty,
                            persist: Boolean = false): Seq[Seq[SearchHit]] = {
-    DurableVectorStore.requireIndexMetric(index, metric, batch)
-    if (batch) requireBatch(queries, k)
+    ApproxIndexes.requireMetric(index, metric, batch, durable = true)
+    if (batch) ApproxIndexes.requireBatch(queries, k)
     else require(k >= 1 && k <= 1000, "top_k must be in [1, 1000]")
     val r = Req(queries, batch, k, metric, namespace, asOf, filter,
       jsonFilter, persist)
@@ -1439,37 +1467,20 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
   // batched into one layout sweep) with [[rerankBatch]]; generation gate,
   // retry, starved rescue and exact-scan fallback are [[serve]]'s.
 
-  /** Shared batch preamble: bounds + one dimensionality. */
-  private def requireBatch(queries: Seq[Seq[Float]], k: Int): Unit = {
-    require(k >= 1 && k <= 1000, "top_k must be in [1, 1000]")
-    require(queries.nonEmpty && queries.size <= Scoring.InListMax,
-      s"batch size must be in [1, ${Scoring.InListMax}]")
-    require(queries.forall(_.length == queries.head.length),
-      "all batch queries must share one dimensionality")
-  }
-
   /** The authoritative rerank base at a horizon: the current live set,
     * or the as-of snapshot. */
   private def baseAt(asOf: Option[Long]): DataFrame =
     asOf.map(liveAsOf).getOrElse(live())
 
-  /** Batched APPROX search through the durable PQ codes: all Q probe
+  /** Batched search through the durable PQ codes: all Q probe
     * lists and ADC LUTs broadcast as qid-keyed frames, ONE
     * partition-pruned sweep of the stamped codes table scores each code
     * row only for the queries that probed its cell (a table-lookup
     * 8-term sum per pair, never a float vector), and the per-query
     * [[graft.operators.Pq.CandN]] cut is the bounded-heap aggregate on
     * (rounded ADC, id) — the [[probePq]] policy, batched. cosine (the
-    * codebook geometry). `persistLuts` writes `batch_lut/` +
+    * codebook geometry). `persist` writes `batch_lut/` +
     * `batch_probes/` for oracle replay — graded paths only. */
-  def findSimilarBatchPq(queries: Seq[Seq[Float]], k: Int = 10,
-                         namespace: String = "default",
-                         persistLuts: Boolean = false,
-                         filter: Map[String, String] = Map.empty,
-                         jsonFilter: Map[String, String] = Map.empty): Seq[Seq[SearchHit]] =
-    approxSearch("pq", batch = true, queries, k, "cosine", namespace, None,
-      filter, jsonFilter, persistLuts)
-
   private def probeBatchPq(r: Req, e: AnnEntry): Seq[Seq[SearchHit]] = {
     val pq = pqLayoutFor(r.namespace, r.dim, e)
     val nProbe = graft.operators.Ann.ivfProbeFor(e.centers.length)
@@ -1513,23 +1524,15 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
       .select(col("__qid"), explode(col("top.id")).as("id")))
   }
 
-  /** Batched APPROX search through the durable BQ sign-bit codes: all Q
+  /** Batched search through the durable BQ sign-bit codes: all Q
     * query codes pack driver-side against the layout's midpoint grid
     * and broadcast as one (qid, qcode) frame; ONE partition-pruned
     * sweep of the stamped codes table does one xor+popcount per
     * (row, probing query) word, and the per-query
     * [[graft.operators.Bq.CandN]] cut is the bounded-heap aggregate on
     * (hamming, id) — integer-valued, no float tie boundary; the
-    * [[probeBq]] policy, batched. `persistCodes` writes
+    * [[probeBq]] policy, batched. `persist` writes
     * `batch_qcodes/` + `batch_probes/` for oracle replay. */
-  def findSimilarBatchBq(queries: Seq[Seq[Float]], k: Int = 10,
-                         namespace: String = "default",
-                         persistCodes: Boolean = false,
-                         filter: Map[String, String] = Map.empty,
-                         jsonFilter: Map[String, String] = Map.empty): Seq[Seq[SearchHit]] =
-    approxSearch("bq", batch = true, queries, k, "cosine", namespace, None,
-      filter, jsonFilter, persistCodes)
-
   private def probeBatchBq(r: Req, e: AnnEntry): Seq[Seq[SearchHit]] = {
     val bq = bqLayoutFor(r.namespace, r.dim, e)
     val nProbe = graft.operators.Ann.ivfProbeFor(e.centers.length)
@@ -1570,22 +1573,14 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
       .select(col("__qid"), explode(col("top.id")).as("id")))
   }
 
-  /** Batched APPROX search through the durable IMI product grid: Q×2k
+  /** Batched search through the durable IMI product grid: Q×2k
     * driver-side sub-distances rank each query's probe cells (the q94
     * pair-sum policy), all probe lists union into ONE partition-pruned
     * scan of the grid layout, per-query candidates = the probed cells'
     * members — the [[probeImi]] policy, batched. The grid rows are
     * records, so a filter cuts inside the one pruned grid scan.
-    * `persistProbes` writes the qid-keyed `batch_probes/` for oracle
+    * `persist` writes the qid-keyed `batch_probes/` for oracle
     * replay. */
-  def findSimilarBatchImi(queries: Seq[Seq[Float]], k: Int = 10,
-                          namespace: String = "default",
-                          persistProbes: Boolean = false,
-                          filter: Map[String, String] = Map.empty,
-                          jsonFilter: Map[String, String] = Map.empty): Seq[Seq[SearchHit]] =
-    approxSearch("imi", batch = true, queries, k, "cosine", namespace, None,
-      filter, jsonFilter, persistProbes)
-
   private def probeBatchImi(r: Req, e: AnnEntry): Seq[Seq[SearchHit]] = {
     val imi = imiLayoutFor(r.namespace, r.dim, e)
     val probeRows = r.queries.zipWithIndex.flatMap { case (q, i) =>
@@ -1604,22 +1599,14 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
       .select(col("__qid"), col("id")))
   }
 
-  /** Batched APPROX search through the durable HNSW shard graphs: all Q
+  /** Batched search through the durable HNSW shard graphs: all Q
     * queries beam-search each resident shard graph in ONE pass of the
     * layout ([[graft.operators.Hnsw.shardCandidatesBatchD]]) — the
     * [[probeHnsw]] policy, batched. The beam proposes and the predicate
     * cuts at the live record join before any per-query k-heap; the beam
     * is the narrowest candidate policy, so the starved rescue matters
-    * most here. `persistCands` writes the qid-keyed `batch_cands/` for
+    * most here. `persist` writes the qid-keyed `batch_cands/` for
     * oracle replay. */
-  def findSimilarBatchHnsw(queries: Seq[Seq[Float]], k: Int = 10,
-                           namespace: String = "default",
-                           persistCands: Boolean = false,
-                           filter: Map[String, String] = Map.empty,
-                           jsonFilter: Map[String, String] = Map.empty): Seq[Seq[SearchHit]] =
-    approxSearch("hnsw", batch = true, queries, k, "cosine", namespace, None,
-      filter, jsonFilter, persistCands)
-
   private def probeBatchHnsw(r: Req, e: AnnEntry): Seq[Seq[SearchHit]] = {
     val h = hnswLayoutFor(r.namespace, r.dim, e)
     var beam = graft.operators.Hnsw.shardCandidatesBatchD(spark, h.aux,
@@ -1761,7 +1748,7 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
                     jsonFilter: Map[String, String],
                     asOf: Option[Long]): graft.model.SearchExplain = {
     require(k >= 1 && k <= 1000, "top_k must be in [1, 1000]")
-    if (approx) DurableVectorStore.requireIndexMetric(index, metric, batch = false)
+    if (approx) ApproxIndexes.requireMetric(index, metric, batch = false, durable = true)
     val pred = metaPredicate(filter, jsonFilter)
     val hasFilter = filter.nonEmpty || jsonFilter.nonEmpty
     val notes = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -2841,22 +2828,14 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
       .join(candIds, col("id") === col("__cid"), "left_semi"))
   }
 
-  /** Batched APPROX search through the durable LSH signatures: all Q
+  /** Batched search through the durable LSH signatures: all Q
     * queries' band buckets union into ONE broadcast probe frame, the
     * persisted signature table is scanned ONCE (the q148 one-scan
     * thesis on the durable mount), per-query bucket-mates + the exact
     * delta tail rerank through the shared batch kernel; the predicate
     * cuts at the record join — candidate-time (the bucket-mate set is
-    * not k-cut). `persistSigs` writes the qid-keyed `batch_qsig/` for
+    * not k-cut). `persist` writes the qid-keyed `batch_qsig/` for
     * oracle replay. */
-  def findSimilarBatchLsh(queries: Seq[Seq[Float]], k: Int = 10,
-                          namespace: String = "default",
-                          persistSigs: Boolean = false,
-                          filter: Map[String, String] = Map.empty,
-                          jsonFilter: Map[String, String] = Map.empty): Seq[Seq[SearchHit]] =
-    approxSearch("lsh", batch = true, queries, k, "cosine", namespace, None,
-      filter, jsonFilter, persistSigs)
-
   private def probeBatchLsh(r: Req, e: AnnEntry): Seq[Seq[SearchHit]] = {
     val lsh = lshLayoutFor(r.namespace, r.dim, e)
     val probeRows = r.queries.zipWithIndex.flatMap { case (q, i) =>
@@ -3064,14 +3043,6 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     rerankOne(r, e, cand.where(r.pred).select(recordCols: _*))
   }
 
-  /** Durable `index="hnsw"` with the beam candidate set persisted for
-    * oracle replay — [[gradedSearch]] for one live query. */
-  private[graft] def findSimilarHnswGraded(query: Seq[Float], k: Int,
-                                           namespace: String,
-                                           filter: Map[String, String] = Map.empty): Seq[SearchHit] =
-    gradedSearch("hnsw", batch = false, Seq(query), k, "cosine", namespace,
-      None, filter).head
-
   def totalCount(): Long = live().count()
 
   def listNamespaces(): Seq[String] =
@@ -3252,34 +3223,4 @@ object DurableVectorStore {
   /** Disambiguates the conf-rooted ANN layout dirs of multiple store
     * instances in one process (the pid alone would collide them). */
   private val instanceIds = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Metrics each durable index serves: (single query, batch). IVF
-    * ranks cells by squared L2 — native for l2, the standard coarse
-    * policy for cosine — and serves ip through the norm-augmented
-    * layout, which only the single-query probe ranks in, so a batch
-    * has no ip. The other five train on angular structure (normalized
-    * subvectors, sign bits, normalized-L2 graphs, sign-LSH bands) and
-    * rerank by cosine. */
-  private val IndexMetrics: Map[String, (Set[String], Set[String])] = {
-    val cosine = Set("cosine")
-    Map("ivf" -> ((Set("cosine", "l2", "ip"), Set("cosine", "l2"))),
-      "pq" -> ((cosine, cosine)), "bq" -> ((cosine, cosine)),
-      "imi" -> ((cosine, cosine)), "hnsw" -> ((cosine, cosine)),
-      "lsh" -> ((cosine, cosine)))
-  }
-
-  /** Argument validation for every durable indexed search — single and
-    * batch, live and as-of, the explain route and REST `/search/batch`.
-    * It runs BEFORE the starvation short-circuit, so cache state never
-    * turns an invalid request into a served one. */
-  private[graft] def requireIndexMetric(index: String, metric: String,
-                                        batch: Boolean): Unit = {
-    val (single, batched) = IndexMetrics.getOrElse(index,
-      throw new IllegalArgumentException(
-        s"unknown durable index '$index' (expected ivf | pq | bq | imi | hnsw | lsh)"))
-    val ok = if (batch) batched else single
-    require(ok(metric),
-      s"durable ${if (batch) "batch " else ""}'$index' search supports " +
-        s"${ok.toSeq.sorted.mkString("|")}, got metric '$metric'")
-  }
 }

@@ -65,10 +65,10 @@ class VectorStore(val spark: SparkSession) {
     spark.emptyDataset[VectorRecord]
   private var mutationsSinceCompact = 0
 
-  /** Bumped on every mutation; the approx-search signature cache is valid
+  /** Bumped on every mutation; every index layout but hnsw's is valid
     * only for the epoch it was built in (the store-side analogue of the
     * reference's index rebuild-on-write, `index.py:131-162` — except
-    * rebuilds here are lazy and only the LSH signatures, never the data). */
+    * rebuilds here are lazy and only the layouts, never the data). */
   @volatile private var epoch = 0L
 
   /** Auto-truncate lineage every N mutations so a long-lived store doesn't
@@ -304,12 +304,12 @@ class VectorStore(val spark: SparkSession) {
     shrinkEpoch = epoch
     // every resident graph is now stale, including namespaces that
     // never touched the ledger
-    hnswCache.keySet.forEach(k => hnswLedger(k._1).poisonedAt = epoch)
+    layouts.keySet.forEach(k => if (k._1 == "hnsw") hnswLedger(k._2).poisonedAt = epoch)
     hnswLedgers.values.forEach(l => l.poisonedAt = epoch)
   }
 
   /** Materialize current state and truncate lineage (rebuild analogue).
-    * Contents are unchanged, so the signature cache stays valid. Holds
+    * Contents are unchanged, so every index layout stays valid. Holds
     * the store lock so a racing commit can't be overwritten by a
     * pre-commit checkpoint of `live`. */
   def compact(): Unit = synchronized {
@@ -406,7 +406,7 @@ class VectorStore(val spark: SparkSession) {
 
   /** namespace → (stamped epoch, snapshot; None when the namespace held
     * more rows than the bound). A snapshot is current only at its own
-    * epoch: the [[indexSigs]] lifecycle, built outside the store lock
+    * epoch: the [[layoutFor]] lifecycle, built outside the store lock
     * from an (epoch, live) pair read under it, the PRE-build epoch
     * stamped, so a mutation landing mid-build leaves the entry already
     * stale and the next read rebuilds. An above-bound mark stays current
@@ -497,12 +497,11 @@ class VectorStore(val spark: SparkSession) {
       }
     }
 
-  /** The batch form of [[rerank]]: `cand` holds (__qid, id) pairs, the
-    * queries' starved filtered answers are rescued afterwards. */
+  /** The batch form of [[rerank]]: `cand` holds (__qid, id) pairs. */
   private def rerankBatch(cand: DataFrame, queries: Seq[Seq[Float]], k: Int,
                           namespace: String, filter: Map[String, String],
-                          jsonFilter: Map[String, String]): Seq[Seq[SearchHit]] = {
-    val hits = snapshot(namespace) match {
+                          jsonFilter: Map[String, String]): Seq[Seq[SearchHit]] =
+    snapshot(namespace) match {
       case Some(snap) =>
         val byQuery = cand.select(col("__qid").cast("int"), col("id")).collect()
           .groupMap(_.getInt(0))(_.getString(1))
@@ -511,287 +510,445 @@ class VectorStore(val spark: SparkSession) {
       case None => Scoring.batchSearchCandidates(
         filteredLive(namespace, filter, jsonFilter), queries, cand, k, "cosine")
     }
-    rescueStarvedBatch(hits, queries, k, namespace, filter, jsonFilter)
+
+  // ---- store-attached ANN indexes (the reference's index-backed read
+  // path, query_processor.py:26-49 → index.py:91-129) -------------------
+  //
+  // Six indexes, one lifecycle ([[layoutFor]]) and one serving path
+  // ([[approxSearch]]). What each index contributes is only its build
+  // recipe over the namespace's rows and its [[Layout]]: the candidate
+  // frame for one query and for a batch.
+
+  /** One built index layout. It proposes candidate ids — `__cid` for one
+    * query, `(__qid, id)` pairs for a batch — and the live rows decide
+    * what exists and what matches ([[rerank]], [[rerankBatch]]), so
+    * mutations since the build still apply. `persist` writes the
+    * candidate policy (probe lists, LUTs, beam output) next to the layout
+    * for oracle replay: graded paths only, never serving (a per-request
+    * overwrite would race concurrent probes). */
+  private sealed abstract class Layout {
+    def one(query: Seq[Float], persist: Boolean): DataFrame
+    def many(queries: Seq[Seq[Float]], persist: Boolean): DataFrame
+    /** The layout directory; None for the in-memory lsh and bq frames. */
+    def dir: Option[String] = None
+    /** The persisted frame a hit re-pins and a replacement unpersists. */
+    def pinned: Option[DataFrame] = None
+    /** The layout to serve now, given the epoch it was built at; None when
+      * it must be rebuilt. Epoch-keyed: current only at its own epoch. */
+    def servedAt(built: Long, namespace: String): Option[Layout] =
+      if (built == epoch) Some(this) else None
+    /** The layout to serve right after its build; None builds again. An
+      * epoch-keyed layout serves its own build even when a mutation
+      * landed mid-build (that mutation makes the NEXT search rebuild). */
+    def fresh(built: Long, namespace: String): Option[Layout] = Some(this)
   }
 
-  // ---- store-attached ANN index (the reference's index-backed read path,
-  // query_processor.py:26-49 → index.py:91-129) -------------------------
+  /** (index, namespace, dim) → (stamped epoch, layout). */
+  private val layouts =
+    new java.util.concurrent.ConcurrentHashMap[(String, String, Int), (Long, Layout)]()
 
-  /** Cached LSH band signatures over one namespace's live rows — the
-    * store-attached index. Key = (epoch, namespace, dim): any mutation
-    * bumps the epoch and lazily invalidates it (the reference rebuilds its
-    * HNSW graph on writes, `index.py:131-162`; here only the signatures
-    * rebuild, on the next approx search). The frame is `persist()`ed and
-    * eagerly materialized so repeated approx searches pay the signature
-    * pass once, and explicitly unpersisted when replaced so rebuild
-    * epochs don't leak pinned blocks. */
-  @volatile private var sigCache: Option[(Long, String, Int, DataFrame)] = None
+  /** Serializes builds per (index, namespace, dim): two same-key misses
+    * racing would both `mode("overwrite")` the same epoch-suffixed
+    * directory. Per key, so the indexes of one namespace, and one index
+    * on different namespaces, build in parallel. */
+  private val buildLocks =
+    new java.util.concurrent.ConcurrentHashMap[(String, String, Int), Object]()
 
-  private def indexSigs(namespace: String, dim: Int): DataFrame = {
-    sigCache match {
-      case Some((e, ns, d, df))
-          if e == epoch && ns == namespace && d == dim =>
-        // Heal an external unpersist: anything outside the store may tidy
-        // the session's persisted blocks (a bench harness, an ops
-        // script). The cache contract is "signature pass paid once per
-        // epoch", so re-pin and re-materialize rather than silently
-        // recomputing signatures on every subsequent search.
-        graft.operators.StandingCache.ensurePinned(df) // both forms (r19)
-      case _ =>
-        // Snapshot (epoch, live) under the lock, but run the build — a
-        // full Spark job — OUTSIDE it: holding the store monitor across
-        // the signature pass would stall every concurrent write for the
-        // build's duration. Stamping the PRE-build epoch keeps the race
-        // harmless: a mutation landing mid-build bumps the live epoch
-        // past `e`, so the entry is already stale when stored and the
-        // next search rebuilds. (Stamping a post-build read would mark
-        // pre-mutation signatures as current forever.)
-        val (e, snapshot) = synchronized { (epoch, live) }
-        val df = graft.operators.Ann.withBandSigs(
-          snapshot.filter(col("namespace") === namespace)
-            .select(col("id"), col("values")).toDF(),
-          col("values"), dim)
-          .select(col("id"), col("band"), col("bucket"))
-          .persist()
-        df.count() // materialize the signature pass once, eagerly
-        synchronized {
-          sigCache match {
-            case Some((e2, ns2, d2, df2))
-                if e2 == epoch && ns2 == namespace && d2 == dim =>
-              df.unpersist(blocking = false) // lost the race to a fresher build
-              df2
-            case old =>
-              // replacing an entry frees its pinned signature blocks —
-              // otherwise every rebuild epoch leaks a cached frame
-              old.foreach(_._4.unpersist(blocking = false))
-              sigCache = Some((e, namespace, dim, df))
-              df
-          }
-        }
+  /** Layout builds paid by this store, per index — spec and `/stats`
+    * hook (an hnsw insert → search must NOT rebuild; a repeat search on
+    * any index builds nothing). */
+  private[graft] val builds: Map[String, java.util.concurrent.atomic.AtomicInteger] =
+    ApproxIndexes.Names.map(_ -> new java.util.concurrent.atomic.AtomicInteger(0)).toMap
+
+  /** The one layout lifecycle, for all six indexes. A current entry
+    * serves, its pinned frame re-pinned first: anything outside the store
+    * may unpersist the session's blocks (a bench harness, an ops script),
+    * and the contract is "build paid once per epoch", not a silent
+    * recompute per search. Otherwise the key's build lock is taken and
+    * the entry checked again, so a same-key loser reuses the winner's
+    * build. The build reads (epoch, live) under the store monitor and
+    * runs OUTSIDE it — a build is Spark jobs, and holding the monitor
+    * would stall every writer — stamping the PRE-build epoch: a mutation
+    * landing mid-build leaves the entry already stale, and the next
+    * search rebuilds (a post-build stamp would mark pre-mutation layouts
+    * current forever). Replacing an entry unpersists its pinned frame, so
+    * rebuild epochs do not leak blocks; superseded directories stay on
+    * disk (a concurrent probe may still read them; epoch-suffixed names
+    * never collide). None when the namespace has no rows: an index
+    * search over an empty namespace answers empty, like the exact path,
+    * and the emptiness is not cached. */
+  private def layoutFor(index: String, namespace: String, dim: Int,
+                        attemptsLeft: Int = 3): Option[Layout] = {
+    val key = (index, namespace, dim)
+    def serveable: Option[Layout] = current(key).map { l =>
+      l.pinned.foreach(graft.operators.StandingCache.ensurePinned)
+      l
     }
+    serveable.orElse(buildLocks.computeIfAbsent(key, _ => new Object).synchronized {
+      serveable.orElse {
+        val (e, snapshot) = synchronized { (epoch, live) }
+        val rows = snapshot.filter(col("namespace") === namespace)
+          .select(col("id"), col("values")).toDF()
+        build(index, rows, e, namespace, dim).flatMap { l =>
+          builds(index).incrementAndGet()
+          Option(layouts.put(key, (e, l))).flatMap(_._2.pinned)
+            .foreach(_.unpersist(blocking = false))
+          l.fresh(e, namespace).orElse(
+            if (attemptsLeft > 1) layoutFor(index, namespace, dim, attemptsLeft - 1)
+            else Some(l))
+        }
+      }
+    })
   }
 
-  // ---- store-attached IVF index (persisted inverted file) -------------
+  private def current(key: (String, String, Int)): Option[Layout] =
+    Option(layouts.get(key)).flatMap { case (e, l) => l.servedAt(e, key._2) }
 
-  /** Cells/probe fan-out for the store-attached IVF index: sized per
-    * (namespace, dim) BUILD from the namespace's live row count via the
-    * shared [[graft.operators.Ann.ivfCellsFor]] policy (cells ≈ √n,
-    * probe ≈ 2√cells — the scanned fraction shrinks as the namespace
-    * grows; see the policy's scaladoc for the r6 fixed-16/4 history).
-    * The probe count is derived from the CACHED layout's centroid count
-    * at probe time, so probes always match the geometry of the layout
-    * they scan, including a layout built at a different namespace size. */
-  private val IvfSeed = 42L
+  private def build(index: String, rows: DataFrame, e: Long, namespace: String,
+                    dim: Int): Option[Layout] = index match {
+    case "lsh" => buildLsh(rows, dim)
+    case "ivf" => buildIvf(rows, e, namespace, dim)
+    case "imi" => buildImi(rows, e, namespace, dim)
+    case "pq" => buildPq(rows, e, namespace, dim)
+    case "bq" => buildBq(rows, dim)
+    case "hnsw" => buildHnsw(rows, e, namespace, dim)
+  }
+
+  /** The directory of the current (index, namespace, dim) layout — lets
+    * a grading harness point an external oracle at its tables (`assign/`
+    * + `probes/`, `codes/` + `lut/`, `graph/` + `cands/`). None until a
+    * search builds one, and None again after a mutation until the next
+    * search rebuilds: the hook never names a layout the store would not
+    * serve. */
+  private[graft] def layoutDir(index: String, namespace: String, dim: Int): Option[String] =
+    current((index, namespace, dim)).flatMap(_.dir)
+
+  /** (stamped epoch, frame pinned?) of the (index, namespace, dim) entry,
+    * current or not — spec hook for the convergence and no-leak checks. */
+  private[graft] def layoutState(index: String, namespace: String,
+                                 dim: Int): Option[(Long, Boolean)] =
+    Option(layouts.get((index, namespace, dim))).map { case (e, l) =>
+      (e, l.pinned.exists(_.storageLevel != org.apache.spark.storage.StorageLevel.NONE))
+    }
 
   private val processToken: String =
     ProcessHandle.current().pid().toString + "_" +
       UUID.randomUUID().toString.take(8)
 
-  /** Layout root for this store's IVF index. Same cluster contract as
-    * [[graft.operators.Ann.IvfDirConf]]: when the conf is set it MUST be
-    * a shared filesystem (executors write the partitioned inverted file;
-    * probes — possibly from other executors — read it back); unset falls
-    * back to a mkdtemp-private root, correct for local mode only. The
-    * per-process token keeps concurrent stores on one shared root from
-    * clobbering each other. */
-  private lazy val ivfRoot: String =
-    spark.conf.getOption(graft.operators.Ann.IvfDirConf)
-      .map(_ + "/store_" + processToken)
-      .getOrElse(java.nio.file.Files.createTempDirectory("graft_store_ivf_").toString)
+  /** A layout root. When `conf` is set it MUST be a shared filesystem
+    * (executors write the layout; probes, possibly from other executors,
+    * read it back); unset falls back to a mkdtemp-private root, correct
+    * for local mode only. The per-process token keeps concurrent stores
+    * on one shared root from clobbering each other. */
+  private def layoutRoot(conf: String, prefix: String, tmp: String): String =
+    spark.conf.getOption(conf).map(_ + "/" + prefix + processToken)
+      .getOrElse(java.nio.file.Files.createTempDirectory(tmp).toString)
 
-  /** Cached store-attached IVF layouts: (namespace, dim) → (stamped
-    * epoch, layout dir, centroids). A MAP, not a single slot — serving
-    * that alternates IVF searches across namespaces must not rebuild the
-    * layout per request (each build is a count + sample collect +
-    * Lloyd's + two parquet jobs, the exact work the index exists to
-    * amortize). Same lifecycle as [[sigCache]] otherwise: any mutation
-    * bumps the epoch and lazily invalidates every entry; builds run
-    * OUTSIDE the store lock with the PRE-build epoch stamped, so a
-    * mutation landing mid-build leaves the entry already-stale (see
-    * [[indexSigs]] for the race argument). Superseded layout directories
-    * are left on disk: a concurrent probe may still be streaming them,
-    * and the leak is bounded (one small layout per rebuild epoch,
-    * epoch-suffixed paths never collide). */
-  private val ivfCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), (Long, String, Array[Array[Float]])]()
+  private lazy val ivfRoot =
+    layoutRoot(graft.operators.Ann.IvfDirConf, "store_", "graft_store_ivf_")
+  private lazy val imiRoot =
+    layoutRoot(graft.operators.Ann.IvfDirConf, "store_imi_", "graft_store_imi_")
+  private lazy val pqRoot =
+    layoutRoot(graft.operators.Pq.PqDirConf, "store_", "graft_store_pq_")
+  private lazy val hnswRoot =
+    layoutRoot(graft.operators.Hnsw.HnswDirConf, "store_hnsw_", "graft_store_hnsw_")
 
-  /** Serializes IVF layout BUILDS per (namespace, dim) key: two same-key
-    * cache misses racing would both `mode("overwrite")` the SAME
-    * epoch-suffixed aux directory — and unlike the sigCache race, the
-    * loser's work is a destructive disk write, not a discardable frame.
-    * Striped by key (different keys write disjoint directories), so a
-    * first search on namespace B never stalls behind namespace A's
-    * build. Double-checked inside the lock so a same-key loser reuses
-    * the winner's layout instead of rebuilding. */
-  private val ivfBuildLocks =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Object]()
+  private def auxDir(root: String, namespace: String, e: Long, dim: Int): String =
+    root + "/" + graft.PathToken.token(namespace) + s"_e${e}_d$dim"
 
-  /** None when the namespace has no live rows: an IVF search over an
-    * empty namespace must answer empty, exactly like the exact and lsh
-    * paths — never error on which index KIND the caller picked. */
-  private def ivfLayout(namespace: String, dim: Int): Option[(String, Array[Array[Float]])] = {
-    val key = (namespace, dim)
-    Option(ivfCache.get(key)) match {
-      case Some((e, aux, cs)) if e == epoch => Some((aux, cs))
-      case _ => ivfBuildLocks.computeIfAbsent(key, _ => new Object).synchronized {
-        Option(ivfCache.get(key)) match {
-          case Some((e, aux, cs)) if e == epoch => Some((aux, cs)) // raced: reuse
-          case _ =>
-            val (e, snapshot) = synchronized { (epoch, live) }
-            val rows = snapshot.filter(col("namespace") === namespace)
-              .select(col("id"), col("values")).toDF()
-            val total = rows.count()
-            if (total == 0) None // emptiness is not cached: the next write bumps the epoch anyway
-            else {
-              // the ONE build recipe, shared with the offline q33 path
-              // (Ann.buildIvfIndex) so the policy cannot drift between
-              // the two graded consumers
-              val centers = graft.operators.Ann.trainQuantizer(
-                rows, "id", "values", total,
-                graft.operators.Ann.ivfCellsFor(total), IvfSeed)
-              val aux = ivfRoot + "/" +
-                graft.PathToken.token(namespace) + s"_e${e}_d$dim"
-              graft.operators.Ann.writeInvertedFile(rows, "id", "values",
-                centers, aux)
-              ivfCache.put(key, (e, aux, centers))
-              Some((aux, centers))
-            }
-        }
-      }
+  // ---- lsh: cached band signatures -------------------------------------
+
+  /** The namespace's LSH band signatures, `persist()`ed and eagerly
+    * materialized so repeated searches pay the signature pass once per
+    * epoch — no disk, the right pick for hot, mutating namespaces. Built
+    * for an empty namespace too (an empty frame): an lsh search always
+    * has a layout. */
+  private def buildLsh(rows: DataFrame, dim: Int): Option[Layout] = {
+    val sigs = graft.operators.Ann.withBandSigs(rows, col("values"), dim)
+      .select(col("id"), col("band"), col("bucket"))
+      .persist()
+    sigs.count() // materialize the signature pass once, eagerly
+    Some(new LshLayout(sigs))
+  }
+
+  /** Candidates are ids sharing at least one band bucket with a query.
+    * The query's buckets are computed on the driver (`Ann.bandBuckets`
+    * runs the build's kernel, no Spark job), so one query is one
+    * predicate over the cached frame, and a batch is ONE broadcast
+    * (qid, band, bucket) probe frame joined to it — one signature scan
+    * for the whole batch. An id matching in several bands repeats in a
+    * single query's candidates; the rerank is set-shaped. */
+  private final class LshLayout(sigs: DataFrame) extends Layout {
+    override def pinned: Option[DataFrame] = Some(sigs)
+    def one(query: Seq[Float], persist: Boolean): DataFrame =
+      sigs.where(graft.operators.Ann.bandBuckets(query.toArray)
+          .map { case (b, sig) => col("band") === b && col("bucket") === sig }
+          .reduce(_ || _))
+        .select(col("id").as("__cid"))
+    def many(queries: Seq[Seq[Float]], persist: Boolean): DataFrame = {
+      val probeDf = queries.zipWithIndex.flatMap { case (q, i) =>
+        graft.operators.Ann.bandBuckets(q.toArray)
+          .map { case (b, sig) => (i, b, sig) }
+      }.toDF("__qid", "band", "bucket")
+      sigs.join(broadcast(probeDf), Seq("band", "bucket"))
+        .select(col("__qid"), col("id")).distinct()
     }
   }
 
-  // ---- store-attached IMI index (two-level product grid) --------------
+  // ---- ivf and imi: cell-partitioned layouts ---------------------------
 
-  /** Layout root for this store's IMI grids — the [[ivfRoot]] contract. */
-  private lazy val imiStoreRoot: String =
-    spark.conf.getOption(graft.operators.Ann.IvfDirConf)
-      .map(_ + "/store_imi_" + processToken)
-      .getOrElse(
-        java.nio.file.Files.createTempDirectory("graft_store_imi_").toString)
+  private val IvfSeed = 42L
 
-  /** Cached store-attached IMI layouts: (namespace, dim) → (stamped
-    * epoch, layout dir, lo-half centroids, hi-half centroids). Same
-    * lifecycle and race arguments as [[ivfCache]]. */
-  private val imiCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), (Long, String, Array[Array[Float]], Array[Array[Float]])]()
+  /** The persisted inverted file, cells ≈ √n ([[graft.operators.Ann.ivfCellsFor]]),
+    * sized per build from the namespace's row count: the ONE recipe,
+    * shared with the offline q33 path (`Ann.buildIvfIndex`), so the
+    * policy cannot drift between the two graded consumers. Right for
+    * large, mostly-static namespaces: a probe reads ≈ 2/√cells of it. */
+  private def buildIvf(rows: DataFrame, e: Long, namespace: String,
+                       dim: Int): Option[Layout] = {
+    val total = rows.count()
+    if (total == 0) None
+    else {
+      val centers = graft.operators.Ann.trainQuantizer(rows, "id", "values",
+        total, graft.operators.Ann.ivfCellsFor(total), IvfSeed)
+      val aux = auxDir(ivfRoot, namespace, e, dim)
+      graft.operators.Ann.writeInvertedFile(rows, "id", "values", centers, aux)
+      // the probe count derives from this layout's own centroid count, so
+      // probes always match the geometry of the layout they scan
+      val nProbe = graft.operators.Ann.ivfProbeFor(centers.length)
+      Some(new CellLayout(aux, centers.length,
+        q => graft.operators.Ann.rankCells(q, centers, nProbe)))
+    }
+  }
 
-  private val imiBuildLocks =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Object]()
-
-  /** None when the namespace has no live rows — an IMI search over an
-    * empty namespace answers empty, like every other index kind. The
-    * build is the ONE q94 recipe ([[graft.operators.Ann.buildImiIndex]]'s
-    * policy: shared bounded sample, per-half Lloyd's with the q94 seeds,
-    * `cell = lo·k + hi` in one narrow fused pass) applied to the live
-    * namespace snapshot — k² cells from two k-codebook trainings, so the
+  /** The two-level product grid (q94 as a serving path): the ONE q94
+    * recipe (`Ann.buildImiIndex`'s policy: shared bounded sample,
+    * per-half Lloyd's with the q94 seeds, `cell = lo·k + hi` in one
+    * narrow fused pass) — k² cells from two k-codebook trainings, so the
     * grid reaches √n cells at a QUARTER-root training cost, the right
-    * trade when namespaces grow past what one flat Lloyd's can sample. */
-  private def imiLayout(namespace: String, dim: Int): Option[(String, Array[Array[Float]], Array[Array[Float]])] = {
-    val key = (namespace, dim)
-    Option(imiCache.get(key)) match {
-      case Some((e, aux, lo, hi)) if e == epoch => Some((aux, lo, hi))
-      case _ => imiBuildLocks.computeIfAbsent(key, _ => new Object).synchronized {
-        Option(imiCache.get(key)) match {
-          case Some((e, aux, lo, hi)) if e == epoch => Some((aux, lo, hi))
-          case _ =>
-            val (e, snapshot) = synchronized { (epoch, live) }
-            val rows = snapshot.filter(col("namespace") === namespace)
-              .select(col("id"), col("values")).toDF()
-            val total = rows.count()
-            if (total == 0) None
-            else {
-              val half = dim / 2
-              val sample = graft.operators.Ann.sampleVectors(
-                rows, "id", "values", total)
-              val k = graft.operators.Ann.imiGridFor(total)
-              val cLo = graft.operators.Ann.lloyds(sample.map(_.take(half)),
-                k, iters = 5, seed = graft.operators.Ann.ImiSeedLo)
-              val cHi = graft.operators.Ann.lloyds(sample.map(_.drop(half)),
-                k, iters = 5, seed = graft.operators.Ann.ImiSeedHi)
-              val loSeq: Seq[Seq[Float]] = cLo.map(_.toSeq).toSeq
-              val hiSeq: Seq[Seq[Float]] = cHi.map(_.toSeq).toSeq
-              val aux = imiStoreRoot + "/" +
-                graft.PathToken.token(namespace) + s"_e${e}_d$dim"
-              rows.withColumn("cell",
-                  graft.functions.NearestCell(
-                    slice(col("values"), 1, half), loSeq) * lit(k) +
-                    graft.functions.NearestCell(
-                      slice(col("values"), half + 1, dim - half), hiSeq))
-                .write.mode("overwrite").partitionBy("cell")
-                .parquet(s"$aux/index")
-              spark.read.parquet(s"$aux/index")
-                .select(col("id"), col("cell"))
-                .coalesce(1).write.mode("overwrite").parquet(s"$aux/assign")
-              imiCache.put(key, (e, aux, cLo, cHi))
-              Some((aux, cLo, cHi))
-            }
-        }
-      }
+    * trade once a namespace outgrows what one flat Lloyd's can sample. */
+  private def buildImi(rows: DataFrame, e: Long, namespace: String,
+                       dim: Int): Option[Layout] = {
+    val total = rows.count()
+    if (total == 0) None
+    else {
+      val half = dim / 2
+      val sample = graft.operators.Ann.sampleVectors(rows, "id", "values", total)
+      val k = graft.operators.Ann.imiGridFor(total)
+      val cLo = graft.operators.Ann.lloyds(sample.map(_.take(half)),
+        k, iters = 5, seed = graft.operators.Ann.ImiSeedLo)
+      val cHi = graft.operators.Ann.lloyds(sample.map(_.drop(half)),
+        k, iters = 5, seed = graft.operators.Ann.ImiSeedHi)
+      val loSeq: Seq[Seq[Float]] = cLo.map(_.toSeq).toSeq
+      val hiSeq: Seq[Seq[Float]] = cHi.map(_.toSeq).toSeq
+      val aux = auxDir(imiRoot, namespace, e, dim)
+      rows.withColumn("cell",
+          graft.functions.NearestCell(slice(col("values"), 1, half), loSeq) * lit(k) +
+            graft.functions.NearestCell(slice(col("values"), half + 1, dim - half), hiSeq))
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(s"$aux/index")
+      spark.read.parquet(s"$aux/index")
+        .select(col("id"), col("cell"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$aux/assign")
+      Some(new CellLayout(aux, cLo.length * cHi.length,
+        q => graft.operators.Ann.imiProbeCells(q, cLo, cHi)))
     }
   }
 
-  /** The layout dir the store-attached IMI index serves (namespace, dim)
-    * from — oracle hook, the [[ivfLayoutDir]] contract. */
-  private[graft] def imiLayoutDir(namespace: String, dim: Int): Option[String] =
-    Option(imiCache.get((namespace, dim))).map(_._2)
-
-  /** Candidate ids (`__cid`) via the store-attached IMI index: 2k
-    * driver-side sub-distances, pair sums merged to the top
-    * `ivfProbeFor(k²)` cells (the q94 probe policy), the probed
-    * partitions' ids — layout PROPOSES, [[rerank]] decides, exactly the
-    * IVF path's contract. */
-  private def imiCandidates(query: Seq[Float], namespace: String,
-                            persistProbes: Boolean = false): Option[DataFrame] =
-    imiLayout(namespace, query.length).map {
-      case (aux, cLo, cHi) =>
-        val probed = graft.operators.Ann.imiProbeCells(query.toArray,
-          cLo, cHi)
-        if (persistProbes) {
-          import spark.implicits._
-          probed.toDF("cell").coalesce(1)
-            .write.mode("overwrite").parquet(s"$aux/probes")
-        }
-        // each id sits in exactly one cell: no duplicates to drop
-        spark.read.parquet(s"$aux/index")
-          .where(col("cell").isin(probed: _*))
-          .select(col("id").as("__cid"))
+  /** A cell-partitioned layout (ivf, imi): `probe` ranks a query's cells
+    * on the driver (no Spark job); the candidates are the probed cells'
+    * ids, partition-pruned on `cell`. A batch unions every query's probe
+    * list into ONE pruned scan and joins the (qid, cell) probe table
+    * back. Each id sits in exactly one cell: a single query has no
+    * duplicates to drop. */
+  private final class CellLayout(aux: String, val cells: Int,
+                                 val probe: Array[Float] => Seq[Int]) extends Layout {
+    override def dir: Option[String] = Some(aux)
+    def one(query: Seq[Float], persist: Boolean): DataFrame = {
+      val probed = probe(query.toArray)
+      if (persist)
+        probed.toDF("cell").coalesce(1)
+          .write.mode("overwrite").parquet(s"$aux/probes")
+      spark.read.parquet(s"$aux/index")
+        .where(col("cell").isin(probed: _*))
+        .select(col("id").as("__cid"))
     }
+    def many(queries: Seq[Seq[Float]], persist: Boolean): DataFrame = {
+      val probeRows = queries.zipWithIndex.flatMap { case (q, i) =>
+        probe(q.toArray).map(c => (i, c))
+      }
+      val probeDf = probeRows.toDF("__qid", "cell")
+      if (persist)
+        probeDf.coalesce(1)
+          .write.mode("overwrite").parquet(s"$aux/batch_probes")
+      spark.read.parquet(s"$aux/index")
+        .where(col("cell").isin(probeRows.map(_._2).distinct: _*))
+        .join(broadcast(probeDf), Seq("cell"))
+        .select(col("__qid"), col("id")).distinct()
+    }
+  }
 
-  // ---- store-attached HNSW index (sharded small-world graphs) ---------
+  // ---- pq: compressed codes table ---------------------------------------
 
-  /** Layout root for this store's HNSW shard graphs — the [[ivfRoot]]
-    * contract. */
-  private lazy val hnswStoreRoot: String =
-    spark.conf.getOption(graft.operators.Hnsw.HnswDirConf)
-      .map(_ + "/store_hnsw_" + processToken)
-      .getOrElse(
-        java.nio.file.Files.createTempDirectory("graft_store_hnsw_").toString)
+  /** OPQ rotation gate: on, the PQ build rotates the namespace by the
+    * Ge-et-al. parametric OPQ rotation ([[graft.operators.Opq.rotationFor]]
+    * — PCA basis + eigenvalue allocation from the shared bounded sample)
+    * before codebook training and encoding, and every probe rotates its
+    * query the same way — the pinned 0.735 → 0.990 recall gain (OpqSpec)
+    * at IDENTICAL serving cost (the LUT is computed against the rotated
+    * codebook; the ADC sweep is byte-for-byte the same plan). The
+    * rotation is baked into the persisted `codebook/` + `codes/` +
+    * per-query `lut/`, so the q61/q109 oracles replay unchanged; `rot/`
+    * persists beside them for the rotation-graded q147 replay. Off (or a
+    * dim not divisible by [[graft.operators.Pq.SubSpaces]]) serves raw
+    * PQ, kept togglable for the recall A/B (StoreOpqSpec). */
+  private def pqRotateEnabled: Boolean =
+    spark.conf.getOption(graft.operators.Opq.RotateConf).forall(_.toBoolean)
 
-  /** Cached store-attached HNSW layouts: (namespace, dim) → (built
-    * epoch, layout dir, built rows). Unlike the other index caches this
-    * one is NOT invalidated per epoch — the graphs keep serving across
-    * mutations with a delta tail (see the incremental bookkeeping
-    * below); built rows size the staleness trigger. */
-  private val hnswCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), (Long, String, Long)]()
+  /** OPQ rotation first (when enabled and the dim divides), then the ONE
+    * codebook recipe, shared with the offline q58 path (`Pq.buildPqIndex`)
+    * so the policy cannot drift — the rotated frame flows through
+    * training and encoding with the same column names. */
+  private def buildPq(rows: DataFrame, e: Long, namespace: String,
+                      dim: Int): Option[Layout] = {
+    val total = rows.count()
+    if (total == 0) None
+    else {
+      val aux = auxDir(pqRoot, namespace, e, dim)
+      val rot =
+        if (pqRotateEnabled)
+          graft.operators.Opq.rotationFor(rows, "id", "values", total, dim)
+        else None
+      val enc = rot.map { r =>
+        rows.select(col("id"), graft.operators.Opq.rotateCol(r)(col("values")).as("values"))
+      }.getOrElse(rows)
+      val codebook = graft.operators.Pq.trainCodebooks(enc, "id", "values", total, dim)
+      rot.foreach(r => graft.operators.Opq.writeRotation(spark, r, s"$aux/rot"))
+      graft.operators.Pq.writeCodebook(spark, codebook, s"$aux/codebook")
+      graft.operators.Pq.writeCodes(enc, "id", "values", codebook, aux)
+      Some(new PqLayout(aux, codebook.map(_.map(_.toArray).toArray).toArray, rot))
+    }
+  }
 
-  private val hnswBuildLocks =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Object]()
+  /** One ADC sweep of the codes table (a table-lookup sum per row — at
+    * scale it reads ~32× fewer bytes than a vector scan), cut to
+    * [[graft.operators.Pq.CandN]] on ascending (rounded ADC, id). The
+    * LUTs ride as a broadcast frame, not literals, so every request's
+    * plan is textually identical and whole-stage codegen compiles the
+    * sweep once per JVM (`Pq.adcCol`). A batch sweeps the table ONCE for
+    * all its queries; its per-query cut is [[graft.functions.TopKAgg]]'s
+    * bounded heap, map-side combined to Q×CandN rows. */
+  private final class PqLayout(aux: String, codebook: Array[Array[Array[Float]]],
+                               val rotation: Option[Array[Array[Float]]]) extends Layout {
+    override def dir: Option[String] = Some(aux)
+    /** The query's ADC table in the layout's (possibly rotated) space. */
+    private def lut(q: Seq[Float]) = graft.operators.Pq.lutFor(
+      rotation.map(graft.operators.Opq.rotateQuery(_, q.toArray)).getOrElse(q.toArray),
+      codebook)
+    private def sweep(lutFrame: DataFrame): DataFrame =
+      spark.read.parquet(s"$aux/codes")
+        .crossJoin(broadcast(lutFrame))
+        .withColumn("adc", graft.operators.Pq.adcCol)
+    def one(query: Seq[Float], persist: Boolean): DataFrame = {
+      val luts = Seq((0L, lut(query)))
+      if (persist) graft.operators.Pq.writeLuts(spark, luts, s"$aux/lut")
+      sweep(graft.operators.Pq.lutFrame(spark, luts).select(col("lut")))
+        .orderBy(col("adc"), col("id"))
+        .limit(graft.operators.Pq.CandN)
+        .select(col("id").as("__cid"))
+    }
+    def many(queries: Seq[Seq[Float]], persist: Boolean): DataFrame = {
+      val luts = queries.zipWithIndex.map { case (q, i) => (i.toLong, lut(q)) }
+      if (persist) graft.operators.Pq.writeLuts(spark, luts, s"$aux/batch_lut")
+      sweep(graft.operators.Pq.lutFrame(spark, luts))
+        .groupBy(col("qid"))
+        .agg(graft.functions.TopKAgg.topk(col("adc"), col("id"),
+          graft.operators.Pq.CandN, descending = false).as("top"))
+        .select(col("qid").cast("int").as("__qid"), explode(col("top.id")).as("id"))
+    }
+  }
 
-  // ---- incremental HNSW bookkeeping (r13) -----------------------------
+  /** The rotation the current PQ layout was built with (None = raw PQ) —
+    * spec/oracle hook with [[layoutDir]]'s currency rule. */
+  private[graft] def pqRotation(namespace: String, dim: Int): Option[Array[Array[Float]]] =
+    current(("pq", namespace, dim)).collect { case p: PqLayout => p.rotation }.flatten
+
+  // ---- bq: sign-bit codes, hamming prefilter ----------------------------
+
+  private[graft] val BqCandN = 50
+
+  /** The per-dim midpoint grid plus a persisted (id, code: array<bigint>)
+    * frame — ceil(dim/64) BIGINT words per vector, 1 bit/dim. BQ is the
+    * CHEAPEST index to rebuild (one dim-sized stats pass + a narrow
+    * per-row fold), which is exactly why it suits hot mutating
+    * namespaces where even the LSH signature pass per epoch is felt. The
+    * stats are dim-sized and order-independent (the q81/q95 contract):
+    * the grid is bit-deterministic under any partitioning. */
+  private def buildBq(rows: DataFrame, dim: Int): Option[Layout] = {
+    val stats = rows
+      .select(posexplode(col("values")).as(Seq("i", "x")))
+      .groupBy(col("i"))
+      .agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
+      .orderBy(col("i")).collect()
+    if (stats.isEmpty) None
+    else {
+      val mids = stats.map(r => (r.getFloat(1).toDouble + r.getFloat(2).toDouble) / 2.0)
+      val codes = rows
+        .withColumn("mids", typedLit(mids.toSeq))
+        .withColumn("code", expr(graft.operators.Bq.packExprSql(dim, "values", "mids")))
+        .select(col("id"), col("code"))
+        .persist()
+      codes.count() // materialize the packing pass once, eagerly
+      Some(new BqLayout(mids, codes))
+    }
+  }
+
+  /** Codes ranked by hamming distance to the query's sign bits (one
+    * `bit_count(xor)` per word — at scale 32× fewer bytes than the
+    * vectors), cut to [[BqCandN]] on ascending (hamming, id): integer
+    * valued, no float tie boundary. The query codes ride as a broadcast
+    * frame so every request compiles the same plan; a batch sweeps the
+    * codes once, cut per query by the bounded-heap aggregate. */
+  private final class BqLayout(mids: Array[Double], codes: DataFrame) extends Layout {
+    override def pinned: Option[DataFrame] = Some(codes)
+    def words: Int = (mids.length + 63) / 64
+    private def hamming(qFrame: DataFrame): DataFrame =
+      codes.crossJoin(broadcast(qFrame))
+        .withColumn("ham", graft.functions.AdcKernels.hammingWords(col("code"), col("qcode")))
+    def one(query: Seq[Float], persist: Boolean): DataFrame =
+      hamming(Seq(Tuple1(graft.operators.Bq.packBits(query, mids).toSeq)).toDF("qcode"))
+        .orderBy(col("ham"), col("id"))
+        .limit(BqCandN)
+        .select(col("id").as("__cid"))
+    def many(queries: Seq[Seq[Float]], persist: Boolean): DataFrame =
+      hamming(queries.zipWithIndex.map { case (q, i) =>
+          (i, graft.operators.Bq.packBits(q, mids).toSeq)
+        }.toDF("qid", "qcode"))
+        .groupBy(col("qid"))
+        .agg(graft.functions.TopKAgg.topk(col("ham").cast("double"),
+          col("id"), BqCandN, descending = false).as("top"))
+        .select(col("qid").as("__qid"), explode(col("top.id")).as("id"))
+  }
+
+  /** Word count of the current (namespace, dim) BQ codes — spec hook. */
+  private[graft] def bqWordCount(namespace: String, dim: Int): Option[Int] =
+    current(("bq", namespace, dim)).collect { case b: BqLayout => b.words }
+
+  /** Cell count of the current (namespace, dim) IVF layout — spec hook for
+    * the geometry-scales-with-namespace-size assertion. */
+  private[graft] def ivfCellCount(namespace: String, dim: Int): Option[Int] =
+    current(("ivf", namespace, dim)).collect { case c: CellLayout => c.cells }
+
+  // ---- hnsw: sharded small-world graphs, incremental --------------------
   //
-  // VERDICT r12 "What's missing" #3: the epoch-keyed cache rebuilt EVERY
-  // resident shard graph on any write — HNSW's stated advantage is
-  // incrementality, and the serving cache wasn't. The fix is the durable
-  // mount's discipline (q123: layout at a stamp + exact delta tail)
-  // carried onto the serving cache: graphs keep serving across
-  // mutations, inserts since the build ride as extra candidates (the
-  // delta tail), deletes die in the filtered-live semi-join they always
-  // died in (a deleted intermediate node still routes the beam — it just
-  // cannot be a candidate), and a full rebuild happens only when the
-  // mutation mass crosses [[HnswStaleRatio]] or a bulk frame load lands
-  // (no driver-side id list → poison).
+  // The one index whose layout is NOT epoch-keyed: the graphs keep
+  // serving across mutations (the durable mount's q123 discipline — a
+  // layout at a stamp plus an exact delta tail). Inserts since the build
+  // ride as extra candidates, deletes die in the filtered-live semi-join
+  // they always died in (a deleted intermediate node still routes the
+  // beam — it just cannot be a candidate), and a full rebuild happens
+  // only when the mutation mass crosses [[HnswStaleRatio]] or a bulk
+  // frame load lands (no driver-side id list → poison).
 
   /** Per-namespace mutation ledger since the last graph build. Every
     * entry is EPOCH-STAMPED under the store monitor — the same lock that
@@ -826,475 +983,102 @@ class VectorStore(val spark: SparkSession) {
     * staleness-trigger idea; below it the delta tail serves. */
   private val HnswStaleRatio = 0.2
 
-  /** Full shard-graph builds paid by this store — spec hook for the
-    * incremental contract (insert → search must NOT rebuild). */
-  private[graft] val hnswGraphBuilds =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** None when the namespace has no live rows — an HNSW search over an
-    * empty namespace answers empty, like every other index kind. The
-    * build is the ONE per-shard recipe
-    * ([[graft.operators.Hnsw.shardNodes]]: sorted insertion, md5
-    * levels, closest-M linking) applied to the live namespace snapshot
-    * — hash-sharded into bounded graphs built inside `flatMapGroups`
-    * (one shuffle), persisted shard-partitioned. No trained state at
-    * all (vs IVF/PQ/IMI's quantizers): the graph is the index, so this
-    * is the kind whose rebuild never drifts from the data distribution
-    * — the reference's own choice (`implementations/index.py:17-165`,
-    * hnswlib) served shard-at-a-time. */
-  /** Serve-or-build: (layout dir, delta ids) — the graphs built at some
-    * epoch plus the ids inserted into this namespace since (the q123
-    * layout-plus-delta-tail discipline on the serving cache). A rebuild
-    * happens only when no graph exists, the ledger was poisoned after
-    * the build (bulk frame load — no id list), or the mutation mass
-    * crossed [[HnswStaleRatio]] of the built rows. */
-  private def hnswLayout(namespace: String, dim: Int): Option[(String, Seq[String])] =
-    hnswLayout(namespace, dim, attemptsLeft = 3)
-
-  private def hnswLayout(namespace: String, dim: Int,
-                         attemptsLeft: Int): Option[(String, Seq[String])] = {
-    val key = (namespace, dim)
-    def serveable: Option[(String, Seq[String])] =
-      Option(hnswCache.get(key)).flatMap { case (builtEpoch, aux, builtRows) =>
-        val state = synchronized {
-          Option(hnswLedgers.get(namespace)) match {
-            case None => Some(Seq.empty[String])
-            case Some(l) if l.poisonedAt > builtEpoch => None
-            case Some(l) =>
-              val delta = l.inserts.filter(_._1 > builtEpoch).flatMap(_._2).toSeq
-              val dels = l.deletes.filter(_._1 > builtEpoch).map(_._2).sum
-              if (delta.size + dels > HnswStaleRatio * builtRows) None
-              else Some(delta)
-          }
-        }
-        state.map(delta => (aux, delta))
-      }
-    serveable.orElse {
-      hnswBuildLocks.computeIfAbsent(key, _ => new Object).synchronized {
-        serveable.orElse {
-          val (e, snapshot) = synchronized { (epoch, live) }
-          val rows = snapshot.filter(col("namespace") === namespace)
-            .select(col("id"), col("values")).toDF()
-          val total = rows.count()
-          if (total == 0) None
-          else {
-            hnswGraphBuilds.incrementAndGet()
-            val s = graft.operators.Hnsw.shardsFor(total,
-              graft.operators.Hnsw.shardRows(spark))
-            val aux = hnswStoreRoot + "/" +
-              graft.PathToken.token(namespace) + s"_e${e}_d$dim"
-            import spark.implicits._
-            rows.withColumn("shard",
-                pmod(xxhash64(col("id")), lit(s)).cast("int"))
-              .select(col("shard"), col("id"), col("values"))
-              .as[(Int, String, Array[Float])]
-              .groupByKey(_._1)
-              .flatMapGroups { (shard, it) =>
-                graft.operators.Hnsw.shardNodes(
-                    it.map(t => (t._2, t._3)).toArray)
-                  .iterator.map { case (id, vec, lev, nbrs) =>
-                    graft.operators.Hnsw.HnswNodeS(shard, id, vec.toSeq,
-                      lev, nbrs.toSeq.map(_.toSeq))
-                  }
-              }
-              .toDF().write.mode("overwrite").partitionBy("shard")
-              .parquet(s"$aux/graph")
-            // trim ledger entries the snapshot absorbed (pure GC — the
-            // epoch stamps already make them non-delta for this build)
-            synchronized {
-              Option(hnswLedgers.get(namespace)).foreach { l =>
-                l.inserts.filterInPlace(_._1 > e)
-                l.deletes.filterInPlace(_._1 > e)
-              }
-            }
-            hnswCache.put(key, (e, aux, total))
-            // serve-or-retry (r14 ADVICE fix): re-evaluating serveable
-            // against the JUST-built layout propagates any insert delta
-            // that raced in during the build; None here means a
-            // concurrent bulk loadFrame poisoned the ledger past the
-            // snapshot epoch (no id list to serve as delta) or the raced
-            // mutation mass already crossed the staleness ratio — both
-            // need a fresh build over the newer snapshot, NOT this
-            // layout with a silently-empty delta (that probe would miss
-            // the bulk-loaded rows). Bounded retry; the terminal
-            // fallback only triggers for a caller that poisons during
-            // every rebuild, and is disclosed here.
-            serveable.orElse {
-              if (attemptsLeft > 1) hnswLayout(namespace, dim, attemptsLeft - 1)
-              else Some((aux, Seq.empty))
-            }
-          }
-        }
-      }
+  /** The ids inserted into `namespace` since a build at `built` over
+    * `builtRows` rows; None when the ledger was poisoned after the build
+    * or the mutation mass crossed [[HnswStaleRatio]]. */
+  private def hnswDelta(namespace: String, built: Long,
+                        builtRows: Long): Option[Seq[String]] = synchronized {
+    Option(hnswLedgers.get(namespace)) match {
+      case None => Some(Seq.empty)
+      case Some(l) if l.poisonedAt > built => None
+      case Some(l) =>
+        val delta = l.inserts.filter(_._1 > built).flatMap(_._2).toSeq
+        val dels = l.deletes.filter(_._1 > built).map(_._2).sum
+        if (delta.size + dels > HnswStaleRatio * builtRows) None else Some(delta)
     }
   }
 
-  /** The layout dir the store-attached HNSW index serves (namespace,
-    * dim) from — oracle hook, the [[ivfLayoutDir]] contract. */
-  private[graft] def hnswLayoutDir(namespace: String, dim: Int): Option[String] =
-    Option(hnswCache.get((namespace, dim))).map(_._2)
-
-  /** Candidate ids (`__cid`) via the store-attached HNSW shard graphs:
-    * per-shard beam searches (shuffle-free coalesced scans of the
-    * persisted layout) — layout PROPOSES, [[rerank]] decides, exactly the
-    * IVF path's contract. Filters here apply at the rerank
-    * (frontier-filter + the uniform starved rescue): this mount's graph
-    * nodes are record-LIGHT by design (id/vec/level/nbrs — the cache
-    * serves a mutable store, re-reading records per epoch), so the durable
-    * mount's predicate-aware ACORN beam
-    * ([[graft.operators.Hnsw.ShardGraph.searchFiltered]]) does not
-    * apply; a deployment running selective filters against a graph
-    * index serves them from the durable mount, where the nodes carry
-    * metadata. */
-  private def hnswCandidates(query: Seq[Float], namespace: String,
-                             persistCands: Boolean = false): Option[DataFrame] =
-    hnswLayout(namespace, query.length).map {
-      case (aux, delta) =>
-        import spark.implicits._
-        var cands = graft.operators.Hnsw.shardCandidatesS(spark, aux,
-          query.toArray)
-        // delta tail: rows inserted since the graphs were built are
-        // candidates for every probe (they are not in any shard graph)
-        if (delta.nonEmpty)
-          cands = cands.unionByName(delta.toDF("id")).distinct()
-        if (persistCands) {
-          cands.coalesce(1).write.mode("overwrite").parquet(s"$aux/cands")
-          cands = spark.read.parquet(s"$aux/cands")
-        }
-        cands.select(col("id").as("__cid"))
-    }
-
-  /** Batched APPROX search through the store-attached HNSW shard graphs
-    * (r12, the [[findSimilarBatchIvf]] thesis on the graph mount): all
-    * Q queries beam-search each resident shard graph in ONE pass of the
-    * layout — a Q-query batch costs one probe, not Q — and the (qid,
-    * candidate) pairs flow through the candidate-restricted batch
-    * kernel against the FILTERED live set. Cosine, exact rerank,
-    * positional parity with single-query `index="hnsw"` searches.
-    * `persistCands` writes the qid-keyed candidate table next to the
-    * layout for oracle replay — graded paths only. */
-  def findSimilarBatchHnsw(queries: Seq[Seq[Float]], k: Int = 10,
-                           namespace: String = "default",
-                           filter: Map[String, String] = Map.empty,
-                           jsonFilter: Map[String, String] = Map.empty,
-                           persistCands: Boolean = false): Seq[Seq[SearchHit]] = {
-    require(k >= 1 && k <= 1000, "top_k must be in [1, 1000]")
-    require(queries.nonEmpty && queries.size <= Scoring.InListMax,
-      s"batch size must be in [1, ${Scoring.InListMax}]")
-    val dim = queries.head.length
-    require(queries.forall(_.length == dim),
-      "all batch queries must share one dimensionality")
-    hnswLayout(namespace, dim) match {
-      case None => Seq.fill(queries.size)(Seq.empty)
-      case Some((aux, delta)) =>
-        import spark.implicits._
-        var cand = graft.operators.Hnsw.shardCandidatesBatchS(spark, aux,
-          queries)
-        // delta tail: post-build inserts are candidates for EVERY query
-        if (delta.nonEmpty)
-          cand = cand.unionByName(
-            queries.indices.toDF("__qid").crossJoin(delta.toDF("id")))
-            .distinct()
-        if (persistCands) {
-          cand.coalesce(1).write.mode("overwrite")
-            .parquet(s"$aux/batch_cands")
-          cand = spark.read.parquet(s"$aux/batch_cands")
-        }
-        rerankBatch(cand, queries, k, namespace, filter, jsonFilter)
-    }
-  }
-
-  /** The q119 grading entry — `findSimilar(approx=true, index="hnsw")`
-    * with the beam candidate set persisted next to the layout for
-    * oracle replay (the [[findSimilarIvfGraded]] relationship: the
-    * graph traversal is the candidate POLICY, the exact rerank the
-    * contract). */
-  private[graft] def findSimilarHnswGraded(query: Seq[Float], k: Int,
-                                           namespace: String): Seq[SearchHit] = {
-    require(k >= 1 && k <= 1000, "top_k must be in [1, 1000]")
-    rerank(hnswCandidates(query, namespace, persistCands = true), query, k,
-      namespace, Map.empty, Map.empty)
-  }
-
-  /** (stamped epoch, pinned?) of the current signature-cache entry — spec
-    * hook for ConcurrencySpec's convergence/no-leak assertions. */
-  private[graft] def sigCacheState: Option[(Long, Boolean)] =
-    sigCache.map { case (e, _, _, df) =>
-      (e, df.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-    }
-
-  /** Candidate ids (`__cid`) via the store-attached IVF index: probed
-    * cells of the persisted inverted file, partition-pruned on `cell`;
-    * [[rerank]] meets them with the live rows (so metadata filters and
-    * un-compacted mutations since the layout epoch still apply — the
-    * layout only PROPOSES candidates; the live store decides what exists).
-    * `persistProbesTo` writes the probe list next to the layout for
-    * oracle replay — graded paths only, never serving (a per-request
-    * overwrite would race concurrent probes). */
-  private def ivfCandidates(query: Seq[Float], namespace: String,
-                            persistProbes: Boolean = false): Option[DataFrame] =
-    ivfLayout(namespace, query.length).map {
-      case (aux, centers) =>
-        val probed = graft.operators.Ann.rankCells(query.toArray, centers,
-          graft.operators.Ann.ivfProbeFor(centers.length))
-        if (persistProbes) {
-          import spark.implicits._
-          probed.toDF("cell").coalesce(1)
-            .write.mode("overwrite").parquet(s"$aux/probes")
-        }
-        // each id sits in exactly one cell: no duplicates to drop
-        spark.read.parquet(s"$aux/index")
-          .where(col("cell").isin(probed: _*))
-          .select(col("id").as("__cid"))
-    }
-
-  /** The layout dir the store-attached IVF index serves (namespace, dim)
-    * from (None until an IVF search has built one) — lets a grading
-    * harness point an external oracle at `assign/` + `probes/`. */
-  private[graft] def ivfLayoutDir(namespace: String, dim: Int): Option[String] =
-    Option(ivfCache.get((namespace, dim))).map(_._2)
-
-  // ---- store-attached PQ index (compressed codes table) ---------------
-
-  /** Layout root for this store's PQ code tables — the [[ivfRoot]]
-    * contract (shared FS when `spark.graft.pq.dir` is set, mkdtemp
-    * fallback locally, per-process token against clobbering). */
-  private lazy val pqRoot: String =
-    spark.conf.getOption(graft.operators.Pq.PqDirConf)
-      .map(_ + "/store_" + processToken)
-      .getOrElse(java.nio.file.Files.createTempDirectory("graft_store_pq_").toString)
-
-  /** Cached store-attached PQ layouts: (namespace, dim) → (stamped
-    * epoch, layout dir, codebook, OPQ rotation). Same lifecycle and race
-    * arguments as [[ivfCache]]: builds outside the lock with the
-    * PRE-build epoch stamped, superseded layouts left on disk (bounded,
-    * epoch-suffixed), build serialization striped per key. */
-  private val pqCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), (Long, String, Array[Array[Array[Float]]], Option[Array[Array[Float]]])]()
-
-  private val pqBuildLocks =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Object]()
-
-  /** OPQ rotation gate (r14 — the r13 verdict's "What's missing" #1):
-    * on, the PQ layout build rotates the namespace by the Ge-et-al.
-    * parametric OPQ rotation ([[graft.operators.Opq.rotationFor]] — PCA
-    * basis + eigenvalue allocation from the shared bounded sample)
-    * before codebook training and encoding, and every probe rotates its
-    * query the same way — the pinned 0.735 → 0.990 recall gain (OpqSpec)
-    * at IDENTICAL serving cost (the LUT is computed against the rotated
-    * codebook; the ADC sweep is byte-for-byte the same plan). The
-    * rotation is baked into the persisted `codebook/` + `codes/` +
-    * per-query `lut/`, so the q61/q109 oracles replay unchanged; `rot/`
-    * persists beside them for the rotation-graded q147 replay. Off (or a
-    * dim not divisible by [[graft.operators.Pq.SubSpaces]]) serves raw
-    * PQ — the pre-r14 behavior, kept togglable for the recall A/B
-    * (StoreOpqSpec). */
-  private def pqRotateEnabled: Boolean =
-    spark.conf.getOption(graft.operators.Opq.RotateConf).forall(_.toBoolean)
-
-  /** None when the namespace has no live rows — a PQ search over an
-    * empty namespace answers empty, like every other index kind. */
-  private def pqLayout(namespace: String, dim: Int): Option[(String, Array[Array[Array[Float]]], Option[Array[Array[Float]]])] = {
-    val key = (namespace, dim)
-    Option(pqCache.get(key)) match {
-      case Some((e, aux, cb, rot)) if e == epoch => Some((aux, cb, rot))
-      case _ => pqBuildLocks.computeIfAbsent(key, _ => new Object).synchronized {
-        Option(pqCache.get(key)) match {
-          case Some((e, aux, cb, rot)) if e == epoch => Some((aux, cb, rot)) // raced: reuse
-          case _ =>
-            val (e, snapshot) = synchronized { (epoch, live) }
-            val rows = snapshot.filter(col("namespace") === namespace)
-              .select(col("id"), col("values")).toDF()
-            val total = rows.count()
-            if (total == 0) None
-            else {
-              val aux = pqRoot + "/" +
-                graft.PathToken.token(namespace) + s"_e${e}_d$dim"
-              // OPQ rotation first (when enabled and the dim divides),
-              // then the ONE codebook recipe, shared with the offline
-              // q58 path (Pq.buildPqIndex) so the policy cannot drift —
-              // the rotated frame flows through training and encoding
-              // with the same column names, so the recipe is verbatim
-              val rotOpt =
-                if (pqRotateEnabled)
-                  graft.operators.Opq.rotationFor(rows, "id", "values",
-                    total, dim)
-                else None
-              val enc = rotOpt.map { rot =>
-                rows.select(col("id"),
-                  graft.operators.Opq.rotateCol(rot)(col("values"))
-                    .as("values"))
-              }.getOrElse(rows)
-              val codebookSeq = graft.operators.Pq.trainCodebooks(
-                enc, "id", "values", total, dim)
-              rotOpt.foreach(rot =>
-                graft.operators.Opq.writeRotation(spark, rot, s"$aux/rot"))
-              graft.operators.Pq.writeCodebook(spark, codebookSeq,
-                s"$aux/codebook")
-              graft.operators.Pq.writeCodes(enc, "id", "values",
-                codebookSeq, aux)
-              val cb = codebookSeq.map(_.map(_.toArray).toArray).toArray
-              pqCache.put(key, (e, aux, cb, rotOpt))
-              Some((aux, cb, rotOpt))
+  /** The ONE per-shard recipe ([[graft.operators.Hnsw.shardNodes]]:
+    * sorted insertion, md5 levels, closest-M linking) applied to the
+    * namespace — hash-sharded into bounded graphs built inside
+    * `flatMapGroups` (one shuffle), persisted shard-partitioned. No
+    * trained state at all: the graph is the index, so its rebuild never
+    * drifts from the data distribution — the reference's own choice
+    * (`implementations/index.py:17-165`, hnswlib) served
+    * shard-at-a-time. */
+  private def buildHnsw(rows: DataFrame, e: Long, namespace: String,
+                        dim: Int): Option[Layout] = {
+    val total = rows.count()
+    if (total == 0) None
+    else {
+      val s = graft.operators.Hnsw.shardsFor(total, graft.operators.Hnsw.shardRows(spark))
+      val aux = auxDir(hnswRoot, namespace, e, dim)
+      rows.withColumn("shard", pmod(xxhash64(col("id")), lit(s)).cast("int"))
+        .select(col("shard"), col("id"), col("values"))
+        .as[(Int, String, Array[Float])]
+        .groupByKey(_._1)
+        .flatMapGroups { (shard, it) =>
+          graft.operators.Hnsw.shardNodes(it.map(t => (t._2, t._3)).toArray)
+            .iterator.map { case (id, vec, lev, nbrs) =>
+              graft.operators.Hnsw.HnswNodeS(shard, id, vec.toSeq, lev, nbrs.toSeq.map(_.toSeq))
             }
         }
-      }
-    }
-  }
-
-  /** The rotation the store-attached PQ layout was built with (None =
-    * raw PQ) — spec/oracle hook, the [[pqLayoutDir]] contract. Epoch-
-    * guarded like the serving path (r15, per advice): after a mutation
-    * the cached entry is superseded and this returns None rather than
-    * a stale layout's rotation — callers must search first (rebuilding
-    * the layout at the current epoch), then read the hook. */
-  private[graft] def pqRotation(namespace: String, dim: Int): Option[Array[Array[Float]]] =
-    Option(pqCache.get((namespace, dim)))
-      .collect { case (e, _, _, rot) if e == epoch => rot }.flatten
-
-  /** Candidate ids (`__cid`) via the store-attached PQ index: one ADC
-    * sweep of the compressed codes table (a table-lookup sum per row — at
-    * scale it reads ~32× fewer bytes than a vector scan), cut to
-    * [[graft.operators.Pq.CandN]] on (rounded ADC, id) — the layout
-    * PROPOSES candidates, [[rerank]] decides, exactly like the IVF path.
-    * `persistLut` writes the query's ADC table next to the layout for
-    * oracle replay — graded paths only. */
-  private def pqCandidates(query: Seq[Float], namespace: String,
-                           persistLut: Boolean = false): Option[DataFrame] =
-    pqLayout(namespace, query.length).map {
-      case (aux, cb, rot) =>
-        // rotate the query into the layout's (possibly OPQ-rotated)
-        // space — identity when the layout was built raw
-        val qEff = rot.map(graft.operators.Opq.rotateQuery(_, query.toArray))
-          .getOrElse(query.toArray)
-        val lut = graft.operators.Pq.lutFor(qEff, cb)
-        if (persistLut)
-          graft.operators.Pq.writeLuts(spark, Seq((0L, lut)), s"$aux/lut")
-        // the LUT rides as a broadcast 1-row frame, not a literal: every
-        // request's plan is then textually identical and whole-stage
-        // codegen compiles the sweep ONCE per JVM (Pq.adcCol)
-        spark.read.parquet(s"$aux/codes")
-          .crossJoin(broadcast(
-            graft.operators.Pq.lutFrame(spark, Seq((0L, lut))).select(col("lut"))))
-          .withColumn("adc", graft.operators.Pq.adcCol)
-          .orderBy(col("adc"), col("id"))
-          .limit(graft.operators.Pq.CandN)
-          .select(col("id").as("__cid"))
-    }
-
-  /** The layout dir the store-attached PQ index serves (namespace, dim)
-    * from — oracle hook, like [[ivfLayoutDir]]. Epoch-guarded (r15):
-    * None after a mutation until the next search rebuilds. */
-  private[graft] def pqLayoutDir(namespace: String, dim: Int): Option[String] =
-    Option(pqCache.get((namespace, dim)))
-      .collect { case (e, aux, _, _) if e == epoch => aux }
-
-  // ---- store-attached BQ index (sign-bit codes, hamming prefilter) ----
-
-  /** Cached binary-quantization codes per (namespace, dim): the per-dim
-    * midpoint grid plus a persisted (id, code: array<bigint>) frame —
-    * ceil(dim/64) BIGINT words per vector, 1 bit/dim. Same lifecycle as
-    * [[indexSigs]] (in-memory persisted frame, epoch-stamped, lazily
-    * rebuilt on the next approx search after a mutation, superseded
-    * frames unpersisted) — BQ is the CHEAPEST index to rebuild (one
-    * dim-sized stats pass + a narrow per-row fold), which is exactly why
-    * it suits hot mutating namespaces where even the LSH signature pass
-    * per epoch is felt. Same build-outside-the-lock / pre-build-epoch
-    * race discipline as [[pqLayout]]. */
-  private val bqCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), (Long, Array[Double], DataFrame)]()
-
-  private val bqBuildLocks =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Object]()
-
-  private[graft] val BqCandN = 50
-
-  private def bqIndex(namespace: String, dim: Int): Option[(Array[Double], DataFrame)] = {
-    val key = (namespace, dim)
-    def healed(mids: Array[Double], df: DataFrame) = {
-      // heal an external unpersist, like indexSigs (both forms, r19)
-      Some((mids, graft.operators.StandingCache.ensurePinned(df)))
-    }
-    Option(bqCache.get(key)) match {
-      case Some((e, mids, df)) if e == epoch => healed(mids, df)
-      case _ => bqBuildLocks.computeIfAbsent(key, _ => new Object).synchronized {
-        Option(bqCache.get(key)) match {
-          case Some((e, mids, df)) if e == epoch => healed(mids, df) // raced
-          case _ =>
-            val (e, snapshot) = synchronized { (epoch, live) }
-            val rows = snapshot.filter(col("namespace") === namespace)
-              .select(col("id"), col("values")).toDF()
-            // dim-sized, order-independent (the q81/q95 stats contract):
-            // the grid is bit-deterministic under any partitioning
-            val stats = rows
-              .select(posexplode(col("values")).as(Seq("i", "x")))
-              .groupBy(col("i"))
-              .agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
-              .orderBy(col("i")).collect()
-            if (stats.isEmpty) None
-            else {
-              val mids = stats.map(r =>
-                (r.getFloat(1).toDouble + r.getFloat(2).toDouble) / 2.0)
-              val codes = rows
-                .withColumn("mids", typedLit(mids.toSeq))
-                .withColumn("code", expr(
-                  graft.operators.Bq.packExprSql(dim, "values", "mids")))
-                .select(col("id"), col("code"))
-                .persist()
-              codes.count() // materialize the packing pass once, eagerly
-              Option(bqCache.put(key, (e, mids, codes)))
-                .foreach(_._3.unpersist(blocking = false))
-              Some((mids, codes))
-            }
+        .toDF().write.mode("overwrite").partitionBy("shard")
+        .parquet(s"$aux/graph")
+      // trim ledger entries the snapshot absorbed (pure GC — the epoch
+      // stamps already make them non-delta for this build)
+      synchronized {
+        Option(hnswLedgers.get(namespace)).foreach { l =>
+          l.inserts.filterInPlace(_._1 > e)
+          l.deletes.filterInPlace(_._1 > e)
         }
       }
+      Some(new HnswLayout(aux, total, Seq.empty))
     }
   }
 
-  /** Candidate ids (`__cid`) via the store-attached BQ index: rank the
-    * 8·words-byte codes by hamming distance to the query's sign bits (one
-    * `bit_count(xor)` per word — at scale this scan reads 32× fewer
-    * bytes than the vectors), cut to [[BqCandN]] on (hamming, id) via
-    * `TakeOrderedAndProject` — the index PROPOSES candidates, [[rerank]]
-    * decides (the IVF/PQ contract). The query code rides as a broadcast
-    * 1-row frame so every request compiles the same plan (the PQ LUT
-    * discipline). */
-  private def bqCandidates(query: Seq[Float], namespace: String): Option[DataFrame] =
-    bqIndex(namespace, query.length).map {
-      case (mids, codes) =>
-        val q = graft.operators.Bq.packBits(query, mids)
-        val sp = spark
-        import sp.implicits._
-        val qFrame = Seq(Tuple1(q.toSeq)).toDF("qcode")
-        codes.crossJoin(broadcast(qFrame))
-          .withColumn("ham", graft.functions.AdcKernels.hammingWords(col("code"), col("qcode")))
-          .orderBy(col("ham"), col("id"))
-          .limit(BqCandN)
-          .select(col("id").as("__cid"))
+  /** Per-shard beam searches over the persisted graphs (shuffle-free
+    * coalesced scans), plus the delta tail: rows inserted since the
+    * build are candidates for every query (they are in no graph). A
+    * batch beam-searches each shard graph ONCE for all its queries.
+    * Filters apply at the rerank (plus the uniform starved rescue): these
+    * graph nodes are record-LIGHT by design (id/vec/level/nbrs — the
+    * layout serves a mutable store), so the durable mount's
+    * predicate-aware ACORN beam does not apply; selective filters
+    * against a graph index serve from the durable mount, whose nodes
+    * carry metadata. */
+  private final class HnswLayout(aux: String, builtRows: Long,
+                                 delta: Seq[String]) extends Layout {
+    override def dir: Option[String] = Some(aux)
+    override def servedAt(built: Long, namespace: String): Option[Layout] =
+      hnswDelta(namespace, built, builtRows).map(new HnswLayout(aux, builtRows, _))
+    /** Re-evaluating the just-built graph propagates any insert delta
+      * that raced in during the build. None means a concurrent bulk load
+      * poisoned the ledger past the build's epoch (no id list to serve as
+      * delta), or the raced mutation mass already crossed the ratio: both
+      * need a fresh build over the newer snapshot, not this graph with a
+      * silently-empty delta. The retry is bounded; its terminal fallback
+      * only fires for a caller that poisons during every rebuild. */
+    override def fresh(built: Long, namespace: String): Option[Layout] =
+      servedAt(built, namespace)
+    private def persisted(cands: DataFrame, sub: String, persist: Boolean): DataFrame =
+      if (!persist) cands
+      else {
+        cands.coalesce(1).write.mode("overwrite").parquet(s"$aux/$sub")
+        spark.read.parquet(s"$aux/$sub")
+      }
+    def one(query: Seq[Float], persist: Boolean): DataFrame = {
+      val beam = graft.operators.Hnsw.shardCandidatesS(spark, aux, query.toArray)
+      persisted(if (delta.isEmpty) beam else beam.unionByName(delta.toDF("id")).distinct(),
+        "cands", persist).select(col("id").as("__cid"))
     }
-
-  /** Word count of the cached (namespace, dim) BQ codes — spec hook. */
-  private[graft] def bqWordCount(namespace: String, dim: Int): Option[Int] =
-    Option(bqCache.get((namespace, dim))).map(_._2.length).map(d => (d + 63) / 64)
-
-  /** Cell count of the cached (namespace, dim) layout — spec hook for the
-    * geometry-scales-with-namespace-size assertion. */
-  private[graft] def ivfCellCount(namespace: String, dim: Int): Option[Int] =
-    Option(ivfCache.get((namespace, dim))).map(_._3.length)
-
-  /** Candidate ids (`__cid`) for an approx cosine search: ids sharing
-    * at least one LSH band bucket with the query (an id matching in
-    * several bands repeats; the rerank is set-shaped). The query's
-    * buckets are computed on the driver (no Spark job —
-    * `Ann.bandBuckets` runs the identical kernel), so the candidate scan
-    * is one predicate over the cached signature frame. */
-  private def approxCandidates(query: Seq[Float], namespace: String): Option[DataFrame] = {
-    val qBuckets = graft.operators.Ann.bandBuckets(query.toArray)
-    val bucketPred = qBuckets
-      .map { case (b, sig) => col("band") === b && col("bucket") === sig }
-      .reduce(_ || _)
-    Some(indexSigs(namespace, query.length)
-      .where(bucketPred).select(col("id").as("__cid")))
+    def many(queries: Seq[Seq[Float]], persist: Boolean): DataFrame = {
+      val beam = graft.operators.Hnsw.shardCandidatesBatchS(spark, aux, queries)
+      persisted(
+        if (delta.isEmpty) beam
+        else beam.unionByName(queries.indices.toDF("__qid").crossJoin(delta.toDF("id"))).distinct(),
+        "batch_cands", persist)
+    }
   }
 
   private def collectHits(df: DataFrame): Seq[SearchHit] =
@@ -1305,53 +1089,13 @@ class VectorStore(val spark: SparkSession) {
   private def ranked(df: DataFrame, metric: String): DataFrame =
     Scoring.ranked(df, metric)
 
-  /** Top-k similarity search (`query_processor.py:26-49`).
-    *
-    * `approx = false` (default) is the exact scan — unchanged semantics.
-    * `approx = true` routes through the store-attached LSH index: candidate
-    * generation over cached band signatures, then EXACT rerank of the
-    * candidates — the index-backed read path the reference serves every
-    * query from (`index.py:91-129`), with the same contract as any ANN
-    * index: perfect precision on returned scores, recall set by the
-    * banding (VectorStoreSpec measures the floor). Cosine only — the
-    * sign-LSH family hashes angular similarity; an l2/ip request must use
-    * the exact path (matching hnswlib, where the index is built for one
-    * space). Vectors in the namespace must share the query's
-    * dimensionality, as in the reference's fixed-dim index.
-    *
-    * `index` picks the approx candidate generator — the store-side
-    * analogue of the reference's one-index-per-namespace read path
-    * (`index.py:19,91-129`), except the index KIND is a request
-    * parameter:
-    *  - "lsh" (default): cached band signatures — no disk, rebuilds
-    *    lazily per epoch; right for hot, mutating namespaces.
-    *  - "ivf": the persisted cell-partitioned inverted file — a probe
-    *    reads probe/cells (≈ 2/√cells, shrinking with namespace size —
-    *    [[graft.operators.Ann.ivfCellsFor]]) of the layout partitions;
-    *    right for large, mostly-static namespaces where even the
-    *    signature pass over every row is too much per-epoch work.
-    *  - "pq": the compressed codes table — an ADC sweep reading ~32×
-    *    fewer bytes than a vector scan; candidates cut on (ADC, id).
-    *  - "bq": sign-bit codes, 1 bit/dim in ceil(dim/64) BIGINTs —
-    *    hamming popcount prefilter + exact rerank; the cheapest index
-    *    to REBUILD (one stats pass + a narrow fold), so the right pick
-    *    for hot mutating namespaces (the q95 operator as a serving
-    *    path).
-    *  - "imi" (r11): the two-level product grid (q94 as a serving
-    *    path) — k² cells from two k-codebook trainings, so the grid
-    *    reaches √n cells at a quarter-root training cost; right when
-    *    the namespace outgrows what one flat Lloyd's can sample.
-    *  - "hnsw" (r12): sharded small-world graphs — per-shard beam
-    *    search, NO trained state (the index never drifts from the data
-    *    distribution); the reference's own structure
-    *    (`implementations/index.py:17-165`) as a serving mount. */
   /** Plan-time disclosure of the branch [[findSimilar]] WOULD take for
     * these arguments, without executing the search — the live half of
     * the reference's documented-but-unimplemented `POST /query/explain`
     * (`README.md:332`; see [[DurableVectorStore.explainSearch]] for the
-    * durable half and the design notes). Peeks the starvation and IVF
-    * caches (no derivation, no counters advanced) and PLANS (never
-    * runs) the authoritative scan. Live-store structures are
+    * durable half and the design notes). Peeks the starvation cache and
+    * the requested index's layout (no derivation, no counters advanced)
+    * and PLANS (never runs) the authoritative scan. Live layouts are
     * epoch-cached, so a mutation since the last probe means the next
     * search re-derives them — disclosed in `notes`, not silently. */
   def explainSearch(query: Seq[Float], k: Int = 10,
@@ -1362,29 +1106,20 @@ class VectorStore(val spark: SparkSession) {
                     approx: Boolean = false,
                     index: String = "lsh"): graft.model.SearchExplain = {
     require(k >= 1 && k <= 1000, "top_k must be in [1, 1000]")
-    if (approx) {
-      require(metric == "cosine",
-        s"approx search is cosine only (sign-LSH buckets / cosine rerank), got metric '$metric'")
-      require(ApproxIndexes.contains(index),
-        s"unknown approx index '$index' (expected 'lsh', 'ivf', 'pq', 'bq', 'imi' or 'hnsw')")
-    }
+    if (approx) ApproxIndexes.requireMetric(index, metric, batch = false, durable = false)
     val hasFilter = filter.nonEmpty || jsonFilter.nonEmpty
     val notes = scala.collection.mutable.ArrayBuffer.empty[String]
     val epoch0 = epoch
     val starved = approx && hasFilter &&
       Option(starvedFilters.get((namespace, filterKey(filter, jsonFilter))))
         .exists { case (ep, m) => ep == epoch0 && m < k }
-    val ivfEntry =
-      Option(ivfCache.get((namespace, query.length)))
-        .collect { case (e, _, cs) if e == epoch0 => cs }
+    val layout = if (approx) current((index, namespace, query.length)) else None
     val branch =
       if (!approx) "exact"
       else if (starved) "starved-skip-exact"
       else {
-        if (index == "ivf" && ivfEntry.isEmpty)
-          notes += "no epoch-current IVF layout; the first search derives it over the live namespace snapshot"
-        if (index != "ivf")
-          notes += s"'$index' structures are epoch-cached and (re)derived on demand at probe time"
+        if (layout.isEmpty)
+          notes += s"no current '$index' layout; the first search derives it over the live namespace snapshot"
         if (hasFilter)
           notes += "predicate binds at candidate time; a probe starved below k rescues from the exact filtered scan"
         "indexed-probe"
@@ -1401,20 +1136,17 @@ class VectorStore(val spark: SparkSession) {
       case None =>
         s"no epoch-current driver snapshot: the next search collects the namespace once and serves from it if it holds at most $bound rows, else from Spark"
     })
-    val probedCells =
-      if (approx && !starved && index == "ivf")
-        ivfEntry.map { cs =>
-          graft.operators.Ann.rankCells(query.toArray, cs,
-            graft.operators.Ann.ivfProbeFor(cs.length)).toSeq
-        }.getOrElse(Seq.empty)
-      else Seq.empty
     graft.model.SearchExplain(
       mount = "live", branch = branch,
       index = if (approx) Some(index) else None,
       metric = metric, k = k, filtered = hasFilter, asOf = None,
-      layoutCached = ivfEntry.isDefined,
+      layoutCached = layout.isDefined,
       layoutBuiltSeq = None,
-      probedCells = probedCells, starvedSkip = starved,
+      probedCells =
+        if (starved) Seq.empty
+        else layout.collect { case c: CellLayout => c.probe(query.toArray) }
+          .getOrElse(Seq.empty),
+      starvedSkip = starved,
       // the authoritative exact search's formatted physical plan — for
       // an indexed probe this is the rerank/rescue shape; the probe's
       // own pruning is disclosed via probedCells/notes
@@ -1424,97 +1156,123 @@ class VectorStore(val spark: SparkSession) {
       notes = notes.toSeq)
   }
 
+  /** Top-k similarity search (`query_processor.py:26-49`).
+    *
+    * `approx = false` (default) is the exact scan. `approx = true` routes
+    * through a store-attached index ([[approxSearch]]): candidate
+    * generation on the index's layout, then EXACT rerank of the
+    * candidates — the index-backed read path the reference serves every
+    * query from (`index.py:91-129`), with the same contract as any ANN
+    * index: perfect precision on returned scores, recall set by the
+    * candidate policy. Cosine only (the layouts hash or quantize angular
+    * structure; an l2/ip request must use the exact path, matching
+    * hnswlib, where the index is built for one space). Vectors in the
+    * namespace must share the query's dimensionality, as in the
+    * reference's fixed-dim index.
+    *
+    * `index` picks the candidate generator — the store-side analogue of
+    * the reference's one-index-per-namespace read path
+    * (`index.py:19,91-129`), except the index KIND is a request
+    * parameter:
+    *  - "lsh" (default): cached band signatures — no disk; right for
+    *    hot, mutating namespaces.
+    *  - "ivf": the persisted cell-partitioned inverted file — right for
+    *    large, mostly-static namespaces.
+    *  - "pq": the compressed codes table — an ADC sweep reading ~32×
+    *    fewer bytes than a vector scan.
+    *  - "bq": sign-bit codes, 1 bit/dim — hamming prefilter; the
+    *    cheapest index to REBUILD.
+    *  - "imi": the two-level product grid — √n cells at a quarter-root
+    *    training cost.
+    *  - "hnsw": sharded small-world graphs — no trained state, and the
+    *    one index that keeps serving across writes (a delta tail). */
   def findSimilar(query: Seq[Float], k: Int = 10, metric: String = "cosine",
                   namespace: String = "default",
                   filter: Map[String, String] = Map.empty,
                   jsonFilter: Map[String, String] = Map.empty,
                   approx: Boolean = false,
-                  index: String = "lsh"): Seq[SearchHit] = {
-    require(k >= 1 && k <= 1000, "top_k must be in [1, 1000]") // rest_api.py:24
-    // argument validation runs BEFORE the starvation short-circuit: the
-    // same invalid request must fail identically whether or not a
-    // starvation fact happens to be cached (cache state must never turn
-    // a 422-class error into a served result)
-    if (approx) {
-      require(metric == "cosine",
-        s"approx search is cosine only (sign-LSH buckets / cosine rerank), got metric '$metric'")
-      require(ApproxIndexes.contains(index),
-        s"unknown approx index '$index' (expected 'lsh', 'ivf', 'pq', 'bq', 'imi' or 'hnsw')")
+                  index: String = "lsh"): Seq[SearchHit] =
+    if (approx)
+      approxSearch(index, batch = false, Seq(query), k, metric, namespace,
+        filter, jsonFilter, persist = false).head
+    else {
+      require(k >= 1 && k <= 1000, "top_k must be in [1, 1000]") // rest_api.py:24
+      exactTopK(query, k, metric, namespace, filter, jsonFilter)
     }
-    // pre-probe epoch snapshot: starvation facts recorded below are
-    // valid only for the store state the probe observed
+
+  /** The one indexed read — six indexes × {single, batch}, graded or
+    * serving (the durable mount's `approxSearch` → `serve` shape):
+    *  1. validation, BEFORE the starvation short-circuit: the same
+    *     invalid request fails identically whether or not a starvation
+    *     fact happens to be cached;
+    *  2. STARVED SKIP (single query, filtered): a recorded < k
+    *     matching-row count for this (namespace, filter) at the current
+    *     epoch means the probe cannot saturate and the rescue would run
+    *     anyway, so the exact filtered scan answers directly — one scan
+    *     instead of probe + scan on every query of a steady state;
+    *  3. the index's layout ([[layoutFor]]) proposes candidates, the live
+    *     rows rerank them ([[rerank]], [[rerankBatch]]); a batch over a
+    *     namespace with no layout answers empty lists;
+    *  4. STARVED RESCUE (filtered): a query whose filtered candidates came
+    *     up short of k is re-answered by the exact filtered scan (one
+    *     batch for the batch's starved queries) — the codes/beam cuts
+    *     choose candidates by geometry before the filter, so probed
+    *     cells/buckets may simply not hold the matching rows; the caller
+    *     always gets min(k, matching-live-rows). A rescue that itself
+    *     comes up short has PROVED the namespace holds < k matching rows,
+    *     a fact about (namespace, filter) alone, recorded against the
+    *     pre-probe epoch for step 2 (a geometry-starved probe whose rescue
+    *     does find k hits is query-dependent and not recorded). */
+  private def approxSearch(index: String, batch: Boolean,
+                           queries: Seq[Seq[Float]], k: Int, metric: String,
+                           namespace: String, filter: Map[String, String],
+                           jsonFilter: Map[String, String],
+                           persist: Boolean): Seq[Seq[SearchHit]] = {
+    ApproxIndexes.requireMetric(index, metric, batch, durable = false)
+    if (batch) ApproxIndexes.requireBatch(queries, k)
+    else require(k >= 1 && k <= 1000, "top_k must be in [1, 1000]")
+    val hasFilter = filter.nonEmpty || jsonFilter.nonEmpty
+    val skey = (namespace, filterKey(filter, jsonFilter))
     val epoch0 = epoch
-    // permanently-starved short-circuit (see the fallback note below): a
-    // recorded < k matching-row count for this (namespace, filter) at
-    // the CURRENT epoch means the probe cannot saturate and the rescue
-    // would run anyway — serve the exact filtered scan directly, paying
-    // one scan instead of probe + scan on every query of a steady state
-    if (approx && (filter.nonEmpty || jsonFilter.nonEmpty)) {
-      Option(starvedFilters.get((namespace, filterKey(filter, jsonFilter))))
-        .foreach { case (ep, m) =>
-          if (ep == epoch0 && m < k) {
-            starvedProbeSkips.incrementAndGet()
-            return exactTopK(query, k, metric, namespace, filter, jsonFilter)
-          }
-        }
+    if (!batch && hasFilter &&
+        Option(starvedFilters.get(skey)).exists { case (ep, m) => ep == epoch0 && m < k }) {
+      starvedProbeSkips.incrementAndGet()
+      return Seq(exactTopK(queries.head, k, metric, namespace, filter, jsonFilter))
     }
+    val layout = layoutFor(index, namespace, queries.head.length)
     val hits =
-      if (!approx) exactTopK(query, k, metric, namespace, filter, jsonFilter)
-      else {
-        val cands = index match {
-          case "lsh" => approxCandidates(query, namespace)
-          case "ivf" => ivfCandidates(query, namespace)
-          case "pq" => pqCandidates(query, namespace)
-          case "bq" => bqCandidates(query, namespace)
-          case "imi" => imiCandidates(query, namespace)
-          case "hnsw" => hnswCandidates(query, namespace)
-          case other =>
-            throw new IllegalArgumentException(
-              s"unknown approx index '$other' (expected 'lsh', 'ivf', 'pq', 'bq', 'imi' or 'hnsw')")
-        }
-        rerank(cands, query, k, namespace, filter, jsonFilter)
+      if (!batch)
+        Seq(rerank(layout.map(_.one(queries.head, persist)), queries.head, k,
+          namespace, filter, jsonFilter))
+      else layout match {
+        case None => return Seq.fill(queries.size)(Seq.empty)
+        case Some(l) =>
+          rerankBatch(l.many(queries, persist), queries, k, namespace, filter, jsonFilter)
       }
-    // starved-selectivity fallback (r16 — the durable q164 discipline,
-    // now UNIFORM across mounts): an indexed candidate policy composed
-    // with a selective filter can leave fewer than k matching candidates
-    // even when the namespace holds ≥ k matching rows (the codes/beam
-    // cuts choose candidates by geometry before the filter; probed
-    // cells/buckets may simply not hold the matching rows). When that
-    // happens, serve the exact filtered scan — the caller always gets
-    // min(k, matching-live-rows).
-    //
-    // COST (ADVICE r16): "fires only in the starved case" is per-QUERY,
-    // not transient per-STORE — a namespace that legitimately holds
-    // fewer than k matching rows is a STEADY state, and every filtered
-    // approx query against it would pay probe + exact scan forever. The
-    // starvation cache breaks that: when the rescue itself returns < k
-    // hits, the exact scan has PROVED the namespace holds < k matching
-    // rows, a fact about (namespace, filter) alone — valid until the
-    // next mutation — so it is recorded against the pre-probe epoch and
-    // [[findSimilar]] skips the probe (serving the exact scan directly,
-    // the same plan approx=false runs) while the epoch stands. A
-    // geometry-starved probe whose rescue DOES find k hits is
-    // query-dependent and is deliberately not cached.
-    if (approx && (filter.nonEmpty || jsonFilter.nonEmpty) && hits.size < k) {
-      val rescued = exactTopK(query, k, metric, namespace, filter, jsonFilter)
-      if (rescued.size < k)
-        starvedFilters.put((namespace, filterKey(filter, jsonFilter)),
-          (epoch0, rescued.size))
-      rescued
-    } else hits
+    val starved = if (hasFilter) hits.indices.filter(hits(_).size < k) else Seq.empty
+    if (starved.isEmpty) hits
+    else {
+      val qs = starved.map(queries)
+      val rescued =
+        if (batch) exactBatch(qs, k, metric, namespace, filter, jsonFilter)
+        else qs.map(exactTopK(_, k, metric, namespace, filter, jsonFilter))
+      val short = rescued.map(_.size).filter(_ < k)
+      if (short.nonEmpty) starvedFilters.put(skey, (epoch0, short.max))
+      val byIdx = starved.zip(rescued).toMap
+      hits.indices.map(i => byIdx.getOrElse(i, hits(i)))
+    }
   }
 
   /** Starvation facts: (namespace, canonical filter) → (epoch, matching
     * rows observed by a rescue that itself returned < k). A rescue
     * proves the namespace holds exactly that many matching rows — a
-    * STEADY state, not a transient (ADVICE r16) — so while the epoch
-    * stands, [[findSimilar]] routes such filters straight to the exact
-    * scan instead of paying probe + scan per query forever. Any
-    * mutation bumps the epoch and naturally invalidates every entry
-    * (epoch equality is required at read); no explicit eviction. Batch
-    * reads record here too but do not short-circuit (six entry points,
-    * each already paying one shared probe per batch — the steady-state
-    * double cost is per batch, not per query, there). */
+    * STEADY state, not a transient — so while the epoch stands, a single
+    * filtered search routes straight to the exact scan instead of paying
+    * probe + scan per query forever. Any mutation bumps the epoch and
+    * naturally invalidates every entry (epoch equality is required at
+    * read); no explicit eviction. Batches record here too but do not
+    * short-circuit (a batch pays one shared probe, so the steady-state
+    * double cost is per batch, not per query). */
   private val starvedFilters =
     new java.util.concurrent.ConcurrentHashMap[(String, String), (Long, Int)]()
 
@@ -1523,9 +1281,6 @@ class VectorStore(val spark: SparkSession) {
     * pattern). */
   private[graft] val starvedProbeSkips =
     new java.util.concurrent.atomic.AtomicLong(0)
-
-  private[graft] val ApproxIndexes =
-    Set("lsh", "ivf", "pq", "bq", "imi", "hnsw")
 
   /** Canonical cache key for a (filter, jsonFilter) pair. Components are
     * LENGTH-PREFIXED: a plain `mkString` of tuple toStrings is ambiguous
@@ -1542,38 +1297,10 @@ class VectorStore(val spark: SparkSession) {
     enc(filter) + "|" + enc(jsonFilter)
   }
 
-  /** The batch form of the starved-selectivity fallback (see
-    * [[findSimilar]]): queries whose filtered indexed candidates came up
-    * short of k are re-answered by ONE exact filtered batch over just
-    * the starved queries; saturated queries keep their probe results.
-    * No-op (and free) when no filter is present or nothing starved. */
-  private def rescueStarvedBatch(hits: Seq[Seq[SearchHit]],
-                                 queries: Seq[Seq[Float]], k: Int,
-                                 namespace: String,
-                                 filter: Map[String, String],
-                                 jsonFilter: Map[String, String]): Seq[Seq[SearchHit]] =
-    if ((filter.isEmpty && jsonFilter.isEmpty) || hits.forall(_.size >= k))
-      hits
-    else {
-      val epoch0 = epoch // before the rescue scan — see starvedFilters
-      val starved = hits.indices.filter(hits(_).size < k)
-      val rescued = exactBatch(starved.map(queries), k, "cosine", namespace,
-        filter, jsonFilter)
-      // a rescue that still came up short proves < k matching rows —
-      // record the steady state so single-query reads skip their probes
-      val short = rescued.filter(_.size < k)
-      if (short.nonEmpty)
-        starvedFilters.put((namespace, filterKey(filter, jsonFilter)),
-          (epoch0, short.map(_.size).max))
-      val byIdx = starved.zip(rescued).toMap
-      hits.indices.map(i => byIdx.getOrElse(i, hits(i)))
-    }
-
   /** Batched exact search: result(i) answers queries(i) — ONE namespace
     * scan for the whole batch via [[Scoring.batchSearch]] (bounded-heap
     * per-query top-k, map-side combined), instead of Q sequential
-    * [[findSimilar]] scans. For the INDEXED batch form see
-    * [[findSimilarBatchIvf]]. */
+    * [[findSimilar]] scans. */
   def findSimilarBatch(queries: Seq[Seq[Float]], k: Int = 10,
                        metric: String = "cosine",
                        namespace: String = "default",
@@ -1586,258 +1313,56 @@ class VectorStore(val spark: SparkSession) {
     exactBatch(queries, k, metric, namespace, filter, jsonFilter)
   }
 
-  /** Batched APPROX search through the store-attached IVF layout (r11 —
-    * the q74 one-scan thesis applied to the INDEXED path): all Q probe
-    * lists are computed driver-side against the cached centroids, their
-    * cells UNION into one partition-pruned scan of the inverted file,
-    * and the (query, candidate) pairs flow into the candidate-restricted
-    * batch kernel ([[Scoring.batchSearchCandidates]]) — per-query
-    * scoring touches only that query's proposed candidates, the
-    * bounded-heap cut never shuffles Σ|cand| × k, and the corpus is
-    * scanned ONCE for the whole batch (vs Q sequential probes).
-    * Metadata filters compose like the single-query path: candidates
-    * semi-join the FILTERED live set, so the layout proposes and the
-    * filtered store decides.
-    * Positional, cosine, exact rerank — each entry equals the
-    * single-query `index="ivf"` answer. `persistProbes` writes the
-    * (qid, cell) probe table next to the layout for oracle replay —
-    * graded paths only. */
+  /** Batched APPROX search through the IVF layout (the q74 one-scan
+    * thesis applied to the INDEXED path): all Q probe lists are ranked
+    * on the driver, their cells union into ONE partition-pruned scan of
+    * the inverted file, and each query's candidates flow into the
+    * candidate-restricted batch kernel ([[Scoring.batchSearchCandidates]])
+    * against the FILTERED live set. Positional, cosine, exact rerank —
+    * each entry equals the single-query `index="ivf"` answer.
+    * `persistProbes` writes the (qid, cell) probe table next to the
+    * layout for oracle replay — graded paths only. Every other index's
+    * batch form is [[searchBatch]]. */
   def findSimilarBatchIvf(queries: Seq[Seq[Float]], k: Int = 10,
                           namespace: String = "default",
                           filter: Map[String, String] = Map.empty,
                           jsonFilter: Map[String, String] = Map.empty,
-                          persistProbes: Boolean = false): Seq[Seq[SearchHit]] = {
-    require(k >= 1 && k <= 1000, "top_k must be in [1, 1000]")
-    require(queries.nonEmpty && queries.size <= Scoring.InListMax,
-      s"batch size must be in [1, ${Scoring.InListMax}]")
-    val dim = queries.head.length
-    require(queries.forall(_.length == dim),
-      "all batch queries must share one dimensionality")
-    ivfLayout(namespace, dim) match {
-      case None => Seq.fill(queries.size)(Seq.empty)
-      case Some((aux, centers)) =>
-        import spark.implicits._
-        val nProbe = graft.operators.Ann.ivfProbeFor(centers.length)
-        val probeRows = queries.zipWithIndex.flatMap { case (q, i) =>
-          graft.operators.Ann.rankCells(q.toArray, centers, nProbe)
-            .map(c => (i, c))
-        }
-        val probeDf = probeRows.toDF("__qid", "cell")
-        if (persistProbes)
-          probeDf.coalesce(1)
-            .write.mode("overwrite").parquet(s"$aux/batch_probes")
-        val allCells = probeRows.map(_._2).distinct
-        val cand = spark.read.parquet(s"$aux/index")
-          .where(col("cell").isin(allCells: _*))
-          .join(broadcast(probeDf), Seq("cell"))
-          .select(col("__qid"), col("id")).distinct()
-        rerankBatch(cand, queries, k, namespace, filter, jsonFilter)
+                          persistProbes: Boolean = false): Seq[Seq[SearchHit]] =
+    approxSearch("ivf", batch = true, queries, k, "cosine", namespace, filter,
+      jsonFilter, persistProbes)
+
+  /** Every batch route in one call — exact, or through any of the six
+    * indexes — as the REST batch route serves it. Each index's batch
+    * unions its queries' probes into ONE sweep of the layout (probe
+    * lists, LUTs, query codes, beam queries, band buckets), positional
+    * and cosine. The exact and ivf forms go through their own public
+    * methods, so a subclass that overrides them sees the calls. */
+  private[graft] def searchBatch(queries: Seq[Seq[Float]], k: Int = 10,
+                                 metric: String = "cosine",
+                                 namespace: String = "default",
+                                 filter: Map[String, String] = Map.empty,
+                                 jsonFilter: Map[String, String] = Map.empty,
+                                 approx: Boolean = false,
+                                 index: String = "ivf"): Seq[Seq[SearchHit]] =
+    if (!approx) findSimilarBatch(queries, k, metric, namespace, filter, jsonFilter)
+    else {
+      ApproxIndexes.requireMetric(index, metric, batch = true, durable = false)
+      if (index == "ivf") findSimilarBatchIvf(queries, k, namespace, filter, jsonFilter)
+      else approxSearch(index, batch = true, queries, k, metric, namespace, filter,
+        jsonFilter, persist = false)
     }
-  }
 
-  /** Batched APPROX search through the store-attached IMI product grid
-    * (r13 — the last refused kind on the live batch route: VERDICT r12
-    * "What's missing" #1). Q×2k sub-distances rank each query's probe
-    * cells driver-side (the shared [[graft.operators.Ann.imiProbeCells]]
-    * q94 policy — k² fine cells at a quarter-root training cost, the
-    * win over flat IVF at huge namespace sizes), all probe lists UNION
-    * into one partition-pruned scan of the persisted grid, and the
-    * (qid, candidate) pairs flow through the candidate-restricted batch
-    * kernel against the FILTERED live set — the layout proposes, the
-    * store decides, positional parity with single-query `index="imi"`
-    * searches. Cosine, exact rerank. `persistProbes` writes the
-    * (qid, cell) probe table next to the grid for oracle replay —
-    * graded paths only. */
-  def findSimilarBatchImi(queries: Seq[Seq[Float]], k: Int = 10,
-                          namespace: String = "default",
-                          filter: Map[String, String] = Map.empty,
-                          jsonFilter: Map[String, String] = Map.empty,
-                          persistProbes: Boolean = false): Seq[Seq[SearchHit]] = {
-    require(k >= 1 && k <= 1000, "top_k must be in [1, 1000]")
-    require(queries.nonEmpty && queries.size <= Scoring.InListMax,
-      s"batch size must be in [1, ${Scoring.InListMax}]")
-    val dim = queries.head.length
-    require(queries.forall(_.length == dim),
-      "all batch queries must share one dimensionality")
-    imiLayout(namespace, dim) match {
-      case None => Seq.fill(queries.size)(Seq.empty)
-      case Some((aux, cLo, cHi)) =>
-        import spark.implicits._
-        val probeRows = queries.zipWithIndex.flatMap { case (q, i) =>
-          graft.operators.Ann.imiProbeCells(q.toArray, cLo, cHi)
-            .map(c => (i, c))
-        }
-        val probeDf = probeRows.toDF("__qid", "cell")
-        if (persistProbes)
-          probeDf.coalesce(1)
-            .write.mode("overwrite").parquet(s"$aux/batch_probes")
-        val allCells = probeRows.map(_._2).distinct
-        val cand = spark.read.parquet(s"$aux/index")
-          .where(col("cell").isin(allCells: _*))
-          .join(broadcast(probeDf), Seq("cell"))
-          .select(col("__qid"), col("id")).distinct()
-        rerankBatch(cand, queries, k, namespace, filter, jsonFilter)
-    }
-  }
-
-  /** Batched APPROX search through the store-attached LSH band
-    * signatures (r14 — VERDICT r13 "What's missing" #2: the last hole
-    * in the otherwise-complete batch matrix, previously an honest REST
-    * refusal). All Q queries' band buckets compute driver-side
-    * ([[graft.operators.Ann.bandBuckets]] — the identical kernel the
-    * single-query path uses, no Spark job) and union into ONE broadcast
-    * (qid, band, bucket) probe frame, so the cached signature frame is
-    * scanned ONCE for the whole batch — the q106 probe-union idiom
-    * applied to the signature table instead of the inverted file.
-    * Candidates are per-query DISTINCT bucket-mates, then flow through
-    * the candidate-restricted batch kernel against the filtered live
-    * set — cosine, exact rerank, positional parity with Q sequential
-    * `approx = true` searches. At 100 TB the win is the same as every
-    * batch mount: one signature-table scan amortized over Q queries
-    * instead of Q scans. */
-  def findSimilarBatchLsh(queries: Seq[Seq[Float]], k: Int = 10,
-                          namespace: String = "default",
-                          filter: Map[String, String] = Map.empty,
-                          jsonFilter: Map[String, String] = Map.empty): Seq[Seq[SearchHit]] = {
-    require(k >= 1 && k <= 1000, "top_k must be in [1, 1000]")
-    require(queries.nonEmpty && queries.size <= Scoring.InListMax,
-      s"batch size must be in [1, ${Scoring.InListMax}]")
-    val dim = queries.head.length
-    require(queries.forall(_.length == dim),
-      "all batch queries must share one dimensionality")
-    val sp = spark
-    import sp.implicits._
-    val probeDf = queries.zipWithIndex.flatMap { case (q, i) =>
-      graft.operators.Ann.bandBuckets(q.toArray)
-        .map { case (b, sig) => (i, b, sig) }
-    }.toDF("__qid", "band", "bucket")
-    val cand = indexSigs(namespace, dim)
-      .join(broadcast(probeDf), Seq("band", "bucket"))
-      .select(col("__qid"), col("id")).distinct()
-    rerankBatch(cand, queries, k, namespace, filter, jsonFilter)
-  }
-
-  /** Batched APPROX search through the store-attached PQ codes (r12 —
-    * VERDICT r11 "What's missing" #1: a batch on the PQ mount was
-    * refused and fell back to Q sequential probes, re-paying the
-    * per-query corpus-scan multiplier q106 killed for IVF). All Q ADC
-    * LUTs are tabulated driver-side and union into ONE broadcast frame,
-    * so the codes table is swept ONCE for the whole batch — each code
-    * row prices all Q queries in place (a table-lookup 8-term sum per
-    * (row, query), no shuffle of the corpus×Q scored frame: the
-    * per-query CandN cut is [[graft.functions.TopKAgg]]'s bounded heap,
-    * map-side combined to Q×CandN rows). Candidates then flow through
-    * the candidate-restricted batch kernel against the FILTERED live
-    * set — the layout proposes, the store decides, the single-query
-    * `index="pq"` contract positionally. Cosine, exact rerank.
-    * `persistLuts` writes the qid-keyed LUT table next to the layout
-    * for oracle replay — graded paths only. */
-  def findSimilarBatchPq(queries: Seq[Seq[Float]], k: Int = 10,
-                         namespace: String = "default",
-                         filter: Map[String, String] = Map.empty,
-                         jsonFilter: Map[String, String] = Map.empty,
-                         persistLuts: Boolean = false): Seq[Seq[SearchHit]] = {
-    require(k >= 1 && k <= 1000, "top_k must be in [1, 1000]")
-    require(queries.nonEmpty && queries.size <= Scoring.InListMax,
-      s"batch size must be in [1, ${Scoring.InListMax}]")
-    val dim = queries.head.length
-    require(queries.forall(_.length == dim),
-      "all batch queries must share one dimensionality")
-    pqLayout(namespace, dim) match {
-      case None => Seq.fill(queries.size)(Seq.empty)
-      case Some((aux, cb, rot)) =>
-        val luts = queries.zipWithIndex.map { case (q, i) =>
-          val qEff = rot.map(graft.operators.Opq.rotateQuery(_, q.toArray))
-            .getOrElse(q.toArray)
-          (i.toLong, graft.operators.Pq.lutFor(qEff, cb))
-        }
-        if (persistLuts)
-          graft.operators.Pq.writeLuts(spark, luts, s"$aux/batch_lut")
-        // one sweep of the codes table for the whole batch; the cut is
-        // the same ASCENDING (rounded ADC, id) policy as the
-        // single-query TakeOrderedAndProject, per qid
-        val cand = spark.read.parquet(s"$aux/codes")
-          .crossJoin(broadcast(
-            graft.operators.Pq.lutFrame(spark, luts)))
-          .withColumn("adc", graft.operators.Pq.adcCol)
-          .groupBy(col("qid"))
-          .agg(graft.functions.TopKAgg.topk(col("adc"), col("id"),
-            graft.operators.Pq.CandN, descending = false).as("top"))
-          .select(col("qid").cast("int").as("__qid"),
-            explode(col("top.id")).as("id"))
-        rerankBatch(cand, queries, k, namespace, filter, jsonFilter)
-    }
-  }
-
-  /** Batched APPROX search through the store-attached BQ sign-bit codes
-    * (r12, the [[findSimilarBatchPq]] shape): all Q query codes pack
-    * driver-side (dim-sized each) and broadcast as one (qid, qcode)
-    * frame; the cached codes frame is swept ONCE, one xor+popcount per
-    * (row, query) word, and the per-query [[BqCandN]] cut is the
-    * bounded-heap aggregate on ASCENDING (hamming, id) — integer-valued,
-    * no float tie boundary, identical policy to the single-query
-    * TakeOrderedAndProject. Candidates semi-join the filtered live set
-    * through the batch kernel; cosine, exact rerank, positional parity
-    * with `index="bq"` single-query searches. */
-  def findSimilarBatchBq(queries: Seq[Seq[Float]], k: Int = 10,
-                         namespace: String = "default",
-                         filter: Map[String, String] = Map.empty,
-                         jsonFilter: Map[String, String] = Map.empty): Seq[Seq[SearchHit]] = {
-    require(k >= 1 && k <= 1000, "top_k must be in [1, 1000]")
-    require(queries.nonEmpty && queries.size <= Scoring.InListMax,
-      s"batch size must be in [1, ${Scoring.InListMax}]")
-    val dim = queries.head.length
-    require(queries.forall(_.length == dim),
-      "all batch queries must share one dimensionality")
-    bqIndex(namespace, dim) match {
-      case None => Seq.fill(queries.size)(Seq.empty)
-      case Some((mids, codes)) =>
-        val sp = spark
-        import sp.implicits._
-        val qFrame = queries.zipWithIndex.map { case (q, i) =>
-          (i, graft.operators.Bq.packBits(q, mids).toSeq)
-        }.toDF("qid", "qcode")
-        val cand = codes.crossJoin(broadcast(qFrame))
-          .withColumn("ham", graft.functions.AdcKernels.hammingWords(col("code"), col("qcode")))
-          .groupBy(col("qid"))
-          .agg(graft.functions.TopKAgg.topk(col("ham").cast("double"),
-            col("id"), BqCandN, descending = false).as("top"))
-          .select(col("qid").as("__qid"), explode(col("top.id")).as("id"))
-        rerankBatch(cand, queries, k, namespace, filter, jsonFilter)
-    }
-  }
-
-  /** Graded-path variant of the IVF route: identical plan, but persists
-    * the probe list next to the layout so an external oracle can replay
-    * candidates (`assign/` ⋈ `probes/`) + exact rerank. Serving calls
-    * must use [[findSimilar]] — the probe write is per-request overwrite
-    * and would race concurrent searches. */
-  private[graft] def findSimilarIvfGraded(query: Seq[Float], k: Int,
-                                          namespace: String): Seq[SearchHit] = {
-    require(k >= 1 && k <= 1000, "top_k must be in [1, 1000]")
-    rerank(ivfCandidates(query, namespace, persistProbes = true), query, k,
-      namespace, Map.empty, Map.empty)
-  }
-
-  /** The q61 grading entry — `findSimilar(approx=true, index="pq")` with
-    * the query's ADC table persisted next to the layout for oracle
-    * replay (the [[findSimilarIvfGraded]] relationship). */
-  private[graft] def findSimilarPqGraded(query: Seq[Float], k: Int,
-                                         namespace: String): Seq[SearchHit] = {
-    require(k >= 1 && k <= 1000, "top_k must be in [1, 1000]")
-    rerank(pqCandidates(query, namespace, persistLut = true), query, k,
-      namespace, Map.empty, Map.empty)
-  }
-
-  /** The q103 grading entry — `findSimilar(approx=true, index="imi")`
-    * with the probe list persisted next to the layout for oracle replay
-    * (the [[findSimilarIvfGraded]] relationship). */
-  private[graft] def findSimilarImiGraded(query: Seq[Float], k: Int,
-                                          namespace: String): Seq[SearchHit] = {
-    require(k >= 1 && k <= 1000, "top_k must be in [1, 1000]")
-    rerank(imiCandidates(query, namespace, persistProbes = true), query, k,
-      namespace, Map.empty, Map.empty)
-  }
+  /** The indexed read behind the oracle-graded queries
+    * ([[graft.operators.StoreOps]], [[graft.multimodal.MediaVectorSearch]]):
+    * exactly what [[findSimilar]] with `approx = true` or [[searchBatch]]
+    * serve, unfiltered, with the index's candidate policy persisted next
+    * to its layout for oracle replay. Serving calls must not use it: the
+    * write is a per-request overwrite and would race concurrent searches. */
+  private[graft] def gradedSearch(index: String, batch: Boolean,
+                                  queries: Seq[Seq[Float]], k: Int,
+                                  namespace: String): Seq[Seq[SearchHit]] =
+    approxSearch(index, batch, queries, k, "cosine", namespace, Map.empty,
+      Map.empty, persist = true)
 
   /** Range search: all vectors with DISTANCE ≤ r (README.md:216). For the
     * cosine metric the stored score is a *similarity*, so the distance

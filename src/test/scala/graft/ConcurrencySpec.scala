@@ -109,7 +109,7 @@ class ConcurrencySpec extends AnyFunSuite {
     for (t <- 0 until writers; i <- 0 until perWriter)
       assert(ids.contains(s"w${t}_$i"), s"approx search lost commit w${t}_$i")
     // ...and leaves the cache stamped at the live epoch with its frame pinned
-    val (stamped, pinned) = s.sigCacheState.get
+    val (stamped, pinned) = s.layoutState("lsh", "race", dim).get
     assert(stamped == s.currentEpoch, "sigCache did not converge to the final epoch")
     assert(pinned, "converged signature frame is not persisted")
     // 4. racing rebuilds unpersisted what they replaced (async — POLL for

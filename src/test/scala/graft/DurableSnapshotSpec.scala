@@ -77,11 +77,8 @@ class DurableSnapshotSpec extends AnyFunSuite {
                          f: Map[String, String], jf: Map[String, String],
                          ns: String = "main"): Seq[Seq[SearchHit]] = idx match {
     case "ivf" => d.findSimilarBatchApprox(qs, 10, "cosine", ns, filter = f, jsonFilter = jf)
-    case "pq" => d.findSimilarBatchPq(qs, 10, ns, filter = f, jsonFilter = jf)
-    case "bq" => d.findSimilarBatchBq(qs, 10, ns, filter = f, jsonFilter = jf)
-    case "imi" => d.findSimilarBatchImi(qs, 10, ns, filter = f, jsonFilter = jf)
-    case "hnsw" => d.findSimilarBatchHnsw(qs, 10, ns, filter = f, jsonFilter = jf)
-    case "lsh" => d.findSimilarBatchLsh(qs, 10, ns, filter = f, jsonFilter = jf)
+    case _ => d.searchBatch(qs, 10, namespace = ns, approx = true, index = idx,
+      filter = f, jsonFilter = jf)
   }
 
   test("every exact, as-of and index route: snapshot and Spark tiers agree, live and as-of") {
@@ -219,17 +216,31 @@ class DurableSnapshotSpec extends AnyFunSuite {
       assert(!a.exists(_.id == "b3") && !a.exists(x => x.id == "b2" && x.values.toSeq == v2),
         s"as-of $h after compaction is the folded view")
     }
-    // namespaces whose partition directory names escape characters, and
-    // the empty one (Spark reads its partition back as null): both tiers
-    // see the same rows
-    Seq("a/b c:d=%#", "").foreach { odd =>
+    // a namespace whose partition directory name escapes characters:
+    // both tiers see the same rows
+    Seq("a/b c:d=%#").foreach { odd =>
       d.loadFrame(Seq(("o1", v1, Map("k" -> "o"))).toDF("id", "values", "metadata"), odd)
       val onSnap = d.findSimilar(v1, 3, "l2", odd)
-      assert(onSnap.map(_.id) == (if (odd.isEmpty) Nil else Seq("o1")), s"namespace '$odd'")
+      assert(onSnap.map(_.id) == Seq("o1"), s"namespace '$odd'")
       d.snapshotMaxRows = -1
       try TestSpark.assertSameHits(onSnap, d.findSimilar(v1, 3, "l2", odd), s"namespace '$odd'")
       finally d.snapshotMaxRows = VectorStore.SnapshotMaxRows
     }
+    // the empty namespace has no partition directory (Spark would write
+    // the rows to its default partition and read them back under a null
+    // namespace): every write path refuses it, and nothing is written
+    def files(): Seq[String] = {
+      val w = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      import scala.jdk.CollectionConverters._
+      try w.iterator().asScala.map(_.toString).toSeq.sorted finally w.close()
+    }
+    val before = files()
+    intercept[IllegalArgumentException](
+      d.loadFrame(Seq(("o1", v1, Map("k" -> "o"))).toDF("id", "values", "metadata"), ""))
+    intercept[IllegalArgumentException](d.insertJson(v1, """{"k": "o"}""", ""))
+    intercept[IllegalArgumentException](d.upsertManyJson(Seq((v1, "{}")), ""))
+    assert(files() == before, "a refused write left files behind")
+    assert(!files().exists(_.contains("__HIVE_DEFAULT_PARTITION__")))
     // another process's commit on the same root: seen by this store's
     // next read, with no TTL wait
     near(v1)

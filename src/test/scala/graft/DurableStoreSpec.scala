@@ -636,7 +636,7 @@ class DurableStoreSpec extends AnyFunSuite {
       "one signature row per (vector, band) expected")
     // batch form equals Q sequential probes (the one-scan thesis)
     val qs = Seq(rows(3)._2, rows(20)._2, q)
-    val batch = d.findSimilarBatchLsh(qs, k = 5, namespace = "lsh")
+    val batch = d.searchBatch(qs, k = 5, namespace = "lsh", approx = true, index = "lsh")
     qs.zipWithIndex.foreach { case (qi, i) =>
       val single = d.findSimilar(qi, k = 5, namespace = "lsh",
         approx = true, index = "lsh").map(h => (h.id, h.score))
@@ -1183,8 +1183,8 @@ class DurableStoreSpec extends AnyFunSuite {
       assert(d.starvedProbeSkips.get() == skips0 + 2)
       assert(d.exactRescues.get() == rescues0 + 2)
       // the pq batch mount consults the same fact
-      val r3 = d.findSimilarBatchPq(qs, k = 10, namespace = "sb",
-        filter = Map("grp" -> "rare"))
+      val r3 = d.searchBatch(qs, k = 10, namespace = "sb",
+        filter = Map("grp" -> "rare"), approx = true, index = "pq")
       assert(d.starvedProbeSkips.get() == skips0 + 4)
       assert(r3.map(_.map(_.id)) == r1.map(_.map(_.id)))
       // any commit moves the stamp: the next batch probes again
@@ -1253,8 +1253,8 @@ class DurableStoreSpec extends AnyFunSuite {
     assert(common.forall(_.id.startsWith("c")))
     // batch form: same discipline, positional parity with the singles
     val qs = Seq(q, Seq(0.1f, 0.6f, 0.4f, 1f))
-    val batch = d.findSimilarBatchLsh(qs, k = 10, namespace = "lstarve",
-      filter = Map("grp" -> "rare"))
+    val batch = d.searchBatch(qs, k = 10, namespace = "lstarve",
+      filter = Map("grp" -> "rare"), approx = true, index = "lsh")
     qs.indices.foreach { i =>
       val single = d.findSimilar(qs(i), k = 10, namespace = "lstarve",
         approx = true, index = "lsh", filter = Map("grp" -> "rare"))
@@ -1351,10 +1351,10 @@ class DurableStoreSpec extends AnyFunSuite {
       val qs = Seq(q, Seq(0.1f, 0.6f, 0.4f, 1f))
       def batchOf(f: Map[String, String]): Seq[Seq[graft.model.SearchHit]] =
         idx match {
-          case "pq"   => d.findSimilarBatchPq(qs, k = 10, namespace = ns, filter = f)
-          case "bq"   => d.findSimilarBatchBq(qs, k = 10, namespace = ns, filter = f)
-          case "imi"  => d.findSimilarBatchImi(qs, k = 10, namespace = ns, filter = f)
-          case "hnsw" => d.findSimilarBatchHnsw(qs, k = 10, namespace = ns, filter = f)
+          case "pq"   => d.searchBatch(qs, k = 10, namespace = ns, filter = f, approx = true, index = "pq")
+          case "bq"   => d.searchBatch(qs, k = 10, namespace = ns, filter = f, approx = true, index = "bq")
+          case "imi"  => d.searchBatch(qs, k = 10, namespace = ns, filter = f, approx = true, index = "imi")
+          case "hnsw" => d.searchBatch(qs, k = 10, namespace = ns, filter = f, approx = true, index = "hnsw")
         }
       for (f <- Seq(Map("grp" -> "rare"), Map("grp" -> "common"))) {
         val batch = batchOf(f)
@@ -1390,8 +1390,8 @@ class DurableStoreSpec extends AnyFunSuite {
     val q = Seq(0.4f, 0.5f, 0.6f, 1f)
     d.findSimilar(q, k = 5, namespace = "acorn", approx = true,
       index = "hnsw") // build records + graphs
-    val hits = d.findSimilarHnswGraded(q, k = 10, namespace = "acorn",
-      filter = Map("grp" -> "rare"))
+    val hits = d.gradedSearch("hnsw", batch = false, Seq(q), 10, "cosine", "acorn",
+      None, Map("grp" -> "rare")).head
     val exact = d.findSimilar(q, k = 10, namespace = "acorn",
       filter = Map("grp" -> "rare"))
     assert(hits.map(h => (h.id, h.score)) == exact.map(h => (h.id, h.score)),

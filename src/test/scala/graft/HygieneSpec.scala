@@ -154,4 +154,30 @@ class HygieneSpec extends AnyFunSuite {
     assert(StandingCache.pinned.isEmpty, "clear() left keys behind")
     run(dir); run(dir2) // and the operators still work after a full clear
   }
+
+  test("live lsh and bq layouts pin one frame per (index, namespace, dim), census flat across write rounds") {
+    val s = new graft.store.VectorStore(spark)
+    val rnd = new scala.util.Random(13)
+    def vec = Seq.fill(8)(rnd.nextFloat() * 2 - 1)
+    val nss = Seq("h0", "h1", "h2")
+    nss.foreach(ns => s.upsertMany(Seq.fill(30)((vec, Map.empty[String, String])), ns))
+    val q = vec
+    def round(): Unit =
+      for (ns <- nss; ix <- Seq("lsh", "bq"))
+        s.findSimilar(q, k = 3, namespace = ns, approx = true, index = ix)
+    def census = spark.sparkContext.getPersistentRDDs.size
+    val base = census
+    (1 to 4).foreach { r =>
+      if (r > 1) nss.foreach(ns => s.insert(vec, Map.empty, ns)) // every layout goes stale
+      round()
+      for (ns <- nss; ix <- Seq("lsh", "bq"))
+        assert(s.layoutState(ix, ns, 8).contains((s.currentEpoch, true)),
+          s"round $r: the $ix layout of $ns is not current and pinned")
+      // replaced frames are unpersisted without blocking: allow them to land
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (census - base > 6 && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(census - base == 6,
+        s"round $r: ${census - base} pinned frames for 2 indexes x 3 namespaces")
+    }
+  }
 }

@@ -139,14 +139,8 @@ class LiveSnapshotSpec extends AnyFunSuite {
       // 12 far rows: near-origin probes propose none, the rescue answers
       (Map("grp" -> "rare"), Map.empty[String, String]))
     def batch(idx: String, f: Map[String, String], jf: Map[String, String],
-              ns: String = "main"): Seq[Seq[SearchHit]] = idx match {
-      case "lsh" => s.findSimilarBatchLsh(queries, 10, ns, f, jf)
-      case "ivf" => s.findSimilarBatchIvf(queries, 10, ns, f, jf)
-      case "pq" => s.findSimilarBatchPq(queries, 10, ns, f, jf)
-      case "bq" => s.findSimilarBatchBq(queries, 10, ns, f, jf)
-      case "imi" => s.findSimilarBatchImi(queries, 10, ns, f, jf)
-      case "hnsw" => s.findSimilarBatchHnsw(queries, 10, ns, f, jf)
-    }
+              ns: String = "main"): Seq[Seq[SearchHit]] =
+      s.searchBatch(queries, 10, "cosine", ns, f, jf, approx = true, index = idx)
     val routes = Indexes.flatMap { idx =>
       filters.flatMap { case (f, jf) =>
         val what = s"$idx/$f/$jf"
@@ -294,5 +288,29 @@ class LiveSnapshotSpec extends AnyFunSuite {
     s.delete(Seq("b0"), "big")
     search()
     assert(s.snapshot("big").map(_.rows).contains(5), "back under the bound")
+  }
+
+  test("warm index requests run a fixed number of Spark jobs on each tier, single and batch") {
+    val s = mainStore()
+    val queries = Seq(twin, twin.map(-_))
+    def run(idx: String, batch: Boolean): Unit =
+      if (batch) s.searchBatch(queries, 10, "cosine", "main", approx = true, index = idx)
+      else s.findSimilar(twin, 10, namespace = "main", approx = true, index = idx)
+    /** index → (single, batch) jobs of a warm request: the layout built
+      * and the tier decided by the requests before it. */
+    def table(): Map[String, (Int, Int)] = Indexes.map { idx =>
+      run(idx, batch = false)
+      run(idx, batch = true)
+      idx -> ((TestSpark.jobsOf(run(idx, batch = false)), TestSpark.jobsOf(run(idx, batch = true))))
+    }.toMap
+    val onSnapshot = table()
+    s.snapshotMaxRows = -1
+    val onSpark = try table() finally s.snapshotMaxRows = VectorStore.SnapshotMaxRows
+    // the snapshot tier reranks on the driver, so only candidate
+    // generation runs jobs; above the bound the rerank is a Spark plan too
+    assert(onSnapshot == Map("lsh" -> ((1, 3)), "ivf" -> ((2, 4)), "pq" -> ((3, 4)),
+      "bq" -> ((2, 3)), "imi" -> ((2, 4)), "hnsw" -> ((1, 1))), s"snapshot tier: $onSnapshot")
+    assert(onSpark == Map("lsh" -> ((11, 9)), "ivf" -> ((5, 9)), "pq" -> ((6, 10)),
+      "bq" -> ((12, 7)), "imi" -> ((5, 10)), "hnsw" -> ((4, 7))), s"Spark tier: $onSpark")
   }
 }

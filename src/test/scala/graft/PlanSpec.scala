@@ -401,16 +401,16 @@ class PlanSpec extends AnyFunSuite {
     // so each has bucket-mates — an empty result would be legitimate LSH
     // behavior but would vacuously pass the reuse assertion
     val qs = Seq(Seq.fill(8)(0.5f), Seq.fill(8)(2.0f))
-    // findSimilarBatchLsh collects; re-build its candidate frame shape
+    // the lsh batch collects; re-build its candidate frame shape
     // through the public API by checking the search executes AND the
     // single-query approx plan shares the signature cache (one build)
     // warm the signature cache through a single-query search, then the
     // batch must REUSE that epoch-stamped frame (one signature pass)
     s.findSimilar(qs.head, k = 3, namespace = "planlsh", approx = true)
-    val before = s.sigCacheState
-    val res = s.findSimilarBatchLsh(qs, k = 3, namespace = "planlsh")
+    val before = s.layoutState("lsh", "planlsh", 8)
+    val res = s.searchBatch(qs, k = 3, namespace = "planlsh", approx = true, index = "lsh")
     assert(res.size == 2 && res.forall(_.nonEmpty))
-    val after = s.sigCacheState
+    val after = s.layoutState("lsh", "planlsh", 8)
     assert(after.isDefined && before.map(_._1) == after.map(_._1),
       "batch must reuse the cached signature frame, not rebuild it")
   }

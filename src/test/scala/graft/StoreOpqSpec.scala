@@ -125,7 +125,7 @@ class StoreOpqSpec extends AnyFunSuite {
     val s = loadStore("opq_art")
     s.findSimilar(corpus(0).toSeq, k = 3, namespace = "opq_art",
       approx = true, index = "pq")
-    val aux = s.pqLayoutDir("opq_art", dim).get
+    val aux = s.layoutDir("pq", "opq_art", dim).get
     val rot = s.pqRotation("opq_art", dim).get
     val persisted = spark.read.parquet(s"$aux/rot").collect()
       .map(r => ((r.getInt(0), r.getInt(1)), r.getFloat(2))).toMap

@@ -230,6 +230,14 @@ class VectorStoreSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       s.explainSearch(Seq(1f), approx = true, index = "nope")
     }
+    // layoutCached answers for the requested index: a pq layout says
+    // nothing about ivf's, and an exact search uses none
+    s.findSimilar(Seq(1f, 2f, 3f), k = 2, namespace = "ns", approx = true, index = "pq")
+    val pq = s.explainSearch(Seq(1f, 2f, 3f), k = 2, namespace = "ns", approx = true, index = "pq")
+    assert(pq.layoutCached && !pq.notes.exists(_.contains("layout;")), pq.notes)
+    val ivf = s.explainSearch(Seq(1f, 2f, 3f), k = 2, namespace = "ns", approx = true, index = "ivf")
+    assert(!ivf.layoutCached && ivf.notes.exists(_.contains("no current 'ivf' layout")), ivf.notes)
+    assert(!s.explainSearch(Seq(1f, 2f, 3f), k = 2, namespace = "ns").layoutCached)
   }
 
   test("explainSearch notes whether the search serves from the driver snapshot or from Spark") {
@@ -388,7 +396,7 @@ class VectorStoreSpec extends AnyFunSuite {
     assert(exactBefore.map(h => (h.id, h.score)) ==
       exactAfter.map(h => (h.id, h.score)))
     // the persisted layout exists and carries the oracle-replay tables
-    val aux = s.ivfLayoutDir("ivf", 16).get
+    val aux = s.layoutDir("ivf", "ivf", 16).get
     assert(new java.io.File(s"$aux/index").exists())
     assert(new java.io.File(s"$aux/assign").exists())
     // a mutation invalidates the layout on the NEXT search
@@ -427,7 +435,7 @@ class VectorStoreSpec extends AnyFunSuite {
     pq.foreach(h => assert(h.score == exactScores(h.id),
       s"PQ score for ${h.id} diverged from the exact kernel"))
     // the persisted layout carries the oracle-replay tables
-    val aux = s.pqLayoutDir("pq", 16).get
+    val aux = s.layoutDir("pq", "pq", 16).get
     assert(new java.io.File(s"$aux/codes").exists())
     assert(new java.io.File(s"$aux/codes_flat").exists())
     // a mutation invalidates the layout on the NEXT search
@@ -529,7 +537,7 @@ class VectorStoreSpec extends AnyFunSuite {
     // INCREMENTAL serving (r13 — VERDICT r12 "What's missing" #3): a
     // small mutation must NOT rebuild the resident shard graphs — the
     // delete dies in the live semi-join, an insert rides the delta tail
-    val buildsAfterFirst = s.hnswGraphBuilds.get()
+    val buildsAfterFirst = s.builds("hnsw").get()
     val victim = hnsw.head.id
     assert(s.delete(Seq(victim), "hnsw") == Seq(victim))
     val after = s.findSimilar(query, k = 10, namespace = "hnsw",
@@ -542,7 +550,7 @@ class VectorStoreSpec extends AnyFunSuite {
       approx = true, index = "hnsw")
     assert(withNew.map(_.id).contains(newId),
       "post-build insert did not surface through the delta tail")
-    assert(s.hnswGraphBuilds.get() == buildsAfterFirst,
+    assert(s.builds("hnsw").get() == buildsAfterFirst,
       "a small mutation rebuilt the shard graphs — the serving cache " +
         "lost its incremental discipline")
     // recall pin unchanged through the incremental path
@@ -558,7 +566,7 @@ class VectorStoreSpec extends AnyFunSuite {
       Seq(("bulk0", Seq.fill(16)(0.5f))).toDF("id", "values"), "hnsw")
     s.findSimilar(query, k = 3, namespace = "hnsw", approx = true,
       index = "hnsw")
-    assert(s.hnswGraphBuilds.get() == buildsAfterFirst + 1,
+    assert(s.builds("hnsw").get() == buildsAfterFirst + 1,
       "a bulk frame load must rebuild (no id list to delta)")
     // metadata filters compose: the layout proposes, the FILTERED live
     // set decides
@@ -604,9 +612,9 @@ class VectorStoreSpec extends AnyFunSuite {
     val qs = vecs.take(3).map(_.map(_ + 0.01f))
     for ((name, batchOf, idx) <- Seq[(String,
         Seq[Seq[Float]] => Seq[Seq[graft.model.SearchHit]], String)](
-      ("pq", qs2 => s.findSimilarBatchPq(qs2, k = 5, namespace = "bpq"), "pq"),
-      ("bq", qs2 => s.findSimilarBatchBq(qs2, k = 5, namespace = "bpq"), "bq"),
-      ("hnsw", qs2 => s.findSimilarBatchHnsw(qs2, k = 5, namespace = "bpq"), "hnsw"))) {
+      ("pq", qs2 => s.searchBatch(qs2, k = 5, namespace = "bpq", approx = true, index = "pq"), "pq"),
+      ("bq", qs2 => s.searchBatch(qs2, k = 5, namespace = "bpq", approx = true, index = "bq"), "bq"),
+      ("hnsw", qs2 => s.searchBatch(qs2, k = 5, namespace = "bpq", approx = true, index = "hnsw"), "hnsw"))) {
       val batch = batchOf(qs)
       assert(batch.size == 3 && batch.forall(_.nonEmpty), s"$name batch empty")
       qs.zipWithIndex.foreach { case (q, i) =>
@@ -617,23 +625,23 @@ class VectorStoreSpec extends AnyFunSuite {
       }
     }
     // a mutation invalidates the epoch for the NEXT batch (both kinds)
-    val victim = s.findSimilarBatchPq(qs, k = 5, namespace = "bpq").head.head.id
+    val victim = s.searchBatch(qs, k = 5, namespace = "bpq", approx = true, index = "pq").head.head.id
     assert(s.delete(Seq(victim), "bpq") == Seq(victim))
-    assert(!s.findSimilarBatchPq(qs, k = 5, namespace = "bpq")
+    assert(!s.searchBatch(qs, k = 5, namespace = "bpq", approx = true, index = "pq")
       .head.map(_.id).contains(victim), "batched pq served a deleted id")
-    assert(!s.findSimilarBatchBq(qs, k = 5, namespace = "bpq")
+    assert(!s.searchBatch(qs, k = 5, namespace = "bpq", approx = true, index = "bq")
       .head.map(_.id).contains(victim), "batched bq served a deleted id")
-    assert(!s.findSimilarBatchHnsw(qs, k = 5, namespace = "bpq")
+    assert(!s.searchBatch(qs, k = 5, namespace = "bpq", approx = true, index = "hnsw")
       .head.map(_.id).contains(victim), "batched hnsw served a deleted id")
     // empty namespace: positional empties; filters compose on the live side
-    assert(s.findSimilarBatchPq(qs, k = 5, namespace = "nothing_here") ==
+    assert(s.searchBatch(qs, k = 5, namespace = "nothing_here", approx = true, index = "pq") ==
       Seq(Seq.empty, Seq.empty, Seq.empty))
-    assert(s.findSimilarBatchHnsw(qs, k = 5, namespace = "nothing_here") ==
+    assert(s.searchBatch(qs, k = 5, namespace = "nothing_here", approx = true, index = "hnsw") ==
       Seq(Seq.empty, Seq.empty, Seq.empty))
-    assert(s.findSimilarBatchBq(qs, k = 5, namespace = "bpq",
-      filter = Map("tier" -> "none_have_this")).forall(_.isEmpty))
-    assert(s.findSimilarBatchHnsw(qs, k = 5, namespace = "bpq",
-      filter = Map("tier" -> "none_have_this")).forall(_.isEmpty))
+    assert(s.searchBatch(qs, k = 5, namespace = "bpq",
+      filter = Map("tier" -> "none_have_this"), approx = true, index = "bq").forall(_.isEmpty))
+    assert(s.searchBatch(qs, k = 5, namespace = "bpq",
+      filter = Map("tier" -> "none_have_this"), approx = true, index = "hnsw").forall(_.isEmpty))
   }
 
   test("batched LSH search equals Q sequential approx searches; mutations and filters compose") {
@@ -641,7 +649,7 @@ class VectorStoreSpec extends AnyFunSuite {
     val vecs = clusteredVectors(nClusters = 12, perCluster = 10, dim = 8, seed = 43)
     s.upsertMany(vecs.map(v => (v, Map.empty[String, String])), "blsh")
     val qs = vecs.take(3).map(_.map(_ + 0.01f))
-    val batch = s.findSimilarBatchLsh(qs, k = 5, namespace = "blsh")
+    val batch = s.searchBatch(qs, k = 5, namespace = "blsh", approx = true, index = "lsh")
     assert(batch.size == 3 && batch.forall(_.nonEmpty), "lsh batch empty")
     qs.zipWithIndex.foreach { case (q, i) =>
       val single = s.findSimilar(q, k = 5, namespace = "blsh",
@@ -652,13 +660,13 @@ class VectorStoreSpec extends AnyFunSuite {
     // a mutation invalidates the signature epoch for the NEXT batch
     val victim = batch.head.head.id
     assert(s.delete(Seq(victim), "blsh") == Seq(victim))
-    assert(!s.findSimilarBatchLsh(qs, k = 5, namespace = "blsh")
+    assert(!s.searchBatch(qs, k = 5, namespace = "blsh", approx = true, index = "lsh")
       .head.map(_.id).contains(victim), "batched lsh served a deleted id")
     // empty namespace: positional empties; filters compose on the live side
-    assert(s.findSimilarBatchLsh(qs, k = 5, namespace = "nothing_here") ==
+    assert(s.searchBatch(qs, k = 5, namespace = "nothing_here", approx = true, index = "lsh") ==
       Seq(Seq.empty, Seq.empty, Seq.empty))
-    assert(s.findSimilarBatchLsh(qs, k = 5, namespace = "blsh",
-      filter = Map("tier" -> "none_have_this")).forall(_.isEmpty))
+    assert(s.searchBatch(qs, k = 5, namespace = "blsh",
+      filter = Map("tier" -> "none_have_this"), approx = true, index = "lsh").forall(_.isEmpty))
   }
 
   test("store-attached IVF geometry scales with namespace size; recall floor holds at both sizes") {
@@ -783,8 +791,8 @@ class VectorStoreSpec extends AnyFunSuite {
     }
     // batch forms: per-query rescue, saturated queries stay on the probe
     val qs = Seq(q, Seq(0.1f, 0.6f, 0.4f, 1f, 0f, 0f, 0f, 0f))
-    val batch = s.findSimilarBatchPq(qs, k = 10, namespace = "starve",
-      filter = Map("grp" -> "rare"))
+    val batch = s.searchBatch(qs, k = 10, namespace = "starve",
+      filter = Map("grp" -> "rare"), approx = true, index = "pq")
     qs.indices.foreach { i =>
       assert(batch(i).nonEmpty && batch(i).forall(h => rareIds(h.id)),
         s"batched pq filtered query $i was not rescued")
@@ -839,5 +847,43 @@ class VectorStoreSpec extends AnyFunSuite {
     val fourth = s.findSimilar(q, k = 10, namespace = "perm",
       approx = true, index = "ivf", filter = rare)
     assert(fourth.size == 4 && s.starvedProbeSkips.get() == 2)
+  }
+
+  // ---- build counts: one lifecycle for six indexes ----------------------
+
+  for (ix <- graft.store.ApproxIndexes.Names)
+    test(s"$ix builds once per epoch: repeats and a batch build nothing, a write elsewhere " +
+        (if (ix == "hnsw") "rebuilds nothing" else "rebuilds once")) {
+      val s = newStore
+      val vecs = clusteredVectors(nClusters = 8, perCluster = 10, dim = 8, seed = 61)
+      s.upsertMany(vecs.map(v => (v, Map.empty[String, String])), "built")
+      val q = vecs.head.map(_ + 0.01f)
+      def search(): Unit =
+        assert(s.findSimilar(q, k = 5, namespace = "built", approx = true, index = ix).nonEmpty)
+      def built: Int = s.builds(ix).get()
+      search()
+      assert(built == 1, "the first search builds the layout once")
+      search()
+      s.searchBatch(Seq(q, vecs(20)), k = 5, namespace = "built", approx = true, index = ix)
+      assert(built == 1, "a repeat search and a batch after it reuse the layout")
+      // the five epoch-keyed layouts go stale on ANY write (the write
+      // cliff); hnsw serves across it with its per-namespace ledger
+      s.insert(vecs(1), Map.empty, "elsewhere")
+      search()
+      search()
+      assert(built == (if (ix == "hnsw") 1 else 2), s"$built builds after a write elsewhere")
+      assert(graft.store.ApproxIndexes.Names.filter(_ != ix).forall(s.builds(_).get() == 0))
+    }
+
+  test("lsh keeps one signature frame per namespace: alternating two namespaces builds two") {
+    val s = newStore
+    val vecs = clusteredVectors(nClusters = 8, perCluster = 10, dim = 8, seed = 67)
+    s.upsertMany(vecs.take(40).map(v => (v, Map.empty[String, String])), "la")
+    s.upsertMany(vecs.drop(40).map(v => (v, Map.empty[String, String])), "lb")
+    for (_ <- 1 to 3; ns <- Seq("la", "lb"))
+      s.findSimilar(vecs.head, k = 5, namespace = ns, approx = true, index = "lsh")
+    assert(s.builds("lsh").get() == 2)
+    Seq("la", "lb").foreach(ns =>
+      assert(s.layoutState("lsh", ns, 8).contains((s.currentEpoch, true)), ns))
   }
 }
