@@ -114,7 +114,7 @@ object DurableAnnBench {
       else java.nio.file.Files.walk(f.toPath).filter(_.toFile.isFile)
         .mapToLong(_.toFile.length).sum
     }
-    val pqAux = store.pqLayoutDir("bench", Dim).get
+    val pqAux = store.layoutDir("pq", "bench", Dim).get
     val codesBytes = dirBytes(s"$pqAux/codes")
     val indexBytes = dirBytes(pqAux.stripSuffix("/pq") + "/index")
 
@@ -136,7 +136,7 @@ object DurableAnnBench {
         index = "bq").map(_.id).toSet
       a.intersect(e).size.toDouble / K
     }
-    val bqAux = store.bqLayoutDir("bench", Dim).get
+    val bqAux = store.layoutDir("bq", "bench", Dim).get
     val bqBytes = dirBytes(s"$bqAux/codes")
 
     // r10: the staleness trigger — bulk-append past the 0.2 ratio and

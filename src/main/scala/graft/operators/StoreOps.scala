@@ -1159,7 +1159,7 @@ object StoreOps {
     /** One build of the layout and of the index's own structure — the
       * state the oracle replays. */
     def inWindow: Boolean =
-      store.annBuilds.get() == 1 && builds(store, script.index) == 1
+      store.annBuilds.get() == 1 && store.builds(script.index).get() == 1
 
     /** The script's indexed read of `qs`: live, or at the horizon for
       * an as-of script; filtered for a tenant script; `persist` writes
@@ -1169,17 +1169,6 @@ object StoreOps {
       store.gradedSearch(script.index, batch, qs, K, script.metric, ns,
         if (script.asOf) Some(horizon) else None, filter, persist)
   }
-
-  /** Builds of `index`'s structure paid by `s` (ivf: the layout). */
-  private def builds(s: graft.store.DurableVectorStore, index: String): Int =
-    (index match {
-      case "ivf" => s.annBuilds
-      case "pq" => s.pqBuilds
-      case "bq" => s.bqBuilds
-      case "imi" => s.imiBuilds
-      case "hnsw" => s.hnswBuilds
-      case "lsh" => s.lshBuilds
-    }).get()
 
   /** Set-up stores by resolved base dir (conf root included, like q51's
     * layout cache), and the build attempts per base: each attempt gets
@@ -1217,7 +1206,7 @@ object StoreOps {
       s.loadFrame(slice(0L, FacadeN), ns)
       s.gradedSearch(script.index, script.batch, qs, K, script.metric, ns,
         None, Map.empty, persist = false)
-      require(s.annBuilds.get() >= 1 && builds(s, script.index) >= 1,
+      require(s.annBuilds.get() >= 1 && s.builds(script.index).get() >= 1,
         s"$ns layout/derived build did not run")
       val expect = (0L until FacadeN).filter(_ % script.delMod == 0)
         .map(_.toString)
@@ -1428,12 +1417,12 @@ object StoreOps {
     * kill set, the delta arrives exact, the rerank is exact cosine —
     * so the oracle unions the persisted candidates with the
     * script-known delta ids and reranks over load-minus-deletes. Same
-    * sub-staleness-window discipline as q87 (`annBuilds == 1 &&
-    * hnswBuilds == 1` keeps a retune loud). */
+    * sub-staleness-window discipline as q87 (one ann build and
+    * one hnsw build, `inWindow`, keep a retune loud). */
   def q123(spark: SparkSession, dir: String): DataFrame = {
     val fx = durableFixture(spark, dir, scripts("q123"))
     val hits = graded(fx, batch = false).head
-    lastDurableHnswAux = fx.store.hnswLayoutDir(fx.ns, fx.qv.length)
+    lastDurableHnswAux = fx.store.layoutDir("hnsw", fx.ns, fx.qv.length)
     dfFrame(spark, hits)
   }
 
@@ -1496,12 +1485,12 @@ object StoreOps {
     * unions the script-known delta ids, and reranks over
     * load-minus-deletes: the q58/q61 contract carried onto the durable
     * layout. Same sub-staleness-ratio window discipline as q87 (the
-    * `annBuilds == 1 && pqBuilds == 1` require keeps a future retune
+    * one-ann-build, one-pq-build `inWindow` check keeps a future retune
     * loud). */
   def q92(spark: SparkSession, dir: String): DataFrame = {
     val fx = durableFixture(spark, dir, scripts("q92"))
     val hits = graded(fx, batch = false).head
-    lastDurablePqAux = fx.store.pqLayoutDir(fx.ns, fx.qv.length)
+    lastDurablePqAux = fx.store.layoutDir("pq", fx.ns, fx.qv.length)
     dfFrame(spark, hits)
   }
 
@@ -1603,7 +1592,7 @@ object StoreOps {
       DOpqNs, None, Map.empty).head
     require(store.pqRotation(DOpqNs, qv.length).isDefined,
       "q149 grades the rotation — the durable code tables must be OPQ-built")
-    lastDurableOpqAux = store.pqLayoutDir(DOpqNs, qv.length)
+    lastDurableOpqAux = store.layoutDir("pq", DOpqNs, qv.length)
       .map((_, qv.length))
     dfFrame(spark, hits)
   }
@@ -2164,7 +2153,7 @@ object StoreOps {
   def q110(spark: SparkSession, dir: String): DataFrame = {
     val fx = durableFixture(spark, dir, scripts("q110"))
     val hits = graded(fx, batch = false).head
-    lastDurableImiAux = fx.store.imiLayoutDir(fx.ns, fx.qv.length)
+    lastDurableImiAux = fx.store.layoutDir("imi", fx.ns, fx.qv.length)
       .map(a => (a, s"$a/probes"))
     dfFrame(spark, hits)
   }
@@ -2248,7 +2237,7 @@ object StoreOps {
     val hits = graded(fx, batch = false).head
     lastDurableBqAux = for {
       ann <- fx.store.annLayoutDir(fx.ns, fx.qv.length)
-      bq <- fx.store.bqLayoutDir(fx.ns, fx.qv.length)
+      bq <- fx.store.layoutDir("bq", fx.ns, fx.qv.length)
     } yield (ann._1, bq)
     dfFrame(spark, hits)
   }
@@ -2467,7 +2456,7 @@ object StoreOps {
     val fx = durableFixture(spark, dir, scripts("q170"))
     val hits = graded(fx, batch = false).head
     pairParity(spark, dir, fx)
-    lastDFPqAux = fx.store.pqLayoutDir(fx.ns, fx.qv.length)
+    lastDFPqAux = fx.store.layoutDir("pq", fx.ns, fx.qv.length)
     dfFrame(spark, hits)
   }
 
@@ -2492,7 +2481,7 @@ object StoreOps {
     pairParity(spark, dir, fx)
     lastDFBqAux = for {
       ann <- fx.store.annLayoutDir(fx.ns, fx.qv.length)
-      bq <- fx.store.bqLayoutDir(fx.ns, fx.qv.length)
+      bq <- fx.store.layoutDir("bq", fx.ns, fx.qv.length)
     } yield (ann._1, bq)
     dfFrame(spark, hits)
   }
@@ -2517,7 +2506,7 @@ object StoreOps {
     val fx = durableFixture(spark, dir, scripts("q172"))
     val hits = graded(fx, batch = false).head
     pairParity(spark, dir, fx)
-    lastDFImiAux = fx.store.imiLayoutDir(fx.ns, fx.qv.length)
+    lastDFImiAux = fx.store.layoutDir("imi", fx.ns, fx.qv.length)
       .map(a => (a, s"$a/probes"))
     dfFrame(spark, hits)
   }
@@ -2536,7 +2525,7 @@ object StoreOps {
     val fx = durableFixture(spark, dir, scripts("q173"))
     val hits = graded(fx, batch = false).head
     pairParity(spark, dir, fx)
-    lastDFHnswAux = fx.store.hnswLayoutDir(fx.ns, fx.qv.length)
+    lastDFHnswAux = fx.store.layoutDir("hnsw", fx.ns, fx.qv.length)
     dfFrame(spark, hits)
   }
 
@@ -2648,7 +2637,7 @@ object StoreOps {
     val fx = durableFixture(spark, dir, scripts("q181"))
     val hits = graded(fx, batch = false).head
     exactTop1Parity(dir, fx, hits)
-    lastDPqAsOfAux = fx.store.pqLayoutDir(fx.ns, fx.qv.length)
+    lastDPqAsOfAux = fx.store.layoutDir("pq", fx.ns, fx.qv.length)
     dfFrame(spark, hits)
   }
 
@@ -2756,7 +2745,7 @@ object StoreOps {
     val fx = durableFixture(spark, dir, scripts("q200"))
     val res = graded(fx, batch = true)
     fixtureParity(fx, dir)(fx.queries, _ => res)
-    lastDFPqBAsOfAux = fx.store.pqLayoutDir(fx.ns, fx.qv.length)
+    lastDFPqBAsOfAux = fx.store.layoutDir("pq", fx.ns, fx.qv.length)
     batchHitsFrame(spark, res)
   }
 
@@ -2778,7 +2767,7 @@ object StoreOps {
     fixtureParity(fx, dir)(fx.queries, _ => res)
     lastDFBqBAsOfAux = for {
       ann <- fx.store.annLayoutDir(fx.ns, fx.qv.length)
-      bq <- fx.store.bqLayoutDir(fx.ns, fx.qv.length)
+      bq <- fx.store.layoutDir("bq", fx.ns, fx.qv.length)
     } yield (ann._1, bq)
     batchHitsFrame(spark, res)
   }
@@ -2800,7 +2789,7 @@ object StoreOps {
     val fx = durableFixture(spark, dir, scripts("q202"))
     val res = graded(fx, batch = true)
     fixtureParity(fx, dir)(fx.queries, _ => res)
-    lastDFImiBAsOfAux = fx.store.imiLayoutDir(fx.ns, fx.qv.length)
+    lastDFImiBAsOfAux = fx.store.layoutDir("imi", fx.ns, fx.qv.length)
     batchHitsFrame(spark, res)
   }
 
@@ -2825,7 +2814,7 @@ object StoreOps {
     val fx = durableFixture(spark, dir, scripts("q203"))
     val res = graded(fx, batch = true)
     fixtureParity(fx, dir)(fx.queries, _ => res)
-    lastDFHnswBAsOfAux = fx.store.hnswLayoutDir(fx.ns, fx.qv.length)
+    lastDFHnswBAsOfAux = fx.store.layoutDir("hnsw", fx.ns, fx.qv.length)
     batchHitsFrame(spark, res)
   }
 
@@ -2877,7 +2866,7 @@ object StoreOps {
     exactTop1Parity(dir, fx, hits)
     lastDBqAsOfAux = for {
       ann <- fx.store.annLayoutDir(fx.ns, fx.qv.length)
-      bq <- fx.store.bqLayoutDir(fx.ns, fx.qv.length)
+      bq <- fx.store.layoutDir("bq", fx.ns, fx.qv.length)
     } yield (ann._1, bq)
     dfFrame(spark, hits)
   }
@@ -2894,7 +2883,7 @@ object StoreOps {
     val fx = durableFixture(spark, dir, scripts("q184"))
     val hits = graded(fx, batch = false).head
     exactTop1Parity(dir, fx, hits)
-    lastDImiAsOfAux = fx.store.imiLayoutDir(fx.ns, fx.qv.length)
+    lastDImiAsOfAux = fx.store.layoutDir("imi", fx.ns, fx.qv.length)
       .map(a => (a, s"$a/probes"))
     dfFrame(spark, hits)
   }
@@ -2912,7 +2901,7 @@ object StoreOps {
     val fx = durableFixture(spark, dir, scripts("q185"))
     val hits = graded(fx, batch = false).head
     exactTop1Parity(dir, fx, hits)
-    lastDHnswAsOfAux = fx.store.hnswLayoutDir(fx.ns, fx.qv.length)
+    lastDHnswAsOfAux = fx.store.layoutDir("hnsw", fx.ns, fx.qv.length)
     dfFrame(spark, hits)
   }
 
@@ -3026,7 +3015,7 @@ object StoreOps {
     val fx = durableFixture(spark, dir, scripts("q134"))
     val res = graded(fx, batch = true)
     fixtureParity(fx, dir)(fx.queries, _ => res)
-    lastDurableBatchPqAux = fx.store.pqLayoutDir(fx.ns, fx.qv.length)
+    lastDurableBatchPqAux = fx.store.layoutDir("pq", fx.ns, fx.qv.length)
     batchHitsFrame(spark, res)
   }
 
@@ -3086,7 +3075,7 @@ object StoreOps {
     fixtureParity(fx, dir)(fx.queries, _ => res)
     lastDurableBatchBqAux = for {
       ann <- fx.store.annLayoutDir(fx.ns, fx.qv.length)
-      bq <- fx.store.bqLayoutDir(fx.ns, fx.qv.length)
+      bq <- fx.store.layoutDir("bq", fx.ns, fx.qv.length)
     } yield (ann._1, bq)
     batchHitsFrame(spark, res)
   }
@@ -3160,7 +3149,7 @@ object StoreOps {
     val fx = durableFixture(spark, dir, scripts("q136"))
     val res = graded(fx, batch = true)
     fixtureParity(fx, dir)(fx.queries, _ => res)
-    lastDurableBatchImiAux = fx.store.imiLayoutDir(fx.ns, fx.qv.length)
+    lastDurableBatchImiAux = fx.store.layoutDir("imi", fx.ns, fx.qv.length)
     batchHitsFrame(spark, res)
   }
 
@@ -3177,7 +3166,7 @@ object StoreOps {
     val fx = durableFixture(spark, dir, scripts("q137"))
     val res = graded(fx, batch = true)
     fixtureParity(fx, dir)(fx.queries, _ => res)
-    lastDurableBatchHnswAux = fx.store.hnswLayoutDir(fx.ns, fx.qv.length)
+    lastDurableBatchHnswAux = fx.store.layoutDir("hnsw", fx.ns, fx.qv.length)
     batchHitsFrame(spark, res)
   }
 

@@ -1674,7 +1674,7 @@ object EventStream {
   def q192(spark: SparkSession, dir: String): DataFrame = {
     val fx = StoreOps.durableFixture(spark, dir, StoreOps.scripts("q192"))
     val out = streamDurAsOf(spark, dir, fx)
-    lastStreamDurPqAsOfAux = fx.store.pqLayoutDir(fx.ns, fx.qv.length)
+    lastStreamDurPqAsOfAux = fx.store.layoutDir("pq", fx.ns, fx.qv.length)
     out
   }
 
@@ -1697,7 +1697,7 @@ object EventStream {
     val out = streamDurAsOf(spark, dir, fx)
     lastStreamDurBqAsOfAux = for {
       a <- fx.store.annLayoutDir(fx.ns, fx.qv.length).map(_._1)
-      b <- fx.store.bqLayoutDir(fx.ns, fx.qv.length)
+      b <- fx.store.layoutDir("bq", fx.ns, fx.qv.length)
     } yield (a, b)
     out
   }
@@ -1719,7 +1719,7 @@ object EventStream {
   def q195(spark: SparkSession, dir: String): DataFrame = {
     val fx = StoreOps.durableFixture(spark, dir, StoreOps.scripts("q195"))
     val out = streamDurAsOf(spark, dir, fx)
-    lastStreamDurImiAsOfAux = fx.store.imiLayoutDir(fx.ns, fx.qv.length)
+    lastStreamDurImiAsOfAux = fx.store.layoutDir("imi", fx.ns, fx.qv.length)
     out
   }
 
@@ -1740,7 +1740,7 @@ object EventStream {
   def q196(spark: SparkSession, dir: String): DataFrame = {
     val fx = StoreOps.durableFixture(spark, dir, StoreOps.scripts("q196"))
     val out = streamDurAsOf(spark, dir, fx)
-    lastStreamDurHnswAsOfAux = fx.store.hnswLayoutDir(fx.ns, fx.qv.length)
+    lastStreamDurHnswAsOfAux = fx.store.layoutDir("hnsw", fx.ns, fx.qv.length)
     out
   }
 
@@ -1841,7 +1841,7 @@ object EventStream {
   def q204(spark: SparkSession, dir: String): DataFrame = {
     val fx = StoreOps.durableFixture(spark, dir, StoreOps.scripts("q204"))
     val out = streamDurAsOf(spark, dir, fx)
-    lastStreamDurPqFAsOfAux = fx.store.pqLayoutDir(fx.ns, fx.qv.length)
+    lastStreamDurPqFAsOfAux = fx.store.layoutDir("pq", fx.ns, fx.qv.length)
     out
   }
 
@@ -1858,7 +1858,7 @@ object EventStream {
     val out = streamDurAsOf(spark, dir, fx)
     lastStreamDurBqFAsOfAux = for {
       a <- fx.store.annLayoutDir(fx.ns, fx.qv.length).map(_._1)
-      b <- fx.store.bqLayoutDir(fx.ns, fx.qv.length)
+      b <- fx.store.layoutDir("bq", fx.ns, fx.qv.length)
     } yield (a, b)
     out
   }
@@ -1868,7 +1868,7 @@ object EventStream {
   def q206(spark: SparkSession, dir: String): DataFrame = {
     val fx = StoreOps.durableFixture(spark, dir, StoreOps.scripts("q206"))
     val out = streamDurAsOf(spark, dir, fx)
-    lastStreamDurImiFAsOfAux = fx.store.imiLayoutDir(fx.ns, fx.qv.length)
+    lastStreamDurImiFAsOfAux = fx.store.layoutDir("imi", fx.ns, fx.qv.length)
     out
   }
 
@@ -1877,7 +1877,7 @@ object EventStream {
   def q207(spark: SparkSession, dir: String): DataFrame = {
     val fx = StoreOps.durableFixture(spark, dir, StoreOps.scripts("q207"))
     val out = streamDurAsOf(spark, dir, fx)
-    lastStreamDurHnswFAsOfAux = fx.store.hnswLayoutDir(fx.ns, fx.qv.length)
+    lastStreamDurHnswFAsOfAux = fx.store.layoutDir("hnsw", fx.ns, fx.qv.length)
     out
   }
 

@@ -298,6 +298,40 @@ class DurableSnapshotSpec extends AnyFunSuite {
     }
   }
 
+  test("warm index requests run a fixed number of Spark jobs on each tier, single and batch") {
+    val d = new DurableVectorStore(spark, tmp())
+    // no staleness count and no tombstone recount between requests
+    spark.conf.set(d.AnnStalenessRatioConf, "0")
+    spark.conf.set(d.TombRefreshMsConf, "0")
+    try {
+      load(d)
+      val queries = Seq(twin, twin.map(-_))
+      def run(idx: String, batch: Boolean): Unit =
+        if (batch) d.searchBatch(queries, 10, namespace = "main", approx = true, index = idx)
+        else d.findSimilar(twin, 10, namespace = "main", approx = true, index = idx)
+      /** index → (single, batch) jobs of a warm request: the layouts built
+        * and the tier decided by the requests before it. */
+      def table(): Map[String, (Int, Int)] = Indexes.map { idx =>
+        run(idx, batch = false)
+        run(idx, batch = true)
+        idx -> ((TestSpark.jobsOf(run(idx, batch = false)), TestSpark.jobsOf(run(idx, batch = true))))
+      }.toMap
+      val onSnapshot = table()
+      d.snapshotMaxRows = -1
+      val onSpark = try table() finally d.snapshotMaxRows = VectorStore.SnapshotMaxRows
+      // the snapshot tier collects only the candidate ids, so only
+      // candidate generation runs jobs; above the bound the rerank is a
+      // Spark plan too
+      assert(onSnapshot == Map("lsh" -> ((2, 2)), "ivf" -> ((1, 2)), "pq" -> ((2, 4)),
+        "bq" -> ((1, 4)), "imi" -> ((1, 2)), "hnsw" -> ((1, 1))), s"snapshot tier: $onSnapshot")
+      assert(onSpark == Map("lsh" -> ((6, 11)), "ivf" -> ((3, 11)), "pq" -> ((5, 13)),
+        "bq" -> ((4, 13)), "imi" -> ((3, 11)), "hnsw" -> ((3, 10))), s"Spark tier: $onSpark")
+    } finally {
+      spark.conf.unset(d.AnnStalenessRatioConf)
+      spark.conf.unset(d.TombRefreshMsConf)
+    }
+  }
+
   test("a namespace that grows past the bound moves onto Spark and returns after a compaction") {
     val d = new DurableVectorStore(spark, tmp())
     d.snapshotMaxRows = 5

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.store.{DurableVectorStore, VectorStore}
+import graft.store.{ApproxIndexes, DurableVectorStore, VectorStore}
 
 /** The durable facade must be semantically interchangeable with the
   * in-memory [[VectorStore]] on the read path (the 100 TB deployment
@@ -529,202 +529,153 @@ class DurableStoreSpec extends AnyFunSuite {
     assert(serving.annBuilds.get() == 2)
   }
 
-  test("durable PQ: codes-only sweep agrees with exact; deletes killed, delta served, one build") {
-    val d = new DurableVectorStore(spark, tmp())
-    val rows = (0 until 60).map(i =>
-      (s"p$i", Seq(math.cos(i * 0.37).toFloat, math.sin(i * 0.37).toFloat,
-        math.cos(i * 0.11).toFloat, math.sin(i * 0.11).toFloat)))
-    d.loadFrame(frame(rows), "pq")
-    val q = rows(9)._2
-    val first = d.findSimilar(q, k = 5, namespace = "pq", approx = true,
-      index = "pq")
-    assert(first.head.id == "p9")
-    assert(d.pqBuilds.get() == 1 && d.annBuilds.get() == 1)
-    // post-layout mutations: the q87 discipline must hold under PQ too
-    assert(d.delete(Seq("p9"), "pq") == Seq("p9"))
-    d.loadFrame(frame(Seq(("zpq", q))), "pq")
-    val hits = d.findSimilar(q, k = 5, namespace = "pq", approx = true,
-      index = "pq")
-    assert(!hits.map(_.id).contains("p9"), "PQ served a deleted row")
-    assert(hits.head.id == "zpq" && math.abs(hits.head.score - 1.0) < 1e-6)
-    assert(d.pqBuilds.get() == 1 && d.annBuilds.get() == 1,
-      "sub-threshold mutations must not rebuild the code tables")
-    // exact-path agreement on the top hit
-    assert(hits.head.id ==
-      d.findSimilar(q, k = 5, namespace = "pq").head.id)
-    // the codes table really is codes-only (id, codes, cell) — no vectors
-    val codesDir = d.pqLayoutDir("pq", 4).get + "/codes"
-    val schema = spark.read.parquet(codesDir).schema.fieldNames.toSet
-    assert(schema == Set("id", "codes", "cell"),
-      s"codes table carries more than codes: $schema")
-    // PQ is cosine-only, loudly
-    intercept[IllegalArgumentException] {
-      d.findSimilar(q, k = 5, metric = "l2", namespace = "pq", approx = true,
-        index = "pq")
-    }
-  }
+  /** One derived index's case: its title words, what a rebuild would
+    * redo, and the checks of its own artifact (`dir` is its
+    * [[DurableVectorStore.layoutDir]]) and any route of its own. */
+  private case class DerivedCase(index: String, idPrefix: String, label: String,
+                                 policy: String, structure: String,
+                                 artifact: (DurableVectorStore, String, Seq[(String, Seq[Float])]) => Unit)
 
-  test("durable BQ: sign-bit sweep agrees with exact; deletes killed, delta served, one build") {
-    val d = new DurableVectorStore(spark, tmp())
-    val rows = (0 until 60).map(i =>
-      (s"b$i", Seq(math.cos(i * 0.37).toFloat, math.sin(i * 0.37).toFloat,
-        math.cos(i * 0.11).toFloat, math.sin(i * 0.11).toFloat)))
-    d.loadFrame(frame(rows), "bq")
-    val q = rows(9)._2
-    val first = d.findSimilar(q, k = 5, namespace = "bq", approx = true,
-      index = "bq")
-    assert(first.head.id == "b9")
-    assert(d.bqBuilds.get() == 1 && d.annBuilds.get() == 1)
-    // post-layout mutations: the q87 discipline must hold under BQ too
-    assert(d.delete(Seq("b9"), "bq") == Seq("b9"))
-    d.loadFrame(frame(Seq(("zbq", q))), "bq")
-    val hits = d.findSimilar(q, k = 5, namespace = "bq", approx = true,
-      index = "bq")
-    assert(!hits.map(_.id).contains("b9"), "BQ served a deleted row")
-    assert(hits.head.id == "zbq" && math.abs(hits.head.score - 1.0) < 1e-6)
-    assert(d.bqBuilds.get() == 1 && d.annBuilds.get() == 1,
-      "sub-threshold mutations must not rebuild the sign-bit codes")
-    // exact-path agreement on the top hit
-    assert(hits.head.id ==
-      d.findSimilar(q, k = 5, namespace = "bq").head.id)
-    // the codes table really is sign bits only (id, code words, cell):
-    // 4 dims pack into ONE bigint word — 8 bytes per candidate row
-    val codesDir = d.bqLayoutDir("bq", 4).get + "/codes"
-    val codes = spark.read.parquet(codesDir)
-    assert(codes.schema.fieldNames.toSet == Set("id", "code", "cell"),
-      s"codes table carries more than sign bits: ${codes.schema.fieldNames.toSet}")
-    import org.apache.spark.sql.functions.{col, size => asize}
-    assert(codes.where(asize(col("code")) =!= 1).count() == 0,
-      "4-dim vectors must pack into exactly one 64-bit word")
-    // BQ is cosine-only, loudly
-    intercept[IllegalArgumentException] {
-      d.findSimilar(q, k = 5, metric = "l2", namespace = "bq", approx = true,
-        index = "bq")
-    }
-  }
-
-  test("durable LSH: bucket-mate probe agrees with exact; deletes killed, delta served, one build") {
-    val d = new DurableVectorStore(spark, tmp())
-    val rows = (0 until 60).map(i =>
-      (s"l$i", Seq(math.cos(i * 0.37).toFloat, math.sin(i * 0.37).toFloat,
-        math.cos(i * 0.11).toFloat, math.sin(i * 0.11).toFloat)))
-    d.loadFrame(frame(rows), "lsh")
-    val q = rows(9)._2
-    val first = d.findSimilar(q, k = 5, namespace = "lsh", approx = true,
-      index = "lsh")
-    assert(first.head.id == "l9")
-    assert(d.lshBuilds.get() == 1 && d.annBuilds.get() == 1)
-    // post-layout mutations: the q87 discipline must hold under LSH too
-    assert(d.delete(Seq("l9"), "lsh") == Seq("l9"))
-    d.loadFrame(frame(Seq(("zlsh", q))), "lsh")
-    val hits = d.findSimilar(q, k = 5, namespace = "lsh", approx = true,
-      index = "lsh")
-    assert(!hits.map(_.id).contains("l9"), "LSH served a deleted row")
-    assert(hits.head.id == "zlsh" && math.abs(hits.head.score - 1.0) < 1e-6)
-    assert(d.lshBuilds.get() == 1 && d.annBuilds.get() == 1,
-      "sub-threshold mutations must not rebuild the signature table")
-    // exact-path agreement on the top hit
-    assert(hits.head.id ==
-      d.findSimilar(q, k = 5, namespace = "lsh").head.id)
-    // the signature table is (id, band, bucket), Bands rows per vector —
-    // the live mount's exact signature shape, persisted
-    val sigsDir = d.lshLayoutDir("lsh", 4).get + "/sigs"
-    val sigs = spark.read.parquet(sigsDir)
-    assert(sigs.schema.fieldNames.toSet == Set("id", "band", "bucket"),
-      s"signature table shape drifted: ${sigs.schema.fieldNames.toSet}")
-    assert(sigs.count() == 60L * graft.operators.Ann.Bands,
-      "one signature row per (vector, band) expected")
-    // batch form equals Q sequential probes (the one-scan thesis)
-    val qs = Seq(rows(3)._2, rows(20)._2, q)
-    val batch = d.searchBatch(qs, k = 5, namespace = "lsh", approx = true, index = "lsh")
-    qs.zipWithIndex.foreach { case (qi, i) =>
-      val single = d.findSimilar(qi, k = 5, namespace = "lsh",
-        approx = true, index = "lsh").map(h => (h.id, h.score))
-      assert(batch(i).map(h => (h.id, h.score)) == single,
-        s"lsh batch result $i diverged from the single-query search")
-    }
-    // LSH is cosine-only, loudly
-    intercept[IllegalArgumentException] {
-      d.findSimilar(q, k = 5, metric = "l2", namespace = "lsh", approx = true,
-        index = "lsh")
-    }
-  }
-
-  test("durable IMI: product-grid probe agrees with exact; deletes killed, delta served, one build") {
-    val d = new DurableVectorStore(spark, tmp())
-    val rows = (0 until 60).map(i =>
-      (s"m$i", Seq(math.cos(i * 0.37).toFloat, math.sin(i * 0.37).toFloat,
-        math.cos(i * 0.11).toFloat, math.sin(i * 0.11).toFloat)))
-    d.loadFrame(frame(rows), "imi")
-    val q = rows(9)._2
-    val first = d.findSimilar(q, k = 5, namespace = "imi", approx = true,
-      index = "imi")
-    assert(first.head.id == "m9")
-    assert(d.imiBuilds.get() == 1 && d.annBuilds.get() == 1)
-    // post-layout mutations: the q87 discipline must hold under IMI too
-    assert(d.delete(Seq("m9"), "imi") == Seq("m9"))
-    d.loadFrame(frame(Seq(("zimi", q))), "imi")
-    val hits = d.findSimilar(q, k = 5, namespace = "imi", approx = true,
-      index = "imi")
-    assert(!hits.map(_.id).contains("m9"), "IMI served a deleted row")
-    assert(hits.head.id == "zimi" && math.abs(hits.head.score - 1.0) < 1e-6)
-    assert(d.imiBuilds.get() == 1 && d.annBuilds.get() == 1,
-      "sub-threshold mutations must not rebuild the product grid")
-    // exact-path agreement on the top hit
-    assert(hits.head.id ==
-      d.findSimilar(q, k = 5, namespace = "imi").head.id)
-    // the grid really is two-level: cells carry full records, cell ids
-    // live in [0, k*k)
-    val gridDir = d.imiLayoutDir("imi", 4).get
-    val assign = spark.read.parquet(s"$gridDir/assign")
-    assert(assign.columns.toSet == Set("id", "cell"))
-    // empty namespace answers empty through the imi route
+  /** An empty namespace answers empty through the index's route. */
+  private def emptyAnswers(d: DurableVectorStore, index: String, q: Seq[Float]): Unit =
     assert(d.findSimilar(q, k = 5, namespace = "no_rows", approx = true,
-      index = "imi").isEmpty)
-    // IMI is cosine-only, loudly
-    intercept[IllegalArgumentException] {
-      d.findSimilar(q, k = 5, metric = "l2", namespace = "imi",
-        approx = true, index = "imi")
+      index = index).isEmpty)
+
+  private val derivedCases = Seq(
+    DerivedCase("pq", "p", "PQ", "codes-only sweep", "the code tables", { (_, dir, _) =>
+      // the codes table really is codes-only (id, codes, cell) — no vectors
+      val schema = spark.read.parquet(dir + "/codes").schema.fieldNames.toSet
+      assert(schema == Set("id", "codes", "cell"),
+        s"codes table carries more than codes: $schema")
+    }),
+    DerivedCase("bq", "b", "BQ", "sign-bit sweep", "the sign-bit codes", { (_, dir, _) =>
+      // the codes table really is sign bits only (id, code words, cell):
+      // 4 dims pack into ONE bigint word — 8 bytes per candidate row
+      val codes = spark.read.parquet(dir + "/codes")
+      assert(codes.schema.fieldNames.toSet == Set("id", "code", "cell"),
+        s"codes table carries more than sign bits: ${codes.schema.fieldNames.toSet}")
+      import org.apache.spark.sql.functions.{col, size => asize}
+      assert(codes.where(asize(col("code")) =!= 1).count() == 0,
+        "4-dim vectors must pack into exactly one 64-bit word")
+    }),
+    DerivedCase("lsh", "l", "LSH", "bucket-mate probe", "the signature table", { (d, dir, rows) =>
+      // the signature table is (id, band, bucket), Bands rows per vector —
+      // the live mount's exact signature shape, persisted
+      val sigs = spark.read.parquet(dir + "/sigs")
+      assert(sigs.schema.fieldNames.toSet == Set("id", "band", "bucket"),
+        s"signature table shape drifted: ${sigs.schema.fieldNames.toSet}")
+      assert(sigs.count() == 60L * graft.operators.Ann.Bands,
+        "one signature row per (vector, band) expected")
+      // batch form equals Q sequential probes (the one-scan thesis)
+      val qs = Seq(rows(3)._2, rows(20)._2, rows(9)._2)
+      val batch = d.searchBatch(qs, k = 5, namespace = "lsh", approx = true, index = "lsh")
+      qs.zipWithIndex.foreach { case (qi, i) =>
+        val single = d.findSimilar(qi, k = 5, namespace = "lsh",
+          approx = true, index = "lsh").map(h => (h.id, h.score))
+        assert(batch(i).map(h => (h.id, h.score)) == single,
+          s"lsh batch result $i diverged from the single-query search")
+      }
+    }),
+    DerivedCase("imi", "m", "IMI", "product-grid probe", "the product grid", { (d, dir, rows) =>
+      // the grid really is two-level: cells carry full records, cell ids
+      // live in [0, k*k)
+      val assign = spark.read.parquet(s"$dir/assign")
+      assert(assign.columns.toSet == Set("id", "cell"))
+      emptyAnswers(d, "imi", rows(9)._2)
+    }),
+    DerivedCase("hnsw", "h", "HNSW", "shard-graph probe", "the shard graphs", { (d, dir, rows) =>
+      // the layout really is graph-shaped: nodes carry record fields and
+      // per-level neighbor lists
+      val nodes = spark.read.parquet(s"$dir/graph")
+      assert(nodes.columns.toSet ==
+        Set("shard", "id", "vec", "metadata", "metadataJson", "level", "nbrs"))
+      emptyAnswers(d, "hnsw", rows(9)._2)
+    }))
+
+  derivedCases.foreach { c =>
+    test(s"durable ${c.label}: ${c.policy} agrees with exact; deletes killed, delta served, one build") {
+      val d = new DurableVectorStore(spark, tmp())
+      val ns = c.index
+      val rows = (0 until 60).map(i =>
+        (s"${c.idPrefix}$i", Seq(math.cos(i * 0.37).toFloat, math.sin(i * 0.37).toFloat,
+          math.cos(i * 0.11).toFloat, math.sin(i * 0.11).toFloat)))
+      d.loadFrame(frame(rows), ns)
+      val q = rows(9)._2
+      def search() = d.findSimilar(q, k = 5, namespace = ns, approx = true, index = c.index)
+      assert(search().head.id == s"${c.idPrefix}9")
+      assert(d.builds(c.index).get() == 1 && d.annBuilds.get() == 1)
+      // post-layout mutations: the q87 discipline must hold on every index
+      assert(d.delete(Seq(s"${c.idPrefix}9"), ns) == Seq(s"${c.idPrefix}9"))
+      d.loadFrame(frame(Seq((s"z${c.index}", q))), ns)
+      val hits = search()
+      assert(!hits.map(_.id).contains(s"${c.idPrefix}9"), s"${c.label} served a deleted row")
+      assert(hits.head.id == s"z${c.index}" && math.abs(hits.head.score - 1.0) < 1e-6)
+      assert(d.builds(c.index).get() == 1 && d.annBuilds.get() == 1,
+        s"sub-threshold mutations must not rebuild ${c.structure}")
+      // exact-path agreement on the top hit
+      assert(hits.head.id == d.findSimilar(q, k = 5, namespace = ns).head.id)
+      c.artifact(d, d.layoutDir(c.index, ns, 4).get, rows)
+      // every derived index is cosine-only, loudly
+      intercept[IllegalArgumentException] {
+        d.findSimilar(q, k = 5, metric = "l2", namespace = ns, approx = true,
+          index = c.index)
+      }
     }
   }
 
-  test("durable HNSW: shard-graph probe agrees with exact; deletes killed, delta served, one build") {
-    val d = new DurableVectorStore(spark, tmp())
-    val rows = (0 until 60).map(i =>
-      (s"h$i", Seq(math.cos(i * 0.37).toFloat, math.sin(i * 0.37).toFloat,
-        math.cos(i * 0.11).toFloat, math.sin(i * 0.11).toFloat)))
-    d.loadFrame(frame(rows), "hnsw")
-    val q = rows(9)._2
-    val first = d.findSimilar(q, k = 5, namespace = "hnsw", approx = true,
-      index = "hnsw")
-    assert(first.head.id == "h9")
-    assert(d.hnswBuilds.get() == 1 && d.annBuilds.get() == 1)
-    // post-layout mutations: the q87 discipline must hold on the graphs
-    assert(d.delete(Seq("h9"), "hnsw") == Seq("h9"))
-    d.loadFrame(frame(Seq(("zhnsw", q))), "hnsw")
-    val hits = d.findSimilar(q, k = 5, namespace = "hnsw", approx = true,
-      index = "hnsw")
-    assert(!hits.map(_.id).contains("h9"), "HNSW served a deleted row")
-    assert(hits.head.id == "zhnsw" && math.abs(hits.head.score - 1.0) < 1e-6)
-    assert(d.hnswBuilds.get() == 1 && d.annBuilds.get() == 1,
-      "sub-threshold mutations must not rebuild the shard graphs")
-    // exact-path agreement on the top hit
-    assert(hits.head.id ==
-      d.findSimilar(q, k = 5, namespace = "hnsw").head.id)
-    // the layout really is graph-shaped: nodes carry record fields and
-    // per-level neighbor lists
-    val gdir = d.hnswLayoutDir("hnsw", 4).get
-    val nodes = spark.read.parquet(s"$gdir/graph")
-    assert(nodes.columns.toSet ==
-      Set("shard", "id", "vec", "metadata", "metadataJson", "level", "nbrs"))
-    // empty namespace answers empty through the hnsw route
-    assert(d.findSimilar(q, k = 5, namespace = "no_rows", approx = true,
-      index = "hnsw").isEmpty)
-    // HNSW is cosine-only, loudly
-    intercept[IllegalArgumentException] {
-      d.findSimilar(q, k = 5, metric = "l2", namespace = "hnsw",
-        approx = true, index = "hnsw")
+  /** 60 spread 8-d rows (8 divides into the PQ subspaces, so the OPQ
+    * rotation is on). */
+  private def spread8(prefix: String): Seq[(String, Seq[Float])] =
+    (0 until 60).map(i => (s"$prefix$i",
+      (1 to 4).flatMap(j => Seq(math.cos(i * 0.37 * j).toFloat, math.sin(i * 0.11 * j).toFloat))))
+
+  derivedCases.map(_.index).foreach { idx =>
+    test(s"durable $idx builds once per ann layout: repeat and batch build nothing, a second namespace builds its own, compact rebuilds once") {
+      val d = new DurableVectorStore(spark, tmp())
+      val rows = spread8("r")
+      d.loadFrame(frame(rows), "one")
+      d.loadFrame(frame(rows), "two")
+      val q = rows(9)._2
+      def search(ns: String) =
+        assert(d.findSimilar(q, k = 5, namespace = ns, approx = true, index = idx).size == 5)
+      def built: Int = d.builds(idx).get()
+      search("one")
+      assert(built == 1, "the first search derives the layout once")
+      search("one")
+      assert(d.searchBatch(Seq(q, rows(20)._2), k = 5, namespace = "one", approx = true,
+        index = idx).forall(_.size == 5))
+      assert(built == 1, "a repeat search and a batch derive nothing")
+      search("two")
+      assert(built == 2, "a second namespace derives its own layout")
+      d.compact()
+      search("one")
+      search("one")
+      assert(built == 3, "after compact() the next search derives exactly once")
+      assert(ApproxIndexes.Names.filterNot(Set(idx, "ivf")).forall(d.builds(_).get() == 0),
+        "no other index derived anything")
     }
+  }
+
+  test("the derived-layout hooks name only layouts the store would serve: None after compact and refreshAnnIndex until the next search") {
+    val d = new DurableVectorStore(spark, tmp())
+    val rows = spread8("k")
+    d.loadFrame(frame(rows), "hooks")
+    val derivedIdx = derivedCases.map(_.index)
+    def searchAll(): Unit = derivedIdx.foreach(i =>
+      d.findSimilar(rows(9)._2, k = 5, namespace = "hooks", approx = true, index = i))
+    def named: Map[String, Boolean] =
+      derivedIdx.map(i => i -> d.layoutDir(i, "hooks", 8).isDefined).toMap +
+        ("pqRotation" -> d.pqRotation("hooks", 8).isDefined)
+    searchAll()
+    assert(named.values.forall(identity), s"after a search: $named")
+    d.compact()
+    assert(named.values.forall(!_), s"after compact(): $named")
+    searchAll()
+    assert(named.values.forall(identity), s"after the next search: $named")
+    d.refreshAnnIndex("hooks", 8)
+    assert(named.values.forall(!_), s"after refreshAnnIndex: $named")
+    searchAll()
+    assert(named.values.forall(identity), s"after the next search: $named")
   }
 
   test("durable ip search routes through the norm-augmented layout; deletes killed, delta served") {
@@ -1399,7 +1350,7 @@ class DurableStoreSpec extends AnyFunSuite {
     assert(hits.size == 10 && hits.forall(_.id.startsWith("r")))
     // the MECHANISM pin: the persisted beam itself holds every matching
     // row — k hits came off the graph, not the starved rescue
-    val aux = d.hnswLayoutDir("acorn", 4).get
+    val aux = d.layoutDir("hnsw", "acorn", 4).get
     val beam = spark.read.parquet(s"$aux/cands")
       .collect().map(_.getString(0)).toSet
     assert(beam.count(_.startsWith("r")) == 10,

@@ -977,6 +977,23 @@ class RestServerSpec extends AnyFunSuite {
            | "index": "ivf", "as_of": ${builtSeq - 1}}""".stripMargin)
       assert(yc == 200, yb)
       assert(mapper.readTree(yb).get("branch").asText() == "exact-asof", yb)
+      // a derived index answers from its own layout: after an ivf-only
+      // search the pq layout is not derived yet, and the first pq search
+      // derives it
+      def pqExplain(): com.fasterxml.jackson.databind.JsonNode = {
+        val (c, b) = send("POST", s"$base/query/explain?namespace=ens",
+          """{"query": [1.0, 0.0], "top_k": 2, "durable": true,
+            | "approx": true, "index": "pq"}""".stripMargin)
+        assert(c == 200, b)
+        mapper.readTree(b)
+      }
+      val cold = pqExplain()
+      assert(!cold.get("layout_cached").asBoolean, cold.toString)
+      assert(cold.get("notes").toString.contains("the first search derives it"), cold.toString)
+      d.findSimilar(Seq(1f, 0f), k = 2, namespace = "ens", approx = true, index = "pq")
+      val warm = pqExplain()
+      assert(warm.get("layout_cached").asBoolean, warm.toString)
+      assert(!warm.get("notes").toString.contains("derives it"), warm.toString)
       // explain costs no search: the rescue counter is untouched
       val rescues0 = d.exactRescues.get()
       send("POST", s"$base/query/explain?namespace=ens",

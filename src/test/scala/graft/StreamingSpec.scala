@@ -580,8 +580,8 @@ class StreamingSpec extends AnyFunSuite {
       .select("id", "metadata").collect()
       .forall(r => r.getMap[String, String](1).get("tenant")
         .contains((r.getString(0).toLong % 3).toString)))
-    assert(fx.inWindow && fx.store.pqBuilds.get() == 1)
+    assert(fx.inWindow && fx.store.builds("pq").get() == 1)
     assert(so.durableFixture(spark, dir, script).store eq fx.store)
-    assert(fx.store.pqBuilds.get() == 1, "the repeat call re-ran the script")
+    assert(fx.store.builds("pq").get() == 1, "the repeat call re-ran the script")
   }
 }
