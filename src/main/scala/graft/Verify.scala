@@ -39,7 +39,13 @@ object Verify {
             s"selected ${selected.size}/${SparkEntry.queries.size} queries")
         Seq(s"${q("__only")}: [${only.map(q).mkString(",")}]")
       }
-    val json = (marker ++ SparkEntry.oracleSql
+    // likewise for SPARK_GRAFT_EXTRA_CONF: the conf overrides the session
+    // ran under are recorded, so a contaminated dump reads as such
+    val confMarker =
+      if (GraftSession.extraConf.isEmpty) Seq.empty
+      else Seq(s"${q("__extra_conf")}: " + GraftSession.extraConf
+        .map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}"))
+    val json = (marker ++ confMarker ++ SparkEntry.oracleSql
       .filter { case (k, _) => selected.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }).mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -34,6 +34,34 @@ object AdcKernels {
     CatalystBridge.column(HammingWordsExpr(
       CatalystBridge.expression(a), CatalystBridge.expression(b)))
 
+  /** The per-row loop of [[PqAdcExpr]]: Σᵢ lut(i)(codes(i)) over the
+    * shorter of the two, in index order. The expression's interpreted
+    * path and the driver-side probes call it; its generated code is the
+    * same loop. */
+  def pqAdcRow(codes: ArrayData, lut: ArrayData): Double = {
+    val n = math.min(codes.numElements(), lut.numElements())
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      acc += lut.getArray(i).getDouble(codes.getInt(i))
+      i += 1
+    }
+    acc
+  }
+
+  /** The per-row loop of [[HammingWordsExpr]]: Σᵢ bit_count(a(i) ^ b(i))
+    * over the shorter of the two, shared as [[pqAdcRow]] is. */
+  def hammingRow(a: ArrayData, b: ArrayData): Int = {
+    val n = math.min(a.numElements(), b.numElements())
+    var acc = 0
+    var i = 0
+    while (i < n) {
+      acc += java.lang.Long.bitCount(a.getLong(i) ^ b.getLong(i))
+      i += 1
+    }
+    acc
+  }
+
   /** `l2sq_fd(x, m)` = Σᵢ ((double) x(i) − m(i))² over a FLOAT vector
     * and a DOUBLE centroid — the Lloyd-assignment inner loop (n×k×dim
     * per round, q80/q104/q111/q114's argmin). [[VectorDistance]] covers
@@ -67,18 +95,8 @@ case class PqAdcExpr(left: Expression, right: Expression)
 
   override def prettyName: String = "pq_adc"
 
-  override def nullSafeEval(c: Any, l: Any): Any = {
-    val codes = c.asInstanceOf[ArrayData]
-    val lut = l.asInstanceOf[ArrayData]
-    val n = math.min(codes.numElements(), lut.numElements())
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      acc += lut.getArray(i).getDouble(codes.getInt(i))
-      i += 1
-    }
-    acc
-  }
+  override def nullSafeEval(c: Any, l: Any): Any =
+    AdcKernels.pqAdcRow(c.asInstanceOf[ArrayData], l.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (c, l) => {
@@ -114,18 +132,8 @@ case class HammingWordsExpr(left: Expression, right: Expression)
 
   override def prettyName: String = "hamming_words"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var acc = 0
-    var i = 0
-    while (i < n) {
-      acc += java.lang.Long.bitCount(x.getLong(i) ^ y.getLong(i))
-      i += 1
-    }
-    acc
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    AdcKernels.hammingRow(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {

@@ -736,6 +736,67 @@ object Hnsw {
     invalidateGraphs(aux)
   }
 
+  /** Rebuild one durable shard's graph from its node rows (any order):
+    * (nodes in index order, graph) — the executor probes' load and the
+    * driver's ([[driverGraphsD]]). */
+  private[graft] def loadShardD(rowsIn: Array[StoredNodeD]): (Array[StoredNodeD], ShardGraph) = {
+    val arr = rowsIn.sortBy(_.id)
+    val idx = arr.iterator.map(_.id).zipWithIndex.toMap
+    val nbrs = arr.map(_.nbrs.map(_.map(idx).toArray).toArray)
+    (arr, ShardGraph.fromAdjacency(arr.map(_.vec.toArray), arr.map(_.level), nbrs))
+  }
+
+  // ---- driver-resident graphs (both store mounts' snapshot tier) -------
+  //
+  // A layout small enough for the driver loads every shard graph there
+  // once, from the persisted `graph/` rows, with the loaders the executor
+  // probes use, so the driver's beams walk the same graphs: the
+  // executor-static [[graphCache]] plays no part.
+
+  /** The string-id shard graphs of the store-attached layout at `aux`,
+    * loaded on the driver; None when it holds more than `bound` nodes. */
+  private[graft] def driverGraphsS(spark: SparkSession, aux: String,
+                                   bound: Int): Option[Seq[(Array[String], ShardGraph)]] = {
+    import spark.implicits._
+    val nodes = spark.read.parquet(s"$aux/graph").as[HnswNodeS]
+      .limit(math.max(bound + 1, 0)).collect()
+    if (nodes.length > bound) None
+    else Some(nodes.groupBy(_.shard).toSeq.sortBy(_._1).map { case (_, ns) =>
+      loadShard(ns.map(n => (n.id, n.vec.toArray, n.level, n.nbrs.map(_.toArray).toArray)))
+    })
+  }
+
+  /** One query's beam winners over every driver-resident graph: what
+    * [[shardCandidatesBatchS]] emits for it. */
+  private[graft] def driverBeamS(graphs: Seq[(Array[String], ShardGraph)],
+                                 query: Array[Float]): Seq[String] = {
+    val qv = normalize(query)
+    graphs.flatMap { case (ids, g) => g.search(qv, EfSearch).map(ids(_)) }
+  }
+
+  /** The durable mount's record-carrying shard graphs at `aux`, loaded
+    * on the driver; None when they hold more than `bound` nodes. */
+  private[graft] def driverGraphsD(spark: SparkSession, aux: String,
+                                   bound: Int): Option[Seq[(Array[StoredNodeD], ShardGraph)]] = {
+    import spark.implicits._
+    val nodes = spark.read.parquet(s"$aux/graph").as[HnswNodeD]
+      .limit(math.max(bound + 1, 0)).collect()
+    if (nodes.length > bound) None
+    else Some(nodes.groupBy(_.shard).toSeq.sortBy(_._1).map { case (_, ns) =>
+      loadShardD(ns.map(n => StoredNodeD(n.id, n.vec, n.metadata, n.metadataJson, n.level, n.nbrs)))
+    })
+  }
+
+  /** One query's beam winners over every driver-resident durable graph,
+    * with the flat filter inside the beam: the nodes
+    * [[shardCandidatesD]] emits for it. */
+  private[graft] def driverBeamD(graphs: Seq[(Array[StoredNodeD], ShardGraph)],
+                                 query: Array[Float],
+                                 flatFilter: Map[String, String]): Seq[StoredNodeD] = {
+    val qv = normalize(query)
+    graphs.flatMap(g => beamD(g, qv, flatFilter).map(g._1(_)))
+  }
+
   /** Visit budget for the predicate-aware beam: bounds the traversal
     * sweep under vanishing selectivity (the caller's starved fallback
     * carries the k contract beyond it). */
@@ -795,14 +856,10 @@ object Hnsw {
           val loaded =
             if (hit != null) hit.asInstanceOf[(Array[StoredNodeD], ShardGraph)]
             else {
-              val arr = it.toArray.sortBy(_.id)
+              val arr = it.toArray
               if (arr.isEmpty) null
               else {
-                val idx = arr.iterator.map(_.id).zipWithIndex.toMap
-                val nbrs = arr.map(_.nbrs.map(_.map(idx).toArray).toArray)
-                val g = ShardGraph.fromAdjacency(
-                  arr.map(_.vec.toArray), arr.map(_.level), nbrs)
-                val lg = (arr, g)
+                val lg = loadShardD(arr)
                 graphCache.put(key, lg)
                 lg
               }
@@ -852,14 +909,10 @@ object Hnsw {
           val loaded =
             if (hit != null) hit.asInstanceOf[(Array[StoredNodeD], ShardGraph)]
             else {
-              val arr = it.toArray.sortBy(_.id)
+              val arr = it.toArray
               if (arr.isEmpty) null
               else {
-                val idx = arr.iterator.map(_.id).zipWithIndex.toMap
-                val nbrs = arr.map(_.nbrs.map(_.map(idx).toArray).toArray)
-                val g = ShardGraph.fromAdjacency(
-                  arr.map(_.vec.toArray), arr.map(_.level), nbrs)
-                val lg = (arr, g)
+                val lg = loadShardD(arr)
                 graphCache.put(key, lg)
                 lg
               }

@@ -238,6 +238,15 @@ object Pq {
     // interpreted HOF path on every PQ consumer's hot loop
     round(graft.functions.AdcKernels.pqAdc(col("codes"), col("lut")), 6)
 
+  /** [[adcCol]]'s rounding on the driver: Spark's `round(_, 6)` of a
+    * double (HALF_UP over the value's shortest decimal form; NaN and the
+    * infinities pass through), so a driver-side cut on (rounded ADC, id)
+    * ties exactly where the sweep's does. */
+  private[graft] def roundAdc(adc: Double): Double =
+    if (adc.isNaN || adc.isInfinite) adc
+    else java.math.BigDecimal.valueOf(adc)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+
   /** One-row-per-query (qid, lut) frame for the broadcast side of the
     * ADC sweep. */
   private[graft] def lutFrame(spark: SparkSession,

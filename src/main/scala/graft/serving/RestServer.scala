@@ -58,14 +58,16 @@ import graft.store.{ApproxIndexes, DurableVectorStore, VectorStore}
   * [[graft.store.VectorStore.SnapshotMaxRows]] rows (10,000, the
   * reference's capacity per namespace, `index.py:37`) answers from a
   * driver snapshot collected once per store epoch, so exact, batch, range
-  * and threshold searches cost no Spark job and the indexed ones only
-  * their candidate generation; larger namespaces answer from Spark plans.
+  * and threshold searches cost no Spark job, and neither do the indexed
+  * ones: each index layout holds its candidate rows on the driver too and
+  * picks the candidates there; larger namespaces answer from Spark plans.
   * A durable namespace of at most that many row versions (data rows plus
   * tombstones) is held the same way, stamped with the files a read sees
-  * and re-collected when they change: its exact and `as_of` searches,
-  * single and batch, cost no Spark job and its indexed ones only their
-  * candidate generation. Both tiers return the same hits; `POST
-  * /query/explain` says which one a search takes on either mount.
+  * and re-collected when they change: its exact, `as_of` and indexed
+  * searches, single and batch, cost no Spark job. Both tiers return the
+  * same hits; `POST /query/explain` says which one a search takes on
+  * either mount, and for an indexed search where its candidates come
+  * from (a driver probe over the layout's rows, or a Spark probe).
   *
   * Durable mount: a [[DurableVectorStore]] passed as `durable` exposes
   * the 100 TB layout route-for-route. Reads — `POST /search` with

@@ -3,6 +3,7 @@ package graft.store
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -89,8 +90,10 @@ import graft.model.{SearchHit, VectorRecord}
   * collect, so a read still sees whatever had landed when it listed —
   * any process's commits, with no TTL. On it, exact single and batch
   * searches, live and as-of, the starved skip and both rescues run no
-  * Spark job, and the six indexes still pick candidates on their layouts
-  * but rerank the collected ids on the driver. Larger namespaces run the
+  * Spark job, and neither do the six indexes: each layout holds its
+  * candidate rows on the driver too (collected once per layout), picks the
+  * candidates there with the kernels its Spark frames run, and reranks
+  * them on the snapshot. Larger namespaces run the
   * Spark plans; finding one costs one bounded collect, paid again only
   * after a new tombstone file or a generation flip (the stamp changes
   * that can shrink it). The tiers return the same hits bit for bit
@@ -988,8 +991,8 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     * the string-id tie-break are [[Scoring]]'s — identical to
     * [[VectorStore.findSimilar]] by construction. A namespace under the
     * driver snapshot bound answers the exact search on the driver with
-    * no Spark job, and an indexed one reranks its candidates there (see
-    * the class doc's serving tiers).
+    * no Spark job, and an indexed one too: its layout's candidate rows
+    * are held there (see the class doc's serving tiers).
     *
     * `approx = true` routes through a store-attached durable index —
     * the read path that makes this store servable at 10⁹
@@ -1283,11 +1286,61 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     val r = Req(queries, batch, k, metric, namespace, asOf, filter,
       jsonFilter, persist)
     serve(r) { e =>
-      val layout =
-        if (index == "ivf") ivfLayout(e) else derivedFor(index, namespace, r.dim, e)
-      if (batch) rerankBatch(r, e, layout.many(r, e))
-      else Seq(rerankOne(r, e, layout.one(r, e)))
+      val layout = layoutOf(index, r, e)
+      durableSnapshot(namespace) match {
+        case Some(snap) => rankOnDriver(r, e, snap, candidateIds(layout, r, e))
+        case None =>
+          if (batch) rerankBatch(r, e, layout.many(r, e))
+          else Seq(rerankOne(r, e, layout.one(r, e)))
+      }
     }
+  }
+
+  /** The index's layout over the ann layout `e`: IVF is `e` itself,
+    * every other index comes through [[derivedFor]]. */
+  private def layoutOf(index: String, r: Req, e: AnnEntry): Layout =
+    if (index == "ivf") ivfLayout(e) else derivedFor(index, r.namespace, r.dim, e)
+
+  /** Each query's candidate ids for the driver rerank of a snapshot-tier
+    * namespace: picked on the driver from the layout's held rows, or, for
+    * a layout holding more rows than the bound, collected from its
+    * frames. */
+  private def candidateIds(l: Layout, r: Req, e: AnnEntry): Seq[Seq[String]] =
+    l.onDriver(r, e).getOrElse(collectedIds(l, r, e))
+
+  /** Each query's candidate ids from the layout's Spark frames. */
+  private def collectedIds(l: Layout, r: Req, e: AnnEntry): Seq[Seq[String]] =
+    if (!r.batch) Seq(l.one(r, e).ids.as[String].collect().toSeq)
+    else {
+      val byQuery = l.many(r, e).select(col("__qid").cast("int"), col("id"))
+        .collect().groupMap(_.getInt(0))(_.getString(1))
+      r.queries.indices.map(i => byQuery.getOrElse(i, Array.empty[String]).toSeq)
+    }
+
+  /** Each query's candidate ids, as a set, from the path the namespace's
+    * tier takes: the driver probe on the snapshot tier, the collected
+    * Spark frames above the bound; empty without a layout. Spec hook for
+    * the driver/Spark candidate parity. */
+  private[graft] def candidateSets(index: String, queries: Seq[Seq[Float]], batch: Boolean,
+                                   namespace: String, metric: String = "cosine",
+                                   filter: Map[String, String] = Map.empty,
+                                   jsonFilter: Map[String, String] = Map.empty): Seq[Set[String]] = {
+    val r = Req(queries, batch, 10, metric, namespace, None, filter, jsonFilter, persist = false)
+    annEntryFresh(namespace, r.dim, spaceOf(metric)).fold(Seq.fill(queries.size)(Set.empty[String])) { e =>
+      val l = layoutOf(index, r, e)
+      (if (durableSnapshot(namespace).isDefined) candidateIds(l, r, e)
+       else collectedIds(l, r, e)).map(_.toSet)
+    }
+  }
+
+  /** Layouts holding their candidate rows on the driver, as (index,
+    * namespace, dim) — the ann layout's records as "ivf" ("ivf:mips" in
+    * the mips space). Spec hook: one row set per key at most. */
+  private[graft] def heldLayoutRows: Seq[(String, String, Int)] = {
+    import scala.jdk.CollectionConverters._
+    annCache.asScala.toSeq.collect { case ((ns, dim, space), e) if e.records.collected =>
+      (if (space == "raw") "ivf" else s"ivf:$space", ns, dim)
+    } ++ derived.asScala.toSeq.collect { case (key, l) if l.holdsRows => key }
   }
 
   /** The one serving control flow for every indexed read:
@@ -1362,61 +1415,59 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     exactAt(r.queries)
   }
 
-  /** The single-query rerank tail shared by the six indexes: the
-    * candidate records minus the kill set at the horizon, union the delta
-    * tail at the horizon, exact score, rank, top k. On a snapshot-tier
-    * namespace only the candidate ids are collected; the same rows are
-    * then ranked on the driver ([[DurableSnapshot.tail]], which applies
-    * the filters). */
-  private def rerankOne(r: Req, e: AnnEntry, c: Cands): Seq[SearchHit] =
-    durableSnapshot(r.namespace) match {
-      case Some(snap) =>
-        val cands = c.ids.as[String].collect().toSet
-        snap.tail(cands, e.builtSeq, r.asOf)
-          .topK(r.query, r.k, r.metric, r.filter, r.jsonFilter)
-      case None =>
-        val scored = c.records
-          .join(broadcast(horizonKills(r.namespace, e.builtSeq, r.asOf)),
-            col("id") === col("__kid"), "left_anti")
-          .unionByName(
-            horizonDelta(r.namespace, e.builtSeq, recordCols, r.pred, r.asOf))
-          .withColumn("score",
-            Scoring.score(r.metric, col("values"), Scoring.litVec(r.query)))
-        Scoring.ranked(scored, r.metric).limit(r.k)
-          .select(col("id"), col("score"), col("values"), col("metadata"),
-            col("metadataJson"))
-          .as[SearchHit].collect().toSeq
+  /** The driver rerank of a snapshot-tier namespace, over each query's
+    * candidate ids. One query ranks [[DurableSnapshot.tail]]: the
+    * candidates' rows as the layout holds them, minus the kills at the
+    * horizon, plus the delta tail. A batch ranks each query's candidates
+    * and the delta ids on the driver's view at the horizon. The filters
+    * apply in [[LiveSnapshot.topK]]. */
+  private def rankOnDriver(r: Req, e: AnnEntry, snap: DurableSnapshot,
+                           cands: Seq[Seq[String]]): Seq[Seq[SearchHit]] =
+    if (!r.batch)
+      Seq(snap.tail(cands.head.toSet, e.builtSeq, r.asOf)
+        .topK(r.query, r.k, r.metric, r.filter, r.jsonFilter))
+    else {
+      val delta = snap.deltaIds(e.builtSeq, r.asOf)
+      val view = snap.at(r.asOf)
+      r.queries.indices.map(i => view.topK(r.queries(i), r.k, r.metric,
+        r.filter, r.jsonFilter, Some(cands(i) ++ delta)))
     }
 
-  /** The batch rerank tail shared by the six indexes: the policy's
-    * (__qid, id) candidates ∪ the delta tail for EVERY query
-    * (post-build appends must be candidates regardless of which cells /
-    * codes / shards a query probed — the q107 union), reranked by the
-    * candidate-restricted batch kernel against the horizon's live set,
-    * where rows tombstoned inside the horizon die — which is why the
-    * batch frames need no explicit kill anti-join. On a snapshot-tier
-    * namespace the pairs are collected once and each query ranks its
-    * candidates and the delta ids on the driver's view at the horizon. */
+  /** The single-query Spark rerank shared by the six indexes, above the
+    * snapshot bound: the candidate records minus the kill set at the
+    * horizon, union the delta tail at the horizon, exact score, rank,
+    * top k. */
+  private def rerankOne(r: Req, e: AnnEntry, c: Cands): Seq[SearchHit] = {
+    val scored = c.records
+      .join(broadcast(horizonKills(r.namespace, e.builtSeq, r.asOf)),
+        col("id") === col("__kid"), "left_anti")
+      .unionByName(
+        horizonDelta(r.namespace, e.builtSeq, recordCols, r.pred, r.asOf))
+      .withColumn("score",
+        Scoring.score(r.metric, col("values"), Scoring.litVec(r.query)))
+    Scoring.ranked(scored, r.metric).limit(r.k)
+      .select(col("id"), col("score"), col("values"), col("metadata"),
+        col("metadataJson"))
+      .as[SearchHit].collect().toSeq
+  }
+
+  /** The batch Spark rerank shared by the six indexes, above the snapshot
+    * bound: the policy's (__qid, id) candidates ∪ the delta tail for
+    * EVERY query (post-build appends must be candidates regardless of
+    * which cells / codes / shards a query probed — the q107 union),
+    * reranked by the candidate-restricted batch kernel against the
+    * horizon's live set, where rows tombstoned inside the horizon die —
+    * which is why the batch frames need no explicit kill anti-join. */
   private def rerankBatch(r: Req, e: AnnEntry,
-                          layoutCand: DataFrame): Seq[Seq[SearchHit]] =
-    durableSnapshot(r.namespace) match {
-      case Some(snap) =>
-        val byQuery = layoutCand.select(col("__qid").cast("int"), col("id"))
-          .collect().groupMap(_.getInt(0))(_.getString(1))
-        val delta = snap.deltaIds(e.builtSeq, r.asOf)
-        val view = snap.at(r.asOf)
-        r.queries.indices.map(i => view.topK(r.queries(i), r.k, r.metric,
-          r.filter, r.jsonFilter,
-          Some(byQuery.getOrElse(i, Array.empty[String]).toSeq ++ delta)))
-      case None =>
-        val deltaCand =
-          horizonDelta(r.namespace, e.builtSeq, Seq(col("id")), r.pred, r.asOf)
-            .crossJoin(broadcast(r.queries.indices.toDF("__qid")))
-            .select(col("__qid"), col("id"))
-        Scoring.batchSearchCandidates(
-          baseAt(r.asOf).filter(col("namespace") === r.namespace).filter(r.pred),
-          r.queries, layoutCand.unionByName(deltaCand).distinct(), r.k, r.metric)
-    }
+                          layoutCand: DataFrame): Seq[Seq[SearchHit]] = {
+    val deltaCand =
+      horizonDelta(r.namespace, e.builtSeq, Seq(col("id")), r.pred, r.asOf)
+        .crossJoin(broadcast(r.queries.indices.toDF("__qid")))
+        .select(col("__qid"), col("id"))
+    Scoring.batchSearchCandidates(
+      baseAt(r.asOf).filter(col("namespace") === r.namespace).filter(r.pred),
+      r.queries, layoutCand.unionByName(deltaCand).distinct(), r.k, r.metric)
+  }
 
   /** The record columns every single-query probe reranks. */
   private val recordCols = Seq(col("id"), col("values"), col("metadata"),
@@ -1598,7 +1649,8 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
         branch == "indexed-probe")
       notes += s"'$index' derives its own candidate geometry (grid cells / shard beams / band buckets) from the layout at probe time"
     val bound = snapshotBound
-    notes += (currentSnapshot(namespace, readStamp(namespace)) match {
+    val tier = currentSnapshot(namespace, readStamp(namespace))
+    notes += (tier match {
       case Some(Some(snap)) =>
         val on = s"on the driver snapshot (generation ${snap.gen}, ${snap.versions} row versions)"
         (if (branch == "indexed-probe") s"reranks the index's candidate ids $on"
@@ -1608,6 +1660,14 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
         s"Spark: above the bound (the namespace holds more than $bound row versions, the driver snapshot bound)"
       case None =>
         s"no current snapshot: the next search collects the namespace's files once and serves from the driver if it holds at most $bound row versions, else from Spark"
+    })
+    if (branch == "indexed-probe") notes += ((tier, entry) match {
+      case (Some(Some(_)), Some(e)) if !underived && e.rows <= bound =>
+        s"candidates: driver probe over ${e.rows} layout rows"
+      case (Some(Some(_)), _) if entry.forall(_.rows <= bound) =>
+        "candidates: driver probe over the layout the first search builds"
+      case (Some(_), _) => "candidates: Spark probe (above the bound)"
+      case (None, _) => "candidates: the next search decides the tier (no current snapshot)"
     })
     val base = asOf.map(liveAsOf).getOrElse(live())
       .filter(col("namespace") === namespace).filter(pred)
@@ -1811,7 +1871,23 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     def probe(q: Array[Float]): Seq[Int] =
       graft.operators.Ann.rankCells(if (space == "mips") q :+ 0f else q, centers,
         graft.operators.Ann.ivfProbeFor(centers.length))
+
+    /** The layout's records on the driver (id, cell, metadata): the IVF
+      * candidates of a snapshot-tier probe, and the records every filtered
+      * pq/bq cut matches against ([[passingIds]]). */
+    val records: DriverProbe.Held[DriverProbe.CellRows] = heldRecords(aux)
   }
+
+  /** The records of the cell-partitioned layout at `aux` (ivf, imi),
+    * collected on the driver by its first snapshot-tier probe. */
+  private def heldRecords(aux: String): DriverProbe.Held[DriverProbe.CellRows] =
+    new DriverProbe.Held(() =>
+      DriverProbe.bounded(layoutFrame(s"$aux/index")
+          .select(col("id"), col("cell"), col("metadata"), col("metadataJson")),
+        snapshotBound).map(rows => new DriverProbe.CellRows(rows.map(_.getString(0)),
+        rows.map(_.getInt(1)),
+        rows.map(r => if (r.isNullAt(2)) null else r.getMap[String, String](2).toMap),
+        rows.map(_.getString(3)))))
 
   /** Cache key: (namespace, dim, space). */
   private type AnnKey = (String, Int, String)
@@ -1839,9 +1915,12 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     * next approx search rebuilds over the current live set, folding the
     * delta tail back into the index — the on-demand form of the
     * maintenance the staleness trigger and [[compact]] run
-    * automatically. */
+    * automatically. The dropped layouts' cached frames go too: with no
+    * commit since, the rebuild lands in the same directory, and a frame
+    * still holding the old file listing would read files it replaced. */
   def refreshAnnIndex(namespace: String, dim: Int): Unit = {
-    Seq("raw", "mips").foreach(sp => annCache.remove((namespace, dim, sp)))
+    Seq("raw", "mips").foreach(sp => Option(annCache.remove((namespace, dim, sp)))
+      .foreach(e => layoutFrameCache.keySet.removeIf(_.startsWith(e.aux))))
     dropDerived(namespace, dim)
   }
 
@@ -2249,9 +2328,10 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
   // [[Layout]] with its candidate frames; the lifecycle ([[derivedFor]])
   // is one for all five.
 
-  /** One query's candidates: their ids, and their records (cut to
-    * [[recordCols]], filter applied). The snapshot tier collects only the
-    * ids and ranks on the driver; the Spark tier reranks the records. */
+  /** One query's Spark-tier candidates: their ids, and their records (cut
+    * to [[recordCols]], filter applied). A snapshot-tier namespace whose
+    * layout holds more rows than the bound collects only the ids; the
+    * Spark tier reranks the records. */
   private case class Cands(ids: DataFrame, records: DataFrame)
 
   private object Cands {
@@ -2260,14 +2340,64 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
   }
 
   /** An index's candidate policy over the ann layout `annAux`, in its own
-    * directory `aux` (ivf: the ann layout itself): [[Cands]] for one query,
-    * `(__qid, id)` pairs for a batch. `persist` (graded paths only) writes
-    * the policy next to the layout for oracle replay — probe lists, LUTs,
-    * query codes, band buckets, beam output. */
+    * directory `aux` (ivf: the ann layout itself). Above the snapshot
+    * bound it proposes Spark frames: [[Cands]] for one query, `(__qid,
+    * id)` pairs for a batch. On a snapshot-tier namespace its candidate
+    * rows are held on the driver (`held`: the records' cells, codes, band
+    * buckets or shard graphs, collected once per layout by its first such
+    * probe) and `onDriver` picks each query's ids from them with the
+    * kernels the frames run — the ids the frames hold, with no Spark job.
+    * `persist` (graded paths only) writes the policy next to the layout
+    * for oracle replay — probe lists, LUTs, query codes, band buckets,
+    * beam output — the same tables from either path. */
   private abstract class Layout(val annAux: String, val aux: String) {
     def one(r: Req, e: AnnEntry): Cands
     def many(r: Req, e: AnnEntry): DataFrame
+    /** Each query's candidate ids, picked from the held rows; None when
+      * the layout holds more rows than the bound. */
+    def onDriver(r: Req, e: AnnEntry): Option[Seq[Seq[String]]]
+    protected def held: DriverProbe.Held[_]
+    /** Are the candidate rows held on the driver? (spec hook) */
+    def holdsRows: Boolean = held.collected
   }
+
+  /** Writes a graded candidate-policy table (one file) at `path`. */
+  private def writeTable(df: DataFrame, path: String): Unit =
+    df.coalesce(1).write.mode("overwrite").parquet(path)
+
+  /** Every query's probed cells, in query order. */
+  private def probeLists(r: Req, cells: Array[Float] => Seq[Int]): Seq[Seq[Int]] =
+    r.queries.map(q => cells(q.toArray))
+
+  /** Writes the probe lists [[probeTable]]'s frame holds: `probes` (cell)
+    * for one query, `batch_probes` (__qid, cell) for a batch, at `at(name)`. */
+  private def writeProbes(r: Req, lists: Seq[Seq[Int]], at: String => String): Unit =
+    if (r.batch)
+      writeTable(lists.zipWithIndex.flatMap { case (cs, i) => cs.map(c => (i, c)) }
+        .toDF("__qid", "cell"), at("batch_probes"))
+    else writeTable(lists.head.toDF("cell"), at("probes"))
+
+  /** On the driver, the ids of the layout's records in `cells` that pass
+    * `r`'s filter — [[probedCodes]]' semi-join side: Some(None) for an
+    * unfiltered request, None when the records are not held. */
+  private def passingIds(e: AnnEntry, cells: Seq[Int], r: Req): Option[Option[Set[String]]] =
+    if (!r.hasFilter) Some(None)
+    else e.records.get.map { recs =>
+      Some(recs.passing(recs.in(cells), new DriverProbe.RowFilter(r.filter, r.jsonFilter))
+        .toSet.map(recs.ids))
+    }
+
+  /** The codes rows of `cells` a request may rank, given [[passingIds]]. */
+  private def rankable(codes: DriverProbe.CodeRows, cells: Seq[Int],
+                       ok: Option[Set[String]]): Array[Int] =
+    ok.fold(codes.in(cells))(set => codes.in(cells).filter(i => set(codes.id(i))))
+
+  /** The codes table at `dir` (id, codes or code, cell) on the driver. */
+  private def heldCodes(dir: String, codes: String, word: Row => UnsafeArrayData) =
+    new DriverProbe.Held(() =>
+      DriverProbe.bounded(layoutFrame(dir).select(col("id"), col("cell"), col(codes)),
+        snapshotBound).map(rows => new DriverProbe.CodeRows(rows.map(_.getString(0)),
+        rows.map(_.getInt(1)), rows.map(word))))
 
   /** (index, namespace, dim) → the layout derived for it, current while
     * its `annAux` is the cached raw-space ann layout's dir. */
@@ -2388,27 +2518,34 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     * driver and the probed partitions' records are the candidates. A
     * batch: every probe list unions into ONE pruned scan joined back to
     * the (__qid, cell) table (the q107 one-scan thesis). `persistAt` names
-    * the graded probe tables' dirs. */
+    * the graded probe tables' dirs. On the driver the probed cells' held
+    * records are the candidates, filtered as the scan filters them. */
   private final class CellLayout(annAux: String, aux: String,
                                  cells: Array[Float] => Seq[Int],
-                                 persistAt: String => String)
+                                 persistAt: String => String,
+                                 protected val held: DriverProbe.Held[DriverProbe.CellRows])
       extends Layout(annAux, aux) {
     def one(r: Req, e: AnnEntry): Cands = {
-      val probed = cells(r.query.toArray)
-      if (r.persist)
-        probed.toDF("cell").coalesce(1).write.mode("overwrite").parquet(persistAt("probes"))
-      Cands(cellRecords(aux, probed, r).select(recordCols: _*))
+      val probed = probeLists(r, cells)
+      if (r.persist) writeProbes(r, probed, persistAt)
+      Cands(cellRecords(aux, probed.head, r).select(recordCols: _*))
     }
     def many(r: Req, e: AnnEntry): DataFrame = {
       val (probeDf, allCells) = probeTable(r.queries, cells)
-      if (r.persist)
-        probeDf.coalesce(1).write.mode("overwrite").parquet(persistAt("batch_probes"))
+      if (r.persist) writeProbes(r, probeLists(r, cells), persistAt)
       // the predicate cuts inside the probed-cell scan, on the delta tail,
       // and again at the live join (authoritative; the scan-side cuts prune)
       cellRecords(aux, allCells, r)
         .join(broadcast(probeDf), Seq("cell"))
         .select(col("__qid"), col("id"))
     }
+    def onDriver(r: Req, e: AnnEntry): Option[Seq[Seq[String]]] =
+      held.get.map { recs =>
+        val probed = probeLists(r, cells)
+        if (r.persist) writeProbes(r, probed, persistAt)
+        val keep = new DriverProbe.RowFilter(r.filter, r.jsonFilter)
+        probed.map(cs => recs.passing(recs.in(cs), keep).toSeq.map(recs.ids))
+      }
   }
 
   /** IVF straight over the ann layout — the approx read plan above. Its
@@ -2416,7 +2553,7 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     * a shared root the epoch may be ADOPTED, and two processes' graded
     * overwrites must not interleave in one directory. */
   private def ivfLayout(e: AnnEntry): Layout =
-    new CellLayout(e.aux, e.aux, e.probe, annProbesDir(e.aux, _))
+    new CellLayout(e.aux, e.aux, e.probe, annProbesDir(e.aux, _), e.records)
 
   // ---- pq (IVFADC): codes-only ADC sweep over the probed cells ---------
 
@@ -2465,22 +2602,27 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     * vector) and cut to [[graft.operators.Pq.CandN]] on (rounded ADC, id).
     * A batch: all LUTs and probe lists broadcast qid-keyed, ONE sweep
     * scores each code row only for the queries that probed its cell, and
-    * the per-query cut is the bounded-heap aggregate. */
+    * the per-query cut is the bounded-heap aggregate. On the driver the
+    * held codes are swept with the sweep's per-row kernel and rounding. */
   private final class PqLayout(annAux: String, aux: String,
                                codebook: Array[Array[Array[Float]]],
                                val rot: Option[Array[Array[Float]]])
       extends Layout(annAux, aux) {
+    protected val held = heldCodes(s"$aux/codes", "codes",
+      r => UnsafeArrayData.fromPrimitiveArray(r.getSeq[Int](2).toArray))
     private def lut(q: Seq[Float]) = graft.operators.Pq.lutFor(
       rot.map(graft.operators.Opq.rotateQuery(_, q.toArray)).getOrElse(q.toArray),
       codebook)
+    private def luts(r: Req): Seq[(Long, Seq[Seq[Double]])] =
+      r.queries.zipWithIndex.map { case (q, i) => (i.toLong, lut(q)) }
+    private def persist(r: Req, luts: Seq[(Long, Seq[Seq[Double]])], lists: Seq[Seq[Int]]): Unit = {
+      graft.operators.Pq.writeLuts(spark, luts, s"$aux/${if (r.batch) "batch_lut" else "lut"}")
+      writeProbes(r, lists, k => s"$aux/$k")
+    }
     def one(r: Req, e: AnnEntry): Cands = {
       val probed = e.probe(r.query.toArray)
-      val luts = Seq((0L, lut(r.query)))
-      if (r.persist) {
-        graft.operators.Pq.writeLuts(spark, luts, s"$aux/lut")
-        probed.toDF("cell").coalesce(1)
-          .write.mode("overwrite").parquet(s"$aux/probes")
-      }
+      val luts = this.luts(r)
+      if (r.persist) persist(r, luts, Seq(probed))
       codeCands(probedCodes(s"$aux/codes", e, probed, r)
         .crossJoin(broadcast(graft.operators.Pq.lutFrame(spark, luts).select(col("lut"))))
         .withColumn("adc", graft.operators.Pq.adcCol)
@@ -2490,12 +2632,8 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     }
     def many(r: Req, e: AnnEntry): DataFrame = {
       val (probeDf, allCells) = probeTable(r.queries, e.probe)
-      val luts = r.queries.zipWithIndex.map { case (q, i) => (i.toLong, lut(q)) }
-      if (r.persist) {
-        graft.operators.Pq.writeLuts(spark, luts, s"$aux/batch_lut")
-        probeDf.coalesce(1)
-          .write.mode("overwrite").parquet(s"$aux/batch_probes")
-      }
+      val luts = this.luts(r)
+      if (r.persist) persist(r, luts, probeLists(r, e.probe))
       probedCodes(s"$aux/codes", e, allCells, r)
         .join(broadcast(probeDf), Seq("cell"))
         .join(broadcast(graft.operators.Pq.lutFrame(spark, luts)
@@ -2506,6 +2644,18 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
         .agg(graft.functions.TopKAgg.topk(col("adc"), col("id"),
           graft.operators.Pq.CandN, descending = false).as("top"))
         .select(col("__qid"), explode(col("top.id")).as("id"))
+    }
+    def onDriver(r: Req, e: AnnEntry): Option[Seq[Seq[String]]] = {
+      val lists = probeLists(r, e.probe)
+      for (codes <- held.get; ok <- passingIds(e, lists.flatten.distinct, r)) yield {
+        val luts = this.luts(r)
+        if (r.persist) persist(r, luts, lists)
+        lists.zip(luts).map { case (cs, (_, l)) =>
+          val table = DriverProbe.lutData(l)
+          codes.nearest(rankable(codes, cs, ok), graft.operators.Pq.CandN)(c =>
+            graft.operators.Pq.roundAdc(graft.functions.AdcKernels.pqAdcRow(c, table)))
+        }
+      }
     }
   }
 
@@ -2549,15 +2699,26 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     * per word over the probed cells' codes, cut to
     * [[graft.operators.Bq.CandN]] on (hamming, id) — integer-valued, no
     * float tie boundary. A batch broadcasts every query code (qid-keyed)
-    * for ONE sweep, cut per query by the bounded-heap aggregate. */
+    * for ONE sweep, cut per query by the bounded-heap aggregate. On the
+    * driver the held words are swept with the same per-row kernel. */
   private final class BqLayout(annAux: String, aux: String, mids: Array[Double])
       extends Layout(annAux, aux) {
+    protected val held = heldCodes(s"$aux/codes", "code",
+      r => UnsafeArrayData.fromPrimitiveArray(r.getSeq[Long](2).toArray))
+    private def qcodes(r: Req): Seq[(Int, Array[Long])] =
+      r.queries.zipWithIndex.map { case (q, i) => (i, graft.operators.Bq.packBits(q, mids)) }
+    private def persist(r: Req, qcodes: Seq[(Int, Array[Long])], lists: Seq[Seq[Int]]): Unit = {
+      writeProbes(r, lists, k => s"$aux/$k")
+      // flat (qid, w, word) replay table — the codes_flat convention
+      if (r.batch)
+        writeTable(qcodes.flatMap { case (i, code) =>
+          code.toSeq.zipWithIndex.map { case (word, w) => (i, w, word) }
+        }.toDF("qid", "w", "word"), s"$aux/batch_qcodes")
+    }
     def one(r: Req, e: AnnEntry): Cands = {
       val probed = e.probe(r.query.toArray)
       val qcode = graft.operators.Bq.packBits(r.query, mids)
-      if (r.persist)
-        probed.toDF("cell").coalesce(1)
-          .write.mode("overwrite").parquet(s"$aux/probes")
+      if (r.persist) persist(r, Seq((0, qcode)), Seq(probed))
       codeCands(probedCodes(s"$aux/codes", e, probed, r)
         .withColumn("qcode", typedLit(qcode.toSeq))
         .withColumn("ham", graft.functions.AdcKernels.hammingWords(col("code"), col("qcode")))
@@ -2567,26 +2728,29 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     }
     def many(r: Req, e: AnnEntry): DataFrame = {
       val (probeDf, allCells) = probeTable(r.queries, e.probe)
-      val qcodes = r.queries.zipWithIndex.map { case (q, i) =>
-        (i, graft.operators.Bq.packBits(q, mids).toSeq)
-      }
-      if (r.persist) {
-        probeDf.coalesce(1)
-          .write.mode("overwrite").parquet(s"$aux/batch_probes")
-        // flat (qid, w, word) replay table — the codes_flat convention
-        qcodes.flatMap { case (i, code) =>
-          code.zipWithIndex.map { case (word, w) => (i, w, word) }
-        }.toDF("qid", "w", "word").coalesce(1)
-          .write.mode("overwrite").parquet(s"$aux/batch_qcodes")
-      }
+      val qcodes = this.qcodes(r)
+      if (r.persist) persist(r, qcodes, probeLists(r, e.probe))
       probedCodes(s"$aux/codes", e, allCells, r)
         .join(broadcast(probeDf), Seq("cell"))
-        .join(broadcast(qcodes.toDF("__qid", "qcode")), Seq("__qid"))
+        .join(broadcast(qcodes.map { case (i, c) => (i, c.toSeq) }.toDF("__qid", "qcode")),
+          Seq("__qid"))
         .withColumn("ham", graft.functions.AdcKernels.hammingWords(col("code"), col("qcode")))
         .groupBy(col("__qid"))
         .agg(graft.functions.TopKAgg.topk(col("ham").cast("double"),
           col("id"), graft.operators.Bq.CandN, descending = false).as("top"))
         .select(col("__qid"), explode(col("top.id")).as("id"))
+    }
+    def onDriver(r: Req, e: AnnEntry): Option[Seq[Seq[String]]] = {
+      val lists = probeLists(r, e.probe)
+      for (codes <- held.get; ok <- passingIds(e, lists.flatten.distinct, r)) yield {
+        val qcodes = this.qcodes(r)
+        if (r.persist) persist(r, qcodes, lists)
+        lists.zip(qcodes).map { case (cs, (_, qc)) =>
+          val q = UnsafeArrayData.fromPrimitiveArray(qc)
+          codes.nearest(rankable(codes, cs, ok), graft.operators.Bq.CandN)(c =>
+            graft.functions.AdcKernels.hammingRow(c, q).toDouble)
+        }
+      }
     }
   }
 
@@ -2613,15 +2777,27 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     * broadcast-join the signature table; every bucket-mate is a candidate
     * (not k-cut), so the predicate on the record join is candidate-time
     * filtering. A batch unions all queries' buckets into one probe frame
-    * and scans the signatures ONCE (the q148 thesis). */
+    * and scans the signatures ONCE (the q148 thesis). On the driver the
+    * signatures are one (band, bucket) → ids map. */
   private final class LshLayout(annAux: String, aux: String)
       extends Layout(annAux, aux) {
+    protected val held = new DriverProbe.Held(() =>
+      DriverProbe.bounded(layoutFrame(s"$aux/sigs"), snapshotBound * graft.operators.Ann.Bands)
+        .map(_.groupMap(row => (row.getAs[Int]("band"), row.getAs[Long]("bucket")))(
+          _.getAs[String]("id"))))
+    private def buckets(r: Req): Seq[Seq[(Int, Long)]] =
+      r.queries.map(q => graft.operators.Ann.bandBuckets(q.toArray))
+    private def persist(r: Req, buckets: Seq[Seq[(Int, Long)]]): Unit =
+      if (r.batch)
+        writeTable(buckets.zipWithIndex.flatMap { case (bs, i) =>
+          bs.map { case (band, bucket) => (i, band, bucket) }
+        }.toDF("__qid", "band", "bucket"), s"$aux/batch_qsig")
+      else writeTable(buckets.head.toDF("band", "bucket"), s"$aux/qsig")
     def one(r: Req, e: AnnEntry): Cands = {
-      val qbDf = graft.operators.Ann.bandBuckets(r.query.toArray).toDF("band", "bucket")
-      if (r.persist)
-        qbDf.coalesce(1).write.mode("overwrite").parquet(s"$aux/qsig")
+      val qb = buckets(r)
+      if (r.persist) persist(r, qb)
       val mates = layoutFrame(s"$aux/sigs")
-        .join(broadcast(qbDf), Seq("band", "bucket"))
+        .join(broadcast(qb.head.toDF("band", "bucket")), Seq("band", "bucket"))
         .select(col("id"))
       Cands(mates, layoutFrame(s"${e.aux}/index")
         .where(r.pred)
@@ -2630,17 +2806,20 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
           col("id") === col("__cid"), "left_semi"))
     }
     def many(r: Req, e: AnnEntry): DataFrame = {
-      val probeDf = r.queries.zipWithIndex.flatMap { case (q, i) =>
-        graft.operators.Ann.bandBuckets(q.toArray)
-          .map { case (band, bucket) => (i, band, bucket) }
-      }.toDF("__qid", "band", "bucket")
-      if (r.persist)
-        probeDf.coalesce(1)
-          .write.mode("overwrite").parquet(s"$aux/batch_qsig")
+      val qb = buckets(r)
+      if (r.persist) persist(r, qb)
       layoutFrame(s"$aux/sigs")
-        .join(broadcast(probeDf), Seq("band", "bucket"))
+        .join(broadcast(qb.zipWithIndex.flatMap { case (bs, i) =>
+          bs.map { case (band, bucket) => (i, band, bucket) }
+        }.toDF("__qid", "band", "bucket")), Seq("band", "bucket"))
         .select(col("__qid"), col("id"))
     }
+    def onDriver(r: Req, e: AnnEntry): Option[Seq[Seq[String]]] =
+      held.get.map { mates =>
+        val qb = buckets(r)
+        if (r.persist) persist(r, qb)
+        qb.map(_.flatMap(mates.getOrElse(_, Array.empty[String])).distinct)
+      }
   }
 
   // ---- imi: two-level product grid over the layout rows (r12) ----------
@@ -2679,7 +2858,8 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     // aux is already process-suffixed under shared roots (derivedAux), so
     // the graded probe tables live directly inside it
     new CellLayout(ann.aux, aux,
-      q => graft.operators.Ann.imiProbeCells(q, cLo, cHi), k => s"$aux/$k")
+      q => graft.operators.Ann.imiProbeCells(q, cLo, cHi), k => s"$aux/$k",
+      heldRecords(aux))
   }
 
   // ---- hnsw: sharded small-world graphs over the layout rows (r12) -----
@@ -2708,15 +2888,16 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     * authoritative for both. The beam is the narrowest candidate policy,
     * so the starved rescue matters most here. A batch beam-searches every
     * shard graph for all queries in ONE pass. `persist` writes the beam as
-    * emitted (`cands/`, `batch_cands/`). */
+    * emitted (`cands/`, `batch_cands/`). On the driver the beams walk the
+    * layout's graphs, loaded there once. */
   private final class HnswLayout(annAux: String, aux: String)
       extends Layout(annAux, aux) {
+    protected val held = new DriverProbe.Held(() =>
+      graft.operators.Hnsw.driverGraphsD(spark, aux, snapshotBound))
     def one(r: Req, e: AnnEntry): Cands = {
       val cand = graft.operators.Hnsw.shardCandidatesD(spark, aux,
         r.query.toArray, r.filter)
-      if (r.persist)
-        cand.select(col("id")).coalesce(1)
-          .write.mode("overwrite").parquet(s"$aux/cands")
+      if (r.persist) writeTable(cand.select(col("id")), s"$aux/cands")
       Cands(cand.where(r.pred).select(recordCols: _*))
     }
     def many(r: Req, e: AnnEntry): DataFrame = {
@@ -2724,10 +2905,26 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
         r.queries, r.filter)
       if (!r.persist) beam
       else {
-        beam.coalesce(1).write.mode("overwrite").parquet(s"$aux/batch_cands")
+        writeTable(beam, s"$aux/batch_cands")
         spark.read.parquet(s"$aux/batch_cands")
       }
     }
+    def onDriver(r: Req, e: AnnEntry): Option[Seq[Seq[String]]] =
+      held.get.map { graphs =>
+        val beams = r.queries.map(q =>
+          graft.operators.Hnsw.driverBeamD(graphs, q.toArray, r.filter))
+        if (r.persist) {
+          if (r.batch) writeTable(beams.zipWithIndex.flatMap { case (ns, i) => ns.map(n => (i, n.id)) }
+            .toDF("__qid", "id"), s"$aux/batch_cands")
+          else writeTable(beams.head.map(_.id).toDF("id"), s"$aux/cands")
+        }
+        // one query's candidates pass the predicate, as its frame's do;
+        // a batch's are the beam as emitted
+        if (!r.batch) {
+          val keep = new DriverProbe.RowFilter(r.filter, r.jsonFilter)
+          Seq(beams.head.filter(n => keep(n.metadata, n.metadataJson)).map(_.id))
+        } else beams.map(_.map(_.id))
+      }
   }
 
   def totalCount(): Long = live().count()

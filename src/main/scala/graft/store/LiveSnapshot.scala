@@ -1,7 +1,6 @@
 package graft.store
 
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.catalyst.expressions.json.GetJsonObjectEvaluator
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.model.{SearchHit, VectorRecord}
@@ -55,21 +54,8 @@ private[graft] final class LiveSnapshot private (
       case Some(cands) => cands.iterator.flatMap(rowsOf.getOrElse(_, Array.empty[Int]))
         .toArray.distinct
     }
-    val paths = jsonFilter.toSeq.map { case (p, v) =>
-      (new GetJsonObjectEvaluator(UTF8String.fromString(p)), UTF8String.fromString(v))
-    }
-    base.filter { i =>
-      val md = metadata(i)
-      filter.forall { case (k, v) =>
-        md != null && { val x = md.getOrElse(k, null); x != null && x == v }
-      } && (paths.isEmpty || {
-        val js = metadataJson(i)
-        js != null && {
-          val u = UTF8String.fromString(js)
-          paths.forall { case (ev, v) => ev.setJson(u); ev.evaluate() == v }
-        }
-      })
-    }
+    val keep = new DriverProbe.RowFilter(filter, jsonFilter)
+    base.filter(i => keep(metadata(i), metadataJson(i)))
   }
 
   /** Scores of `rows` against `query`, ordered. */

@@ -3,6 +3,7 @@ package graft.store
 import java.util.UUID
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.functions._
 
@@ -38,9 +39,10 @@ import graft.model.{SearchHit, StorageInfo, VectorRecord}
   * namespace) is held on the driver as a [[LiveSnapshot]], collected once
   * per store epoch by the first read after a mutation: exact single and
   * batch search, range, threshold, the starved-filter skip and both
-  * starved rescues score it with no Spark job, and the six indexes still
-  * generate candidates on their layouts but rerank the collected ids on
-  * it. Larger namespaces serve from Spark: scan → codegen'd distance →
+  * starved rescues score it with no Spark job, and so do the six indexes:
+  * each layout holds its candidate rows on the driver too, picks the
+  * candidates there and reranks them on the snapshot. Larger namespaces
+  * serve from Spark: scan → codegen'd distance →
   * `TakeOrderedAndProject`. Finding a namespace above the bound costs one
   * bounded collect, paid again only after a delete, deleteNamespace or
   * clear (the mutations that can shrink it). The tiers return the same hits bit for bit
@@ -477,39 +479,24 @@ class VectorStore(val spark: SparkSession) {
         queries, k, metric)
     }
 
-  /** The rerank tail shared by every single-query index path: the
-    * layout proposes candidate ids (`__cid`; None = no layout, the
-    * namespace is empty), the live rows decide what exists and what
-    * matches the filters, and the exact score ranks them. On a snapshot
-    * namespace the ids are collected and reranked on the driver. */
-  private def rerank(cands: Option[DataFrame], query: Seq[Float], k: Int,
+  /** The Spark rerank of one query's candidates, for a namespace above
+    * the snapshot bound: the layout proposes candidate ids (`__cid`), the
+    * live rows decide what exists and what matches the filters, and the
+    * exact score ranks them. */
+  private def rerank(ids: DataFrame, query: Seq[Float], k: Int,
                      namespace: String, filter: Map[String, String],
-                     jsonFilter: Map[String, String]): Seq[SearchHit] =
-    cands.fold(Seq.empty[SearchHit]) { ids =>
-      snapshot(namespace) match {
-        case Some(snap) =>
-          snap.topK(query, k, "cosine", filter, jsonFilter,
-            Some(ids.collect().map(_.getString(0))))
-        case None =>
-          val proposed = filteredLive(namespace, filter, jsonFilter)
-            .join(broadcast(ids), col("id") === col("__cid"), "left_semi")
-          collectHits(ranked(scoredFrom(proposed, query, "cosine"), "cosine").limit(k))
-      }
-    }
+                     jsonFilter: Map[String, String]): Seq[SearchHit] = {
+    val proposed = filteredLive(namespace, filter, jsonFilter)
+      .join(broadcast(ids), col("id") === col("__cid"), "left_semi")
+    collectHits(ranked(scoredFrom(proposed, query, "cosine"), "cosine").limit(k))
+  }
 
   /** The batch form of [[rerank]]: `cand` holds (__qid, id) pairs. */
   private def rerankBatch(cand: DataFrame, queries: Seq[Seq[Float]], k: Int,
                           namespace: String, filter: Map[String, String],
                           jsonFilter: Map[String, String]): Seq[Seq[SearchHit]] =
-    snapshot(namespace) match {
-      case Some(snap) =>
-        val byQuery = cand.select(col("__qid").cast("int"), col("id")).collect()
-          .groupMap(_.getInt(0))(_.getString(1))
-        queries.indices.map(i => snap.topK(queries(i), k, "cosine", filter,
-          jsonFilter, Some(byQuery.getOrElse(i, Array.empty[String]).toSeq)))
-      case None => Scoring.batchSearchCandidates(
-        filteredLive(namespace, filter, jsonFilter), queries, cand, k, "cosine")
-    }
+    Scoring.batchSearchCandidates(
+      filteredLive(namespace, filter, jsonFilter), queries, cand, k, "cosine")
 
   // ---- store-attached ANN indexes (the reference's index-backed read
   // path, query_processor.py:26-49 → index.py:91-129) -------------------
@@ -521,14 +508,30 @@ class VectorStore(val spark: SparkSession) {
 
   /** One built index layout. It proposes candidate ids — `__cid` for one
     * query, `(__qid, id)` pairs for a batch — and the live rows decide
-    * what exists and what matches ([[rerank]], [[rerankBatch]]), so
-    * mutations since the build still apply. `persist` writes the
+    * what exists and what matches ([[rerank]], [[rerankBatch]],
+    * [[LiveSnapshot.topK]]), so mutations since the build still apply.
+    * Above the snapshot bound the proposals are Spark frames (`one`,
+    * `many`). On a snapshot-tier namespace the layout's candidate rows are
+    * held on the driver (`held`: cell ids, codes, band buckets or shard
+    * graphs, collected once per layout by its first such probe), and
+    * `onDriver` picks each query's ids from them with the kernels the
+    * frames run — the same ids, with no Spark job. `persist` writes the
     * candidate policy (probe lists, LUTs, beam output) next to the layout
-    * for oracle replay: graded paths only, never serving (a per-request
-    * overwrite would race concurrent probes). */
+    * for oracle replay, the same tables from either path: graded paths
+    * only, never serving (a per-request overwrite would race concurrent
+    * probes). */
   private sealed abstract class Layout {
     def one(query: Seq[Float], persist: Boolean): DataFrame
     def many(queries: Seq[Seq[Float]], persist: Boolean): DataFrame
+    /** Each query's candidate ids, picked from the held rows; None when
+      * the layout holds more rows than the bound. */
+    def onDriver(queries: Seq[Seq[Float]], batch: Boolean, persist: Boolean): Option[Seq[Seq[String]]]
+    protected def held: DriverProbe.Held[_]
+    /** Are the candidate rows held on the driver? (spec hook) */
+    def holdsRows: Boolean = held.collected
+    /** Rows the layout was built over, given the epoch-current snapshot:
+      * the snapshot's own rows, for a layout built at the same epoch. */
+    def rowsAt(snap: LiveSnapshot): Long = snap.rows
     /** The layout directory; None for the in-memory lsh and bq frames. */
     def dir: Option[String] = None
     /** The persisted frame a hit re-pins and a replacement unpersists. */
@@ -677,9 +680,18 @@ class VectorStore(val spark: SparkSession) {
     * predicate over the cached frame, and a batch is ONE broadcast
     * (qid, band, bucket) probe frame joined to it — one signature scan
     * for the whole batch. An id matching in several bands repeats in a
-    * single query's candidates; the rerank is set-shaped. */
+    * single query's candidates; the rerank is set-shaped. On the driver
+    * the signatures are one (band, bucket) → ids map. */
   private final class LshLayout(sigs: DataFrame) extends Layout {
     override def pinned: Option[DataFrame] = Some(sigs)
+    protected val held = new DriverProbe.Held(() =>
+      DriverProbe.bounded(sigs, snapshotBound * graft.operators.Ann.Bands).map(
+        _.groupMap(r => (r.getInt(1), r.getLong(2)))(_.getString(0))))
+    def onDriver(queries: Seq[Seq[Float]], batch: Boolean,
+                 persist: Boolean): Option[Seq[Seq[String]]] =
+      held.get.map(mates => queries.map(q =>
+        graft.operators.Ann.bandBuckets(q.toArray)
+          .flatMap(mates.getOrElse(_, Array.empty[String])).distinct))
     def one(query: Seq[Float], persist: Boolean): DataFrame =
       sigs.where(graft.operators.Ann.bandBuckets(query.toArray)
           .map { case (b, sig) => col("band") === b && col("bucket") === sig }
@@ -760,32 +772,42 @@ class VectorStore(val spark: SparkSession) {
     * ids, partition-pruned on `cell`. A batch unions every query's probe
     * list into ONE pruned scan and joins the (qid, cell) probe table
     * back. Each id sits in exactly one cell: a single query has no
-    * duplicates to drop. */
+    * duplicates to drop. The inverted file is read once per layout (a
+    * fresh read per request re-lists every cell partition); on the driver
+    * the cell → ids lists come from its `assign/` table. */
   private final class CellLayout(aux: String, val cells: Int,
                                  val probe: Array[Float] => Seq[Int]) extends Layout {
     override def dir: Option[String] = Some(aux)
-    def one(query: Seq[Float], persist: Boolean): DataFrame = {
-      val probed = probe(query.toArray)
-      if (persist)
-        probed.toDF("cell").coalesce(1)
-          .write.mode("overwrite").parquet(s"$aux/probes")
-      spark.read.parquet(s"$aux/index")
-        .where(col("cell").isin(probed: _*))
-        .select(col("id").as("__cid"))
-    }
-    def many(queries: Seq[Seq[Float]], persist: Boolean): DataFrame = {
-      val probeRows = queries.zipWithIndex.flatMap { case (q, i) =>
-        probe(q.toArray).map(c => (i, c))
+    private lazy val index = spark.read.parquet(s"$aux/index")
+    protected val held = new DriverProbe.Held(() =>
+      DriverProbe.bounded(spark.read.parquet(s"$aux/assign").select(col("id"), col("cell")),
+        snapshotBound).map(rows =>
+        new DriverProbe.CellRows(rows.map(_.getString(0)), rows.map(_.getInt(1)), null, null)))
+    /** Each query's probe list, written for replay when `persist`. */
+    private def probed(queries: Seq[Seq[Float]], batch: Boolean,
+                       persist: Boolean): Seq[Seq[Int]] = {
+      val lists = queries.map(q => probe(q.toArray))
+      if (persist) {
+        val table = if (batch) pairs(lists).toDF("__qid", "cell") else lists.head.toDF("cell")
+        table.coalesce(1).write.mode("overwrite")
+          .parquet(s"$aux/${if (batch) "batch_probes" else "probes"}")
       }
-      val probeDf = probeRows.toDF("__qid", "cell")
-      if (persist)
-        probeDf.coalesce(1)
-          .write.mode("overwrite").parquet(s"$aux/batch_probes")
-      spark.read.parquet(s"$aux/index")
-        .where(col("cell").isin(probeRows.map(_._2).distinct: _*))
-        .join(broadcast(probeDf), Seq("cell"))
+      lists
+    }
+    private def pairs(lists: Seq[Seq[Int]]): Seq[(Int, Int)] =
+      lists.zipWithIndex.flatMap { case (cs, i) => cs.map(c => (i, c)) }
+    def one(query: Seq[Float], persist: Boolean): DataFrame =
+      index.where(col("cell").isin(probed(Seq(query), batch = false, persist).head: _*))
+        .select(col("id").as("__cid"))
+    def many(queries: Seq[Seq[Float]], persist: Boolean): DataFrame = {
+      val lists = probed(queries, batch = true, persist)
+      index.where(col("cell").isin(lists.flatten.distinct: _*))
+        .join(broadcast(pairs(lists).toDF("__qid", "cell")), Seq("cell"))
         .select(col("__qid"), col("id")).distinct()
     }
+    def onDriver(queries: Seq[Seq[Float]], batch: Boolean,
+                 persist: Boolean): Option[Seq[Seq[String]]] =
+      held.get.map(rows => probed(queries, batch, persist).map(rows.in(_).toSeq.map(rows.ids)))
   }
 
   // ---- pq: compressed codes table ---------------------------------------
@@ -837,35 +859,51 @@ class VectorStore(val spark: SparkSession) {
     * plan is textually identical and whole-stage codegen compiles the
     * sweep once per JVM (`Pq.adcCol`). A batch sweeps the table ONCE for
     * all its queries; its per-query cut is [[graft.functions.TopKAgg]]'s
-    * bounded heap, map-side combined to Q×CandN rows. */
+    * bounded heap, map-side combined to Q×CandN rows. The codes table is
+    * read once per layout; on the driver its rows are swept with the
+    * sweep's own per-row kernel and rounding. */
   private final class PqLayout(aux: String, codebook: Array[Array[Array[Float]]],
                                val rotation: Option[Array[Array[Float]]]) extends Layout {
     override def dir: Option[String] = Some(aux)
+    private lazy val codes = spark.read.parquet(s"$aux/codes")
+    protected val held = new DriverProbe.Held(() =>
+      DriverProbe.bounded(codes.select(col("id"), col("codes")), snapshotBound).map(rows =>
+        new DriverProbe.CodeRows(rows.map(_.getString(0)), new Array[Int](rows.length),
+          rows.map(r => UnsafeArrayData.fromPrimitiveArray(r.getSeq[Int](1).toArray)))))
     /** The query's ADC table in the layout's (possibly rotated) space. */
     private def lut(q: Seq[Float]) = graft.operators.Pq.lutFor(
       rotation.map(graft.operators.Opq.rotateQuery(_, q.toArray)).getOrElse(q.toArray),
       codebook)
+    /** Each query's ADC table, written for replay when `persist`. */
+    private def luts(queries: Seq[Seq[Float]], batch: Boolean,
+                     persist: Boolean): Seq[(Long, Seq[Seq[Double]])] = {
+      val ls = queries.zipWithIndex.map { case (q, i) => (i.toLong, lut(q)) }
+      if (persist)
+        graft.operators.Pq.writeLuts(spark, ls, s"$aux/${if (batch) "batch_lut" else "lut"}")
+      ls
+    }
     private def sweep(lutFrame: DataFrame): DataFrame =
-      spark.read.parquet(s"$aux/codes")
-        .crossJoin(broadcast(lutFrame))
+      codes.crossJoin(broadcast(lutFrame))
         .withColumn("adc", graft.operators.Pq.adcCol)
-    def one(query: Seq[Float], persist: Boolean): DataFrame = {
-      val luts = Seq((0L, lut(query)))
-      if (persist) graft.operators.Pq.writeLuts(spark, luts, s"$aux/lut")
-      sweep(graft.operators.Pq.lutFrame(spark, luts).select(col("lut")))
+    def one(query: Seq[Float], persist: Boolean): DataFrame =
+      sweep(graft.operators.Pq.lutFrame(spark, luts(Seq(query), batch = false, persist))
+          .select(col("lut")))
         .orderBy(col("adc"), col("id"))
         .limit(graft.operators.Pq.CandN)
         .select(col("id").as("__cid"))
-    }
-    def many(queries: Seq[Seq[Float]], persist: Boolean): DataFrame = {
-      val luts = queries.zipWithIndex.map { case (q, i) => (i.toLong, lut(q)) }
-      if (persist) graft.operators.Pq.writeLuts(spark, luts, s"$aux/batch_lut")
-      sweep(graft.operators.Pq.lutFrame(spark, luts))
+    def many(queries: Seq[Seq[Float]], persist: Boolean): DataFrame =
+      sweep(graft.operators.Pq.lutFrame(spark, luts(queries, batch = true, persist)))
         .groupBy(col("qid"))
         .agg(graft.functions.TopKAgg.topk(col("adc"), col("id"),
           graft.operators.Pq.CandN, descending = false).as("top"))
         .select(col("qid").cast("int").as("__qid"), explode(col("top.id")).as("id"))
-    }
+    def onDriver(queries: Seq[Seq[Float]], batch: Boolean,
+                 persist: Boolean): Option[Seq[Seq[String]]] =
+      held.get.map(rows => luts(queries, batch, persist).map { case (_, l) =>
+        val table = DriverProbe.lutData(l)
+        rows.nearest(rows.all, graft.operators.Pq.CandN)(c =>
+          graft.operators.Pq.roundAdc(graft.functions.AdcKernels.pqAdcRow(c, table)))
+      })
   }
 
   /** The rotation the current PQ layout was built with (None = raw PQ) —
@@ -908,10 +946,15 @@ class VectorStore(val spark: SparkSession) {
     * vectors), cut to [[BqCandN]] on ascending (hamming, id): integer
     * valued, no float tie boundary. The query codes ride as a broadcast
     * frame so every request compiles the same plan; a batch sweeps the
-    * codes once, cut per query by the bounded-heap aggregate. */
+    * codes once, cut per query by the bounded-heap aggregate. On the
+    * driver the held words are swept with the same per-row kernel. */
   private final class BqLayout(mids: Array[Double], codes: DataFrame) extends Layout {
     override def pinned: Option[DataFrame] = Some(codes)
     def words: Int = (mids.length + 63) / 64
+    protected val held = new DriverProbe.Held(() =>
+      DriverProbe.bounded(codes, snapshotBound).map(rows =>
+        new DriverProbe.CodeRows(rows.map(_.getString(0)), new Array[Int](rows.length),
+          rows.map(r => UnsafeArrayData.fromPrimitiveArray(r.getSeq[Long](1).toArray)))))
     private def hamming(qFrame: DataFrame): DataFrame =
       codes.crossJoin(broadcast(qFrame))
         .withColumn("ham", graft.functions.AdcKernels.hammingWords(col("code"), col("qcode")))
@@ -928,6 +971,13 @@ class VectorStore(val spark: SparkSession) {
         .agg(graft.functions.TopKAgg.topk(col("ham").cast("double"),
           col("id"), BqCandN, descending = false).as("top"))
         .select(col("qid").as("__qid"), explode(col("top.id")).as("id"))
+    def onDriver(queries: Seq[Seq[Float]], batch: Boolean,
+                 persist: Boolean): Option[Seq[Seq[String]]] =
+      held.get.map(rows => queries.map { q =>
+        val qcode = UnsafeArrayData.fromPrimitiveArray(graft.operators.Bq.packBits(q, mids))
+        rows.nearest(rows.all, BqCandN)(c =>
+          graft.functions.AdcKernels.hammingRow(c, qcode).toDouble)
+      })
   }
 
   /** Word count of the current (namespace, dim) BQ codes — spec hook. */
@@ -1033,7 +1083,8 @@ class VectorStore(val spark: SparkSession) {
           l.deletes.filterInPlace(_._1 > e)
         }
       }
-      Some(new HnswLayout(aux, total, Seq.empty))
+      Some(new HnswLayout(aux, total, Seq.empty, new DriverProbe.Held(() =>
+        graft.operators.Hnsw.driverGraphsS(spark, aux, snapshotBound))))
     }
   }
 
@@ -1046,12 +1097,16 @@ class VectorStore(val spark: SparkSession) {
     * layout serves a mutable store), so the durable mount's
     * predicate-aware ACORN beam does not apply; selective filters
     * against a graph index serve from the durable mount, whose nodes
-    * carry metadata. */
-  private final class HnswLayout(aux: String, builtRows: Long,
-                                 delta: Seq[String]) extends Layout {
+    * carry metadata. On the driver the beams walk the build's graphs,
+    * loaded once (`graphs`, shared by every view `servedAt` makes). */
+  private final class HnswLayout(aux: String, builtRows: Long, delta: Seq[String],
+                                 graphs: DriverProbe.Held[Seq[(Array[String], graft.operators.Hnsw.ShardGraph)]])
+      extends Layout {
     override def dir: Option[String] = Some(aux)
+    protected def held: DriverProbe.Held[_] = graphs
+    override def rowsAt(snap: LiveSnapshot): Long = builtRows
     override def servedAt(built: Long, namespace: String): Option[Layout] =
-      hnswDelta(namespace, built, builtRows).map(new HnswLayout(aux, builtRows, _))
+      hnswDelta(namespace, built, builtRows).map(new HnswLayout(aux, builtRows, _, graphs))
     /** Re-evaluating the just-built graph propagates any insert delta
       * that raced in during the build. None means a concurrent bulk load
       * poisoned the ledger past the build's epoch (no id list to serve as
@@ -1061,10 +1116,12 @@ class VectorStore(val spark: SparkSession) {
       * only fires for a caller that poisons during every rebuild. */
     override def fresh(built: Long, namespace: String): Option[Layout] =
       servedAt(built, namespace)
+    private def write(cands: DataFrame, sub: String): Unit =
+      cands.coalesce(1).write.mode("overwrite").parquet(s"$aux/$sub")
     private def persisted(cands: DataFrame, sub: String, persist: Boolean): DataFrame =
       if (!persist) cands
       else {
-        cands.coalesce(1).write.mode("overwrite").parquet(s"$aux/$sub")
+        write(cands, sub)
         spark.read.parquet(s"$aux/$sub")
       }
     def one(query: Seq[Float], persist: Boolean): DataFrame = {
@@ -1079,6 +1136,18 @@ class VectorStore(val spark: SparkSession) {
         else beam.unionByName(queries.indices.toDF("__qid").crossJoin(delta.toDF("id"))).distinct(),
         "batch_cands", persist)
     }
+    def onDriver(queries: Seq[Seq[Float]], batch: Boolean,
+                 persist: Boolean): Option[Seq[Seq[String]]] =
+      graphs.get.map { gs =>
+        val cands = queries.map(q =>
+          (graft.operators.Hnsw.driverBeamS(gs, q.toArray) ++ delta).distinct)
+        if (persist) {
+          if (batch) write(cands.zipWithIndex.flatMap { case (ids, i) => ids.map((i, _)) }
+            .toDF("__qid", "id"), "batch_cands")
+          else write(cands.head.toDF("id"), "cands")
+        }
+        cands
+      }
   }
 
   private def collectHits(df: DataFrame): Seq[SearchHit] =
@@ -1125,7 +1194,8 @@ class VectorStore(val spark: SparkSession) {
         "indexed-probe"
       }
     val bound = snapshotBound
-    notes += (currentSnapshot(namespace) match {
+    val tier = currentSnapshot(namespace)
+    notes += (tier match {
       case Some(Some(snap)) =>
         val on = s"on the driver snapshot (epoch ${snap.epoch}, ${snap.rows} rows)"
         (if (branch == "indexed-probe") s"reranks the index's candidate ids $on"
@@ -1135,6 +1205,13 @@ class VectorStore(val spark: SparkSession) {
         s"serves from Spark: the namespace holds more than $bound rows, the driver snapshot bound"
       case None =>
         s"no epoch-current driver snapshot: the next search collects the namespace once and serves from it if it holds at most $bound rows, else from Spark"
+    })
+    if (branch == "indexed-probe") notes += ((tier, layout) match {
+      case (Some(Some(snap)), Some(l)) if l.rowsAt(snap) <= bound =>
+        s"candidates: driver probe over ${l.rowsAt(snap)} layout rows"
+      case (Some(Some(_)), None) => "candidates: driver probe over the layout the first search builds"
+      case (Some(_), _) => "candidates: Spark probe (above the bound)"
+      case (None, _) => "candidates: the next search decides the tier (no current snapshot)"
     })
     graft.model.SearchExplain(
       mount = "live", branch = branch,
@@ -1240,15 +1317,18 @@ class VectorStore(val spark: SparkSession) {
       return Seq(exactTopK(queries.head, k, metric, namespace, filter, jsonFilter))
     }
     val layout = layoutFor(index, namespace, queries.head.length)
-    val hits =
-      if (!batch)
-        Seq(rerank(layout.map(_.one(queries.head, persist)), queries.head, k,
-          namespace, filter, jsonFilter))
-      else layout match {
-        case None => return Seq.fill(queries.size)(Seq.empty)
-        case Some(l) =>
-          rerankBatch(l.many(queries, persist), queries, k, namespace, filter, jsonFilter)
+    if (batch && layout.isEmpty) return Seq.fill(queries.size)(Seq.empty)
+    val hits = layout.fold(Seq(Seq.empty[SearchHit])) { l =>
+      snapshot(namespace) match {
+        case Some(snap) =>
+          val cands = candidateIds(l, queries, batch, persist)
+          queries.indices.map(i =>
+            snap.topK(queries(i), k, "cosine", filter, jsonFilter, Some(cands(i))))
+        case None =>
+          if (batch) rerankBatch(l.many(queries, persist), queries, k, namespace, filter, jsonFilter)
+          else Seq(rerank(l.one(queries.head, persist), queries.head, k, namespace, filter, jsonFilter))
       }
+    }
     val starved = if (hasFilter) hits.indices.filter(hits(_).size < k) else Seq.empty
     if (starved.isEmpty) hits
     else {
@@ -1261,6 +1341,42 @@ class VectorStore(val spark: SparkSession) {
       val byIdx = starved.zip(rescued).toMap
       hits.indices.map(i => byIdx.getOrElse(i, hits(i)))
     }
+  }
+
+  /** Each query's candidate ids for the driver rerank of a snapshot-tier
+    * namespace: picked on the driver from the layout's held rows, or, for
+    * a layout holding more rows than the bound, collected from its
+    * frames. */
+  private def candidateIds(l: Layout, queries: Seq[Seq[Float]], batch: Boolean,
+                           persist: Boolean): Seq[Seq[String]] =
+    l.onDriver(queries, batch, persist).getOrElse(collectedIds(l, queries, batch, persist))
+
+  /** Each query's candidate ids from the layout's Spark frames. */
+  private def collectedIds(l: Layout, queries: Seq[Seq[Float]], batch: Boolean,
+                           persist: Boolean): Seq[Seq[String]] =
+    if (!batch) Seq(l.one(queries.head, persist).collect().toSeq.map(_.getString(0)))
+    else {
+      val byQuery = l.many(queries, persist).select(col("__qid").cast("int"), col("id"))
+        .collect().groupMap(_.getInt(0))(_.getString(1))
+      queries.indices.map(i => byQuery.getOrElse(i, Array.empty[String]).toSeq)
+    }
+
+  /** Each query's candidate ids, as a set, from the path the namespace's
+    * tier takes: the driver probe on the snapshot tier, the collected
+    * Spark frames above the bound; empty without a layout. Spec hook for
+    * the driver/Spark candidate parity. */
+  private[graft] def candidateSets(index: String, queries: Seq[Seq[Float]], batch: Boolean,
+                                   namespace: String): Seq[Set[String]] =
+    layoutFor(index, namespace, queries.head.length).fold(Seq.fill(queries.size)(Set.empty[String])) { l =>
+      (if (snapshot(namespace).isDefined) candidateIds(l, queries, batch, persist = false)
+       else collectedIds(l, queries, batch, persist = false)).map(_.toSet)
+    }
+
+  /** Keys whose current layout holds its candidate rows on the driver —
+    * spec hook: one row set per (index, namespace, dim) at most. */
+  private[graft] def heldLayoutRows: Seq[(String, String, Int)] = {
+    import scala.jdk.CollectionConverters._
+    layouts.asScala.toSeq.collect { case (key, (_, l)) if l.holdsRows => key }
   }
 
   /** Starvation facts: (namespace, canonical filter) → (epoch, matching

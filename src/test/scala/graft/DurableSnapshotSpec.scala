@@ -319,11 +319,10 @@ class DurableSnapshotSpec extends AnyFunSuite {
       val onSnapshot = table()
       d.snapshotMaxRows = -1
       val onSpark = try table() finally d.snapshotMaxRows = VectorStore.SnapshotMaxRows
-      // the snapshot tier collects only the candidate ids, so only
-      // candidate generation runs jobs; above the bound the rerank is a
-      // Spark plan too
-      assert(onSnapshot == Map("lsh" -> ((2, 2)), "ivf" -> ((1, 2)), "pq" -> ((2, 4)),
-        "bq" -> ((1, 4)), "imi" -> ((1, 2)), "hnsw" -> ((1, 1))), s"snapshot tier: $onSnapshot")
+      // the snapshot tier picks the candidates from the layout's rows
+      // held on the driver and reranks there; above the bound both are
+      // Spark plans
+      assert(onSnapshot == Indexes.map(_ -> ((0, 0))).toMap, s"snapshot tier: $onSnapshot")
       assert(onSpark == Map("lsh" -> ((6, 11)), "ivf" -> ((3, 11)), "pq" -> ((5, 13)),
         "bq" -> ((4, 13)), "imi" -> ((3, 11)), "hnsw" -> ((3, 10))), s"Spark tier: $onSpark")
     } finally {

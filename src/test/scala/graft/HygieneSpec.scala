@@ -180,4 +180,54 @@ class HygieneSpec extends AnyFunSuite {
         s"round $r: ${census - base} pinned frames for 2 indexes x 3 namespaces")
     }
   }
+
+  test("driver-held layout rows: one set per (index, namespace, dim) across rebuilds, census flat") {
+    val rnd = new scala.util.Random(17)
+    def vec = Seq.fill(8)(rnd.nextFloat() * 2 - 1)
+    val q = vec
+    val indexes = Seq("lsh", "ivf", "pq", "bq", "imi", "hnsw")
+    def census = spark.sparkContext.getPersistentRDDs.size
+    /** Waits out the non-blocking unpersist of replaced pinned frames. */
+    def settled(base: Int): Int = {
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (census != base && System.nanoTime() < deadline) Thread.sleep(50)
+      census - base
+    }
+    val s = new graft.store.VectorStore(spark)
+    val nss = Seq("g0", "g1")
+    nss.foreach(ns => s.upsertMany(Seq.fill(30)((vec, Map.empty[String, String])), ns))
+    def round(): Unit =
+      for (ns <- nss; ix <- indexes) s.findSimilar(q, k = 3, namespace = ns, approx = true, index = ix)
+    val keys = (for (ns <- nss; ix <- indexes) yield (ix, ns, 8)).toSet
+    round()
+    val base = census // the lsh and bq frames pinned by the builds
+    (1 to 3).foreach { r =>
+      nss.foreach(ns => s.insert(vec, Map.empty, ns)) // five of six layouts go stale
+      round()
+      val held = s.heldLayoutRows
+      assert(held.size == held.toSet.size && held.toSet == keys, s"live round $r: $held")
+      assert(settled(base) == 0, s"live round $r: the persisted-RDD census moved")
+    }
+    val d = new graft.store.DurableVectorStore(spark,
+      java.nio.file.Files.createTempDirectory("graft_hyg_held_").toString)
+    val sp = spark
+    import sp.implicits._
+    d.loadFrame((0 until 30).map(i => (s"h$i", vec)).toDF("id", "values"), "g0")
+    def durableRound(): Unit =
+      indexes.foreach(ix => d.findSimilar(q, k = 3, namespace = "g0", approx = true, index = ix))
+    durableRound()
+    val dBase = census // after the load's own transient pins are gone
+    (1 to 2).foreach { r =>
+      d.refreshAnnIndex("g0", 8) // every layout is rebuilt
+      durableRound()
+      val held = d.heldLayoutRows
+      assert(held.size == held.toSet.size && held.toSet == indexes.map((_, "g0", 8)).toSet,
+        s"durable round $r: $held")
+      assert(settled(dBase) == 0, s"durable round $r: the persisted-RDD census moved")
+    }
+    // the live store stays reachable until here: a collected store's
+    // pinned frames would leave the census through the ContextCleaner
+    assert(s.heldLayoutRows.toSet == keys)
+  }
 }
+

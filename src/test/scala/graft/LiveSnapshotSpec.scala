@@ -306,11 +306,12 @@ class LiveSnapshotSpec extends AnyFunSuite {
     val onSnapshot = table()
     s.snapshotMaxRows = -1
     val onSpark = try table() finally s.snapshotMaxRows = VectorStore.SnapshotMaxRows
-    // the snapshot tier reranks on the driver, so only candidate
-    // generation runs jobs; above the bound the rerank is a Spark plan too
-    assert(onSnapshot == Map("lsh" -> ((1, 3)), "ivf" -> ((2, 4)), "pq" -> ((3, 4)),
-      "bq" -> ((2, 3)), "imi" -> ((2, 4)), "hnsw" -> ((1, 1))), s"snapshot tier: $onSnapshot")
-    assert(onSpark == Map("lsh" -> ((11, 9)), "ivf" -> ((5, 9)), "pq" -> ((6, 10)),
-      "bq" -> ((12, 7)), "imi" -> ((5, 10)), "hnsw" -> ((4, 7))), s"Spark tier: $onSpark")
+    // the snapshot tier picks the candidates from the layout's rows held
+    // on the driver and reranks there; above the bound both are Spark plans
+    assert(onSnapshot == Indexes.map(_ -> ((0, 0))).toMap, s"snapshot tier: $onSnapshot")
+    // ivf, imi and pq read their layout tables once per layout, so a
+    // request pays no parquet listing job
+    assert(onSpark == Map("lsh" -> ((11, 9)), "ivf" -> ((4, 8)), "pq" -> ((5, 9)),
+      "bq" -> ((12, 7)), "imi" -> ((4, 9)), "hnsw" -> ((4, 7))), s"Spark tier: $onSpark")
   }
 }

@@ -929,6 +929,17 @@ class RestServerSpec extends AnyFunSuite {
       assert(!f.get("starved_skip").asBoolean, fb)
       val notes = (0 until f.get("notes").size()).map(f.get("notes").get(_).asText())
       assert(notes.exists(_.contains("rescues from the exact filtered scan")), fb)
+      // the candidate tier: undecided before any read, then the driver
+      // probe over the layout's rows once a search has built it there
+      assert(notes.contains("candidates: the next search decides the tier (no current snapshot)"), fb)
+      assert(send("POST", s"$base/search?namespace=exp",
+        """{"query": [1.0, 0.0], "top_k": 2, "approx": true, "index": "lsh"}""")._1 == 200)
+      val (wc, wb) = send("POST", s"$base/query/explain?namespace=exp",
+        """{"query": [1.0, 0.0], "top_k": 2, "approx": true, "index": "lsh"}""")
+      assert(wc == 200, wb)
+      val w = mapper.readTree(wb)
+      assert(w.get("branch").asText() == "indexed-probe" && w.get("layout_cached").asBoolean, wb)
+      assert(w.get("notes").toString.contains("candidates: driver probe over 3 layout rows"), wb)
       // hybrid without a filter, unknown type, thresholded+approx: 422s
       assert(send("POST", s"$base/query/explain",
         """{"type": "hybrid", "vector": [1.0]}""")._1 == 422)
@@ -994,6 +1005,10 @@ class RestServerSpec extends AnyFunSuite {
       val warm = pqExplain()
       assert(warm.get("layout_cached").asBoolean, warm.toString)
       assert(!warm.get("notes").toString.contains("derives it"), warm.toString)
+      assert(cold.get("notes").toString.contains(
+        "candidates: driver probe over the layout the first search builds"), cold.toString)
+      assert(warm.get("notes").toString.contains("candidates: driver probe over 3 layout rows"),
+        warm.toString)
       // explain costs no search: the rescue counter is untouched
       val rescues0 = d.exactRescues.get()
       send("POST", s"$base/query/explain?namespace=ens",
@@ -1015,8 +1030,11 @@ class RestServerSpec extends AnyFunSuite {
       d.snapshotMaxRows = 2
       try {
         assert(tierNote().contains("no current snapshot"), tierNote())
+        assert(pqExplain().get("notes").toString.contains(
+          "candidates: the next search decides the tier (no current snapshot)"))
         d.findSimilar(Seq(1f, 0f), k = 2, namespace = "ens")
         assert(tierNote().contains("Spark: above the bound"), tierNote())
+        assert(pqExplain().get("notes").toString.contains("candidates: Spark probe (above the bound)"))
       } finally d.snapshotMaxRows = VectorStore.SnapshotMaxRows
     } finally server.stop()
   }

@@ -35,6 +35,10 @@ def main() -> int:
     only = oracle.pop("__only", None)
     if only:
         print(f"NOTE partial verify run (__only={only})")
+    # "__extra_conf" records SPARK_GRAFT_EXTRA_CONF overrides the dump ran under
+    extra_conf = oracle.pop("__extra_conf", None)
+    if extra_conf:
+        print(f"NOTE verify run under SPARK_GRAFT_EXTRA_CONF overrides (__extra_conf={extra_conf})")
     con = duckdb.connect()
     for t in ["region", "nation", "customer", "supplier", "part", "orders",
               "lineitem", "events", "documents", "embeddings"]:
