@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Det, VectorFunctions}
@@ -753,17 +753,24 @@ object Hnsw {
   // probes use, so the driver's beams walk the same graphs: the
   // executor-static [[graphCache]] plays no part.
 
+  /** The shard graphs of the layout at `aux`, loaded on the driver from
+    * its `graph/` rows — `load` turns one shard's rows into its graph —
+    * or None when they hold more than `bound` nodes. */
+  private def driverGraphs[N: Encoder, K](spark: SparkSession, aux: String, bound: Int,
+                                          shard: N => Int)(
+      load: Array[N] => (Array[K], ShardGraph)): Option[Seq[(Array[K], ShardGraph)]] = {
+    val nodes = spark.read.parquet(s"$aux/graph").as[N].limit(math.max(bound + 1, 0)).collect()
+    if (nodes.length > bound) None
+    else Some(nodes.groupBy(shard).toSeq.sortBy(_._1).map { case (_, ns) => load(ns) })
+  }
+
   /** The string-id shard graphs of the store-attached layout at `aux`,
     * loaded on the driver; None when it holds more than `bound` nodes. */
   private[graft] def driverGraphsS(spark: SparkSession, aux: String,
                                    bound: Int): Option[Seq[(Array[String], ShardGraph)]] = {
     import spark.implicits._
-    val nodes = spark.read.parquet(s"$aux/graph").as[HnswNodeS]
-      .limit(math.max(bound + 1, 0)).collect()
-    if (nodes.length > bound) None
-    else Some(nodes.groupBy(_.shard).toSeq.sortBy(_._1).map { case (_, ns) =>
-      loadShard(ns.map(n => (n.id, n.vec.toArray, n.level, n.nbrs.map(_.toArray).toArray)))
-    })
+    driverGraphs(spark, aux, bound, (n: HnswNodeS) => n.shard)(ns =>
+      loadShard(ns.map(n => (n.id, n.vec.toArray, n.level, n.nbrs.map(_.toArray).toArray))))
   }
 
   /** One query's beam winners over every driver-resident graph: what
@@ -775,16 +782,18 @@ object Hnsw {
   }
 
   /** The durable mount's record-carrying shard graphs at `aux`, loaded
-    * on the driver; None when they hold more than `bound` nodes. */
+    * on the driver; None when they hold more than `bound` nodes. Once a
+    * shard's graph is built its nodes keep only what a beam's winners
+    * and the flat filter read (id, metadata): the vectors and links live
+    * in the graph. */
   private[graft] def driverGraphsD(spark: SparkSession, aux: String,
                                    bound: Int): Option[Seq[(Array[StoredNodeD], ShardGraph)]] = {
     import spark.implicits._
-    val nodes = spark.read.parquet(s"$aux/graph").as[HnswNodeD]
-      .limit(math.max(bound + 1, 0)).collect()
-    if (nodes.length > bound) None
-    else Some(nodes.groupBy(_.shard).toSeq.sortBy(_._1).map { case (_, ns) =>
-      loadShardD(ns.map(n => StoredNodeD(n.id, n.vec, n.metadata, n.metadataJson, n.level, n.nbrs)))
-    })
+    driverGraphs(spark, aux, bound, (n: HnswNodeD) => n.shard) { ns =>
+      val (nodes, g) = loadShardD(ns.map(n =>
+        StoredNodeD(n.id, n.vec, n.metadata, n.metadataJson, n.level, n.nbrs)))
+      (nodes.map(_.copy(vec = Seq.empty, nbrs = Seq.empty)), g)
+    }
   }
 
   /** One query's beam winners over every driver-resident durable graph,

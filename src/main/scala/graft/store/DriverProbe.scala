@@ -72,12 +72,46 @@ private[graft] object DriverProbe {
 
   /** An ADC table as the sweep's `lut` column holds it
     * (array<array<double>>), for [[graft.functions.AdcKernels.pqAdcRow]]. */
-  def lutData(lut: Seq[Seq[Double]]): ArrayData =
+  private def lutData(lut: Seq[Seq[Double]]): ArrayData =
     new GenericArrayData(lut.map(ks => UnsafeArrayData.fromPrimitiveArray(ks.toArray): Any).toArray)
+
+  /** The pq cut: the ids of the [[graft.operators.Pq.CandN]] rows of
+    * `rows` nearest by ADC against `lut`, rounded as the sweep's `adc`
+    * column rounds it. */
+  def pqNearest(codes: CodeRows, rows: Array[Int], lut: Seq[Seq[Double]]): Seq[String] = {
+    val table = lutData(lut)
+    codes.nearest(rows, graft.operators.Pq.CandN)(c =>
+      graft.operators.Pq.roundAdc(graft.functions.AdcKernels.pqAdcRow(c, table)))
+  }
+
+  /** The bq cut: the ids of the [[graft.operators.Bq.CandN]] rows of
+    * `rows` nearest `qcode` by hamming distance of their sign words. */
+  def bqNearest(codes: CodeRows, rows: Array[Int], qcode: Array[Long]): Seq[String] = {
+    val q = UnsafeArrayData.fromPrimitiveArray(qcode)
+    codes.nearest(rows, graft.operators.Bq.CandN)(c =>
+      graft.functions.AdcKernels.hammingRow(c, q).toDouble)
+  }
+
+  /** An lsh signature frame (id, band, bucket) as one (band, bucket) →
+    * ids map, or None when it holds more than `bound` rows' signatures. */
+  def bucketMap(sigs: DataFrame, bound: Int): Option[Buckets] =
+    bounded(sigs.select("id", "band", "bucket"), bound * graft.operators.Ann.Bands).map(rows =>
+      new Buckets(rows.groupMap(r => (r.getInt(1), r.getLong(2)))(_.getString(0))))
+
+  /** An lsh layout's signatures on the driver. */
+  final class Buckets(byBucket: Map[(Int, Long), Array[String]]) {
+    /** The ids sharing a bucket with a query's (band, bucket) pairs, once
+      * each: the ids the signature join proposes. */
+    def mates(query: Seq[(Int, Long)]): Seq[String] =
+      query.flatMap(byBucket.getOrElse(_, Array.empty[String])).distinct
+  }
 
   /** Layout rows indexed by their cell. */
   sealed abstract class ByCell(cells: Array[Int]) {
     private val byCell: Map[Int, Array[Int]] = cells.indices.toArray.groupBy(cells(_))
+
+    /** Every row. */
+    def all: Array[Int] = cells.indices.toArray
 
     /** The rows of the probed cells. */
     def in(probed: Seq[Int]): Array[Int] =
@@ -100,8 +134,6 @@ private[graft] object DriverProbe {
   final class CodeRows(idStr: Array[String], cells: Array[Int], codes: Array[UnsafeArrayData])
       extends ByCell(cells) {
     private val ids = idStr.map(UTF8String.fromString)
-
-    def all: Array[Int] = idStr.indices.toArray
 
     def id(i: Int): String = idStr(i)
 

@@ -1287,12 +1287,11 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
       jsonFilter, persist)
     serve(r) { e =>
       val layout = layoutOf(index, r, e)
-      durableSnapshot(namespace) match {
-        case Some(snap) => rankOnDriver(r, e, snap, candidateIds(layout, r, e))
-        case None =>
+      (for (snap <- durableSnapshot(namespace); cands <- layout.onDriver(r, e))
+        yield rankOnDriver(r, e, snap, cands))
+        .getOrElse(
           if (batch) rerankBatch(r, e, layout.many(r, e))
-          else Seq(rerankOne(r, e, layout.one(r, e)))
-      }
+          else Seq(rerankOne(r, e, layout.one(r, e))))
     }
   }
 
@@ -1301,26 +1300,10 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
   private def layoutOf(index: String, r: Req, e: AnnEntry): Layout =
     if (index == "ivf") ivfLayout(e) else derivedFor(index, r.namespace, r.dim, e)
 
-  /** Each query's candidate ids for the driver rerank of a snapshot-tier
-    * namespace: picked on the driver from the layout's held rows, or, for
-    * a layout holding more rows than the bound, collected from its
-    * frames. */
-  private def candidateIds(l: Layout, r: Req, e: AnnEntry): Seq[Seq[String]] =
-    l.onDriver(r, e).getOrElse(collectedIds(l, r, e))
-
-  /** Each query's candidate ids from the layout's Spark frames. */
-  private def collectedIds(l: Layout, r: Req, e: AnnEntry): Seq[Seq[String]] =
-    if (!r.batch) Seq(l.one(r, e).ids.as[String].collect().toSeq)
-    else {
-      val byQuery = l.many(r, e).select(col("__qid").cast("int"), col("id"))
-        .collect().groupMap(_.getInt(0))(_.getString(1))
-      r.queries.indices.map(i => byQuery.getOrElse(i, Array.empty[String]).toSeq)
-    }
-
-  /** Each query's candidate ids, as a set, from the path the namespace's
-    * tier takes: the driver probe on the snapshot tier, the collected
-    * Spark frames above the bound; empty without a layout. Spec hook for
-    * the driver/Spark candidate parity. */
+  /** Each query's candidate ids, as a set, from the path [[approxSearch]]
+    * takes: the driver probe on the snapshot tier, else the layout's
+    * Spark frames, collected; empty without a layout. Spec hook for the
+    * driver/Spark candidate parity. */
   private[graft] def candidateSets(index: String, queries: Seq[Seq[Float]], batch: Boolean,
                                    namespace: String, metric: String = "cosine",
                                    filter: Map[String, String] = Map.empty,
@@ -1328,8 +1311,13 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     val r = Req(queries, batch, 10, metric, namespace, None, filter, jsonFilter, persist = false)
     annEntryFresh(namespace, r.dim, spaceOf(metric)).fold(Seq.fill(queries.size)(Set.empty[String])) { e =>
       val l = layoutOf(index, r, e)
-      (if (durableSnapshot(namespace).isDefined) candidateIds(l, r, e)
-       else collectedIds(l, r, e)).map(_.toSet)
+      durableSnapshot(namespace).flatMap(_ => l.onDriver(r, e)).getOrElse(
+        if (!batch) Seq(l.one(r, e).select(col("id")).as[String].collect().toSeq)
+        else {
+          val byQuery = l.many(r, e).select(col("__qid").cast("int"), col("id"))
+            .collect().groupMap(_.getInt(0))(_.getString(1))
+          queries.indices.map(i => byQuery.getOrElse(i, Array.empty[String]).toSeq)
+        }).map(_.toSet)
     }
   }
 
@@ -1437,8 +1425,8 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     * snapshot bound: the candidate records minus the kill set at the
     * horizon, union the delta tail at the horizon, exact score, rank,
     * top k. */
-  private def rerankOne(r: Req, e: AnnEntry, c: Cands): Seq[SearchHit] = {
-    val scored = c.records
+  private def rerankOne(r: Req, e: AnnEntry, records: DataFrame): Seq[SearchHit] = {
+    val scored = records
       .join(broadcast(horizonKills(r.namespace, e.builtSeq, r.asOf)),
         col("id") === col("__kid"), "left_anti")
       .unionByName(
@@ -2328,30 +2316,22 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
   // [[Layout]] with its candidate frames; the lifecycle ([[derivedFor]])
   // is one for all five.
 
-  /** One query's Spark-tier candidates: their ids, and their records (cut
-    * to [[recordCols]], filter applied). A snapshot-tier namespace whose
-    * layout holds more rows than the bound collects only the ids; the
-    * Spark tier reranks the records. */
-  private case class Cands(ids: DataFrame, records: DataFrame)
-
-  private object Cands {
-    /** Candidates that are the records themselves. */
-    def apply(records: DataFrame): Cands = Cands(records.select(col("id")), records)
-  }
-
   /** An index's candidate policy over the ann layout `annAux`, in its own
     * directory `aux` (ivf: the ann layout itself). Above the snapshot
-    * bound it proposes Spark frames: [[Cands]] for one query, `(__qid,
-    * id)` pairs for a batch. On a snapshot-tier namespace its candidate
-    * rows are held on the driver (`held`: the records' cells, codes, band
-    * buckets or shard graphs, collected once per layout by its first such
-    * probe) and `onDriver` picks each query's ids from them with the
-    * kernels the frames run — the ids the frames hold, with no Spark job.
+    * bound it proposes Spark frames: the candidates' records for one query
+    * (cut to [[recordCols]], filter applied), `(__qid, id)` pairs for a
+    * batch, reranked on Spark; a layout holding more rows than the bound
+    * takes that path on the snapshot tier too. On a snapshot-tier
+    * namespace its candidate rows are held on the driver (`held`: the
+    * records' cells, codes, band buckets or shard graphs, collected once
+    * per layout by its first such probe) and `onDriver` picks each
+    * query's ids from them with the kernels the frames run — the ids the
+    * frames hold, with no Spark job.
     * `persist` (graded paths only) writes the policy next to the layout
     * for oracle replay — probe lists, LUTs, query codes, band buckets,
     * beam output — the same tables from either path. */
   private abstract class Layout(val annAux: String, val aux: String) {
-    def one(r: Req, e: AnnEntry): Cands
+    def one(r: Req, e: AnnEntry): DataFrame
     def many(r: Req, e: AnnEntry): DataFrame
     /** Each query's candidate ids, picked from the held rows; None when
       * the layout holds more rows than the bound. */
@@ -2377,13 +2357,14 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
         .toDF("__qid", "cell"), at("batch_probes"))
     else writeTable(lists.head.toDF("cell"), at("probes"))
 
-  /** On the driver, the ids of the layout's records in `cells` that pass
-    * `r`'s filter — [[probedCodes]]' semi-join side: Some(None) for an
+  /** On the driver, the ids of the layout's records `rows` picks that
+    * pass `r`'s filter — the filtered record scan's ids: Some(None) for an
     * unfiltered request, None when the records are not held. */
-  private def passingIds(e: AnnEntry, cells: Seq[Int], r: Req): Option[Option[Set[String]]] =
+  private def passingIds(e: AnnEntry, r: Req)(
+      rows: DriverProbe.CellRows => Array[Int]): Option[Option[Set[String]]] =
     if (!r.hasFilter) Some(None)
     else e.records.get.map { recs =>
-      Some(recs.passing(recs.in(cells), new DriverProbe.RowFilter(r.filter, r.jsonFilter))
+      Some(recs.passing(rows(recs), new DriverProbe.RowFilter(r.filter, r.jsonFilter))
         .toSet.map(recs.ids))
     }
 
@@ -2508,10 +2489,10 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
 
   /** The codes-ranked single-query candidates: `ids` (the CandN cut)
     * semi-joined back to the probed cells' records for the Spark rerank. */
-  private def codeCands(ids: DataFrame, e: AnnEntry, cells: Seq[Int], r: Req): Cands =
-    Cands(ids, cellRecords(e.aux, cells, r).select(recordCols: _*)
+  private def codeCands(ids: DataFrame, e: AnnEntry, cells: Seq[Int], r: Req): DataFrame =
+    cellRecords(e.aux, cells, r).select(recordCols: _*)
       .join(broadcast(ids.select(col("id").as("__cid"))),
-        col("id") === col("__cid"), "left_semi"))
+        col("id") === col("__cid"), "left_semi")
 
   /** A cell-partitioned record layout — IVF over the ann layout, IMI over
     * its product grid. One query: `cells` ranks its probe list on the
@@ -2525,10 +2506,10 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
                                  persistAt: String => String,
                                  protected val held: DriverProbe.Held[DriverProbe.CellRows])
       extends Layout(annAux, aux) {
-    def one(r: Req, e: AnnEntry): Cands = {
+    def one(r: Req, e: AnnEntry): DataFrame = {
       val probed = probeLists(r, cells)
       if (r.persist) writeProbes(r, probed, persistAt)
-      Cands(cellRecords(aux, probed.head, r).select(recordCols: _*))
+      cellRecords(aux, probed.head, r).select(recordCols: _*)
     }
     def many(r: Req, e: AnnEntry): DataFrame = {
       val (probeDf, allCells) = probeTable(r.queries, cells)
@@ -2619,7 +2600,7 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
       graft.operators.Pq.writeLuts(spark, luts, s"$aux/${if (r.batch) "batch_lut" else "lut"}")
       writeProbes(r, lists, k => s"$aux/$k")
     }
-    def one(r: Req, e: AnnEntry): Cands = {
+    def one(r: Req, e: AnnEntry): DataFrame = {
       val probed = e.probe(r.query.toArray)
       val luts = this.luts(r)
       if (r.persist) persist(r, luts, Seq(probed))
@@ -2647,13 +2628,11 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     }
     def onDriver(r: Req, e: AnnEntry): Option[Seq[Seq[String]]] = {
       val lists = probeLists(r, e.probe)
-      for (codes <- held.get; ok <- passingIds(e, lists.flatten.distinct, r)) yield {
+      for (codes <- held.get; ok <- passingIds(e, r)(_.in(lists.flatten))) yield {
         val luts = this.luts(r)
         if (r.persist) persist(r, luts, lists)
         lists.zip(luts).map { case (cs, (_, l)) =>
-          val table = DriverProbe.lutData(l)
-          codes.nearest(rankable(codes, cs, ok), graft.operators.Pq.CandN)(c =>
-            graft.operators.Pq.roundAdc(graft.functions.AdcKernels.pqAdcRow(c, table)))
+          DriverProbe.pqNearest(codes, rankable(codes, cs, ok), l)
         }
       }
     }
@@ -2715,7 +2694,7 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
           code.toSeq.zipWithIndex.map { case (word, w) => (i, w, word) }
         }.toDF("qid", "w", "word"), s"$aux/batch_qcodes")
     }
-    def one(r: Req, e: AnnEntry): Cands = {
+    def one(r: Req, e: AnnEntry): DataFrame = {
       val probed = e.probe(r.query.toArray)
       val qcode = graft.operators.Bq.packBits(r.query, mids)
       if (r.persist) persist(r, Seq((0, qcode)), Seq(probed))
@@ -2742,13 +2721,11 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     }
     def onDriver(r: Req, e: AnnEntry): Option[Seq[Seq[String]]] = {
       val lists = probeLists(r, e.probe)
-      for (codes <- held.get; ok <- passingIds(e, lists.flatten.distinct, r)) yield {
+      for (codes <- held.get; ok <- passingIds(e, r)(_.in(lists.flatten))) yield {
         val qcodes = this.qcodes(r)
         if (r.persist) persist(r, qcodes, lists)
         lists.zip(qcodes).map { case (cs, (_, qc)) =>
-          val q = UnsafeArrayData.fromPrimitiveArray(qc)
-          codes.nearest(rankable(codes, cs, ok), graft.operators.Bq.CandN)(c =>
-            graft.functions.AdcKernels.hammingRow(c, q).toDouble)
+          DriverProbe.bqNearest(codes, rankable(codes, cs, ok), qc)
         }
       }
     }
@@ -2778,13 +2755,12 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     * (not k-cut), so the predicate on the record join is candidate-time
     * filtering. A batch unions all queries' buckets into one probe frame
     * and scans the signatures ONCE (the q148 thesis). On the driver the
-    * signatures are one (band, bucket) → ids map. */
+    * signatures are one (band, bucket) → ids map; one query's mates pass
+    * the filter against the layout's records, as its record join does. */
   private final class LshLayout(annAux: String, aux: String)
       extends Layout(annAux, aux) {
     protected val held = new DriverProbe.Held(() =>
-      DriverProbe.bounded(layoutFrame(s"$aux/sigs"), snapshotBound * graft.operators.Ann.Bands)
-        .map(_.groupMap(row => (row.getAs[Int]("band"), row.getAs[Long]("bucket")))(
-          _.getAs[String]("id"))))
+      DriverProbe.bucketMap(layoutFrame(s"$aux/sigs"), snapshotBound))
     private def buckets(r: Req): Seq[Seq[(Int, Long)]] =
       r.queries.map(q => graft.operators.Ann.bandBuckets(q.toArray))
     private def persist(r: Req, buckets: Seq[Seq[(Int, Long)]]): Unit =
@@ -2793,17 +2769,17 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
           bs.map { case (band, bucket) => (i, band, bucket) }
         }.toDF("__qid", "band", "bucket"), s"$aux/batch_qsig")
       else writeTable(buckets.head.toDF("band", "bucket"), s"$aux/qsig")
-    def one(r: Req, e: AnnEntry): Cands = {
+    def one(r: Req, e: AnnEntry): DataFrame = {
       val qb = buckets(r)
       if (r.persist) persist(r, qb)
       val mates = layoutFrame(s"$aux/sigs")
         .join(broadcast(qb.head.toDF("band", "bucket")), Seq("band", "bucket"))
         .select(col("id"))
-      Cands(mates, layoutFrame(s"${e.aux}/index")
+      layoutFrame(s"${e.aux}/index")
         .where(r.pred)
         .select(recordCols: _*)
         .join(mates.select(col("id").as("__cid")).distinct(),
-          col("id") === col("__cid"), "left_semi"))
+          col("id") === col("__cid"), "left_semi")
     }
     def many(r: Req, e: AnnEntry): DataFrame = {
       val qb = buckets(r)
@@ -2815,10 +2791,10 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
         .select(col("__qid"), col("id"))
     }
     def onDriver(r: Req, e: AnnEntry): Option[Seq[Seq[String]]] =
-      held.get.map { mates =>
+      for (b <- held.get; ok <- if (r.batch) Some(None) else passingIds(e, r)(_.all)) yield {
         val qb = buckets(r)
         if (r.persist) persist(r, qb)
-        qb.map(_.flatMap(mates.getOrElse(_, Array.empty[String])).distinct)
+        qb.map(q => ok.fold(b.mates(q))(set => b.mates(q).filter(set)))
       }
   }
 
@@ -2894,11 +2870,11 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
       extends Layout(annAux, aux) {
     protected val held = new DriverProbe.Held(() =>
       graft.operators.Hnsw.driverGraphsD(spark, aux, snapshotBound))
-    def one(r: Req, e: AnnEntry): Cands = {
+    def one(r: Req, e: AnnEntry): DataFrame = {
       val cand = graft.operators.Hnsw.shardCandidatesD(spark, aux,
         r.query.toArray, r.filter)
       if (r.persist) writeTable(cand.select(col("id")), s"$aux/cands")
-      Cands(cand.where(r.pred).select(recordCols: _*))
+      cand.where(r.pred).select(recordCols: _*)
     }
     def many(r: Req, e: AnnEntry): DataFrame = {
       val beam = graft.operators.Hnsw.shardCandidatesBatchD(spark, aux,

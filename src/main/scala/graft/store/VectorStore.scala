@@ -511,11 +511,13 @@ class VectorStore(val spark: SparkSession) {
     * what exists and what matches ([[rerank]], [[rerankBatch]],
     * [[LiveSnapshot.topK]]), so mutations since the build still apply.
     * Above the snapshot bound the proposals are Spark frames (`one`,
-    * `many`). On a snapshot-tier namespace the layout's candidate rows are
-    * held on the driver (`held`: cell ids, codes, band buckets or shard
-    * graphs, collected once per layout by its first such probe), and
-    * `onDriver` picks each query's ids from them with the kernels the
-    * frames run — the same ids, with no Spark job. `persist` writes the
+    * `many`), reranked on Spark; so are a snapshot-tier namespace's when
+    * its layout holds more rows than the bound. On a snapshot-tier
+    * namespace the layout's candidate rows are held on the driver
+    * (`held`: cell ids, codes, band buckets or shard graphs, collected
+    * once per layout by its first such probe), and `onDriver` picks each
+    * query's ids from them with the kernels the frames run — the same
+    * ids, with no Spark job. `persist` writes the
     * candidate policy (probe lists, LUTs, beam output) next to the layout
     * for oracle replay, the same tables from either path: graded paths
     * only, never serving (a per-request overwrite would race concurrent
@@ -684,14 +686,10 @@ class VectorStore(val spark: SparkSession) {
     * the signatures are one (band, bucket) → ids map. */
   private final class LshLayout(sigs: DataFrame) extends Layout {
     override def pinned: Option[DataFrame] = Some(sigs)
-    protected val held = new DriverProbe.Held(() =>
-      DriverProbe.bounded(sigs, snapshotBound * graft.operators.Ann.Bands).map(
-        _.groupMap(r => (r.getInt(1), r.getLong(2)))(_.getString(0))))
+    protected val held = new DriverProbe.Held(() => DriverProbe.bucketMap(sigs, snapshotBound))
     def onDriver(queries: Seq[Seq[Float]], batch: Boolean,
                  persist: Boolean): Option[Seq[Seq[String]]] =
-      held.get.map(mates => queries.map(q =>
-        graft.operators.Ann.bandBuckets(q.toArray)
-          .flatMap(mates.getOrElse(_, Array.empty[String])).distinct))
+      held.get.map(b => queries.map(q => b.mates(graft.operators.Ann.bandBuckets(q.toArray))))
     def one(query: Seq[Float], persist: Boolean): DataFrame =
       sigs.where(graft.operators.Ann.bandBuckets(query.toArray)
           .map { case (b, sig) => col("band") === b && col("bucket") === sig }
@@ -900,9 +898,7 @@ class VectorStore(val spark: SparkSession) {
     def onDriver(queries: Seq[Seq[Float]], batch: Boolean,
                  persist: Boolean): Option[Seq[Seq[String]]] =
       held.get.map(rows => luts(queries, batch, persist).map { case (_, l) =>
-        val table = DriverProbe.lutData(l)
-        rows.nearest(rows.all, graft.operators.Pq.CandN)(c =>
-          graft.operators.Pq.roundAdc(graft.functions.AdcKernels.pqAdcRow(c, table)))
+        DriverProbe.pqNearest(rows, rows.all, l)
       })
   }
 
@@ -912,8 +908,6 @@ class VectorStore(val spark: SparkSession) {
     current(("pq", namespace, dim)).collect { case p: PqLayout => p.rotation }.flatten
 
   // ---- bq: sign-bit codes, hamming prefilter ----------------------------
-
-  private[graft] val BqCandN = 50
 
   /** The per-dim midpoint grid plus a persisted (id, code: array<bigint>)
     * frame — ceil(dim/64) BIGINT words per vector, 1 bit/dim. BQ is the
@@ -943,7 +937,7 @@ class VectorStore(val spark: SparkSession) {
 
   /** Codes ranked by hamming distance to the query's sign bits (one
     * `bit_count(xor)` per word — at scale 32× fewer bytes than the
-    * vectors), cut to [[BqCandN]] on ascending (hamming, id): integer
+    * vectors), cut to [[graft.operators.Bq.CandN]] on ascending (hamming, id): integer
     * valued, no float tie boundary. The query codes ride as a broadcast
     * frame so every request compiles the same plan; a batch sweeps the
     * codes once, cut per query by the bounded-heap aggregate. On the
@@ -961,7 +955,7 @@ class VectorStore(val spark: SparkSession) {
     def one(query: Seq[Float], persist: Boolean): DataFrame =
       hamming(Seq(Tuple1(graft.operators.Bq.packBits(query, mids).toSeq)).toDF("qcode"))
         .orderBy(col("ham"), col("id"))
-        .limit(BqCandN)
+        .limit(graft.operators.Bq.CandN)
         .select(col("id").as("__cid"))
     def many(queries: Seq[Seq[Float]], persist: Boolean): DataFrame =
       hamming(queries.zipWithIndex.map { case (q, i) =>
@@ -969,15 +963,12 @@ class VectorStore(val spark: SparkSession) {
         }.toDF("qid", "qcode"))
         .groupBy(col("qid"))
         .agg(graft.functions.TopKAgg.topk(col("ham").cast("double"),
-          col("id"), BqCandN, descending = false).as("top"))
+          col("id"), graft.operators.Bq.CandN, descending = false).as("top"))
         .select(col("qid").as("__qid"), explode(col("top.id")).as("id"))
     def onDriver(queries: Seq[Seq[Float]], batch: Boolean,
                  persist: Boolean): Option[Seq[Seq[String]]] =
-      held.get.map(rows => queries.map { q =>
-        val qcode = UnsafeArrayData.fromPrimitiveArray(graft.operators.Bq.packBits(q, mids))
-        rows.nearest(rows.all, BqCandN)(c =>
-          graft.functions.AdcKernels.hammingRow(c, qcode).toDouble)
-      })
+      held.get.map(rows => queries.map(q =>
+        DriverProbe.bqNearest(rows, rows.all, graft.operators.Bq.packBits(q, mids))))
   }
 
   /** Word count of the current (namespace, dim) BQ codes — spec hook. */
@@ -1319,15 +1310,12 @@ class VectorStore(val spark: SparkSession) {
     val layout = layoutFor(index, namespace, queries.head.length)
     if (batch && layout.isEmpty) return Seq.fill(queries.size)(Seq.empty)
     val hits = layout.fold(Seq(Seq.empty[SearchHit])) { l =>
-      snapshot(namespace) match {
-        case Some(snap) =>
-          val cands = candidateIds(l, queries, batch, persist)
-          queries.indices.map(i =>
-            snap.topK(queries(i), k, "cosine", filter, jsonFilter, Some(cands(i))))
-        case None =>
+      (for (snap <- snapshot(namespace); cands <- l.onDriver(queries, batch, persist))
+        yield queries.indices.map(i =>
+          snap.topK(queries(i), k, "cosine", filter, jsonFilter, Some(cands(i)))))
+        .getOrElse(
           if (batch) rerankBatch(l.many(queries, persist), queries, k, namespace, filter, jsonFilter)
-          else Seq(rerank(l.one(queries.head, persist), queries.head, k, namespace, filter, jsonFilter))
-      }
+          else Seq(rerank(l.one(queries.head, persist), queries.head, k, namespace, filter, jsonFilter)))
     }
     val starved = if (hasFilter) hits.indices.filter(hits(_).size < k) else Seq.empty
     if (starved.isEmpty) hits
@@ -1343,33 +1331,20 @@ class VectorStore(val spark: SparkSession) {
     }
   }
 
-  /** Each query's candidate ids for the driver rerank of a snapshot-tier
-    * namespace: picked on the driver from the layout's held rows, or, for
-    * a layout holding more rows than the bound, collected from its
-    * frames. */
-  private def candidateIds(l: Layout, queries: Seq[Seq[Float]], batch: Boolean,
-                           persist: Boolean): Seq[Seq[String]] =
-    l.onDriver(queries, batch, persist).getOrElse(collectedIds(l, queries, batch, persist))
-
-  /** Each query's candidate ids from the layout's Spark frames. */
-  private def collectedIds(l: Layout, queries: Seq[Seq[Float]], batch: Boolean,
-                           persist: Boolean): Seq[Seq[String]] =
-    if (!batch) Seq(l.one(queries.head, persist).collect().toSeq.map(_.getString(0)))
-    else {
-      val byQuery = l.many(queries, persist).select(col("__qid").cast("int"), col("id"))
-        .collect().groupMap(_.getInt(0))(_.getString(1))
-      queries.indices.map(i => byQuery.getOrElse(i, Array.empty[String]).toSeq)
-    }
-
-  /** Each query's candidate ids, as a set, from the path the namespace's
-    * tier takes: the driver probe on the snapshot tier, the collected
-    * Spark frames above the bound; empty without a layout. Spec hook for
-    * the driver/Spark candidate parity. */
+  /** Each query's candidate ids, as a set, from the path [[approxSearch]]
+    * takes: the driver probe on the snapshot tier, else the layout's
+    * Spark frames, collected; empty without a layout. Spec hook for the
+    * driver/Spark candidate parity. */
   private[graft] def candidateSets(index: String, queries: Seq[Seq[Float]], batch: Boolean,
                                    namespace: String): Seq[Set[String]] =
     layoutFor(index, namespace, queries.head.length).fold(Seq.fill(queries.size)(Set.empty[String])) { l =>
-      (if (snapshot(namespace).isDefined) candidateIds(l, queries, batch, persist = false)
-       else collectedIds(l, queries, batch, persist = false)).map(_.toSet)
+      snapshot(namespace).flatMap(_ => l.onDriver(queries, batch, persist = false)).getOrElse(
+        if (!batch) Seq(l.one(queries.head, persist = false).collect().toSeq.map(_.getString(0)))
+        else {
+          val byQuery = l.many(queries, persist = false).select(col("__qid").cast("int"), col("id"))
+            .collect().groupMap(_.getInt(0))(_.getString(1))
+          queries.indices.map(i => byQuery.getOrElse(i, Array.empty[String]).toSeq)
+        }).map(_.toSet)
     }
 
   /** Keys whose current layout holds its candidate rows on the driver —

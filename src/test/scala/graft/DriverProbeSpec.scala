@@ -65,6 +65,19 @@ class DriverProbeSpec extends AnyFunSuite {
     }
   }
 
+  /** Runs `body`, then unpersists every RDD it left persisted: the
+    * stores die with the test, and their pinned frames and checkpointed
+    * row sets would otherwise leave the session's persisted-RDD census
+    * whenever the ContextCleaner collects them, inside a later suite's
+    * census loop. */
+  private def releasing(body: => Unit): Unit = {
+    val pre = spark.sparkContext.getPersistentRDDs.keySet
+    try body
+    finally spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!pre.contains(id)) rdd.unpersist(blocking = true)
+    }
+  }
+
   private def routes(run: (String, Boolean, Map[String, String], Map[String, String]) =>
                        (Seq[Set[String]], Seq[Seq[SearchHit]])): Answers =
     for {
@@ -72,7 +85,7 @@ class DriverProbeSpec extends AnyFunSuite {
       (cands, hits) = run(idx, batch, f, jf)
     } yield (s"$idx/${if (batch) "batch" else "single"}/$f/$jf", cands, hits)
 
-  test("live: the driver probe proposes the Spark frames' candidates and the same hits") {
+  test("live: the driver probe proposes the Spark frames' candidates and the same hits") (releasing {
     val s = new VectorStore(spark)
     s.loadFrame(frame(rows), "main")
     def answers(): Answers = routes { (idx, batch, f, jf) =>
@@ -100,9 +113,30 @@ class DriverProbeSpec extends AnyFunSuite {
     parity("after an insert")
     s.compact()
     parity("after compact")
-  }
+  })
 
-  test("durable: the driver probe proposes the Spark frames' candidates and the same hits, live and as-of") {
+  test("live: a snapshot-tier namespace whose layout holds more rows than the bound probes on Spark") (releasing {
+    val s = new VectorStore(spark)
+    val rs = rows
+    s.loadFrame(frame(rs), "main")
+    s.snapshotMaxRows = rs.size - 5
+    val q = queries.head
+    def search() = s.findSimilar(q, 10, namespace = "main", approx = true, index = "hnsw")
+    search() // above the bound: the graph is built and probed on Spark
+    // under the bound again; the graph keeps serving (deletes below the
+    // stale ratio) and holds more rows than the bound
+    s.delete(rs.take(10).map(_._1), "main")
+    assert(s.snapshot("main").isDefined)
+    val hits = search()
+    assert(s.builds("hnsw").get == 1)
+    assert(!s.heldLayoutRows.contains(("hnsw", "main", Dim)), "the graph was held on the driver")
+    assert(s.explainSearch(q, 10, namespace = "main", approx = true, index = "hnsw").notes
+      .contains("candidates: Spark probe (above the bound)"))
+    s.snapshotMaxRows = -1
+    TestSpark.assertSameHits(hits, search(), "layout above the bound")
+  })
+
+  test("durable: the driver probe proposes the Spark frames' candidates and the same hits, live and as-of") (releasing {
     val d = new DurableVectorStore(spark,
       java.nio.file.Files.createTempDirectory("graft_dprobe_").toString)
     // no staleness rebuild between the tiers: both must probe one layout
@@ -140,5 +174,5 @@ class DriverProbeSpec extends AnyFunSuite {
       d.compact()
       parity("after compact")
     } finally spark.conf.unset(d.AnnStalenessRatioConf)
-  }
+  })
 }

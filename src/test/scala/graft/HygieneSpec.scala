@@ -186,12 +186,15 @@ class HygieneSpec extends AnyFunSuite {
     def vec = Seq.fill(8)(rnd.nextFloat() * 2 - 1)
     val q = vec
     val indexes = Seq("lsh", "ivf", "pq", "bq", "imi", "hnsw")
-    def census = spark.sparkContext.getPersistentRDDs.size
+    // only the RDDs persisted since `pre` count: the ContextCleaner may
+    // free an earlier suite's blocks at any point of the loop
+    def pinnedSince(pre: collection.Set[Int]): Int =
+      (spark.sparkContext.getPersistentRDDs.keySet -- pre).size
     /** Waits out the non-blocking unpersist of replaced pinned frames. */
-    def settled(base: Int): Int = {
+    def settled(pre: collection.Set[Int], want: Int): Int = {
       val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (census != base && System.nanoTime() < deadline) Thread.sleep(50)
-      census - base
+      while (pinnedSince(pre) != want && System.nanoTime() < deadline) Thread.sleep(50)
+      pinnedSince(pre)
     }
     val s = new graft.store.VectorStore(spark)
     val nss = Seq("g0", "g1")
@@ -200,13 +203,15 @@ class HygieneSpec extends AnyFunSuite {
       for (ns <- nss; ix <- indexes) s.findSimilar(q, k = 3, namespace = ns, approx = true, index = ix)
     val keys = (for (ns <- nss; ix <- indexes) yield (ix, ns, 8)).toSet
     round()
-    val base = census // the lsh and bq frames pinned by the builds
+    val pre = spark.sparkContext.getPersistentRDDs.keySet // with the builds' lsh and bq frames
     (1 to 3).foreach { r =>
       nss.foreach(ns => s.insert(vec, Map.empty, ns)) // five of six layouts go stale
       round()
       val held = s.heldLayoutRows
       assert(held.size == held.toSet.size && held.toSet == keys, s"live round $r: $held")
-      assert(settled(base) == 0, s"live round $r: the persisted-RDD census moved")
+      // this round's lsh and bq frames, the last round's unpersisted
+      val pinned = settled(pre, 4)
+      assert(pinned == 4, s"live round $r: $pinned frames pinned for 2 indexes x 2 namespaces")
     }
     val d = new graft.store.DurableVectorStore(spark,
       java.nio.file.Files.createTempDirectory("graft_hyg_held_").toString)
@@ -216,14 +221,15 @@ class HygieneSpec extends AnyFunSuite {
     def durableRound(): Unit =
       indexes.foreach(ix => d.findSimilar(q, k = 3, namespace = "g0", approx = true, index = ix))
     durableRound()
-    val dBase = census // after the load's own transient pins are gone
+    val dPre = spark.sparkContext.getPersistentRDDs.keySet
     (1 to 2).foreach { r =>
       d.refreshAnnIndex("g0", 8) // every layout is rebuilt
       durableRound()
       val held = d.heldLayoutRows
       assert(held.size == held.toSet.size && held.toSet == indexes.map((_, "g0", 8)).toSet,
         s"durable round $r: $held")
-      assert(settled(dBase) == 0, s"durable round $r: the persisted-RDD census moved")
+      val pinned = settled(dPre, 0)
+      assert(pinned == 0, s"durable round $r: $pinned RDDs left persisted")
     }
     // the live store stays reachable until here: a collected store's
     // pinned frames would leave the census through the ContextCleaner
