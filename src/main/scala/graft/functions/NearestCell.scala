@@ -48,23 +48,7 @@ case class NearestCell(child: Expression, centroids: Seq[Seq[Float]])
     val v = new Array[Float](n)
     var i = 0
     while (i < n) { v(i) = arr.getFloat(i); i += 1 }
-    var best = 0
-    var bestD = Double.MaxValue
-    var c = 0
-    while (c < mat.length) {
-      val ct = mat(c)
-      val lim = math.min(n, ct.length)
-      var acc = 0.0
-      var k = 0
-      while (k < lim) {
-        val d = v(k).toDouble - ct(k).toDouble
-        acc += d * d
-        k += 1
-      }
-      if (acc < bestD) { bestD = acc; best = c }
-      c += 1
-    }
-    best
+    NearestCell.nearest(v, mat)
   }
 
   /** Same loop inside whole-stage codegen; the centroid matrix rides along
@@ -109,4 +93,28 @@ object NearestCell {
   def apply(vec: Column, centroids: Seq[Seq[Float]]): Column =
     CatalystBridge.column(
       NearestCell(CatalystBridge.expression(vec), centroids))
+
+  /** THE scalar kernel: the nearest centroid of one vector, the loop the
+    * interpreted eval runs and driver-side builds call (the codegen path
+    * emits the same loop in Java). */
+  def nearest(v: Array[Float], mat: Array[Array[Float]]): Int = {
+    val n = v.length
+    var best = 0
+    var bestD = Double.MaxValue
+    var c = 0
+    while (c < mat.length) {
+      val ct = mat(c)
+      val lim = math.min(n, ct.length)
+      var acc = 0.0
+      var k = 0
+      while (k < lim) {
+        val d = v(k).toDouble - ct(k).toDouble
+        acc += d * d
+        k += 1
+      }
+      if (acc < bestD) { bestD = acc; best = c }
+      c += 1
+    }
+    best
+  }
 }

@@ -50,17 +50,39 @@ case class PqEncode(child: Expression, codebook: Seq[Seq[Seq[Float]]])
   @transient private lazy val mat: Array[Array[Array[Float]]] =
     codebook.map(_.map(_.toArray).toArray).toArray
 
-  @transient private lazy val subDim: Int = mat(0)(0).length
-
   /** One kernel definition shared by eval and codegen (value-bridge, the
     * [[MinhashArray]] pattern). */
-  def encode(arr: ArrayData): GenericArrayData = {
-    val n = arr.numElements()
+  def encode(arr: ArrayData): GenericArrayData =
+    new GenericArrayData(PqEncode.encode(arr.toFloatArray(), mat))
+
+  override def nullSafeEval(input: Any): Any =
+    encode(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, input => {
+      val self = ctx.addReferenceObj("pqEncode", this, classOf[PqEncode].getName)
+      s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $self.encode($input);"
+    })
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object PqEncode {
+  def apply(vec: Column, codebook: Seq[Seq[Seq[Float]]]): Column =
+    CatalystBridge.column(
+      PqEncode(CatalystBridge.expression(vec), codebook))
+
+  /** THE scalar kernel: one vector's codes against a [sub][code][dim]
+    * codebook, the loop eval, codegen and driver-side builds all run. */
+  def encode(v0: Array[Float], mat: Array[Array[Array[Float]]]): Array[Int] = {
+    val n = v0.length
+    val subDim = mat(0)(0).length
     val v = new Array[Double](n)
     var i = 0
     var sq = 0.0
     while (i < n) {
-      v(i) = arr.getFloat(i).toDouble
+      v(i) = v0(i).toDouble
       sq += v(i) * v(i)
       i += 1
     }
@@ -93,24 +115,6 @@ case class PqEncode(child: Expression, codebook: Seq[Seq[Seq[Float]]])
       codes(m) = best
       m += 1
     }
-    new GenericArrayData(codes)
+    codes
   }
-
-  override def nullSafeEval(input: Any): Any =
-    encode(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, input => {
-      val self = ctx.addReferenceObj("pqEncode", this, classOf[PqEncode].getName)
-      s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $self.encode($input);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object PqEncode {
-  def apply(vec: Column, codebook: Seq[Seq[Seq[Float]]]): Column =
-    CatalystBridge.column(
-      PqEncode(CatalystBridge.expression(vec), codebook))
 }

@@ -42,24 +42,8 @@ case class RotateVec(child: Expression, matrix: Seq[Seq[Float]])
     matrix.map(_.toArray).toArray
 
   /** One kernel definition shared by eval and codegen. */
-  def rotate(arr: ArrayData): GenericArrayData = {
-    val n = arr.numElements()
-    val x = new Array[Double](n)
-    var i = 0
-    while (i < n) { x(i) = arr.getFloat(i).toDouble; i += 1 }
-    val out = new Array[Float](mat.length)
-    var r = 0
-    while (r < mat.length) {
-      val row = mat(r)
-      var acc = 0.0
-      var j = 0
-      val m = math.min(n, row.length)
-      while (j < m) { acc += row(j).toDouble * x(j); j += 1 }
-      out(r) = acc.toFloat
-      r += 1
-    }
-    new GenericArrayData(out)
-  }
+  def rotate(arr: ArrayData): GenericArrayData =
+    new GenericArrayData(RotateVec.rotate(arr.toFloatArray(), mat))
 
   override def nullSafeEval(input: Any): Any =
     rotate(input.asInstanceOf[ArrayData])
@@ -78,4 +62,22 @@ object RotateVec {
   def apply(vec: Column, matrix: Seq[Seq[Float]]): Column =
     CatalystBridge.column(
       RotateVec(CatalystBridge.expression(vec), matrix))
+
+  /** THE scalar kernel: R·x for one vector, the loop eval, codegen and
+    * driver-side builds all run. */
+  def rotate(x: Array[Float], mat: Array[Array[Float]]): Array[Float] = {
+    val n = x.length
+    val out = new Array[Float](mat.length)
+    var r = 0
+    while (r < mat.length) {
+      val row = mat(r)
+      var acc = 0.0
+      var j = 0
+      val m = math.min(n, row.length)
+      while (j < m) { acc += row(j).toDouble * x(j).toDouble; j += 1 }
+      out(r) = acc.toFloat
+      r += 1
+    }
+    out
+  }
 }

@@ -384,6 +384,32 @@ object Ann {
       .map(_.getSeq[Float](0).toArray)
   }
 
+  /** [[sampleVectors]] over rows already on the driver (a snapshot-tier
+    * namespace): every row, in their order, as the Spark sample keeps
+    * every row of a corpus under [[QuantizerSampleMax]] in collect order. */
+  private[graft] def driverSample(vecs: Array[Array[Float]]): Array[Array[Float]] = {
+    require(vecs.nonEmpty, "cannot train a quantizer over an empty corpus")
+    require(vecs.length <= QuantizerSampleMax, s"a driver sample holds at most $QuantizerSampleMax rows")
+    vecs
+  }
+
+  /** A training sample by vector, component by component: the order
+    * for rows whose collect order the driver cannot reproduce. Lloyd's
+    * init draws sample indexes and every training sum runs in sample
+    * order, so a layout depends on it; a scan of partitioned files
+    * returns rows in an order set by the files' sizes. Rows that tie
+    * are the same vector, so their order cannot change a layout; ids
+    * play no part. */
+  private[graft] def sampleOrder(vecs: Array[Array[Float]]): Array[Array[Float]] =
+    vecs.sorted((a: Array[Float], b: Array[Float]) => {
+      var i = 0
+      var c = 0
+      while (c == 0 && i < math.min(a.length, b.length)) {
+        c = java.lang.Float.compare(a(i), b(i)); i += 1
+      }
+      if (c != 0) c else Integer.compare(a.length, b.length)
+    })
+
   /** Persist the inverted file for `rows` under `aux`: `index/`
     * cell-partitioned (probes read nProbe/nCells partitions), `assign/`
     * flat (idCol, cell) for oracle replay — derived by reading the

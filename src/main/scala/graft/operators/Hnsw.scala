@@ -754,23 +754,53 @@ object Hnsw {
   // executor-static [[graphCache]] plays no part.
 
   /** The shard graphs of the layout at `aux`, loaded on the driver from
-    * its `graph/` rows — `load` turns one shard's rows into its graph —
-    * or None when they hold more than `bound` nodes. */
-  private def driverGraphs[N: Encoder, K](spark: SparkSession, aux: String, bound: Int,
-                                          shard: N => Int)(
-      load: Array[N] => (Array[K], ShardGraph)): Option[Seq[(Array[K], ShardGraph)]] = {
+    * its `graph/` rows — `graphs` turns the rows into them — or None
+    * when they hold more than `bound` nodes. */
+  private def driverGraphs[N: Encoder, K](spark: SparkSession, aux: String, bound: Int)(
+      graphs: Array[N] => Seq[(Array[K], ShardGraph)]): Option[Seq[(Array[K], ShardGraph)]] = {
     val nodes = spark.read.parquet(s"$aux/graph").as[N].limit(math.max(bound + 1, 0)).collect()
-    if (nodes.length > bound) None
-    else Some(nodes.groupBy(shard).toSeq.sortBy(_._1).map { case (_, ns) => load(ns) })
+    if (nodes.length > bound) None else Some(graphs(nodes))
   }
+
+  /** One graph per shard of `nodes`, in shard order. */
+  private def byShard[N, K](nodes: Seq[N], shard: N => Int)(
+      load: Array[N] => (Array[K], ShardGraph))(implicit tag: scala.reflect.ClassTag[N]): Seq[(Array[K], ShardGraph)] =
+    nodes.toArray.groupBy(shard).toSeq.sortBy(_._1).map { case (_, ns) => load(ns) }
 
   /** The string-id shard graphs of the store-attached layout at `aux`,
     * loaded on the driver; None when it holds more than `bound` nodes. */
   private[graft] def driverGraphsS(spark: SparkSession, aux: String,
                                    bound: Int): Option[Seq[(Array[String], ShardGraph)]] = {
     import spark.implicits._
-    driverGraphs(spark, aux, bound, (n: HnswNodeS) => n.shard)(ns =>
+    driverGraphs(spark, aux, bound)((ns: Array[HnswNodeS]) => graphsS(ns.toSeq))
+  }
+
+  /** The shard graphs of string-id `nodes` (any order), as the driver
+    * loads them from their `graph/` rows. */
+  private[graft] def graphsS(nodes: Seq[HnswNodeS]): Seq[(Array[String], ShardGraph)] =
+    byShard(nodes, (n: HnswNodeS) => n.shard)(ns =>
       loadShard(ns.map(n => (n.id, n.vec.toArray, n.level, n.nbrs.map(_.toArray).toArray))))
+
+  /** The shard a string id hashes to among `shards`: the builds'
+    * `pmod(xxhash64(id), shards)`, on the driver. */
+  private[graft] def shardOf(id: String, shards: Int): Int =
+    java.lang.Math.floorMod(org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
+      org.apache.spark.unsafe.types.UTF8String.fromString(id),
+      org.apache.spark.sql.types.StringType, 42L), shards.toLong).toInt
+
+  /** The graph nodes of `ids`/`vecs`, hash-sharded into `shards` graphs
+    * built by [[shardNodes]], on the driver: the rows the store-attached
+    * build's `flatMapGroups` emits. `record(shard, i, node)` makes row
+    * i's node. */
+  private[graft] def driverShardNodes[N](ids: Array[String], vecs: Array[Array[Float]], shards: Int)(
+      record: (Int, Int, (String, Array[Float], Int, Array[Array[String]])) => N): Seq[N] = {
+    val at = ids.indices.groupBy(i => shardOf(ids(i), shards))
+    at.toSeq.sortBy(_._1).flatMap { case (shard, rows) =>
+      // shardNodes sorts by id; so does this, to pair each node with its row
+      val sorted = rows.sortBy(ids(_))
+      shardNodes(sorted.map(i => (ids(i), vecs(i))).toArray).toSeq.zip(sorted)
+        .map { case (node, i) => record(shard, i, node) }
+    }
   }
 
   /** One query's beam winners over every driver-resident graph: what
@@ -789,12 +819,17 @@ object Hnsw {
   private[graft] def driverGraphsD(spark: SparkSession, aux: String,
                                    bound: Int): Option[Seq[(Array[StoredNodeD], ShardGraph)]] = {
     import spark.implicits._
-    driverGraphs(spark, aux, bound, (n: HnswNodeD) => n.shard) { ns =>
-      val (nodes, g) = loadShardD(ns.map(n =>
-        StoredNodeD(n.id, n.vec, n.metadata, n.metadataJson, n.level, n.nbrs)))
-      (nodes.map(_.copy(vec = Seq.empty, nbrs = Seq.empty)), g)
-    }
+    driverGraphs(spark, aux, bound)((ns: Array[HnswNodeD]) => graphsD(ns.toSeq))
   }
+
+  /** The shard graphs of record-carrying `nodes` (any order), as the
+    * driver loads them from their `graph/` rows. */
+  private[graft] def graphsD(nodes: Seq[HnswNodeD]): Seq[(Array[StoredNodeD], ShardGraph)] =
+    byShard(nodes, (n: HnswNodeD) => n.shard) { ns =>
+      val (stored, g) = loadShardD(ns.map(n =>
+        StoredNodeD(n.id, n.vec, n.metadata, n.metadataJson, n.level, n.nbrs)))
+      (stored.map(_.copy(vec = Seq.empty, nbrs = Seq.empty)), g)
+    }
 
   /** One query's beam winners over every driver-resident durable graph,
     * with the flat filter inside the beam: the nodes

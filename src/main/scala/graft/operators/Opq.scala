@@ -216,9 +216,14 @@ object Opq {
                                  vecCol: String, total: Long,
                                  dim: Int): Option[Array[Array[Float]]] =
     if (dim % Pq.SubSpaces != 0) None
-    else Some(
-      trainRotation(Ann.sampleVectors(rows, idCol, vecCol, total), dim)
-        .map(_.map(_.toFloat)))
+    else rotationOf(Ann.sampleVectors(rows, idCol, vecCol, total), dim)
+
+  /** [[rotationFor]] over a sample already drawn (the driver-side builds
+    * draw it with [[Ann.driverSample]]). */
+  private[graft] def rotationOf(sample: Array[Array[Float]],
+                                dim: Int): Option[Array[Array[Float]]] =
+    if (dim % Pq.SubSpaces != 0) None
+    else Some(trainRotation(sample, dim).map(_.map(_.toFloat)))
 
   /** Persist a rotation matrix in the flat (i, j, r) oracle form —
     * shared by [[buildOpqIndex]] and the serving mounts. */

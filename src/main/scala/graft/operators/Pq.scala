@@ -92,9 +92,14 @@ object Pq {
     * trainQuantizer relationship, per subspace. */
   private[graft] def trainCodebooks(rows: DataFrame, idCol: String,
                                     vecCol: String, total: Long,
-                                    dim: Int): Seq[Seq[Seq[Float]]] = {
+                                    dim: Int): Seq[Seq[Seq[Float]]] =
+    codebooksOf(Ann.sampleVectors(rows, idCol, vecCol, total), dim)
+
+  /** [[trainCodebooks]] over a sample already drawn (the driver-side
+    * builds draw it with [[Ann.driverSample]]). */
+  private[graft] def codebooksOf(raw: Array[Array[Float]], dim: Int): Seq[Seq[Seq[Float]]] = {
     val subDim = (dim + SubSpaces - 1) / SubSpaces
-    val sample = Ann.sampleVectors(rows, idCol, vecCol, total).map(normalized)
+    val sample = raw.map(normalized)
     (0 until SubSpaces).map { m =>
       Ann.lloyds(sample.map(subVec(_, m, subDim)), CodesPerSub, iters = 5,
         seed = PqSeed + m).map(_.toSeq).toSeq

@@ -93,14 +93,25 @@ import graft.store.{ApproxIndexes, DurableVectorStore, VectorStore}
   * included — serves on both mounts, so the index matrix is symmetric;
   * since r16 metadata filters serve on EVERY path of the matrix —
   * exact, all six indexes, single and batch, both mounts — with the
-  * starved-selectivity fallback guaranteeing min(k, matching) hits). */
+  * starved-selectivity fallback guaranteeing min(k, matching) hits).
+  *
+  * TCP_NODELAY: the JDK server leaves Nagle's algorithm on unless the
+  * JVM-wide system property `sun.net.httpserver.nodelay` is true, and a
+  * response then waits ~40 ms for the client's delayed ACK. Constructing
+  * a server sets the property to `true` when it is unset, before the
+  * server is created; the JDK reads it once, when its first server is
+  * created, so an embedder that sets it (to `false`, say) before that
+  * keeps its own value. */
 class RestServer(store: VectorStore, port: Int = 0,
                  durable: Option[DurableVectorStore] = None,
                  quality: Option[Array[Double]] = None) {
 
   private val mapper = new ObjectMapper()
   private val logger = org.slf4j.LoggerFactory.getLogger(classOf[RestServer])
-  private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  private val server = {
+    RestServer.defaultNoDelay()
+    HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  }
 
   def boundPort: Int = server.getAddress.getPort
 
@@ -796,4 +807,16 @@ class RestServer(store: VectorStore, port: Int = 0,
 
   def start(): Unit = server.start()
   def stop(): Unit = { server.stop(0); pool.shutdown() }
+}
+
+object RestServer {
+
+  /** The JVM-wide switch that turns TCP_NODELAY on for the JDK's HTTP
+    * server (see the class doc). */
+  val NoDelayProperty = "sun.net.httpserver.nodelay"
+
+  /** Sets [[NoDelayProperty]] to `true` unless something already set it. */
+  private def defaultNoDelay(): Unit = System.getProperties.synchronized {
+    if (System.getProperty(NoDelayProperty) == null) System.setProperty(NoDelayProperty, "true")
+  }
 }

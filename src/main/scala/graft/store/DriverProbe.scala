@@ -20,8 +20,9 @@ private[graft] object DriverProbe {
     if (rows.length > bound) None else Some(rows)
   }
 
-  /** A layout's candidate rows on the driver: collected at most once per
-    * layout, by its first snapshot-tier probe, under this holder's lock
+  /** A layout's candidate rows on the driver: built with the layout on
+    * the snapshot tier, else collected at most once per layout, by its
+    * first snapshot-tier probe, under this holder's lock
     * (one holder per layout, so one per cache key), and dropped with the
     * layout. `collect` answers None when the layout holds more rows than
     * the bound; that is kept too, and the layout's probes stay on Spark. */
@@ -35,6 +36,16 @@ private[graft] object DriverProbe {
 
     /** Collected yet? (spec hook: without collecting) */
     def collected: Boolean = state.exists(_.isDefined)
+  }
+
+  object Held {
+    /** A holder of rows the layout's build made on the driver: held from
+      * the start, nothing to collect. */
+    def of[T](rows: T): Held[T] = {
+      val h = new Held[T](() => Some(rows))
+      h.get
+      h
+    }
   }
 
   /** `rows` ordered by ascending (key, id) — `orderBy(key, id)`'s order
@@ -96,7 +107,7 @@ private[graft] object DriverProbe {
     * ids map, or None when it holds more than `bound` rows' signatures. */
   def bucketMap(sigs: DataFrame, bound: Int): Option[Buckets] =
     bounded(sigs.select("id", "band", "bucket"), bound * graft.operators.Ann.Bands).map(rows =>
-      new Buckets(rows.groupMap(r => (r.getInt(1), r.getLong(2)))(_.getString(0))))
+      Buckets.of(rows.toSeq.map(r => (r.getString(0), r.getInt(1), r.getLong(2)))))
 
   /** An lsh layout's signatures on the driver. */
   final class Buckets(byBucket: Map[(Int, Long), Array[String]]) {
@@ -104,6 +115,13 @@ private[graft] object DriverProbe {
       * each: the ids the signature join proposes. */
     def mates(query: Seq[(Int, Long)]): Seq[String] =
       query.flatMap(byBucket.getOrElse(_, Array.empty[String])).distinct
+  }
+
+  object Buckets {
+    /** The (id, band, bucket) signature rows grouped by (band, bucket),
+      * each group's ids in row order. */
+    def of(sigs: Seq[(String, Int, Long)]): Buckets =
+      new Buckets(sigs.toArray.groupMap(r => (r._2, r._3))(_._1))
   }
 
   /** Layout rows indexed by their cell. */

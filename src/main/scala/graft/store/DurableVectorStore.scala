@@ -91,9 +91,15 @@ import graft.model.{SearchHit, VectorRecord}
   * any process's commits, with no TTL. On it, exact single and batch
   * searches, live and as-of, the starved skip and both rescues run no
   * Spark job, and neither do the six indexes: each layout holds its
-  * candidate rows on the driver too (collected once per layout), picks the
-  * candidates there with the kernels its Spark frames run, and reranks
-  * them on the snapshot. Larger namespaces run the
+  * candidate rows on the driver too, picks the candidates there with the
+  * kernels its Spark frames run, and reranks them on the snapshot. The
+  * layouts are built there as well ([[DriverBuild]]): the ann layout from
+  * the snapshot's rows at its build stamp, the five derived ones from the
+  * ann layout's rows, with the Spark build's recipes; the only Spark jobs
+  * of such a build write its tables (the cross-process contract: peers
+  * adopt `_BUILT` layouts, the graded replays read them). A layout built
+  * on Spark (above the bound, or adopted from a peer) collects its rows
+  * once, on its first probe on this tier. Larger namespaces run the
   * Spark plans; finding one costs one bounded collect, paid again only
   * after a new tombstone file or a generation flip (the stamp changes
   * that can shrink it). The tiers return the same hits bit for bit
@@ -1851,7 +1857,7 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     * both spaces; augmentation exists only in centers/assignment. */
   private case class AnnEntry(builtSeq: Long, builtGen: Int, aux: String,
                               centers: Array[Array[Float]], rows: Long,
-                              space: String) {
+                              space: String, built: Option[BuiltRows] = None) {
     /** The query's probed cells: centers ranked by squared L2, the count
       * derived from this layout's own centroid count. A mips layout ranks
       * in the augmented geometry, where the query's coordinate is 0 (its
@@ -1863,7 +1869,35 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     /** The layout's records on the driver (id, cell, metadata): the IVF
       * candidates of a snapshot-tier probe, and the records every filtered
       * pq/bq cut matches against ([[passingIds]]). */
-    val records: DriverProbe.Held[DriverProbe.CellRows] = heldRecords(aux)
+    val records: DriverProbe.Held[DriverProbe.CellRows] = built.fold(heldRecords(aux))(b =>
+      DriverProbe.Held.of(new DriverProbe.CellRows(b.ids, b.cells, b.metadata, b.metadataJson)))
+  }
+
+  /** The rows an ann layout built on the driver indexes — the snapshot's
+    * view at its `builtSeq` — and each row's cell: what its derived
+    * layouts build from on the driver ([[deriveOnDriver]]). The view's
+    * vectors are held only until each derived index has been built from
+    * them: once a commit replaces the namespace's snapshot they would be
+    * a second copy of its vectors, and a later derivation takes the Spark
+    * recipe over the persisted records. A mips layout holds none (no
+    * index derives from it). */
+  private final class BuiltRows(view: LiveSnapshot, val cells: Array[Int], derives: Boolean) {
+    val ids: Array[String] = view.idStr
+    val metadata: Array[Map[String, String]] = view.metadata
+    val metadataJson: Array[String] = view.metadataJson
+    @volatile private var rows: Option[LiveSnapshot] = if (derives) Some(view) else None
+    private var pending: Set[String] = ApproxIndexes.Names.toSet - "ivf"
+
+    /** The vectors (copies), None once every derived index is built. */
+    def vectors: Option[Array[Array[Float]]] = rows.map(_.vectors)
+
+    def holdsVectors: Boolean = rows.isDefined
+
+    /** Records `index` as derived, releasing the view after the last. */
+    def derived(index: String): Unit = synchronized {
+      pending -= index
+      if (pending.isEmpty) rows = None
+    }
   }
 
   /** The records of the cell-partitioned layout at `aux` (ivf, imi),
@@ -1891,6 +1925,11 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
 
   private def spaceOf(metric: String): String =
     if (metric == "ip") "mips" else "raw"
+
+  /** Whether the cached ann layout of (namespace, dim, space) holds the
+    * vectors its derived layouts build from on the driver — spec hook. */
+  private[graft] def holdsBuildVectors(namespace: String, dim: Int, space: String = "raw"): Boolean =
+    Option(annCache.get((namespace, dim, space))).flatMap(_.built).exists(_.holdsVectors)
 
   /** Layout dir serving (namespace, dim) — oracle hook, with the build
     * stamp the delta tail is anchored to. None until an approx search
@@ -1964,7 +2003,9 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     * first run the cross-process election — the loser keeps serving the
     * entry being replaced (correct, merely less fresh) and adopts the
     * winner's finished layout on a later probe; generation-gate rebuilds
-    * and initial builds never defer (correctness / nothing to serve). */
+    * and initial builds never defer (correctness / nothing to serve). A
+    * snapshot-tier namespace builds on the driver ([[buildAnnOnDriver]]),
+    * a larger one on Spark ([[buildAnnOnSpark]]). */
   private def buildOrDefer(key: AnnKey, namespace: String, dim: Int,
                            space: String, builtGen: Int,
                            stale: Option[AnnEntry],
@@ -1980,6 +2021,83 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     // layout (files not yet visible to the scan) nor the delta tail
     // (seq ≤ builtSeq) — the build-horizon guard (r11)
     val builtSeq = durableHorizon()
+    // a snapshot-tier namespace builds from the driver's rows: the
+    // snapshot read after the horizon holds every commit at or below it
+    durableSnapshot(namespace).map(_.at(Some(builtSeq))) match {
+      case Some(view) =>
+        if (view.rows == 0) noRows(key, seen, builtSeq)
+        else Some(buildAnnOnDriver(key, view, space, builtGen, builtSeq, stale))
+      case None => buildAnnOnSpark(key, namespace, dim, space, builtGen, builtSeq, seen, stale)
+    }
+  }
+
+  /** An empty namespace builds nothing: the emptiness is recorded as a
+    * fact when nothing was in flight or newer (`seen == builtSeq`). */
+  private def noRows(key: AnnKey, seen: Long, builtSeq: Long): Option[AnnEntry] = {
+    annCache.remove(key)
+    if (seen == builtSeq) annEmpty.put(key, seen)
+    None
+  }
+
+  /** The ann layout's directory for a build at (gen, seq), claimed:
+    * two processes landing on the SAME (gen, seq) epoch must not
+    * interleave writes into one dir — the loser builds into a
+    * process-suffixed dir (correct, just not adopted). */
+  private def claimAnnAux(namespace: String, dim: Int, space: String,
+                          builtGen: Int, builtSeq: Long): String = {
+    val auxBase = annRoot + "/" +
+      graft.PathToken.token(namespace) +
+      s"_g${builtGen}_s${builtSeq}_d$dim" +
+      (if (space == "raw") "" else s"_$space")
+    if (atomicCreate(auxBase + ".claim")) auxBase else auxBase + "_" + procTag
+  }
+
+  /** Publishes a built ann layout: marks the epoch complete (adoption
+    * reads only `_BUILT` dirs) and swaps it into the cache. */
+  private def publishAnn(key: AnnKey, entry: AnnEntry, stale: Option[AnnEntry]): AnnEntry = {
+    atomicCreate(s"${entry.aux}/_BUILT")
+    evictReplaced(key, stale)
+    annCache.put(key, entry)
+    entry
+  }
+
+  /** The snapshot-tier ann build ([[buildOrDefer]]): the Spark recipe
+    * over the driver's rows ([[DriverBuild.ivf]], the mips augmentation
+    * included), the same tables written from the driver arrays, and the
+    * records held from the start. */
+  private def buildAnnOnDriver(key: AnnKey, view: LiveSnapshot, space: String,
+                               builtGen: Int, builtSeq: Long,
+                               stale: Option[AnnEntry]): AnnEntry = {
+    annBuilds.incrementAndGet()
+    val (namespace, dim, _) = key
+    val ids = view.idStr
+    val vecs = view.vectors
+    val ivf = DriverBuild.ivf(if (space == "mips") DriverBuild.augmented(vecs) else vecs, AnnSeed,
+      DriverBuild.vectorOrder)
+    val aux = claimAnnAux(namespace, dim, space, builtGen, builtSeq)
+    val recs = ids.indices.map(i =>
+      (ids(i), vecs(i), view.metadata(i), view.metadataJson(i), ivf.cells(i)))
+      .toDF("id", "values", "metadata", "metadataJson", "cell")
+    DriverBuild.write(recs, s"$aux/index", "cell")
+    DriverBuild.write(recs.select(col("id"), col("cell")), s"$aux/assign")
+    DriverBuild.write(centersFrame(ivf.centers), s"$aux/centers")
+    publishAnn(key, AnnEntry(builtSeq, builtGen, aux, ivf.centers, ids.length.toLong, space,
+      Some(new BuiltRows(view, ivf.cells, derives = space == "raw"))), stale)
+  }
+
+  /** A Spark build's training sample ([[graft.operators.Ann.sampleVectors]])
+    * in the mount's order ([[DriverBuild.vectorOrder]]). */
+  private def trainingSample(rows: DataFrame, vecCol: String, total: Long): Array[Array[Float]] =
+    graft.operators.Ann.sampleOrder(graft.operators.Ann.sampleVectors(rows, "id", vecCol, total))
+
+  /** The persisted centers: what a peer adopts without retraining. */
+  private def centersFrame(centers: Array[Array[Float]]): DataFrame =
+    centers.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cell", "vector")
+
+  /** The Spark ann build ([[buildOrDefer]]), above the snapshot bound. */
+  private def buildAnnOnSpark(key: AnnKey, namespace: String, dim: Int, space: String,
+                              builtGen: Int, builtSeq: Long, seen: Long,
+                              stale: Option[AnnEntry]): Option[AnnEntry] = {
     // the layout carries the FULL record (not just the vector):
     // a probe then serves hits straight from the probed cells,
     // never re-scanning the namespace for enrichment
@@ -1987,11 +2105,7 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
       .select(col("id"), col("values"), col("metadata"),
         col("metadataJson")).toDF()
     val total = rows.count()
-    if (total == 0) {
-      annCache.remove(key)
-      if (seen == builtSeq) annEmpty.put(key, seen)
-      None
-    }
+    if (total == 0) noRows(key, seen, builtSeq)
     else {
       annBuilds.incrementAndGet()
       // MIPS space: train/assign on norm-AUGMENTED vectors (see
@@ -2008,32 +2122,13 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
             s"concat(values, array(CAST(sqrt(greatest($m2 - ($norm2), CAST(0 AS DOUBLE))) AS FLOAT)))")),
             "__aug", "__aug")
         } else (rows, "values", "")
-      val centers = graft.operators.Ann.trainQuantizer(
-        trainRows, "id", trainCol, total,
-        graft.operators.Ann.ivfCellsFor(total), AnnSeed)
-      val auxBase = annRoot + "/" +
-        graft.PathToken.token(namespace) +
-        s"_g${builtGen}_s${builtSeq}_d$dim" +
-        (if (space == "raw") "" else s"_$space")
-      // epoch-dir claim: two processes landing on the SAME (gen, seq)
-      // epoch must not interleave writes into one dir — the loser
-      // builds into a process-suffixed dir (correct, just not adopted)
-      val aux = if (atomicCreate(auxBase + ".claim")) auxBase
-                else auxBase + "_" + procTag
+      val centers = graft.operators.Ann.lloyds(trainingSample(trainRows, trainCol, total),
+        graft.operators.Ann.ivfCellsFor(total), iters = 5, seed = AnnSeed)
+      val aux = claimAnnAux(namespace, dim, space, builtGen, builtSeq)
       graft.operators.Ann.writeInvertedFile(trainRows, "id", "values",
         centers, aux, assignCol = assignCol)
-      // persist the centers so a peer can adopt without retraining,
-      // then mark the epoch complete — adoption reads only _BUILT dirs
-      import spark.implicits._
-      centers.zipWithIndex
-        .map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("cell", "vector")
-        .coalesce(1).write.mode("overwrite").parquet(s"$aux/centers")
-      atomicCreate(s"$aux/_BUILT")
-      val entry = AnnEntry(builtSeq, builtGen, aux, centers, total, space)
-      evictReplaced(key, stale)
-      annCache.put(key, entry)
-      Some(entry)
+      DriverBuild.write(centersFrame(centers), s"$aux/centers")
+      Some(publishAnn(key, AnnEntry(builtSeq, builtGen, aux, centers, total, space), stale))
     }
   }
 
@@ -2339,11 +2434,17 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     protected def held: DriverProbe.Held[_]
     /** Are the candidate rows held on the driver? (spec hook) */
     def holdsRows: Boolean = held.collected
+    /** The trained state: centers, codebooks, rotation or midpoints. */
+    def trained: Seq[Array[Array[Double]]] = Seq.empty
   }
 
-  /** Writes a graded candidate-policy table (one file) at `path`. */
-  private def writeTable(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write.mode("overwrite").parquet(path)
+  /** The trained state of the layout the next (index, namespace, dim)
+    * search serves — spec hook for the driver/Spark build parity (its
+    * tables are [[layoutDir]]'s, ivf's [[annLayoutDir]]'s). */
+  private[graft] def trainedState(index: String, namespace: String, dim: Int,
+                                  space: String = "raw"): Option[Seq[Array[Array[Double]]]] =
+    if (index == "ivf") Option(annCache.get((namespace, dim, space))).map(e => Seq(DriverBuild.wide(e.centers)))
+    else currentDerived(index, namespace, dim).map(_.trained)
 
   /** Every query's probed cells, in query order. */
   private def probeLists(r: Req, cells: Array[Float] => Seq[Int]): Seq[Seq[Int]] =
@@ -2353,9 +2454,9 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     * for one query, `batch_probes` (__qid, cell) for a batch, at `at(name)`. */
   private def writeProbes(r: Req, lists: Seq[Seq[Int]], at: String => String): Unit =
     if (r.batch)
-      writeTable(lists.zipWithIndex.flatMap { case (cs, i) => cs.map(c => (i, c)) }
+      DriverBuild.write(lists.zipWithIndex.flatMap { case (cs, i) => cs.map(c => (i, c)) }
         .toDF("__qid", "cell"), at("batch_probes"))
-    else writeTable(lists.head.toDF("cell"), at("probes"))
+    else DriverBuild.write(lists.head.toDF("cell"), at("probes"))
 
   /** On the driver, the ids of the layout's records `rows` picks that
     * pass `r`'s filter — the filtered record scan's ids: Some(None) for an
@@ -2421,12 +2522,82 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     })
   }
 
-  private def derive(index: String, dim: Int, ann: AnnEntry): Layout = index match {
-    case "pq" => derivePq(dim, ann)
-    case "bq" => deriveBq(dim, ann)
-    case "lsh" => deriveLsh(dim, ann)
-    case "imi" => deriveImi(dim, ann)
-    case "hnsw" => deriveHnsw(ann)
+  /** The index's recipe over the ann layout: on the driver from the
+    * rows an ann layout built there indexes while it holds their vectors,
+    * else on Spark from its persisted records. */
+  private def derive(index: String, dim: Int, ann: AnnEntry): Layout =
+    ann.built.flatMap(b => b.vectors.map((b, _))) match {
+      case Some((b, vecs)) =>
+        val l = deriveOnDriver(index, dim, ann, b, vecs)
+        b.derived(index)
+        l
+      case None => index match {
+        case "pq" => derivePq(dim, ann)
+        case "bq" => deriveBq(dim, ann)
+        case "lsh" => deriveLsh(dim, ann)
+        case "imi" => deriveImi(dim, ann)
+        case "hnsw" => deriveHnsw(ann)
+      }
+    }
+
+  /** The snapshot-tier derivation: each recipe below over the ann
+    * layout's own rows ([[BuiltRows]]) on the driver ([[DriverBuild]]),
+    * the same tables written from the driver arrays, the candidate rows
+    * held from the start. The same layout as the Spark recipe over the
+    * persisted records, with no Spark job but the writes. */
+  private def deriveOnDriver(index: String, dim: Int, ann: AnnEntry, b: BuiltRows,
+                             vecs: Array[Array[Float]]): Layout = {
+    val aux = derivedAux(ann.aux, index)
+    val ids = b.ids
+    val n = ids.length
+    index match {
+      case "pq" =>
+        val pq = DriverBuild.pq(vecs, dim, pqRotateEnabled, DriverBuild.vectorOrder)
+        pq.rotation.foreach(r => graft.operators.Opq.writeRotation(spark, r, s"$aux/rot"))
+        graft.operators.Pq.writeCodebook(spark, pq.codebook.map(_.map(_.toSeq).toSeq).toSeq,
+          s"$aux/codebook")
+        DriverBuild.write((0 until n).map(i => (ids(i), pq.codes(i), b.cells(i)))
+          .toDF("id", "codes", "cell"), s"$aux/codes", "cell")
+        DriverBuild.write((0 until n).flatMap(i => pq.codes(i).indices.map(m =>
+          (ids(i), b.cells(i), m, pq.codes(i)(m)))).toDF("id", "cell", "sub", "code"), s"$aux/codes_flat")
+        new PqLayout(ann.aux, aux, pq.codebook, pq.rotation, DriverProbe.Held.of(new DriverProbe.CodeRows(
+          ids, b.cells, pq.codes.map(c => UnsafeArrayData.fromPrimitiveArray(c)))))
+      case "bq" =>
+        val m = DriverBuild.midpoints(vecs)
+        val mids = Array.tabulate(dim)(i => if (i < m.length) m(i) else 0.0)
+        val words = DriverBuild.bq(vecs, mids)
+        DriverBuild.write((0 until n).map(i => (ids(i), words(i), b.cells(i)))
+          .toDF("id", "code", "cell"), s"$aux/codes", "cell")
+        DriverBuild.write((0 until n).flatMap(i => words(i).indices.map(w =>
+          (ids(i), b.cells(i), w, words(i)(w)))).toDF("id", "cell", "w", "word"), s"$aux/codes_flat")
+        DriverBuild.write(mids.toSeq.zipWithIndex.map(_.swap).toDF("i", "mid"), s"$aux/grid")
+        new BqLayout(ann.aux, aux, mids, DriverProbe.Held.of(new DriverProbe.CodeRows(
+          ids, b.cells, words.map(w => UnsafeArrayData.fromPrimitiveArray(w)))))
+      case "lsh" =>
+        val sigs = DriverBuild.sigRows(ids, DriverBuild.lsh(vecs, dim))
+        DriverBuild.write(sigs.toDF("id", "band", "bucket"), s"$aux/sigs")
+        new LshLayout(ann.aux, aux, DriverProbe.Held.of(DriverProbe.Buckets.of(sigs)))
+      case "imi" =>
+        val grid = DriverBuild.imi(vecs, dim, DriverBuild.vectorOrder)
+        val recs = (0 until n).map(i =>
+          (ids(i), vecs(i), b.metadata(i), b.metadataJson(i), grid.cells(i)))
+          .toDF("id", "values", "metadata", "metadataJson", "cell")
+        DriverBuild.write(recs, s"$aux/index", "cell")
+        DriverBuild.write(recs.select(col("id"), col("cell")), s"$aux/assign")
+        new CellLayout(ann.aux, aux, q => graft.operators.Ann.imiProbeCells(q, grid.lo, grid.hi),
+          k => s"$aux/$k", DriverProbe.Held.of(new DriverProbe.CellRows(ids, grid.cells,
+            b.metadata, b.metadataJson)), Seq(grid.lo, grid.hi))
+      case "hnsw" =>
+        val s = graft.operators.Hnsw.shardsFor(n.toLong, graft.operators.Hnsw.shardRows(spark))
+        val nodes = graft.operators.Hnsw.driverShardNodes(ids, vecs, s) {
+          case (shard, i, (id, vec, lev, nbrs)) =>
+            graft.operators.Hnsw.HnswNodeD(shard, id, vec.toSeq, b.metadata(i),
+              b.metadataJson(i), lev, nbrs.toSeq.map(_.toSeq))
+        }
+        DriverBuild.write(nodes.toDF(), s"$aux/graph", "shard")
+        graft.operators.Hnsw.invalidateGraphs(aux)
+        new HnswLayout(ann.aux, aux, DriverProbe.Held.of(graft.operators.Hnsw.graphsD(nodes)))
+    }
   }
 
   /** The derived layout of (index, namespace, dim) if it was derived from
@@ -2504,8 +2675,10 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
   private final class CellLayout(annAux: String, aux: String,
                                  cells: Array[Float] => Seq[Int],
                                  persistAt: String => String,
-                                 protected val held: DriverProbe.Held[DriverProbe.CellRows])
+                                 protected val held: DriverProbe.Held[DriverProbe.CellRows],
+                                 centers: Seq[Array[Array[Float]]] = Seq.empty)
       extends Layout(annAux, aux) {
+    override def trained: Seq[Array[Array[Double]]] = centers.map(DriverBuild.wide)
     def one(r: Req, e: AnnEntry): DataFrame = {
       val probed = probeLists(r, cells)
       if (r.persist) writeProbes(r, probed, persistAt)
@@ -2538,6 +2711,10 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
 
   // ---- pq (IVFADC): codes-only ADC sweep over the probed cells ---------
 
+  /** The OPQ rotation gate, the live mount's ([[graft.operators.Opq.RotateConf]]). */
+  private def pqRotateEnabled: Boolean =
+    spark.conf.getOption(graft.operators.Opq.RotateConf).forall(_.toBoolean)
+
   /** Per-subspace codebooks trained on the layout rows by the shared
     * [[graft.operators.Pq]] recipe, after the OPQ rotation when enabled
     * (the live mount's contract: codes train and encode in ROTATED space,
@@ -2551,16 +2728,14 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     val recs = layoutFrame(s"${ann.aux}/index")
       .select(col("id"), col("values"), col("cell"))
     val rotOpt =
-      if (spark.conf.getOption(graft.operators.Opq.RotateConf).forall(_.toBoolean))
-        graft.operators.Opq.rotationFor(recs, "id", "values", ann.rows, dim)
+      if (pqRotateEnabled) graft.operators.Opq.rotationOf(trainingSample(recs, "values", ann.rows), dim)
       else None
     val enc = rotOpt.map { rot =>
       recs.select(col("id"),
         graft.operators.Opq.rotateCol(rot)(col("values")).as("values"),
         col("cell"))
     }.getOrElse(recs)
-    val codebookSeq = graft.operators.Pq.trainCodebooks(
-      enc, "id", "values", ann.rows, dim)
+    val codebookSeq = graft.operators.Pq.codebooksOf(trainingSample(enc, "values", ann.rows), dim)
     val aux = derivedAux(ann.aux, "pq")
     rotOpt.foreach(rot =>
       graft.operators.Opq.writeRotation(spark, rot, s"$aux/rot"))
@@ -2569,12 +2744,13 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
         graft.functions.PqEncode(col("values"), codebookSeq))
       .select(col("id"), col("codes"), col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$aux/codes")
-    spark.read.parquet(s"$aux/codes")
+    DriverBuild.write(spark.read.parquet(s"$aux/codes")
       .select(col("id"), col("cell"),
-        posexplode(col("codes")).as(Seq("sub", "code")))
-      .coalesce(1).write.mode("overwrite").parquet(s"$aux/codes_flat")
+        posexplode(col("codes")).as(Seq("sub", "code"))), s"$aux/codes_flat")
     new PqLayout(ann.aux, aux,
-      codebookSeq.map(_.map(_.toArray).toArray).toArray, rotOpt)
+      codebookSeq.map(_.map(_.toArray).toArray).toArray, rotOpt,
+      heldCodes(s"$aux/codes", "codes",
+        r => UnsafeArrayData.fromPrimitiveArray(r.getSeq[Int](2).toArray)))
   }
 
   /** Cells rank in RAW space (the records layout); the LUT tabulates in
@@ -2587,10 +2763,10 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     * held codes are swept with the sweep's per-row kernel and rounding. */
   private final class PqLayout(annAux: String, aux: String,
                                codebook: Array[Array[Array[Float]]],
-                               val rot: Option[Array[Array[Float]]])
+                               val rot: Option[Array[Array[Float]]],
+                               protected val held: DriverProbe.Held[DriverProbe.CodeRows])
       extends Layout(annAux, aux) {
-    protected val held = heldCodes(s"$aux/codes", "codes",
-      r => UnsafeArrayData.fromPrimitiveArray(r.getSeq[Int](2).toArray))
+    override def trained: Seq[Array[Array[Double]]] = (rot.toSeq ++ codebook).map(DriverBuild.wide)
     private def lut(q: Seq[Float]) = graft.operators.Pq.lutFor(
       rot.map(graft.operators.Opq.rotateQuery(_, q.toArray)).getOrElse(q.toArray),
       codebook)
@@ -2663,15 +2839,14 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
         expr(graft.operators.Bq.packExprSql(dim, "values", "mids")))
       .select(col("id"), col("code"), col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$aux/codes")
-    spark.read.parquet(s"$aux/codes")
+    DriverBuild.write(spark.read.parquet(s"$aux/codes")
       .select(col("id"), col("cell"),
-        posexplode(col("code")).as(Seq("w", "word")))
-      .coalesce(1).write.mode("overwrite").parquet(s"$aux/codes_flat")
-    mids.zipWithIndex
+        posexplode(col("code")).as(Seq("w", "word"))), s"$aux/codes_flat")
+    DriverBuild.write(mids.zipWithIndex
       .map { case (m, i) => (i, m) }.toSeq
-      .toDF("i", "mid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$aux/grid")
-    new BqLayout(ann.aux, aux, mids)
+      .toDF("i", "mid"), s"$aux/grid")
+    new BqLayout(ann.aux, aux, mids, heldCodes(s"$aux/codes", "code",
+      r => UnsafeArrayData.fromPrimitiveArray(r.getSeq[Long](2).toArray)))
   }
 
   /** The query packs against the grid on the driver; one xor+popcount
@@ -2680,17 +2855,17 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     * float tie boundary. A batch broadcasts every query code (qid-keyed)
     * for ONE sweep, cut per query by the bounded-heap aggregate. On the
     * driver the held words are swept with the same per-row kernel. */
-  private final class BqLayout(annAux: String, aux: String, mids: Array[Double])
+  private final class BqLayout(annAux: String, aux: String, mids: Array[Double],
+                               protected val held: DriverProbe.Held[DriverProbe.CodeRows])
       extends Layout(annAux, aux) {
-    protected val held = heldCodes(s"$aux/codes", "code",
-      r => UnsafeArrayData.fromPrimitiveArray(r.getSeq[Long](2).toArray))
+    override def trained: Seq[Array[Array[Double]]] = Seq(Array(mids))
     private def qcodes(r: Req): Seq[(Int, Array[Long])] =
       r.queries.zipWithIndex.map { case (q, i) => (i, graft.operators.Bq.packBits(q, mids)) }
     private def persist(r: Req, qcodes: Seq[(Int, Array[Long])], lists: Seq[Seq[Int]]): Unit = {
       writeProbes(r, lists, k => s"$aux/$k")
       // flat (qid, w, word) replay table — the codes_flat convention
       if (r.batch)
-        writeTable(qcodes.flatMap { case (i, code) =>
+        DriverBuild.write(qcodes.flatMap { case (i, code) =>
           code.toSeq.zipWithIndex.map { case (word, w) => (i, w, word) }
         }.toDF("qid", "w", "word"), s"$aux/batch_qcodes")
     }
@@ -2747,7 +2922,8 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
         col("values"), dim)
       .select(col("id"), col("band"), col("bucket"))
       .write.mode("overwrite").parquet(s"$aux/sigs")
-    new LshLayout(ann.aux, aux)
+    new LshLayout(ann.aux, aux, new DriverProbe.Held(() =>
+      DriverProbe.bucketMap(layoutFrame(s"$aux/sigs"), snapshotBound)))
   }
 
   /** The query's ≤ Bands (band, bucket) pairs, signed on the driver,
@@ -2757,18 +2933,17 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     * and scans the signatures ONCE (the q148 thesis). On the driver the
     * signatures are one (band, bucket) → ids map; one query's mates pass
     * the filter against the layout's records, as its record join does. */
-  private final class LshLayout(annAux: String, aux: String)
+  private final class LshLayout(annAux: String, aux: String,
+                                protected val held: DriverProbe.Held[DriverProbe.Buckets])
       extends Layout(annAux, aux) {
-    protected val held = new DriverProbe.Held(() =>
-      DriverProbe.bucketMap(layoutFrame(s"$aux/sigs"), snapshotBound))
     private def buckets(r: Req): Seq[Seq[(Int, Long)]] =
       r.queries.map(q => graft.operators.Ann.bandBuckets(q.toArray))
     private def persist(r: Req, buckets: Seq[Seq[(Int, Long)]]): Unit =
       if (r.batch)
-        writeTable(buckets.zipWithIndex.flatMap { case (bs, i) =>
+        DriverBuild.write(buckets.zipWithIndex.flatMap { case (bs, i) =>
           bs.map { case (band, bucket) => (i, band, bucket) }
         }.toDF("__qid", "band", "bucket"), s"$aux/batch_qsig")
-      else writeTable(buckets.head.toDF("band", "bucket"), s"$aux/qsig")
+      else DriverBuild.write(buckets.head.toDF("band", "bucket"), s"$aux/qsig")
     def one(r: Req, e: AnnEntry): DataFrame = {
       val qb = buckets(r)
       if (r.persist) persist(r, qb)
@@ -2811,8 +2986,7 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
       .select(col("id"), col("values"), col("metadata"),
         col("metadataJson"))
     val half = dim / 2
-    val sample = graft.operators.Ann.sampleVectors(
-      recs, "id", "values", ann.rows)
+    val sample = trainingSample(recs, "values", ann.rows)
     val kGrid = graft.operators.Ann.imiGridFor(ann.rows)
     val cLo = graft.operators.Ann.lloyds(sample.map(_.take(half)),
       kGrid, iters = 5, seed = graft.operators.Ann.ImiSeedLo)
@@ -2828,14 +3002,13 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
             slice(col("values"), half + 1, dim - half), hiSeq))
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$aux/index")
-    spark.read.parquet(s"$aux/index")
-      .select(col("id"), col("cell"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$aux/assign")
+    DriverBuild.write(spark.read.parquet(s"$aux/index")
+      .select(col("id"), col("cell")), s"$aux/assign")
     // aux is already process-suffixed under shared roots (derivedAux), so
     // the graded probe tables live directly inside it
     new CellLayout(ann.aux, aux,
       q => graft.operators.Ann.imiProbeCells(q, cLo, cHi), k => s"$aux/$k",
-      heldRecords(aux))
+      heldRecords(aux), Seq(cLo, cHi))
   }
 
   // ---- hnsw: sharded small-world graphs over the layout rows (r12) -----
@@ -2852,7 +3025,8 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
       layoutFrame(s"${ann.aux}/index")
         .select(col("id"), col("values"), col("metadata"), col("metadataJson")),
       ann.rows, aux)
-    new HnswLayout(ann.aux, aux)
+    new HnswLayout(ann.aux, aux, new DriverProbe.Held(() =>
+      graft.operators.Hnsw.driverGraphsD(spark, aux, snapshotBound)))
   }
 
   /** Beam winners off the resident shard graphs. FLAT filters ride INSIDE
@@ -2866,14 +3040,14 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
     * shard graph for all queries in ONE pass. `persist` writes the beam as
     * emitted (`cands/`, `batch_cands/`). On the driver the beams walk the
     * layout's graphs, loaded there once. */
-  private final class HnswLayout(annAux: String, aux: String)
+  private final class HnswLayout(annAux: String, aux: String,
+                                 protected val held: DriverProbe.Held[Seq[(Array[graft.operators.Hnsw.StoredNodeD],
+                                   graft.operators.Hnsw.ShardGraph)]])
       extends Layout(annAux, aux) {
-    protected val held = new DriverProbe.Held(() =>
-      graft.operators.Hnsw.driverGraphsD(spark, aux, snapshotBound))
     def one(r: Req, e: AnnEntry): DataFrame = {
       val cand = graft.operators.Hnsw.shardCandidatesD(spark, aux,
         r.query.toArray, r.filter)
-      if (r.persist) writeTable(cand.select(col("id")), s"$aux/cands")
+      if (r.persist) DriverBuild.write(cand.select(col("id")), s"$aux/cands")
       cand.where(r.pred).select(recordCols: _*)
     }
     def many(r: Req, e: AnnEntry): DataFrame = {
@@ -2881,7 +3055,7 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
         r.queries, r.filter)
       if (!r.persist) beam
       else {
-        writeTable(beam, s"$aux/batch_cands")
+        DriverBuild.write(beam, s"$aux/batch_cands")
         spark.read.parquet(s"$aux/batch_cands")
       }
     }
@@ -2890,9 +3064,9 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
         val beams = r.queries.map(q =>
           graft.operators.Hnsw.driverBeamD(graphs, q.toArray, r.filter))
         if (r.persist) {
-          if (r.batch) writeTable(beams.zipWithIndex.flatMap { case (ns, i) => ns.map(n => (i, n.id)) }
+          if (r.batch) DriverBuild.write(beams.zipWithIndex.flatMap { case (ns, i) => ns.map(n => (i, n.id)) }
             .toDF("__qid", "id"), s"$aux/batch_cands")
-          else writeTable(beams.head.map(_.id).toDF("id"), s"$aux/cands")
+          else DriverBuild.write(beams.head.map(_.id).toDF("id"), s"$aux/cands")
         }
         // one query's candidates pass the predicate, as its frame's do;
         // a batch's are the beam as emitted

@@ -19,11 +19,11 @@ import graft.model.{SearchHit, VectorRecord}
   * the JSONPath filter runs Spark's own `get_json_object` evaluator. */
 private[graft] final class LiveSnapshot private (
     val epoch: Long,
-    idStr: Array[String],
+    private[store] val idStr: Array[String],
     ids: Array[UTF8String],
     data: Array[UnsafeArrayData],
-    metadata: Array[Map[String, String]],
-    metadataJson: Array[String]) {
+    private[store] val metadata: Array[Map[String, String]],
+    private[store] val metadataJson: Array[String]) {
 
   // Columns, not the records: each vector is held once, as the unsafe
   // array the kernel scores (a hit copies it out).
@@ -33,6 +33,9 @@ private[graft] final class LiveSnapshot private (
       recs.map(_.metadata), recs.map(_.metadataJson))
 
   val rows: Int = idStr.length
+
+  /** Every row's vector, in row order (copies: an index build's input). */
+  private[store] def vectors: Array[Array[Float]] = data.map(_.toFloatArray())
 
   /** The snapshot of just `keep`'s rows, in that order, sharing their
     * columns' values (a view of this one: no vector is copied). */

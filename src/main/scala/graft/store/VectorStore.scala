@@ -40,8 +40,10 @@ import graft.model.{SearchHit, StorageInfo, VectorRecord}
   * per store epoch by the first read after a mutation: exact single and
   * batch search, range, threshold, the starved-filter skip and both
   * starved rescues score it with no Spark job, and so do the six indexes:
-  * each layout holds its candidate rows on the driver too, picks the
-  * candidates there and reranks them on the snapshot. Larger namespaces
+  * each layout is built on the driver from the snapshot's rows
+  * ([[DriverBuild]], the Spark build's recipes; its only Spark jobs write
+  * its tables or fill its lsh/bq frame), holds its candidate rows there,
+  * picks the candidates there and reranks them on the snapshot. Larger namespaces
   * serve from Spark: scan → codegen'd distance →
   * `TakeOrderedAndProject`. Finding a namespace above the bound costs one
   * bounded collect, paid again only after a delete, deleteNamespace or
@@ -538,6 +540,8 @@ class VectorStore(val spark: SparkSession) {
     def dir: Option[String] = None
     /** The persisted frame a hit re-pins and a replacement unpersists. */
     def pinned: Option[DataFrame] = None
+    /** The trained state: centers, codebooks, rotation or midpoints. */
+    def trained: Seq[Array[Array[Double]]] = Seq.empty
     /** The layout to serve now, given the epoch it was built at; None when
       * it must be rebuilt. Epoch-keyed: current only at its own epoch. */
     def servedAt(built: Long, namespace: String): Option[Layout] =
@@ -547,6 +551,15 @@ class VectorStore(val spark: SparkSession) {
       * landed mid-build (that mutation makes the NEXT search rebuild). */
     def fresh(built: Long, namespace: String): Option[Layout] = Some(this)
   }
+
+  /** The current (index, namespace, dim) layout's trained state and its
+    * persisted lsh or bq frame — spec hooks for the driver/Spark build
+    * parity (its directory's tables are [[layoutDir]]'s). */
+  private[graft] def trainedState(index: String, namespace: String, dim: Int): Option[Seq[Array[Array[Double]]]] =
+    current((index, namespace, dim)).map(_.trained)
+
+  private[graft] def pinnedFrame(index: String, namespace: String, dim: Int): Option[DataFrame] =
+    current((index, namespace, dim)).flatMap(_.pinned)
 
   /** (index, namespace, dim) → (stamped epoch, layout). */
   private val layouts =
@@ -571,9 +584,12 @@ class VectorStore(val spark: SparkSession) {
     * and the contract is "build paid once per epoch", not a silent
     * recompute per search. Otherwise the key's build lock is taken and
     * the entry checked again, so a same-key loser reuses the winner's
-    * build. The build reads (epoch, live) under the store monitor and
-    * runs OUTSIDE it — a build is Spark jobs, and holding the monitor
-    * would stall every writer — stamping the PRE-build epoch: a mutation
+    * build. A snapshot-tier namespace builds from its epoch-current
+    * snapshot on the driver ([[buildOnDriver]]), stamped with the
+    * snapshot's epoch; a larger one builds on Spark from (epoch, live)
+    * read under the store monitor. Either runs OUTSIDE the monitor — a
+    * build writes tables, and holding the monitor would stall every
+    * writer — stamping the PRE-build epoch: a mutation
     * landing mid-build leaves the entry already stale, and the next
     * search rebuilds (a post-build stamp would mark pre-mutation layouts
     * current forever). Replacing an entry unpersists its pinned frame, so
@@ -591,10 +607,14 @@ class VectorStore(val spark: SparkSession) {
     }
     serveable.orElse(buildLocks.computeIfAbsent(key, _ => new Object).synchronized {
       serveable.orElse {
-        val (e, snapshot) = synchronized { (epoch, live) }
-        val rows = snapshot.filter(col("namespace") === namespace)
-          .select(col("id"), col("values")).toDF()
-        build(index, rows, e, namespace, dim).flatMap { l =>
+        val (e, built) = snapshot(namespace) match {
+          case Some(snap) => (snap.epoch, buildOnDriver(index, snap, namespace, dim))
+          case None =>
+            val (e, rows) = synchronized { (epoch, live) }
+            (e, build(index, rows.filter(col("namespace") === namespace)
+              .select(col("id"), col("values")).toDF(), e, namespace, dim))
+        }
+        built.flatMap { l =>
           builds(index).incrementAndGet()
           Option(layouts.put(key, (e, l))).flatMap(_._2.pinned)
             .foreach(_.unpersist(blocking = false))
@@ -617,6 +637,88 @@ class VectorStore(val spark: SparkSession) {
     case "pq" => buildPq(rows, e, namespace, dim)
     case "bq" => buildBq(rows, dim)
     case "hnsw" => buildHnsw(rows, e, namespace, dim)
+  }
+
+  /** The snapshot-tier build: every layout built on the driver from the
+    * epoch-current snapshot's rows with the Spark build's recipe
+    * ([[DriverBuild]]), its candidate rows held from the start, and its
+    * tables written from the driver arrays (the same tables, read by the
+    * Spark tier should the namespace outgrow the bound while the layout
+    * still serves); lsh and bq keep their persisted frames, made from
+    * the driver arrays. The same answers as [[build]] over the same rows,
+    * with no Spark job but the writes. */
+  private def buildOnDriver(index: String, snap: LiveSnapshot, namespace: String,
+                            dim: Int): Option[Layout] = {
+    val ids = snap.idStr
+    val e = snap.epoch
+    lazy val vecs = snap.vectors
+    /** `index/` partitioned by cell and its flat `assign/`. */
+    def writeCells(aux: String, cells: Array[Int]): Unit = {
+      val rows = ids.indices.map(i => (ids(i), vecs(i), cells(i))).toDF("id", "values", "cell")
+      DriverBuild.write(rows, s"$aux/index", "cell")
+      DriverBuild.write(rows.select(col("id"), col("cell")), s"$aux/assign")
+    }
+    def held(cells: Array[Int]) = DriverProbe.Held.of(new DriverProbe.CellRows(ids, cells, null, null))
+    /** A persisted frame of rows made from the driver arrays: an RDD over
+      * the row indexes, so no two frames share a cache entry (equal local
+      * relations would) and its lineage holds the arrays, not the rows;
+      * filled eagerly by one job. */
+    def persisted(rows: DataFrame): DataFrame = {
+      val p = rows.persist()
+      p.queryExecution.toRdd.count()
+      p
+    }
+    if (ids.isEmpty && index != "lsh") None
+    else index match {
+      case "lsh" =>
+        val sigs = DriverBuild.lsh(vecs, dim)
+        Some(new LshLayout(persisted(spark.sparkContext.parallelize(ids.indices)
+            .flatMap(DriverBuild.sigRows(ids, sigs, _)).toDF("id", "band", "bucket")),
+          DriverProbe.Held.of(DriverProbe.Buckets.of(DriverBuild.sigRows(ids, sigs)))))
+      case "ivf" =>
+        val ivf = DriverBuild.ivf(vecs, IvfSeed, DriverBuild.rowOrder)
+        val aux = auxDir(ivfRoot, namespace, e, dim)
+        writeCells(aux, ivf.cells)
+        val nProbe = graft.operators.Ann.ivfProbeFor(ivf.centers.length)
+        Some(new CellLayout(aux, ivf.centers.length,
+          q => graft.operators.Ann.rankCells(q, ivf.centers, nProbe), held(ivf.cells),
+          Seq(ivf.centers)))
+      case "imi" =>
+        val grid = DriverBuild.imi(vecs, dim, DriverBuild.rowOrder)
+        val aux = auxDir(imiRoot, namespace, e, dim)
+        writeCells(aux, grid.cells)
+        Some(new CellLayout(aux, grid.lo.length * grid.hi.length,
+          q => graft.operators.Ann.imiProbeCells(q, grid.lo, grid.hi), held(grid.cells),
+          Seq(grid.lo, grid.hi)))
+      case "pq" =>
+        val pq = DriverBuild.pq(vecs, dim, pqRotateEnabled, DriverBuild.rowOrder)
+        val aux = auxDir(pqRoot, namespace, e, dim)
+        pq.rotation.foreach(r => graft.operators.Opq.writeRotation(spark, r, s"$aux/rot"))
+        graft.operators.Pq.writeCodebook(spark, pq.codebook.map(_.map(_.toSeq).toSeq).toSeq,
+          s"$aux/codebook")
+        DriverBuild.write(ids.indices.map(i => (ids(i), pq.codes(i))).toDF("id", "codes"),
+          s"$aux/codes")
+        DriverBuild.write(ids.indices.flatMap(i => pq.codes(i).indices.map(m => (ids(i), m, pq.codes(i)(m))))
+          .toDF("id", "sub", "code"), s"$aux/codes_flat")
+        Some(new PqLayout(aux, pq.codebook, pq.rotation, DriverProbe.Held.of(
+          codeRows(ids, pq.codes.map(c => UnsafeArrayData.fromPrimitiveArray(c))))))
+      case "bq" =>
+        val mids = DriverBuild.midpoints(vecs)
+        val words = DriverBuild.bq(vecs, mids)
+        Some(new BqLayout(mids, persisted(spark.sparkContext.parallelize(ids.indices)
+            .map(i => (ids(i), words(i))).toDF("id", "code")),
+          DriverProbe.Held.of(codeRows(ids, words.map(w => UnsafeArrayData.fromPrimitiveArray(w))))))
+      case "hnsw" =>
+        val s = graft.operators.Hnsw.shardsFor(ids.length.toLong, graft.operators.Hnsw.shardRows(spark))
+        val aux = auxDir(hnswRoot, namespace, e, dim)
+        val nodes = graft.operators.Hnsw.driverShardNodes(ids, vecs, s) { case (shard, _, (id, vec, lev, nbrs)) =>
+          graft.operators.Hnsw.HnswNodeS(shard, id, vec.toSeq, lev, nbrs.toSeq.map(_.toSeq))
+        }
+        DriverBuild.write(nodes.toDF(), s"$aux/graph", "shard")
+        trimHnswLedger(namespace, e)
+        Some(new HnswLayout(aux, ids.length.toLong, Seq.empty,
+          DriverProbe.Held.of(graft.operators.Hnsw.graphsS(nodes))))
+    }
   }
 
   /** The directory of the current (index, namespace, dim) layout — lets
@@ -673,7 +775,7 @@ class VectorStore(val spark: SparkSession) {
       .select(col("id"), col("band"), col("bucket"))
       .persist()
     sigs.count() // materialize the signature pass once, eagerly
-    Some(new LshLayout(sigs))
+    Some(new LshLayout(sigs, new DriverProbe.Held(() => DriverProbe.bucketMap(sigs, snapshotBound))))
   }
 
   /** Candidates are ids sharing at least one band bucket with a query.
@@ -684,9 +786,9 @@ class VectorStore(val spark: SparkSession) {
     * for the whole batch. An id matching in several bands repeats in a
     * single query's candidates; the rerank is set-shaped. On the driver
     * the signatures are one (band, bucket) → ids map. */
-  private final class LshLayout(sigs: DataFrame) extends Layout {
+  private final class LshLayout(sigs: DataFrame, protected val held: DriverProbe.Held[DriverProbe.Buckets])
+      extends Layout {
     override def pinned: Option[DataFrame] = Some(sigs)
-    protected val held = new DriverProbe.Held(() => DriverProbe.bucketMap(sigs, snapshotBound))
     def onDriver(queries: Seq[Seq[Float]], batch: Boolean,
                  persist: Boolean): Option[Seq[Seq[String]]] =
       held.get.map(b => queries.map(q => b.mates(graft.operators.Ann.bandBuckets(q.toArray))))
@@ -727,7 +829,7 @@ class VectorStore(val spark: SparkSession) {
       // probes always match the geometry of the layout they scan
       val nProbe = graft.operators.Ann.ivfProbeFor(centers.length)
       Some(new CellLayout(aux, centers.length,
-        q => graft.operators.Ann.rankCells(q, centers, nProbe)))
+        q => graft.operators.Ann.rankCells(q, centers, nProbe), heldAssign(aux), Seq(centers)))
     }
   }
 
@@ -757,13 +859,20 @@ class VectorStore(val spark: SparkSession) {
             graft.functions.NearestCell(slice(col("values"), half + 1, dim - half), hiSeq))
         .write.mode("overwrite").partitionBy("cell")
         .parquet(s"$aux/index")
-      spark.read.parquet(s"$aux/index")
-        .select(col("id"), col("cell"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$aux/assign")
+      DriverBuild.write(spark.read.parquet(s"$aux/index")
+        .select(col("id"), col("cell")), s"$aux/assign")
       Some(new CellLayout(aux, cLo.length * cHi.length,
-        q => graft.operators.Ann.imiProbeCells(q, cLo, cHi)))
+        q => graft.operators.Ann.imiProbeCells(q, cLo, cHi), heldAssign(aux), Seq(cLo, cHi)))
     }
   }
+
+  /** The `assign/` table of the cell layout at `aux`, collected on the
+    * driver by its first snapshot-tier probe. */
+  private def heldAssign(aux: String): DriverProbe.Held[DriverProbe.CellRows] =
+    new DriverProbe.Held(() =>
+      DriverProbe.bounded(spark.read.parquet(s"$aux/assign").select(col("id"), col("cell")),
+        snapshotBound).map(rows =>
+        new DriverProbe.CellRows(rows.map(_.getString(0)), rows.map(_.getInt(1)), null, null)))
 
   /** A cell-partitioned layout (ivf, imi): `probe` ranks a query's cells
     * on the driver (no Spark job); the candidates are the probed cells'
@@ -774,21 +883,19 @@ class VectorStore(val spark: SparkSession) {
     * fresh read per request re-lists every cell partition); on the driver
     * the cell → ids lists come from its `assign/` table. */
   private final class CellLayout(aux: String, val cells: Int,
-                                 val probe: Array[Float] => Seq[Int]) extends Layout {
+                                 val probe: Array[Float] => Seq[Int],
+                                 protected val held: DriverProbe.Held[DriverProbe.CellRows],
+                                 centers: Seq[Array[Array[Float]]]) extends Layout {
+    override def trained: Seq[Array[Array[Double]]] = centers.map(DriverBuild.wide)
     override def dir: Option[String] = Some(aux)
     private lazy val index = spark.read.parquet(s"$aux/index")
-    protected val held = new DriverProbe.Held(() =>
-      DriverProbe.bounded(spark.read.parquet(s"$aux/assign").select(col("id"), col("cell")),
-        snapshotBound).map(rows =>
-        new DriverProbe.CellRows(rows.map(_.getString(0)), rows.map(_.getInt(1)), null, null)))
     /** Each query's probe list, written for replay when `persist`. */
     private def probed(queries: Seq[Seq[Float]], batch: Boolean,
                        persist: Boolean): Seq[Seq[Int]] = {
       val lists = queries.map(q => probe(q.toArray))
       if (persist) {
         val table = if (batch) pairs(lists).toDF("__qid", "cell") else lists.head.toDF("cell")
-        table.coalesce(1).write.mode("overwrite")
-          .parquet(s"$aux/${if (batch) "batch_probes" else "probes"}")
+        DriverBuild.write(table, s"$aux/${if (batch) "batch_probes" else "probes"}")
       }
       lists
     }
@@ -846,9 +953,17 @@ class VectorStore(val spark: SparkSession) {
       rot.foreach(r => graft.operators.Opq.writeRotation(spark, r, s"$aux/rot"))
       graft.operators.Pq.writeCodebook(spark, codebook, s"$aux/codebook")
       graft.operators.Pq.writeCodes(enc, "id", "values", codebook, aux)
-      Some(new PqLayout(aux, codebook.map(_.map(_.toArray).toArray).toArray, rot))
+      Some(new PqLayout(aux, codebook.map(_.map(_.toArray).toArray).toArray, rot,
+        new DriverProbe.Held(() =>
+          DriverProbe.bounded(spark.read.parquet(s"$aux/codes").select(col("id"), col("codes")),
+            snapshotBound).map(rows => codeRows(rows.map(_.getString(0)),
+            rows.map(r => UnsafeArrayData.fromPrimitiveArray(r.getSeq[Int](1).toArray)))))))
     }
   }
+
+  /** Codes rows of an unpartitioned codes table (pq codes, bq words). */
+  private def codeRows(ids: Array[String], codes: Array[UnsafeArrayData]): DriverProbe.CodeRows =
+    new DriverProbe.CodeRows(ids, new Array[Int](ids.length), codes)
 
   /** One ADC sweep of the codes table (a table-lookup sum per row — at
     * scale it reads ~32× fewer bytes than a vector scan), cut to
@@ -861,13 +976,11 @@ class VectorStore(val spark: SparkSession) {
     * read once per layout; on the driver its rows are swept with the
     * sweep's own per-row kernel and rounding. */
   private final class PqLayout(aux: String, codebook: Array[Array[Array[Float]]],
-                               val rotation: Option[Array[Array[Float]]]) extends Layout {
+                               val rotation: Option[Array[Array[Float]]],
+                               protected val held: DriverProbe.Held[DriverProbe.CodeRows]) extends Layout {
     override def dir: Option[String] = Some(aux)
+    override def trained: Seq[Array[Array[Double]]] = (rotation.toSeq ++ codebook).map(DriverBuild.wide)
     private lazy val codes = spark.read.parquet(s"$aux/codes")
-    protected val held = new DriverProbe.Held(() =>
-      DriverProbe.bounded(codes.select(col("id"), col("codes")), snapshotBound).map(rows =>
-        new DriverProbe.CodeRows(rows.map(_.getString(0)), new Array[Int](rows.length),
-          rows.map(r => UnsafeArrayData.fromPrimitiveArray(r.getSeq[Int](1).toArray)))))
     /** The query's ADC table in the layout's (possibly rotated) space. */
     private def lut(q: Seq[Float]) = graft.operators.Pq.lutFor(
       rotation.map(graft.operators.Opq.rotateQuery(_, q.toArray)).getOrElse(q.toArray),
@@ -931,7 +1044,9 @@ class VectorStore(val spark: SparkSession) {
         .select(col("id"), col("code"))
         .persist()
       codes.count() // materialize the packing pass once, eagerly
-      Some(new BqLayout(mids, codes))
+      Some(new BqLayout(mids, codes, new DriverProbe.Held(() =>
+        DriverProbe.bounded(codes, snapshotBound).map(rows => codeRows(rows.map(_.getString(0)),
+          rows.map(r => UnsafeArrayData.fromPrimitiveArray(r.getSeq[Long](1).toArray)))))))
     }
   }
 
@@ -942,13 +1057,11 @@ class VectorStore(val spark: SparkSession) {
     * frame so every request compiles the same plan; a batch sweeps the
     * codes once, cut per query by the bounded-heap aggregate. On the
     * driver the held words are swept with the same per-row kernel. */
-  private final class BqLayout(mids: Array[Double], codes: DataFrame) extends Layout {
+  private final class BqLayout(mids: Array[Double], codes: DataFrame,
+                               protected val held: DriverProbe.Held[DriverProbe.CodeRows]) extends Layout {
     override def pinned: Option[DataFrame] = Some(codes)
+    override def trained: Seq[Array[Array[Double]]] = Seq(Array(mids))
     def words: Int = (mids.length + 63) / 64
-    protected val held = new DriverProbe.Held(() =>
-      DriverProbe.bounded(codes, snapshotBound).map(rows =>
-        new DriverProbe.CodeRows(rows.map(_.getString(0)), new Array[Int](rows.length),
-          rows.map(r => UnsafeArrayData.fromPrimitiveArray(r.getSeq[Long](1).toArray)))))
     private def hamming(qFrame: DataFrame): DataFrame =
       codes.crossJoin(broadcast(qFrame))
         .withColumn("ham", graft.functions.AdcKernels.hammingWords(col("code"), col("qcode")))
@@ -1066,16 +1179,18 @@ class VectorStore(val spark: SparkSession) {
         }
         .toDF().write.mode("overwrite").partitionBy("shard")
         .parquet(s"$aux/graph")
-      // trim ledger entries the snapshot absorbed (pure GC — the epoch
-      // stamps already make them non-delta for this build)
-      synchronized {
-        Option(hnswLedgers.get(namespace)).foreach { l =>
-          l.inserts.filterInPlace(_._1 > e)
-          l.deletes.filterInPlace(_._1 > e)
-        }
-      }
+      trimHnswLedger(namespace, e)
       Some(new HnswLayout(aux, total, Seq.empty, new DriverProbe.Held(() =>
         graft.operators.Hnsw.driverGraphsS(spark, aux, snapshotBound))))
+    }
+  }
+
+  /** Trims the ledger entries a build at epoch `e` absorbed (pure GC —
+    * the epoch stamps already make them non-delta for this build). */
+  private def trimHnswLedger(namespace: String, e: Long): Unit = synchronized {
+    Option(hnswLedgers.get(namespace)).foreach { l =>
+      l.inserts.filterInPlace(_._1 > e)
+      l.deletes.filterInPlace(_._1 > e)
     }
   }
 
@@ -1107,8 +1222,7 @@ class VectorStore(val spark: SparkSession) {
       * only fires for a caller that poisons during every rebuild. */
     override def fresh(built: Long, namespace: String): Option[Layout] =
       servedAt(built, namespace)
-    private def write(cands: DataFrame, sub: String): Unit =
-      cands.coalesce(1).write.mode("overwrite").parquet(s"$aux/$sub")
+    private def write(cands: DataFrame, sub: String): Unit = DriverBuild.write(cands, s"$aux/$sub")
     private def persisted(cands: DataFrame, sub: String, persist: Boolean): DataFrame =
       if (!persist) cands
       else {

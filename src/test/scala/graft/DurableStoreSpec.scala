@@ -173,6 +173,8 @@ class DurableStoreSpec extends AnyFunSuite {
 
   test("approx search on an empty namespace counts it once, then answers from the cached fact until a write") {
     val d = new DurableVectorStore(spark, tmp())
+    // the Spark tier, where the fact saves the build's count per request
+    d.snapshotMaxRows = -1
     d.loadFrame(frame(vecs), "full")
     val q = vecs(5)._2
     // the first approx call pays the build's count and finds no rows
@@ -191,6 +193,27 @@ class DurableStoreSpec extends AnyFunSuite {
     assert(d.annBuilds.get() == 0)
     // read-your-writes: an insert outdates the fact, the next approx
     // search builds the layout and answers the new rows
+    d.loadFrame(frame(vecs), "none")
+    val hits = d.findSimilar(q, k = 3, namespace = "none", approx = true)
+    assert(hits.headOption.map(_.id).contains("v5"), s"got ${hits.map(_.id)}")
+    assert(d.annBuilds.get() == 1)
+  }
+
+  test("on the snapshot tier approx search on an empty namespace runs no Spark job and builds nothing") {
+    val d = new DurableVectorStore(spark, tmp())
+    d.loadFrame(frame(vecs), "full")
+    val q = vecs(5)._2
+    // the namespace has no data files: its snapshot, the build's input,
+    // is empty without a Spark job
+    val jobs = TestSpark.jobsOf {
+      assert(d.findSimilar(q, k = 3, namespace = "none", approx = true).isEmpty)
+      assert(d.findSimilarBatchApprox(Seq(q, q), k = 3, namespace = "none")
+        .forall(_.isEmpty))
+      assert(d.findSimilar(q, k = 3, namespace = "none", approx = true,
+        index = "pq").isEmpty)
+    }
+    assert(jobs == 0, s"approx searches on an empty namespace ran $jobs Spark jobs")
+    assert(d.annBuilds.get() == 0)
     d.loadFrame(frame(vecs), "none")
     val hits = d.findSimilar(q, k = 3, namespace = "none", approx = true)
     assert(hits.headOption.map(_.id).contains("v5"), s"got ${hits.map(_.id)}")

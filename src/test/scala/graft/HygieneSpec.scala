@@ -15,11 +15,17 @@ class HygieneSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
+  /** The persisted RDDs now that were not persisted at `pre`. Only
+    * these count: the ContextCleaner may free an earlier suite's blocks
+    * at any point of a loop, which a census by size reads as shrinkage. */
+  private def pinnedSince(pre: collection.Set[Int]): Int =
+    (spark.sparkContext.getPersistentRDDs.keySet -- pre).size
+
   private def loopedCensusGrowth(run: () => Unit): Int = {
     run() // first call builds the standing pins
-    val base = spark.sparkContext.getPersistentRDDs.size
+    val pre = spark.sparkContext.getPersistentRDDs.keySet
     (1 to 3).foreach(_ => run())
-    spark.sparkContext.getPersistentRDDs.size - base
+    pinnedSince(pre)
   }
 
   test("looping q145 (the r13 ADVICE leak site) leaves the block census flat") {
@@ -62,11 +68,11 @@ class HygieneSpec extends AnyFunSuite {
     def run(d: String): Unit =
       graft.operators.TextAnalysis.queries("q145_bigram_logprob")(spark, d).count()
     run(dir); run(dir2) // build both dirs' standing pins
-    val base = spark.sparkContext.getPersistentRDDs.size
+    val pre = spark.sparkContext.getPersistentRDDs.keySet
     val basePins = StandingCache.pinned.size
     (1 to 3).foreach { _ => run(dir); run(dir2) } // interleave
-    assert(spark.sparkContext.getPersistentRDDs.size == base,
-      "interleaved two-dir loop changed the block census")
+    assert(pinnedSince(pre) == 0,
+      "interleaved two-dir loop pinned new blocks")
     assert(StandingCache.pinned.size == basePins,
       "interleaved two-dir loop minted new StandingCache keys")
     assert(StandingCache.pinned.map(_._1).distinct.size >= 2,
@@ -165,8 +171,8 @@ class HygieneSpec extends AnyFunSuite {
     def round(): Unit =
       for (ns <- nss; ix <- Seq("lsh", "bq"))
         s.findSimilar(q, k = 3, namespace = ns, approx = true, index = ix)
-    def census = spark.sparkContext.getPersistentRDDs.size
-    val base = census
+    val pre = spark.sparkContext.getPersistentRDDs.keySet
+    def census = pinnedSince(pre)
     (1 to 4).foreach { r =>
       if (r > 1) nss.foreach(ns => s.insert(vec, Map.empty, ns)) // every layout goes stale
       round()
@@ -175,9 +181,9 @@ class HygieneSpec extends AnyFunSuite {
           s"round $r: the $ix layout of $ns is not current and pinned")
       // replaced frames are unpersisted without blocking: allow them to land
       val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (census - base > 6 && System.nanoTime() < deadline) Thread.sleep(50)
-      assert(census - base == 6,
-        s"round $r: ${census - base} pinned frames for 2 indexes x 3 namespaces")
+      while (census > 6 && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(census == 6,
+        s"round $r: $census pinned frames for 2 indexes x 3 namespaces")
     }
   }
 
@@ -186,10 +192,6 @@ class HygieneSpec extends AnyFunSuite {
     def vec = Seq.fill(8)(rnd.nextFloat() * 2 - 1)
     val q = vec
     val indexes = Seq("lsh", "ivf", "pq", "bq", "imi", "hnsw")
-    // only the RDDs persisted since `pre` count: the ContextCleaner may
-    // free an earlier suite's blocks at any point of the loop
-    def pinnedSince(pre: collection.Set[Int]): Int =
-      (spark.sparkContext.getPersistentRDDs.keySet -- pre).size
     /** Waits out the non-blocking unpersist of replaced pinned frames. */
     def settled(pre: collection.Set[Int], want: Int): Int = {
       val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000

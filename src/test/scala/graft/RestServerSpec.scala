@@ -34,6 +34,20 @@ class RestServerSpec extends AnyFunSuite {
     (resp.statusCode(), resp.body())
   }
 
+  test("constructing a server turns TCP_NODELAY on unless the embedder set the property") {
+    val key = RestServer.NoDelayProperty
+    val saved = Option(System.getProperty(key))
+    def construct(): Unit = new RestServer(new VectorStore(spark)).stop()
+    try {
+      System.clearProperty(key)
+      construct()
+      assert(System.getProperty(key) == "true")
+      System.setProperty(key, "false")
+      construct()
+      assert(System.getProperty(key) == "false", "an embedder's explicit false was overwritten")
+    } finally saved.fold(System.clearProperty(key))(System.setProperty(key, _))
+  }
+
   test("full reference client flow over HTTP, reference envelopes") {
     withServer { (base, _) =>
       // health before any data (rest_api.py:297)
