@@ -106,43 +106,81 @@ object VectorDistance {
 
   val Metrics: Set[String] = Set("l2sq", "dot", "cos")
 
-  /** The interpreted kernel: one loop over the common prefix of the two
-    * arrays, float32 elements widened to double in ascending index order,
-    * the same arithmetic as the generated code. Catalyst's interpreted
-    * path and the live store's driver snapshot both call this, so a
-    * driver-side score is bit-equal to the one a Spark plan computes. */
+  /** The interpreted kernel: the per-row loops below over the common
+    * prefix of the two arrays, float32 elements widened to double in
+    * ascending index order, the same arithmetic as the generated code.
+    * Catalyst's interpreted path calls this, and the driver snapshot
+    * ([[graft.store.LiveSnapshot]]) calls the same loops on its flat
+    * vector array, so a driver-side score is bit-equal to the one a Spark
+    * plan computes. */
   def eval(metric: String, x: ArrayData, y: ArrayData): Double = {
-    val n = math.min(x.numElements(), y.numElements())
-    var i = 0
+    val xs = x.toFloatArray()
+    val ys = y.toFloatArray()
+    val n = math.min(xs.length, ys.length)
     metric match {
-      case "l2sq" =>
-        var acc = 0.0
-        while (i < n) {
-          val d = x.getFloat(i).toDouble - y.getFloat(i).toDouble
-          acc += d * d; i += 1
-        }
-        acc
-      case "dot" =>
-        var acc = 0.0
-        while (i < n) {
-          acc += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1
-        }
-        acc
-      case "cos" =>
-        var d = 0.0; var na = 0.0; var nb = 0.0
-        while (i < n) {
-          val xv = x.getFloat(i).toDouble; val yv = y.getFloat(i).toDouble
-          d += xv * yv; na += xv * xv; nb += yv * yv; i += 1
-        }
-        // zero vector → similarity 0, never NaN (NaN sorts above every
-        // real score in Spark DESC and would hijack top-k). The same
-        // guard covers non-finite inputs: an Infinity component makes
-        // d/den NaN (Inf/Inf) — map that to 0 too, so one corrupt row
-        // can never become every query's permanent #1 hit.
-        val den = math.sqrt(na) * math.sqrt(nb)
-        val r = if (den == 0.0) 0.0 else d / den
-        if (r.isNaN) 0.0 else r
+      case "l2sq" => l2sqRow(xs, 0, ys, 0, n)
+      case "dot" => dotRow(xs, 0, ys, 0, n)
+      case "cos" => cosine(dotRow(xs, 0, ys, 0, n), sumSqRow(xs, 0, n), sumSqRow(ys, 0, n))
     }
+  }
+
+  /** Σ (x(xo+i) − y(yo+i))² for i < n, in ascending i. */
+  def l2sqRow(x: Array[Float], xo: Int, y: Array[Float], yo: Int, n: Int): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      val d = x(xo + i).toDouble - y(yo + i).toDouble
+      acc += d * d; i += 1
+    }
+    acc
+  }
+
+  /** Σ x(xo+i) · y(yo+i) for i < n, in ascending i. */
+  def dotRow(x: Array[Float], xo: Int, y: Array[Float], yo: Int, n: Int): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      acc += x(xo + i).toDouble * y(yo + i).toDouble; i += 1
+    }
+    acc
+  }
+
+  /** Σ x(xo+i)² for i < n, in ascending i: a cosine norm's sum, the same
+    * sequence of additions as the fused loop's own accumulator, so a row's
+    * sum may be taken once and reused for every query of its length. */
+  def sumSqRow(x: Array[Float], xo: Int, n: Int): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      val v = x(xo + i).toDouble
+      acc += v * v; i += 1
+    }
+    acc
+  }
+
+  /** The cosine of x's slice [xo, xo + xn) and `q` over their common
+    * prefix, given `xss` = Σ x² over the whole slice and `qss` = Σ q² over
+    * the whole of q (taken once per row and once per query): a prefix
+    * shorter than either is summed again, so the result is [[eval]]'s
+    * bit for bit whatever the two lengths. */
+  def cosRow(x: Array[Float], xo: Int, xn: Int, xss: Double,
+             q: Array[Float], qss: Double): Double = {
+    val n = math.min(xn, q.length)
+    cosine(dotRow(x, xo, q, 0, n),
+      if (n == xn) xss else sumSqRow(x, xo, n),
+      if (n == q.length) qss else sumSqRow(q, 0, n))
+  }
+
+  /** Cosine similarity from the dot product and the two sums of squares.
+    * A zero vector → similarity 0, never NaN (NaN sorts above every real
+    * score in Spark DESC and would hijack top-k). The same guard covers
+    * non-finite inputs: an Infinity component makes d/den NaN (Inf/Inf) —
+    * map that to 0 too, so one corrupt row can never become every query's
+    * permanent #1 hit. */
+  def cosine(d: Double, na: Double, nb: Double): Double = {
+    val den = math.sqrt(na) * math.sqrt(nb)
+    val r = if (den == 0.0) 0.0 else d / den
+    if (r.isNaN) 0.0 else r
   }
 
   private def make(metric: String)(a: Column, b: Column): Column =

@@ -144,8 +144,6 @@ object Hnsw {
       s
     }
 
-    private val asc: Ordering[(Double, Int)] = Ordering.Tuple2[Double, Int]
-
     /** Greedy descent on one layer: move to the strictly-closest
       * neighbor until none improves (ties prefer the smaller index, so
       * the walk is deterministic). */
@@ -173,43 +171,42 @@ object Hnsw {
     /** Beam search on one layer: the standard ef-bounded frontier walk,
       * returning ≤ ef (distance, index) pairs ascending. */
     private def searchLayer(q: Array[Float], eps: Array[Int], ef: Int,
-                            lev: Int): Array[(Double, Int)] = {
+                            lev: Int): Beam = {
       val visited = new java.util.BitSet(n)
-      val cand = new java.util.PriorityQueue[(Double, Int)](asc)
-      val res = new java.util.PriorityQueue[(Double, Int)](asc.reverse)
+      val cand = new Beam(ef, farthestOnTop = false)
+      val res = new Beam(ef, farthestOnTop = true)
       eps.foreach { ep =>
         if (!visited.get(ep)) {
           visited.set(ep)
-          val e = (d2(q, ep), ep)
-          cand.add(e); res.add(e)
-          if (res.size > ef) res.poll()
+          val d = d2(q, ep)
+          cand.push(d, ep); res.push(d, ep)
+          if (res.size > ef) res.pop()
         }
       }
       var done = false
       while (!done && !cand.isEmpty) {
-        val c = cand.poll()
-        if (res.size >= ef && asc.compare(c, res.peek()) > 0) done = true
+        val cd = cand.topD
+        val ci = cand.topI
+        cand.pop()
+        if (res.size >= ef && Beam.before(res.topD, res.topI, cd, ci)) done = true
         else {
-          val around = adj(c._2)(lev)
+          val around = adj(ci)(lev)
           var i = 0
           while (i < around.length) {
             val e = around(i)
             if (!visited.get(e)) {
               visited.set(e)
               val d = d2(q, e)
-              if (res.size < ef || asc.compare((d, e), res.peek()) < 0) {
-                cand.add((d, e)); res.add((d, e))
-                if (res.size > ef) res.poll()
+              if (res.size < ef || Beam.before(d, e, res.topD, res.topI)) {
+                cand.push(d, e); res.push(d, e)
+                if (res.size > ef) res.pop()
               }
             }
             i += 1
           }
         }
       }
-      val out = new Array[(Double, Int)](res.size)
-      var i = out.length - 1
-      while (i >= 0) { out(i) = res.poll(); i -= 1 }
-      out
+      res.drainAscending()
     }
 
     /** The paper's SELECT-NEIGHBORS-HEURISTIC (Malkov & Yashunin alg. 4,
@@ -221,13 +218,13 @@ object Hnsw {
       * backfill with the nearest pruned candidates (keepPruned), so
       * degree never starves. Deterministic: input is (distance, index)
       * sorted, every comparison strict. */
-    private def selectHeuristic(cands: Array[(Double, Int)],
-                                m: Int): Array[Int] = {
+    private def selectHeuristic(cands: Beam, m: Int): Array[Int] = {
       val kept = new ArrayBuffer[Int](m)
       val pruned = new ArrayBuffer[Int]()
       var i = 0
-      while (i < cands.length && kept.length < m) {
-        val (dE, e) = cands(i)
+      while (i < cands.size && kept.length < m) {
+        val dE = cands.dist(i)
+        val e = cands.index(i)
         var diverse = true
         var r = 0
         while (diverse && r < kept.length) {
@@ -247,8 +244,9 @@ object Hnsw {
     private def pruneTo(e: Int, lev: Int, cap: Int): Unit = {
       val cur = adj(e)(lev)
       if (cur.length > cap) {
+        val byDist = cur.map(x => (d2(vecs(e), x), x)).sorted(Beam.order)
         val kept = selectHeuristic(
-          cur.map(x => (d2(vecs(e), x), x)).sorted(asc).toArray, cap)
+          Beam.of(byDist.map(_._1).toArray, byDist.map(_._2).toArray), cap)
         cur.clear()
         cur ++= kept
       }
@@ -278,7 +276,7 @@ object Hnsw {
           if (adj(e)(lev).length > cap) pruneTo(e, lev, cap)
           s += 1
         }
-        eps = w.map(_._2)
+        eps = w.indices
         lev -= 1
       }
       if (l > maxLevel) { entry = i; maxLevel = l }
@@ -290,7 +288,7 @@ object Hnsw {
       var ep = entry
       var lev = maxLevel
       while (lev > 0) { ep = greedy(q, ep, lev); lev -= 1 }
-      searchLayer(q, Array(ep), ef, 0).map(_._2)
+      searchLayer(q, Array(ep), ef, 0).indices
     }
 
     /** Predicate-aware beam (the ACORN-1 discipline, Patel et al. 2024):
@@ -311,19 +309,21 @@ object Hnsw {
       var lev = maxLevel
       while (lev > 0) { ep = greedy(q, ep, lev); lev -= 1 }
       val visited = new java.util.BitSet(n)
-      val cand = new java.util.PriorityQueue[(Double, Int)](asc)
-      val res = new java.util.PriorityQueue[(Double, Int)](asc.reverse)
+      val cand = new Beam(ef, farthestOnTop = false)
+      val res = new Beam(ef, farthestOnTop = true)
       visited.set(ep)
-      val e0 = (d2(q, ep), ep)
-      cand.add(e0)
-      if (allow(ep)) res.add(e0)
+      val d0 = d2(q, ep)
+      cand.push(d0, ep)
+      if (allow(ep)) res.push(d0, ep)
       var visits = 1
       var done = false
       while (!done && !cand.isEmpty && visits < maxVisit) {
-        val c = cand.poll()
-        if (res.size >= ef && asc.compare(c, res.peek()) > 0) done = true
+        val cd = cand.topD
+        val ci = cand.topI
+        cand.pop()
+        if (res.size >= ef && Beam.before(res.topD, res.topI, cd, ci)) done = true
         else {
-          val around = adj(c._2)(0)
+          val around = adj(ci)(0)
           var i = 0
           while (i < around.length) {
             val e = around(i)
@@ -333,11 +333,11 @@ object Hnsw {
               val d = d2(q, e)
               // frontier admission ignores allow (non-matching nodes are
               // the bridges); result admission requires it
-              if (res.size < ef || asc.compare((d, e), res.peek()) < 0) {
-                cand.add((d, e))
+              if (res.size < ef || Beam.before(d, e, res.topD, res.topI)) {
+                cand.push(d, e)
                 if (allow(e)) {
-                  res.add((d, e))
-                  if (res.size > ef) res.poll()
+                  res.push(d, e)
+                  if (res.size > ef) res.pop()
                 }
               }
             }
@@ -345,10 +345,98 @@ object Hnsw {
           }
         }
       }
-      val out = new Array[(Double, Int)](res.size)
-      var i = out.length - 1
-      while (i >= 0) { out(i) = res.poll(); i -= 1 }
-      out.map(_._2)
+      res.drainAscending().indices
+    }
+  }
+
+  /** A binary heap of (distance, index) pairs held in two primitive
+    * arrays — a beam's frontier (nearest on top) or result set (farthest
+    * on top) with no boxed pair per push. Pairs order by
+    * `java.lang.Double.compare` on the distance, then by index: total,
+    * so every beam step is deterministic. After [[drainAscending]] it
+    * is the sorted list [[dist]]/[[index]] read. */
+  private[operators] final class Beam(capacity: Int, farthestOnTop: Boolean) {
+    private var ds = new Array[Double](math.max(capacity, 1) + 1)
+    private var is = new Array[Int](ds.length)
+    private var n = 0
+
+    def size: Int = n
+    def isEmpty: Boolean = n == 0
+    def topD: Double = ds(0)
+    def topI: Int = is(0)
+    def dist(j: Int): Double = ds(j)
+    def index(j: Int): Int = is(j)
+    def indices: Array[Int] = java.util.Arrays.copyOf(is, n)
+
+    /** Does slot a belong above slot b? */
+    private def above(a: Int, b: Int): Boolean =
+      if (farthestOnTop) Beam.before(ds(b), is(b), ds(a), is(a))
+      else Beam.before(ds(a), is(a), ds(b), is(b))
+
+    private def swap(a: Int, b: Int): Unit = {
+      val d = ds(a); ds(a) = ds(b); ds(b) = d
+      val i = is(a); is(a) = is(b); is(b) = i
+    }
+
+    def push(d: Double, i: Int): Unit = {
+      if (n == ds.length) {
+        ds = java.util.Arrays.copyOf(ds, n * 2)
+        is = java.util.Arrays.copyOf(is, n * 2)
+      }
+      ds(n) = d; is(n) = i
+      var c = n
+      n += 1
+      while (c > 0 && above(c, (c - 1) / 2)) { swap(c, (c - 1) / 2); c = (c - 1) / 2 }
+    }
+
+    /** Removes the top pair. */
+    def pop(): Unit = {
+      n -= 1
+      ds(0) = ds(n); is(0) = is(n)
+      var p = 0
+      var settled = false
+      while (!settled) {
+        val l = 2 * p + 1
+        val r = l + 1
+        var top = p
+        if (l < n && above(l, top)) top = l
+        if (r < n && above(r, top)) top = r
+        if (top == p) settled = true else { swap(p, top); p = top }
+      }
+    }
+
+    /** Empties a farthest-on-top heap into ascending order, in place. */
+    def drainAscending(): Beam = {
+      require(farthestOnTop)
+      val total = n
+      while (n > 1) {
+        val d = ds(0); val i = is(0)
+        pop()
+        ds(n) = d; is(n) = i
+      }
+      n = total
+      this
+    }
+  }
+
+  private[operators] object Beam {
+    /** (d1, i1) strictly before (d2, i2) in the beams' order. */
+    def before(d1: Double, i1: Int, d2: Double, i2: Int): Boolean = {
+      val c = java.lang.Double.compare(d1, d2)
+      c < 0 || (c == 0 && i1 < i2)
+    }
+
+    /** The pair order as an [[Ordering]], for sorting a short list. */
+    val order: Ordering[(Double, Int)] = (a, b) => {
+      val c = java.lang.Double.compare(a._1, b._1)
+      if (c != 0) c else Integer.compare(a._2, b._2)
+    }
+
+    /** A list already in ascending order. */
+    def of(ds: Array[Double], is: Array[Int]): Beam = {
+      val b = new Beam(ds.length, farthestOnTop = true)
+      b.ds = ds; b.is = is; b.n = ds.length
+      b
     }
   }
 

@@ -6,9 +6,11 @@ import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
+import com.fasterxml.jackson.core.{JacksonException, JsonEncoding, JsonGenerator, JsonParseException, JsonParser}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
+import graft.model.SearchHit
 import graft.store.{ApproxIndexes, DurableVectorStore, VectorStore}
 
 /** Route-for-route HTTP facade over [[VectorStore]] — the reference's REST
@@ -117,15 +119,20 @@ class RestServer(store: VectorStore, port: Int = 0,
 
   // ---- helpers --------------------------------------------------------
 
-  private def respond(ex: HttpExchange, code: Int, body: JsonNode): Unit = {
-    val bytes = mapper.writeValueAsBytes(body)
+  private def respond(ex: HttpExchange, code: Int, body: JsonNode): Unit =
+    respond(ex, code, mapper.writeValueAsBytes(body))
+
+  private def respond(ex: HttpExchange, code: Int, bytes: Array[Byte]): Unit = {
     ex.getResponseHeaders.set("Content-Type", "application/json")
     ex.sendResponseHeaders(code, bytes.length)
     ex.getResponseBody.write(bytes)
     ex.close()
-    val t0 = ex.getAttribute("graft.t0").asInstanceOf[java.lang.Long]
-    val ms = if (t0 == null) 0.0 else (System.nanoTime() - t0) / 1e6
-    logger.info(f"← ${ex.getRequestMethod} ${ex.getRequestURI.getPath} - Status: $code - Time: $ms%.2fms")
+    // the latency line is built only when it is logged
+    if (logger.isInfoEnabled) {
+      val t0 = ex.getAttribute("graft.t0").asInstanceOf[java.lang.Long]
+      val ms = if (t0 == null) 0.0 else (System.nanoTime() - t0) / 1e6
+      logger.info(f"← ${ex.getRequestMethod} ${ex.getRequestURI.getPath} - Status: $code - Time: $ms%.2fms")
+    }
   }
 
   private def status(ex: HttpExchange, code: Int, st: String, msg: String): Unit = {
@@ -214,7 +221,7 @@ class RestServer(store: VectorStore, port: Int = 0,
     try mapper.readTree(json)
     catch { case NonFatal(_) => mapper.createObjectNode() }
 
-  private def hitJson(h: graft.model.SearchHit): JsonNode = {
+  private def hitJson(h: SearchHit): JsonNode = {
     val o = mapper.createObjectNode()
     o.put("id", h.id)
     val vs = o.putArray("values")
@@ -224,9 +231,62 @@ class RestServer(store: VectorStore, port: Int = 0,
     o
   }
 
+  /** A search response body: one list of hits as a bare list (`/search`),
+    * several as a list of lists (`/search/batch`, positional). Written
+    * with a streaming generator, each hit's stored metadata copied token
+    * by token ([[copyMetadata]]); when one cannot be, the body is built
+    * as trees of [[hitJson]] instead. The bytes are the trees' either way. */
+  private def hitsBody(lists: Seq[Seq[SearchHit]], nested: Boolean): Array[Byte] =
+    try {
+      val out = new java.io.ByteArrayOutputStream()
+      val g = mapper.createGenerator(out, JsonEncoding.UTF8)
+      if (nested) g.writeStartArray()
+      lists.foreach { hits =>
+        g.writeStartArray()
+        hits.foreach { h =>
+          g.writeStartObject()
+          g.writeStringField("id", h.id)
+          g.writeArrayFieldStart("values")
+          h.values.foreach(g.writeNumber)
+          g.writeEndArray()
+          g.writeFieldName("metadata")
+          copyMetadata(g, h.metadataJson)
+          g.writeNumberField("score", h.score)
+          g.writeEndObject()
+        }
+        g.writeEndArray()
+      }
+      if (nested) g.writeEndArray()
+      g.close()
+      out.toByteArray
+    } catch {
+      case _: JacksonException | _: IllegalArgumentException =>
+        val trees = lists.map { hits =>
+          val arr = mapper.createArrayNode()
+          hits.foreach(h => arr.add(hitJson(h)))
+          arr
+        }
+        mapper.writeValueAsBytes(
+          if (nested) { val arr = mapper.createArrayNode(); trees.foreach(arr.add); arr }
+          else trees.head)
+    }
+
+  /** Writes a stored metadataJson as [[parsedMetadata]]'s tree would
+    * serialize, without building the tree: the parser's tokens copied to
+    * `g`. Throws where the two could differ: no JSON value (a null or
+    * blank string), a duplicate key (the tree keeps the last value) or a
+    * parse error (the tree is `{}`). */
+  private def copyMetadata(g: JsonGenerator, json: String): Unit = {
+    val p = mapper.createParser(json).enable(JsonParser.Feature.STRICT_DUPLICATE_DETECTION)
+    try {
+      if (p.nextToken() == null) throw new JsonParseException(p, "no metadata value")
+      g.copyCurrentStructure(p)
+    } finally p.close()
+  }
+
   private def handle(ex: HttpExchange)(body: => Unit): Unit = {
     ex.setAttribute("graft.t0", java.lang.Long.valueOf(System.nanoTime()))
-    logger.info(s"→ ${ex.getRequestMethod} ${ex.getRequestURI.getPath}")
+    if (logger.isInfoEnabled) logger.info(s"→ ${ex.getRequestMethod} ${ex.getRequestURI.getPath}")
     try body
     catch {
       case e: com.fasterxml.jackson.core.JacksonException =>
@@ -418,9 +478,8 @@ class RestServer(store: VectorStore, port: Int = 0,
           } else store.findSimilar(floats(required(body, "query")), k, metric,
             ns, stringMapOf(body, "filter"), stringMapOf(body, "json_filter"),
             approx = approx, index = index)
-        val arr = mapper.createArrayNode() // bare list, rest_api.py:163 response_model
-        hits.foreach(h => arr.add(hitJson(h)))
-        respond(ex, 200, arr)
+        // bare list, rest_api.py:163 response_model
+        respond(ex, 200, hitsBody(Seq(hits), nested = false))
       case m => error(ex, 405, s"method $m not allowed")
     }
   })
@@ -458,13 +517,8 @@ class RestServer(store: VectorStore, port: Int = 0,
             durableStore.searchBatch(qs, k, metric, ns, approx, index, filter,
               jsonFilter, asOfOf(body))
           else store.searchBatch(qs, k, metric, ns, filter, jsonFilter, approx, index)
-        val arr = mapper.createArrayNode() // positional: result i ↔ queries[i]
-        results.foreach { hits =>
-          val inner = mapper.createArrayNode()
-          hits.foreach(h => inner.add(hitJson(h)))
-          arr.add(inner)
-        }
-        respond(ex, 200, arr)
+        // positional: result i ↔ queries[i]
+        respond(ex, 200, hitsBody(results, nested = true))
       case m => error(ex, 405, s"method $m not allowed")
     }
   })

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.expressions.json.GetJsonObjectEvaluator
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The driver half of an index probe, shared by both stores' snapshot
@@ -51,14 +50,8 @@ private[graft] object DriverProbe {
   /** `rows` ordered by ascending (key, id) — `orderBy(key, id)`'s order
     * and [[graft.functions.TopKAgg]]'s: Spark's double comparison, ids in
     * UTF-8 byte order — cut to the first `n`. */
-  def cut(rows: Array[Int], key: Int => Double, ids: Array[UTF8String], n: Int): Array[Int] = {
-    val keyed = rows.map(i => (key(i), i))
-    java.util.Arrays.sort(keyed, (a: (Double, Int), b: (Double, Int)) => {
-      val c = compareDoubles(a._1, b._1)
-      if (c != 0) c else ids(a._2).compareTo(ids(b._2))
-    })
-    keyed.iterator.take(n).map(_._2).toArray
-  }
+  def cut(rows: Array[Int], key: Int => Double, ids: Array[UTF8String], n: Int): Array[Int] =
+    Scoring.topN(rows.map(key), rows, ids, n, descending = false).map(rows)
 
   /** The metadata predicate as a row test: `metadata[k] = v` for every
     * flat pair (a missing or null value never matches) and Spark's own

@@ -63,6 +63,12 @@ private[graft] final class DurableSnapshot(val gen: Int, recs: Array[VectorRecor
     all.select(layout ++ delta(builtSeq, h))
   }
 
+  /** Data row versions plus tombstones stamped after `seq`, live or
+    * not: what the Spark staleness check counts in the namespace's read
+    * view for a layout built at `seq`. */
+  def versionsAfter(seq: Long): Long =
+    seqs.count(_ > seq).toLong + tombs.count(_._2 > seq)
+
   /** Ids of the rows of `at(asOf)` stamped after `builtSeq`: candidates of
     * every query of a batch. */
   def deltaIds(builtSeq: Long, asOf: Option[Long]): Seq[String] =

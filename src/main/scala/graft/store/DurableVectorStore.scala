@@ -1826,8 +1826,10 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
   /** Millis between staleness checks per (namespace, dim): the check is
     * two footer-pruned counts (post-build data rows + tombstones) — a
     * small metadata job that must not run on EVERY probe of a hot
-    * namespace. One probe per interval is CAS-elected to pay it.
-    * 0 checks on every probe (specs use this). */
+    * namespace. One probe per interval, counted from the layout's build,
+    * is CAS-elected to pay it; on a snapshot-tier namespace it counts the
+    * driver snapshot's versions instead, with no job. 0 checks on every
+    * probe (specs use this). */
   val AnnStalenessCheckMsConf = "spark.graft.durable.ann.stalenessCheckMs"
   private def annStalenessCheckMs: Long =
     spark.conf.getOption(AnnStalenessCheckMsConf).map(_.toLong).getOrElse(10000L)
@@ -1858,6 +1860,10 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
   private case class AnnEntry(builtSeq: Long, builtGen: Int, aux: String,
                               centers: Array[Array[Float]], rows: Long,
                               space: String, built: Option[BuiltRows] = None) {
+    /** When this entry's staleness was last checked: its clock starts
+      * when the entry is built or adopted ([[annEntryFresh]]). */
+    val staleChecked = new AtomicLong(System.currentTimeMillis())
+
     /** The query's probed cells: centers ranked by squared L2, the count
       * derived from this layout's own centroid count. A mips layout ranks
       * in the augmented geometry, where the query's coordinate is 0 (its
@@ -1919,9 +1925,6 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
 
   private val annBuildLocks =
     new java.util.concurrent.ConcurrentHashMap[AnnKey, Object]()
-
-  private val annLastStaleCheck =
-    new java.util.concurrent.ConcurrentHashMap[AnnKey, AtomicLong]()
 
   private def spaceOf(metric: String): String =
     if (metric == "ip") "mips" else "raw"
@@ -2288,8 +2291,7 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
       else {
         val ratio = annStalenessRatio
         val interval = annStalenessCheckMs
-        val clock = annLastStaleCheck.computeIfAbsent(
-          (namespace, dim, space), _ => new AtomicLong(0L))
+        val clock = e.staleChecked
         val now = System.currentTimeMillis()
         val last = clock.get()
         val elected = ratio > 0 &&
@@ -2297,12 +2299,18 @@ class DurableVectorStore(val spark: SparkSession, val path: String) {
             (now - last >= interval && clock.compareAndSet(last, now)))
         if (!elected) Some(e)
         else {
-          val tail = allData()
-            .filter(col("namespace") === namespace && col("seq") > e.builtSeq)
-            .count() +
-            allDeletes()
-              .filter(col("namespace") === namespace && col("seq") > e.builtSeq)
-              .count()
+          // a snapshot-tier namespace counts on the driver, from the
+          // versions its snapshot holds
+          val tail = durableSnapshot(namespace) match {
+            case Some(snap) => snap.versionsAfter(e.builtSeq)
+            case None =>
+              allData()
+                .filter(col("namespace") === namespace && col("seq") > e.builtSeq)
+                .count() +
+                allDeletes()
+                  .filter(col("namespace") === namespace && col("seq") > e.builtSeq)
+                  .count()
+          }
           if (tail.toDouble < ratio * e.rows.toDouble) Some(e)
           // staleness is a PERFORMANCE rebuild: contend for the
           // cross-process claim, and keep serving the old entry on loss

@@ -1,11 +1,10 @@
 package graft.store
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.VectorDistance
 import graft.functions.VectorFunctions._
 
 /** Scoring/ranking contract shared by BOTH store facades. One definition,
@@ -45,7 +44,7 @@ private[store] object MetaJson {
   }
 }
 
-private[store] object Scoring {
+private[graft] object Scoring {
 
   /** Above this many ids, literal `isInCollection` predicates give way to
     * broadcast join forms: the literal plan grows with the batch (codegen
@@ -69,28 +68,69 @@ private[store] object Scoring {
     if (metric == "cosine") df.orderBy(col("score").desc, col("id"))
     else df.orderBy(col("score"), col("id"))
 
-  /** The driver twin of [[score]]: the same kernel function the Catalyst
-    * expression evaluates, so a score computed on the driver is bit-equal
-    * to the one a plan computes. Throws on an unknown metric exactly as
-    * [[score]] does. */
-  def driverScore(metric: String): (ArrayData, ArrayData) => Double = metric match {
-    case "l2"     => (a, b) => VectorDistance.eval("l2sq", a, b)
-    case "cosine" => (a, b) => VectorDistance.eval("cos", a, b)
-    case "ip"     => (a, b) => 1.0 - VectorDistance.eval("dot", a, b)
-    case other    => throw new IllegalArgumentException(
-      s"unknown metric '$other' (expected l2 | cosine | ip)")
-  }
-
   /** The driver twin of [[ranked]]'s order: score under Spark's double
     * ordering (NaN largest, -0.0 == 0.0), descending for cosine, then id
     * in UTF-8 byte order, which is how Spark compares strings (Java's
     * `String.compareTo` orders UTF-16 units and disagrees above the BMP). */
   def compareRanked(metric: String, s1: Double, id1: UTF8String,
-                    s2: Double, id2: UTF8String): Int = {
+                    s2: Double, id2: UTF8String): Int =
+    compareRanked(metric == "cosine", s1, id1, s2, id2)
+
+  private def compareRanked(descending: Boolean, s1: Double, id1: UTF8String,
+                            s2: Double, id2: UTF8String): Int = {
     val c =
-      if (metric == "cosine") SQLOrderingUtil.compareDoubles(s2, s1)
+      if (descending) SQLOrderingUtil.compareDoubles(s2, s1)
       else SQLOrderingUtil.compareDoubles(s1, s2)
     if (c != 0) c else id1.compareTo(id2)
+  }
+
+  /** The driver's top-n: the positions p of the `n` first of `scores` in
+    * [[compareRanked]] order on (scores(p), ids(rows(p))), then by p — the
+    * first n of a stable sort of every position, found with one bounded
+    * heap of n positions instead of sorting them all. `descending` is
+    * cosine's order (the metric's, resolved once by the caller). */
+  def topN(scores: Array[Double], rows: Array[Int], ids: Array[UTF8String], n: Int,
+           descending: Boolean): Array[Int] = {
+    // true iff position a ranks after position b
+    def after(a: Int, b: Int): Boolean = {
+      val c = compareRanked(descending, scores(a), ids(rows(a)), scores(b), ids(rows(b)))
+      c > 0 || (c == 0 && a > b)
+    }
+    val heap = new Array[Int](math.max(0, math.min(n, scores.length)))
+    // a max-heap: the last-ranked kept position on top
+    def siftDown(from: Int, size: Int): Unit = {
+      var p = from
+      var settled = false
+      while (!settled) {
+        val l = 2 * p + 1
+        var top = p
+        if (l < size && after(heap(l), heap(top))) top = l
+        if (l + 1 < size && after(heap(l + 1), heap(top))) top = l + 1
+        if (top == p) settled = true
+        else { val t = heap(p); heap(p) = heap(top); heap(top) = t; p = top }
+      }
+    }
+    var size = 0
+    var p = 0
+    while (p < scores.length && size < heap.length) {
+      var c = size
+      heap(c) = p
+      while (c > 0 && after(heap(c), heap((c - 1) / 2))) {
+        val t = heap(c); heap(c) = heap((c - 1) / 2); heap((c - 1) / 2) = t; c = (c - 1) / 2
+      }
+      size += 1; p += 1
+    }
+    while (p < scores.length) {
+      if (size > 0 && after(heap(0), p)) { heap(0) = p; siftDown(0, size) }
+      p += 1
+    }
+    // heapsort in place: the last-ranked goes to the end
+    while (size > 1) {
+      size -= 1
+      val t = heap(0); heap(0) = heap(size); heap(size) = t
+      siftDown(0, size)
+    }
+    heap
   }
 
   /** Hits collected unordered, sorted on the driver in [[ranked]] order. */

@@ -360,4 +360,69 @@ class DurableSnapshotSpec extends AnyFunSuite {
     assert(d.durableSnapshot("grow").map(s => (s.gen, s.versions)).contains((1, 4)),
       "back under the bound after the compaction")
   }
+
+  test("a staleness check on a snapshot-tier namespace runs no job and decides as the Spark counts do") {
+    /** The ann builds after each step, and the jobs of the probe that
+      * checks below the ratio, on one tier. */
+    def steps(onSpark: Boolean): (Seq[Int], Int) = {
+      val d = new DurableVectorStore(spark, tmp())
+      if (onSpark) d.snapshotMaxRows = -1
+      spark.conf.set(d.AnnStalenessCheckMsConf, "0") // every probe checks
+      spark.conf.set(d.TombRefreshMsConf, "0") // no time-elected tombstone recount
+      try {
+        val sp = spark
+        import sp.implicits._
+        val rnd = new Random(6)
+        def vec = Seq.fill(4)(rnd.nextFloat() * 2 - 1)
+        def load(ids: Seq[String]): Unit =
+          d.loadFrame(ids.map(id => (id, vec)).toDF("id", "values"), "st")
+        val q = vec
+        def probe(): Unit = assert(d.findSimilar(q, 3, namespace = "st", approx = true).size == 3)
+        load((0 until 40).map(i => s"s$i"))
+        probe()
+        val built = d.annBuilds.get()
+        // 7 post-build versions against 0.2 × 40 = 8: a delete (one
+        // tombstone), an overwrite (a tombstone and a data row), four inserts
+        d.delete(Seq("s3"), "st")
+        load(Seq("s5"))
+        load((0 until 4).map(i => s"n$i"))
+        d.durableSnapshot("st") // the read that collects the new files
+        val below = TestSpark.jobsOf(probe())
+        val afterBelow = d.annBuilds.get()
+        // the 8th reaches the ratio: the next check rebuilds
+        load(Seq("n4"))
+        probe()
+        val afterAbove = d.annBuilds.get()
+        probe()
+        (Seq(built, afterBelow, afterAbove, d.annBuilds.get()), below)
+      } finally {
+        spark.conf.unset(d.AnnStalenessCheckMsConf)
+        spark.conf.unset(d.TombRefreshMsConf)
+      }
+    }
+    val (snapshotBuilds, snapshotJobs) = steps(onSpark = false)
+    val (sparkBuilds, sparkJobs) = steps(onSpark = true)
+    assert(snapshotBuilds == Seq(1, 1, 2, 2), s"snapshot tier: $snapshotBuilds")
+    assert(sparkBuilds == snapshotBuilds, "the two tiers' rebuild decisions differ")
+    assert(snapshotJobs == 0, "an elected check on the snapshot tier ran Spark jobs")
+    assert(sparkJobs >= 2, "the Spark tier's check counts with Spark jobs")
+  }
+
+  test("a layout's staleness clock starts at its build") {
+    val d = new DurableVectorStore(spark, tmp())
+    spark.conf.set(d.AnnStalenessCheckMsConf, "600000")
+    try {
+      val sp = spark
+      import sp.implicits._
+      val rnd = new Random(8)
+      def vec = Seq.fill(4)(rnd.nextFloat() * 2 - 1)
+      d.loadFrame((0 until 20).map(i => (s"s$i", vec)).toDF("id", "values"), "clock")
+      val q = vec
+      d.findSimilar(q, 3, namespace = "clock", approx = true)
+      d.loadFrame((0 until 10).map(i => (s"n$i", vec)).toDF("id", "values"), "clock")
+      // far past the ratio, but no interval has passed since the build
+      d.findSimilar(q, 3, namespace = "clock", approx = true)
+      assert(d.annBuilds.get() == 1, "the first probe after a build ran the staleness check")
+    } finally spark.conf.unset(d.AnnStalenessCheckMsConf)
+  }
 }

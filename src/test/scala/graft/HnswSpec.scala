@@ -49,6 +49,23 @@ class HnswSpec extends AnyFunSuite {
     }
   }
 
+  test("kernel: graphs and beams over a seeded corpus with tied distances are pinned") {
+    // 600 rows, every fifth a copy of an earlier row, so beams meet tied
+    // distances and order them by index; the checksums are those of beams
+    // on java.util.PriorityQueue[(Double, Int)] under Ordering.Tuple2
+    val base = synthVecs(480, 12)
+    val vecs = Array.tabulate(600)(i => if (i < 480) base(i) else base((i * 7) % 480).clone())
+    val levels = Array.tabulate(600)(i => Hnsw.levelFor(s"pin$i"))
+    val g = Hnsw.ShardGraph.build(vecs, levels)
+    val graph = scala.util.hashing.MurmurHash3.orderedHash(
+      g.adj.iterator.map(lv => scala.util.hashing.MurmurHash3.orderedHash(
+        lv.iterator.map(ns => scala.util.hashing.MurmurHash3.orderedHash(ns)))))
+    val queries = (0 until 40).map(i => Hnsw.normalize(vecs((i * 13) % 600)))
+    val beams = scala.util.hashing.MurmurHash3.orderedHash(queries.flatMap(q =>
+      Seq(g.search(q, 24).toSeq, g.searchFiltered(q, 24, _ % 3 == 0, 200).toSeq)))
+    assert((g.entry, g.maxLevel, graph, beams) == ((30, 2, -1081994678, -1419413279)))
+  }
+
   test("q118 recall@5 vs brute force is at least 0.9") {
     val exact = Ann.q31(spark, dir).collect()
       .map(r => (r.getLong(r.fieldIndex("qid")), r.getLong(r.fieldIndex("id")))).toSet

@@ -1052,4 +1052,83 @@ class RestServerSpec extends AnyFunSuite {
       } finally d.snapshotMaxRows = VectorStore.SnapshotMaxRows
     } finally server.stop()
   }
+
+  test("search bodies on every route and mount are the bytes of the hits' JSON trees") {
+    val sp = spark
+    import sp.implicits._
+    // stored metadataJson the copy must render as the tree does: spacing,
+    // number spellings, escapes, non-ASCII, non-object roots; and some it
+    // cannot copy (a duplicate key, no value, unparsable: the tree's `{}`)
+    val wellFormed = Seq(
+      "{\"grp\":\"a\"}",
+      "{ \"a\" : { \"b\" : [1, 2.50, -0, 1e2, 1E-7, 12345678901234567890, 0.1, true, false, null] }, \"s\": \"x\" }",
+      "{\"name\": \"Zo\u00eb \ud83d\ude00 \\u00e9 \\n\\t \\\"q\\\" \\\\ \\/\", \"k\": \"\\u0001\", \"\u4f60\u597d\": [\"\u00fc\"]}",
+      "[1, {\"x\": []}]", "7", "null", "{}", "{\"t\": 1} trailing")
+    val odd = Seq("{\"a\": 1, \"a\": 2}", "", "   ", "{not json")
+    val rnd = new scala.util.Random(9)
+    def vec = Seq.fill(4)(rnd.nextFloat() * 2 - 1)
+    val store = new VectorStore(spark)
+    val d = new graft.store.DurableVectorStore(spark,
+      java.nio.file.Files.createTempDirectory("graft_rest_bytes_").toString)
+    // the live store parses each on insert, so it cannot hold an unparsable one
+    store.upsertManyJson(wellFormed.map(j => (vec, j)), "fine")
+    store.upsertManyJson((wellFormed ++ odd.init).map(j => (vec, j)), "odd")
+    d.loadFrame(wellFormed.zipWithIndex.map { case (j, i) => (s"f$i", vec, j) }
+      .toDF("id", "values", "metadataJson"), "fine")
+    d.loadFrame((wellFormed ++ odd).zipWithIndex.map { case (j, i) => (s"o$i", vec, j) }
+      .toDF("id", "values", "metadataJson"), "odd")
+    def tree(h: graft.model.SearchHit): com.fasterxml.jackson.databind.JsonNode = {
+      val o = mapper.createObjectNode()
+      o.put("id", h.id)
+      val vs = o.putArray("values")
+      h.values.foreach(vs.add)
+      o.set[com.fasterxml.jackson.databind.JsonNode]("metadata",
+        try mapper.readTree(h.metadataJson)
+        catch { case scala.util.control.NonFatal(_) => mapper.createObjectNode() })
+      o.put("score", h.score)
+      o
+    }
+    def treeBytes(lists: Seq[Seq[graft.model.SearchHit]], nested: Boolean): Array[Byte] = {
+      val trees = lists.map { hits =>
+        val arr = mapper.createArrayNode()
+        hits.foreach(h => arr.add(tree(h)))
+        arr
+      }
+      val outer = mapper.createArrayNode()
+      trees.foreach(outer.add)
+      mapper.writeValueAsBytes(if (nested) outer else trees.head)
+    }
+    def post(url: String, body: String): Array[Byte] = {
+      val req = HttpRequest.newBuilder(URI.create(url))
+        .POST(HttpRequest.BodyPublishers.ofString(body))
+        .header("Content-Type", "application/json").build()
+      val resp = client.send(req, HttpResponse.BodyHandlers.ofByteArray())
+      assert(resp.statusCode() == 200, new String(resp.body(), "UTF-8"))
+      resp.body()
+    }
+    val server = new RestServer(store, durable = Some(d))
+    server.start()
+    try {
+      val base = s"http://127.0.0.1:${server.boundPort}"
+      // exactly representable, so the JSON query parses to these floats
+      val qs = Seq(Seq(0.5f, -0.25f, 0.125f, 1f), Seq(-1f, 0.75f, 0.5f, -0.5f))
+      def json(q: Seq[Float]): String = q.mkString("[", ", ", "]")
+      for (ns <- Seq("fine", "odd"); durable <- Seq(false, true); metric <- Seq("cosine", "l2")) {
+        val what = s"$ns, durable $durable, $metric"
+        val single = if (durable) d.findSimilar(qs.head, 20, metric, ns)
+          else store.findSimilar(qs.head, 20, metric, ns)
+        assert(single.nonEmpty, what)
+        val got = post(s"$base/search?namespace=$ns",
+          s"""{"query": ${json(qs.head)}, "top_k": 20, "metric": "$metric", "durable": $durable}""")
+        assert(java.util.Arrays.equals(got, treeBytes(Seq(single), nested = false)),
+          s"/search, $what: ${new String(got, "UTF-8")}")
+        val batch = if (durable) d.searchBatch(qs, 20, metric, ns)
+          else store.searchBatch(qs, 20, metric, ns)
+        val gotBatch = post(s"$base/search/batch?namespace=$ns",
+          s"""{"queries": [${qs.map(json).mkString(", ")}], "top_k": 20, "metric": "$metric", "durable": $durable}""")
+        assert(java.util.Arrays.equals(gotBatch, treeBytes(batch, nested = true)),
+          s"/search/batch, $what: ${new String(gotBatch, "UTF-8")}")
+      }
+    } finally server.stop()
+  }
 }
