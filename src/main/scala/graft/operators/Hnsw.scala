@@ -244,9 +244,9 @@ object Hnsw {
     private def pruneTo(e: Int, lev: Int, cap: Int): Unit = {
       val cur = adj(e)(lev)
       if (cur.length > cap) {
-        val byDist = cur.map(x => (d2(vecs(e), x), x)).sorted(Beam.order)
-        val kept = selectHeuristic(
-          Beam.of(byDist.map(_._1).toArray, byDist.map(_._2).toArray), cap)
+        val byDist = new Beam(cur.length, farthestOnTop = true)
+        cur.foreach(x => byDist.push(d2(vecs(e), x), x))
+        val kept = selectHeuristic(byDist.drainAscending(), cap)
         cur.clear()
         cur ++= kept
       }
@@ -424,19 +424,6 @@ object Hnsw {
     def before(d1: Double, i1: Int, d2: Double, i2: Int): Boolean = {
       val c = java.lang.Double.compare(d1, d2)
       c < 0 || (c == 0 && i1 < i2)
-    }
-
-    /** The pair order as an [[Ordering]], for sorting a short list. */
-    val order: Ordering[(Double, Int)] = (a, b) => {
-      val c = java.lang.Double.compare(a._1, b._1)
-      if (c != 0) c else Integer.compare(a._2, b._2)
-    }
-
-    /** A list already in ascending order. */
-    def of(ds: Array[Double], is: Array[Int]): Beam = {
-      val b = new Beam(ds.length, farthestOnTop = true)
-      b.ds = ds; b.is = is; b.n = ds.length
-      b
     }
   }
 
